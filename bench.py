@@ -423,6 +423,9 @@ def run_suite(spark, base, docs, queries, n, query_hook=None) -> dict[str, float
         pack_sequences(kept, token_budget=4096).agg(
             F.max("bin_id"), F.sum("n_tokens")
         ).collect()
+        # release this rep's shared signature table: the next rep derives
+        # its own from its input, so no cached blocks carry over
+        signed.unpersist()
 
     def _scaling():
         # r13 (VERDICT r12 item 4): the sf0.1 rows are latency-bound

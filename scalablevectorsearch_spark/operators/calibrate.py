@@ -12,10 +12,13 @@ traversal cost), orchestrators/vamana.h:211-246
 (experimental_calibrate surface).
 
 Spark shape: a driver loop that re-runs the search job at candidate
-(window, capacity) points and evaluates recall with the §2.4 aggregate.
-Each probe is one Spark job; the loops are O(log range) jobs. Works
-over any index family exposing a (queries, k, window[, capacity])
-search callable."""
+(window, capacity, budget, amplification) points and evaluates recall
+with the §2.4 aggregate. Each probe is one Spark job; every entry point
+bisects with the one :func:`_first_passing` loop, O(log range) jobs.
+:func:`fit_probe_budget` is the whole ``target_recall=`` loop (sample
+split, groundtruth cache, margin, fit, held-out validation, stats) for
+any index family exposing a ``search_at(budget, queries, qids)``
+callable — ivf_search and vamana_search are its two adapters."""
 
 from __future__ import annotations
 
@@ -26,6 +29,7 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from scalablevectorsearch_spark.operators.recall import k_recall_at
 
@@ -41,6 +45,35 @@ class CalibrationResult:
 def _recall_of(groundtruth: DataFrame, results: DataFrame, k: int) -> float:
     row = k_recall_at(groundtruth, results, k).collect()[0]
     return float(row["recall"]) if row["recall"] is not None else 0.0
+
+
+def _first_passing(
+    probe: Callable[[int], float],
+    lo: int,
+    hi: int,
+    target: float,
+    r_hi: float | None = None,
+) -> tuple[int, float]:
+    """The one bisection under every calibrate_* entry point: the
+    smallest integer point in [lo, hi] whose ``probe`` recall >=
+    ``target`` (recall is monotone-ish along every calibrated axis —
+    calibrate.h:249's working assumption), as (point, recall). ``r_hi``
+    is the recall at ``hi`` when the caller already measured it, so
+    that search is not re-run. If even ``hi`` misses the target,
+    returns (hi, its recall): the reference's best-effort report."""
+    if r_hi is None:
+        r_hi = probe(hi)
+    if r_hi < target:
+        return hi, r_hi
+    best, best_r = hi, r_hi
+    while lo < hi:
+        mid = (lo + hi) // 2
+        r = probe(mid)
+        if r >= target:
+            best, best_r, hi = mid, r, mid
+        else:
+            lo = mid + 1
+    return best, best_r
 
 
 def calibrate_window(
@@ -66,20 +99,8 @@ def calibrate_window(
         probes.append((w, r))
         return r
 
-    lo, hi = min_window, max_window
-    r_hi = probe(hi)
-    if r_hi < target_recall:
-        return CalibrationResult(hi, r_hi, target_recall, probes)
-    best_w, best_r = hi, r_hi
-    while lo < hi:
-        mid = (lo + hi) // 2
-        r = probe(mid)
-        if r >= target_recall:
-            best_w, best_r = mid, r
-            hi = mid
-        else:
-            lo = mid + 1
-    return CalibrationResult(best_w, best_r, target_recall, probes)
+    w, r = _first_passing(probe, min_window, max_window, target_recall)
+    return CalibrationResult(w, r, target_recall, probes)
 
 
 @dataclass
@@ -282,45 +303,179 @@ def calibrate_probe_budget(
         probes.append((b, r))
         return r
 
-    best_s = best_r = None
+    r_hi = None
     if hint is not None and lo < hi:
         h = min(max(int(round(float(hint) / resolution)), lo), hi)
-        r_h = probe(h)
-        if r_h >= target_recall:
-            # hint passes: the answer is at or below it — binary search
-            # [lo, h] without ever paying the full-fan-out probe
-            best_s, best_r, hi = h, r_h, h
-        elif h == hi:
-            # hint already at max fan-out and still short: best-effort
-            return ProbeBudgetResult(hi * resolution, r_h, target_recall, probes)
-        else:
-            # hint fails: gallop upward to bracket the crossing
-            lo, step = h + 1, h
-            while lo <= hi:
-                step = min(step * 2, hi)
-                r = probe(step)
-                if r >= target_recall:
-                    best_s, best_r, hi = step, r, step
+        r_hi = probe(h)
+        if r_hi < target_recall and h < hi:
+            # hint fails: gallop upward (doubling) to bracket the crossing
+            lo = h + 1
+            while True:
+                h = min(h * 2, hi)
+                r_hi = probe(h)
+                if r_hi >= target_recall or h == hi:
                     break
-                if step == hi:
-                    return ProbeBudgetResult(
-                        hi * resolution, r, target_recall, probes
-                    )
-                lo = step + 1
-    if best_s is None:
-        r_hi = probe(hi)
-        if r_hi < target_recall:
-            return ProbeBudgetResult(hi * resolution, r_hi, target_recall, probes)
-        best_s, best_r = hi, r_hi
-    while lo < hi:
-        mid = (lo + hi) // 2
-        r = probe(mid)
-        if r >= target_recall:
-            best_s, best_r = mid, r
-            hi = mid
-        else:
-            lo = mid + 1
-    return ProbeBudgetResult(best_s * resolution, best_r, target_recall, probes)
+                lo = h + 1
+        # the last probe either passes (an upper bracket that never paid
+        # the full-fan-out probe) or failed at max (best-effort)
+        hi = h
+    step, r = _first_passing(probe, lo, hi, target_recall, r_hi)
+    return ProbeBudgetResult(step * resolution, r, target_recall, probes)
+
+
+def fit_probe_budget(
+    queries: DataFrame,
+    k: int,
+    target_recall: float,
+    search_at: Callable[[float, DataFrame, list[int]], DataFrame],
+    gt_scan: Callable[[DataFrame, list[int]], DataFrame],
+    cache: dict,
+    cache_key: tuple | None,
+    max_budget: float,
+    qid_col: str = "qid",
+    calibration_queries: int | str = 32,
+    calibration_groundtruth: DataFrame | None = None,
+    calibration_margin: float | str | None = "ci",
+    calibration_validation_queries: int = 0,
+    calibration_budget_hint: float | None = None,
+    calibration_stats: dict | None = None,
+) -> float:
+    """The calibration loop behind every ``target_recall=`` search
+    (ivf_search, vamana_search): fit the probe budget that hits
+    ``target_recall`` on a deterministic query sample, validate it on a
+    held-out one, and return it. The index family supplies only
+    ``search_at(budget, q_df, qids)`` — its search over the sampled
+    queries ``q_df`` (whose qid list is ``qids``) at that
+    ``probe_budget``, run at the caller's exact operating point
+    (max_probes, exclusions, rerank args, ``where=``) so the fitted
+    budget is the one the final search needs — and
+    ``gt_scan(q_df, qids)``, the exact groundtruth scan for that sample.
+
+    ``calibration_queries``: the fit sample is that many smallest qids
+    (reproducible, no RNG). The budget search is
+    :func:`calibrate_probe_budget` on the 0.25 grid up to
+    ``max_budget`` (the cluster/shard count): O(log range) sampled
+    searches. ``"auto"`` sizes the fit sample from the CI half-width at
+    (target, k) (:func:`calibration_sample_size`) and, when no explicit
+    validation count was given, holds out half that.
+
+    ``calibration_groundtruth``: standard (qid, rank, neighbor_id)
+    exact results covering the sample, skipping ``gt_scan``. Otherwise
+    the scan runs once per sample and is cached in ``cache`` (the
+    index's ``cal_cache``, the gt-beside-the-manifest analog: the exact
+    scan is the dominant one-time cost at scale) under
+    ``("gt", k, qids) + cache_key``; ``cache_key=None`` marks a scan
+    whose inputs cannot be keyed (a rerank base, an exclusion frame),
+    which then runs uncached.
+
+    ``calibration_margin``: sampling-aware fit target. ``"ci"`` (the
+    default) fits at the one-sided 95% upper confidence bound of the
+    sample recall (:func:`margined_target` — an exact 32-query/k=10
+    fit is a coin flip on whether the POPULATION clears the target;
+    measured 0.8712 at 1e8 rows), a float adds a fixed margin, None
+    keeps the exact fit. The margin is sized from the ACTUAL effective
+    sample: the fitted qid count, bounded by a supplied groundtruth's
+    distinct qids (recall joins inner on qid).
+
+    ``calibration_validation_queries``: > 0 holds out that many
+    ADDITIONAL qids (the next-smallest after the fit sample, disjoint)
+    and grades the fitted budget on them before serving, widening it
+    until the held-out recall clears the target
+    (:func:`validate_budget` — a within-sample margin cannot remove a
+    BIASED draw; the held-out check can detect it). A supplied
+    groundtruth that covers the held-out qids is reused for it.
+
+    ``calibration_budget_hint``: warm start for the budget search (e.g.
+    a smaller tier's fitted budget scaled by sqrt(N ratio)) — a good
+    hint replaces the opening full-fan-out probe with evals near the
+    operating point; a bad one costs only the gallop steps
+    (:func:`calibrate_probe_budget` ``hint=``).
+
+    ``calibration_stats``: pass a dict to receive the one-time cost
+    split, so groundtruth + fit cost is never conflated with serve
+    cost: gt_sec, gt_cached, n_fit_qids, fit_target, fit_sec,
+    fit_evals, fitted_budget, fit_recall; plus auto_sized (with
+    ``"auto"``), budget_hint (with a hint), and n_val_qids, validation,
+    validated_recall, validated, val_sec, validated_budget (with a
+    held-out split)."""
+    if not 0.0 < target_recall <= 1.0:
+        raise ValueError("target_recall must be in (0, 1]")
+    stats = {} if calibration_stats is None else calibration_stats
+    n_cal, n_val = calibration_queries, calibration_validation_queries
+    if n_cal == "auto":
+        stats["auto_sized"] = calibration_sample_size(target_recall, k)
+        n_cal, auto_val = stats["auto_sized"]
+        n_val = int(n_val) or auto_val
+    n_cal, n_val = int(n_cal), max(0, int(n_val))
+    qlong = F.col(qid_col).cast("long")
+    all_qids = [
+        int(r[0])
+        for r in queries.select(qlong.alias("q"))
+        .orderBy("q")
+        .limit(n_cal + n_val)
+        .collect()
+    ]
+    fit_qids, val_qids = all_qids[:n_cal], all_qids[n_cal:]
+
+    def exact_gt(q: DataFrame, qids: list[int]) -> tuple[DataFrame, bool]:
+        if cache_key is None:
+            return gt_scan(q, qids), False
+        key = ("gt", k, tuple(qids)) + tuple(cache_key)
+        pdf = cache.get(key)
+        cached = pdf is not None
+        if not cached:
+            # materialize once (|sample| x k rows — driver-small), so
+            # gt_sec is an honest split and a re-fit never re-scans
+            pdf = cache[key] = gt_scan(q, qids).toPandas()
+        return queries.sparkSession.createDataFrame(pdf), cached
+
+    t0 = time.perf_counter()
+    fit_q = queries.filter(qlong.isin(fit_qids))
+    n_fit = max(1, len(fit_qids))
+    groundtruth = calibration_groundtruth
+    if groundtruth is not None:
+        n_fit = min(
+            n_fit, max(1, groundtruth.select(qid_col).distinct().count())
+        )
+        stats["gt_cached"] = False
+    else:
+        groundtruth, stats["gt_cached"] = exact_gt(fit_q, fit_qids)
+    stats["gt_sec"] = time.perf_counter() - t0
+    stats["n_fit_qids"] = n_fit
+    fit_target = margined_target(target_recall, calibration_margin, k, n_fit)
+    stats["fit_target"] = fit_target
+    if calibration_budget_hint is not None:
+        stats["budget_hint"] = float(calibration_budget_hint)
+    t0 = time.perf_counter()
+    cal = calibrate_probe_budget(
+        lambda b: search_at(b, fit_q, fit_qids),
+        groundtruth, k, target_recall=fit_target,
+        max_budget=float(max_budget), hint=calibration_budget_hint,
+    )
+    stats["fit_sec"] = time.perf_counter() - t0
+    stats["fit_evals"] = len(cal.probes)
+    stats["fitted_budget"] = cal.probe_budget
+    stats["fit_recall"] = cal.recall
+    budget = cal.probe_budget
+    if val_qids:
+        t0 = time.perf_counter()
+        val_q = queries.filter(qlong.isin(val_qids))
+        val_gt = None
+        if calibration_groundtruth is not None:
+            val_gt = calibration_groundtruth.filter(qlong.isin(val_qids))
+            if val_gt.select(qid_col).distinct().count() != len(val_qids):
+                val_gt = None
+        if val_gt is None:
+            val_gt = exact_gt(val_q, val_qids)[0]
+        stats["n_val_qids"] = len(val_qids)
+        budget = validate_budget(
+            lambda b: search_at(b, val_q, val_qids),
+            val_gt, k, target_recall, budget,
+            max_budget=float(max_budget), stats=stats,
+        )
+        stats["val_sec"] = time.perf_counter() - t0
+        stats["validated_budget"] = budget
+    return budget
 
 
 @dataclass
@@ -356,20 +511,8 @@ def calibrate_closure_amplification(
         probes.append((ladder[i], r))
         return r
 
-    lo, hi = 0, len(ladder) - 1
-    r_hi = probe(hi)
-    if r_hi < target_recall:
-        return ClosureResult(ladder[hi], r_hi, target_recall, probes)
-    best_i, best_r = hi, r_hi
-    while lo < hi:
-        mid = (lo + hi) // 2
-        r = probe(mid)
-        if r >= target_recall:
-            best_i, best_r = mid, r
-            hi = mid
-        else:
-            lo = mid + 1
-    return ClosureResult(ladder[best_i], best_r, target_recall, probes)
+    i, r = _first_passing(probe, 0, len(ladder) - 1, target_recall)
+    return ClosureResult(ladder[i], r, target_recall, probes)
 
 
 @dataclass
@@ -434,21 +577,14 @@ def calibrate_split_buffer(
     sws = window
     while sws > 1:
         sws -= 1
-        if probe(sws, capacity_upper) < target_recall:
+        r_cap = probe(sws, capacity_upper)
+        if r_cap < target_recall:
             break  # shrinking further cannot recover recall
         # smallest capacity in [max(sws, k), capacity_upper] that holds
-        lo, hi = max(sws, k), capacity_upper
-        best_cap, best_r = hi, None
-        while lo < hi:
-            mid = (lo + hi) // 2
-            r = probe(sws, mid)
-            if r >= target_recall:
-                best_cap, best_r = mid, r
-                hi = mid
-            else:
-                lo = mid + 1
-        if best_r is None:
-            best_r = _recall_of(groundtruth, search_fn(sws, best_cap), k)
+        best_cap, best_r = _first_passing(
+            lambda c: probe(sws, c), max(sws, k), capacity_upper,
+            target_recall, r_cap,
+        )
         c = cost_of(sws, best_cap)
         if c < best.cost:
             best = SplitBufferResult(

@@ -407,7 +407,11 @@ def _pin_by_shard(
     if checkpoint:
         df, ckpt_ids = _local_ckpt(df)
     pinned = _by_shard(df, n_keys=n_keys).persist()
-    pinned.count()
+    try:
+        pinned.count()
+    except BaseException:
+        _drop_pins(df.sparkSession, [(pinned, ckpt_ids)])
+        raise
     # the localCheckpoint registers its OWN persisted RDD, which
     # unpersisting `pinned` does not release — the caller tracks the
     # RDD ids (DynamicVamana.ckpt_cell) and frees them when a newer
@@ -430,9 +434,27 @@ def _pin_pair(
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fg = pool.submit(_pin_by_shard, graph_df, checkpoint, n_keys)
-        fl = pool.submit(_pin_by_shard, layout_df, checkpoint, n_keys)
-        return fg.result(), fl.result()
+        futs = [
+            pool.submit(_pin_by_shard, df, checkpoint, n_keys)
+            for df in (graph_df, layout_df)
+        ]
+    # both jobs have finished: if one failed, release the other's pin
+    errs = [f.exception() for f in futs]
+    if any(errs):
+        _drop_pins(
+            graph_df.sparkSession,
+            [f.result() for f, e in zip(futs, errs) if e is None],
+        )
+        raise next(e for e in errs if e)
+    return futs[0].result(), futs[1].result()
+
+
+def _drop_pins(spark, pins) -> None:
+    """Release (pinned frame, checkpoint RDD ids) pairs that a failed
+    mutation built — it never returns a handle that could own them."""
+    for pinned, ckpt_ids in pins:
+        pinned.unpersist(blocking=False)
+        _release_ckpt_rdds(spark, tuple(ckpt_ids))
 
 
 def _persistent_rdd_ids(spark) -> set:
@@ -691,33 +713,27 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
     )
     # plan-growth guard: cut lineage only every _CKPT_EVERY-th mutation
     ckpt = dyn.gens_since_ckpt + 1 >= _CKPT_EVERY
-    pin_args = (
-        idx.graph.filter(~F.col("shard_id").isin(touched)).unionByName(linked),
-        _without_ids(idx.layout, "__id", revived).unionByName(
-            new_layout.select("shard_id", "__id", "__vec")
-        ),
-    )
-    if dup_check_df is not None:
-        # overlap the collision-count read with the pin jobs (§2.6)
-        from concurrent.futures import ThreadPoolExecutor
+    # overlap the collision-count read with the pin jobs (§2.6); when
+    # either fails (a collision included) the new pins are released
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=1) as vpool:
-            f_dup = vpool.submit(dup_check_df.count)
-            (graph, g_ckpt), (layout, l_ckpt) = _pin_pair(
-                *pin_args, checkpoint=ckpt, n_keys=idx.n_shards
-            )
-            n_dup = f_dup.result()
-        if n_dup:
-            graph.unpersist(blocking=False)
-            layout.unpersist(blocking=False)
-            _release_ckpt_rdds(
-                new_rows.sparkSession, tuple(g_ckpt) + tuple(l_ckpt)
-            )
-            raise ValueError(f"{n_dup} ids already exist in the index")
-    else:
-        (graph, g_ckpt), (layout, l_ckpt) = _pin_pair(
-            *pin_args, checkpoint=ckpt, n_keys=idx.n_shards
+    with ThreadPoolExecutor(max_workers=1) as vpool:
+        f_dup = None if dup_check_df is None else vpool.submit(dup_check_df.count)
+        pins = _pin_pair(
+            idx.graph.filter(~F.col("shard_id").isin(touched)).unionByName(linked),
+            _without_ids(idx.layout, "__id", revived).unionByName(
+                new_layout.select("shard_id", "__id", "__vec")
+            ),
+            checkpoint=ckpt, n_keys=idx.n_shards,
         )
+        try:
+            n_dup = 0 if f_dup is None else f_dup.result()
+            if n_dup:
+                raise ValueError(f"{n_dup} ids already exist in the index")
+        except BaseException:
+            _drop_pins(new_rows.sparkSession, pins)
+            raise
+    (graph, g_ckpt), (layout, l_ckpt) = pins
     # the new generation is materialized — release the superseded
     # generation's persisted blocks (the CacheManager never reclaims
     # them on its own; recompute of this generation, if ever evicted,
@@ -725,12 +741,11 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
     # mutation cut a NEW checkpoint, the previous cut is no longer on
     # any live lineage — release it too; otherwise inherit it (this
     # generation still recomputes through it).
+    dyn._release_pins()
     if ckpt:
-        dyn._release_pins()
         dyn.ckpt_cell.release(dyn.spark)
         cell, gen = _CkptCell(rdd_ids=tuple(g_ckpt) + tuple(l_ckpt)), 0
     else:
-        dyn._release_pins()
         # same cut, new owner: a close() on the superseded handle must
         # not destroy the checkpoint this generation recomputes through
         cell = dyn.ckpt_cell
@@ -991,12 +1006,11 @@ def consolidate(dyn: DynamicVamana) -> DynamicVamana:
     )
     # release the superseded generation's pins; a new lineage cut also
     # retires the previous cut (see add_points)
+    dyn._release_pins()
     if ckpt:
-        dyn._release_pins()
         dyn.ckpt_cell.release(dyn.spark)
         cell, gen = _CkptCell(rdd_ids=tuple(g_ckpt) + tuple(l_ckpt)), 0
     else:
-        dyn._release_pins()
         cell = dyn.ckpt_cell
         gen = cell.transfer()
     # fresh cal_cache (see add_points): cached counts/groundtruth

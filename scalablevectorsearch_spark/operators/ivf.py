@@ -365,193 +365,65 @@ def _fit_budget_for_target(
     calibration_validation_queries: int = 0,
     budget_hint: float | None = None,
 ) -> float:
-    """Fit a probe budget hitting ``target_recall`` on a deterministic
-    query sample (ivf_search's target_recall= path). The sample is the
-    ``calibration_queries`` smallest qids — reproducible, no RNG.
-    Groundtruth defaults to one exact flat scan of the clustered base
-    restricted to the sample (a bounded cost: |sample| driver-resident
-    queries x one base scan, the same shape as any gated flat_knn).
-    The budget search itself is O(log n_clusters/0.25) sampled
-    ivf_search jobs, each scanning ~budget/n_clusters of the base.
-
+    """ivf_search's target_recall= fit: the IVF side of
+    :func:`operators.calibrate.fit_probe_budget`, which owns the loop
+    (sample split, groundtruth cache, margin, fit, validation, stats).
     The calibration searches run with the SAME ``max_probes`` /
-    ``k_reorder`` / rerank arguments as the final search, so the fitted
-    budget reflects the operating point the caller will actually run —
-    a user ``max_probes`` below the budget clamp's cap lowers the
-    calibration recall too, and the fit honestly widens the budget (or
-    reports best-effort at max) instead of silently handing back a
-    budget whose clamp the final search then cuts. When ``rerank_base``
-    is provided, the internal groundtruth is the exact scan of the
-    RE-RANK (full-precision) vectors, matching what the re-ranked
-    search is graded against.
-
-    The CI margin is sized from the ACTUAL effective sample — the
-    fitted qid count, further bounded by the supplied groundtruth's
-    distinct qids when the caller passed one with fewer queries than
-    requested (recall joins inner on qid, so the effective Bernoulli n
-    is the intersection).
-
-    ``calibration_validation_queries`` > 0 holds out that many
-    ADDITIONAL qids (the next-smallest after the fit sample, disjoint)
-    and grades the fitted budget on them before serving, widening the
-    budget until the held-out recall clears the target (see
-    calibrate.validate_budget — a within-sample margin cannot remove a
-    BIASED draw; the held-out check can detect it).
-
-    ``calibration_queries="auto"`` derives the fit-sample size from the
-    CI half-width at (target, k) — calibrate.calibration_sample_size —
-    and, when no explicit validation count was given, a held-out split
-    of half that, so ``target_recall=`` carries its statistical
-    guarantee at any k/target without the caller hand-picking ns.
-    ``budget_hint`` warm-starts the budget grid search (e.g. a smaller
-    tier's fitted budget scaled by sqrt(N ratio)) — see
-    calibrate.calibrate_probe_budget(hint=)."""
-    from scalablevectorsearch_spark.operators.calibrate import (
-        calibrate_probe_budget,
-        calibration_sample_size,
-        margined_target,
-        validate_budget,
-    )
+    ``k_reorder`` / rerank arguments as the final search, each step
+    broadcasting only the sample's full-precision rerank rows. The
+    groundtruth is one exact flat scan of the clustered base (under
+    ``where``) — or, when ``rerank_base`` is given, of the RE-RANK
+    vectors the re-ranked search is graded against, uncached because
+    that base's identity cannot be keyed."""
+    from scalablevectorsearch_spark.operators.calibrate import fit_probe_budget
     from scalablevectorsearch_spark.operators.flat import flat_knn
 
-    import time as _time
-
-    if stats is None:
-        stats = {}
-    if calibration_queries == "auto":
-        auto_fit, auto_val = calibration_sample_size(target_recall, k)
-        calibration_queries = auto_fit
-        if int(calibration_validation_queries) == 0:
-            calibration_validation_queries = auto_val
-        stats["auto_sized"] = (auto_fit, auto_val)
-    calibration_queries = int(calibration_queries)
-    qlong = F.col(qid_col).cast("long")
-    n_val = max(0, int(calibration_validation_queries))
-    all_qids = [
-        int(r[0])
-        for r in queries.select(qlong.alias("q"))
-        .orderBy("q")
-        .limit(int(calibration_queries) + n_val)
-        .collect()
-    ]
-    fit_qids = all_qids[:calibration_queries]
-    val_qids = all_qids[calibration_queries:]
-    sample_q = queries.filter(qlong.isin(fit_qids))
-
-    def restrict_rerank(qids):
-        # each calibration step broadcasts |sample| full-precision
-        # rerank rows, not the full query set
+    def rerank_of(qids):
         if rerank_queries is None:
             return None
-        return rerank_queries.filter(qlong.isin(qids))
+        return rerank_queries.filter(F.col(qid_col).cast("long").isin(qids))
 
-    def exact_gt(sq, rq, qids_key):
-        """Exact groundtruth for one qid sample; cached on the index
-        (the gt-beside-the-manifest analog — the exact scan is the
-        dominant one-time cost at scale) except on the rerank path,
-        whose base identity cannot be keyed. Returns (gt, was_cached)."""
-        if rerank_base is not None:
+    def search_at(b, q, qids):
+        return ivf_search(
+            index, q, k, distance=distance, qid_col=qid_col,
+            qvec_col=qvec_col, round_to=4, probe_budget=b, router=router,
+            router_candidates=router_candidates, where=where,
+            max_probes=max_probes, k_reorder=k_reorder,
+            rerank_base=rerank_base, rerank_queries=rerank_of(qids),
+        )
+
+    def gt_scan(q, qids):
+        if rerank_base is None:
+            base = index.clustered.select(F.col(index.id_col), F.col(index.vec_col))
+            if where is not None:
+                base = base.filter(where)
+        else:
             base = rerank_base
-            gt_q = rq if rq is not None else sq
+            if rerank_queries is not None:
+                q = rerank_of(qids)
             if where is not None:
                 # the predicate may reference metadata columns present on
                 # the clustered frame but not on rerank_base — restrict by
                 # id via semi-join instead of filtering rerank_base
                 passing = index.clustered.filter(where).select(index.id_col)
                 base = base.join(passing, on=index.id_col, how="semi")
-            return (
-                flat_knn(
-                    base, gt_q, k=k, distance=distance, qid_col=qid_col,
-                    qvec_col=qvec_col, id_col=index.id_col,
-                    vec_col=index.vec_col, round_to=4,
-                ),
-                False,
-            )
-        gt_key = ("gt", k, distance, tuple(qids_key), str(where))
-        cached = index.cal_cache.get(gt_key)
-        if cached is not None:
-            return index.clustered.sparkSession.createDataFrame(cached), True
-        base = index.clustered.select(F.col(index.id_col), F.col(index.vec_col))
-        if where is not None:
-            base = base.filter(where)
-        gt = flat_knn(
-            base, sq, k=k, distance=distance, qid_col=qid_col,
+        return flat_knn(
+            base, q, k=k, distance=distance, qid_col=qid_col,
             qvec_col=qvec_col, id_col=index.id_col, vec_col=index.vec_col,
             round_to=4,
         )
-        # materialize once (|sample| x k rows — driver-small), so gt_sec
-        # is an honest split and the cached copy never re-runs the scan
-        pdf = gt.toPandas()
-        index.cal_cache[gt_key] = pdf
-        return index.clustered.sparkSession.createDataFrame(pdf), False
 
-    t_gt = _time.perf_counter()
-    n_fit = max(1, len(fit_qids))
-    supplied_gt = groundtruth
-    if groundtruth is not None:
-        # the effective Bernoulli n is the qids the recall join keeps
-        n_fit = min(
-            n_fit, max(1, groundtruth.select(qid_col).distinct().count())
-        )
-        stats["gt_cached"] = False
-    else:
-        groundtruth, stats["gt_cached"] = exact_gt(
-            sample_q, restrict_rerank(fit_qids), fit_qids
-        )
-    stats["gt_sec"] = _time.perf_counter() - t_gt
-
-    def gt_for_validation(vq, vqids):
-        # a supplied groundtruth that already covers the held-out qids
-        # (e.g. a generator's full-query-set gt) is reused — the
-        # internal exact scan is only paid when it must be
-        if supplied_gt is not None:
-            vgt = supplied_gt.filter(
-                F.col(qid_col).cast("long").isin(vqids)
-            )
-            if vgt.select(qid_col).distinct().count() == len(vqids):
-                return vgt
-        return exact_gt(vq, restrict_rerank(vqids), vqids)[0]
-    stats["n_fit_qids"] = n_fit
-    fit_target = margined_target(target_recall, calibration_margin, k, n_fit)
-    stats["fit_target"] = fit_target
-    t_fit = _time.perf_counter()
-
-    def search_at(b, q, rq):
-        return ivf_search(
-            index, q, k, distance=distance, qid_col=qid_col,
-            qvec_col=qvec_col, round_to=4, probe_budget=b, router=router,
-            router_candidates=router_candidates, where=where,
-            max_probes=max_probes, k_reorder=k_reorder,
-            rerank_base=rerank_base, rerank_queries=rq,
-        )
-
-    rq_fit = restrict_rerank(fit_qids)
-    if budget_hint is not None:
-        stats["budget_hint"] = float(budget_hint)
-    cal = calibrate_probe_budget(
-        lambda b: search_at(b, sample_q, rq_fit),
-        groundtruth, k, target_recall=fit_target,
-        max_budget=float(index.n_clusters), hint=budget_hint,
+    return fit_probe_budget(
+        queries, k, target_recall, search_at, gt_scan,
+        cache=index.cal_cache,
+        cache_key=None if rerank_base is not None else (distance, str(where)),
+        max_budget=index.n_clusters, qid_col=qid_col,
+        calibration_queries=calibration_queries,
+        calibration_groundtruth=groundtruth,
+        calibration_margin=calibration_margin,
+        calibration_validation_queries=calibration_validation_queries,
+        calibration_budget_hint=budget_hint, calibration_stats=stats,
     )
-    stats["fit_sec"] = _time.perf_counter() - t_fit
-    stats["fit_evals"] = len(cal.probes)
-    stats["fitted_budget"] = cal.probe_budget
-    stats["fit_recall"] = cal.recall
-    budget = cal.probe_budget
-    if val_qids:
-        t_val = _time.perf_counter()
-        val_q = queries.filter(qlong.isin(val_qids))
-        rq_val = restrict_rerank(val_qids)
-        val_gt = gt_for_validation(val_q, val_qids)
-        stats["n_val_qids"] = len(val_qids)
-        budget = validate_budget(
-            lambda b: search_at(b, val_q, rq_val),
-            val_gt, k, target_recall, budget,
-            max_budget=float(index.n_clusters), stats=stats,
-        )
-        stats["val_sec"] = _time.perf_counter() - t_val
-        stats["validated_budget"] = budget
-    return budget
 
 
 def _ivf_kernel(
@@ -695,54 +567,21 @@ def ivf_search(
     flat_knn); incompatible with ``k_reorder``.
 
     ``target_recall``: recall-targeted probing — the reference's
-    auto-tuning philosophy (calibrate.h:249) applied to the probe-cost
-    axis. Fits ``probe_budget`` internally with
-    :func:`operators.calibrate.calibrate_probe_budget` against exact
-    groundtruth on a deterministic calibration sample (the
-    ``calibration_queries`` smallest qids; pass
-    ``calibration_groundtruth`` — standard (qid, rank, neighbor_id)
-    exact results covering those qids — to skip the internal flat
-    scan), then runs the full search at the fitted budget. At a fixed
-    default ``n_probes`` the realized recall silently tracks the data
-    distribution; with a target it tracks the TARGET and the probe
-    cost adapts (fixed-probe IVF at 10M recalled 0.830 where
-    epsilon probing bought 0.964 at comparable cost). Sample-fitted:
-    full-population recall can sit slightly below the target (the
-    sample's confidence interval). Mutually exclusive with explicit
-    ``epsilon_bp``/``probe_budget``; ignores ``n_probes``.
-    ``calibration_stats``: pass a dict to receive the calibration cost
-    split — {gt_sec, gt_cached, fit_sec, fit_evals, fitted_budget,
-    fit_recall} — so one-time groundtruth+fit cost is never conflated
-    with per-query serve cost. The sample groundtruth is cached on the
-    index (``index.cal_cache``); a second target_recall search on the
-    same index skips the exact scan (gt_cached=True).
-    ``calibration_margin``: sampling-aware fit target — ``"ci"``
-    (the default) fits at the one-sided 95% upper confidence bound of
-    the sample recall (see calibrate.margined_target: a 32-query/k=10
-    exact fit is a coin flip on whether the POPULATION clears the
-    target; measured 0.8712 at 1e8 rows), a float adds a fixed margin,
-    None keeps the exact fit.
-    ``calibration_validation_queries``: > 0 holds out that many
-    ADDITIONAL disjoint qids and grades the fitted budget on them
-    before serving, widening the budget until the held-out recall
-    clears the target (calibrate.validate_budget) — catches a fit
-    sample whose draw is systematically easier than the population,
-    which no within-sample margin can.
-    ``calibration_queries="auto"`` sizes the fit/validation split from
-    the CI half-width at (target, k) (calibrate.calibration_sample_size)
-    instead of hand-picked constants.
-    ``calibration_budget_hint``: warm-start for the budget grid search
-    — e.g. a smaller tier's fitted budget scaled by sqrt(N ratio); a
-    good hint replaces the opening full-fan-out calibration probe with
-    evals near the true operating point (calibrate_probe_budget(hint=));
-    a bad one costs only the gallop steps."""
+    auto-tuning (calibrate.h:249) applied to the probe-cost axis. The
+    probe budget is fitted against exact groundtruth on a deterministic
+    calibration sample, then the full search runs at it: recall tracks
+    the TARGET and the probe cost adapts to the data (fixed-probe IVF
+    at 10M recalled 0.830 where epsilon probing bought 0.964 at
+    comparable cost). Mutually exclusive with explicit
+    ``epsilon_bp``/``probe_budget``; ignores ``n_probes``. The
+    ``calibration_*`` arguments (sample size, supplied groundtruth,
+    margin, held-out validation, warm-start hint, stats dict) are
+    documented once, on :func:`operators.calibrate.fit_probe_budget`."""
     if target_recall is not None:
         if epsilon_bp is not None or probe_budget is not None:
             raise ValueError(
                 "target_recall is mutually exclusive with epsilon_bp/probe_budget"
             )
-        if not 0.0 < target_recall <= 1.0:
-            raise ValueError("target_recall must be in (0, 1]")
         budget = _fit_budget_for_target(
             index, queries, k, target_recall, distance, qid_col,
             qvec_col or index.vec_col, calibration_queries,

@@ -621,27 +621,6 @@ def vamana_search(
     (from ``_filtered_scan``) to reuse instead of re-stamping the base —
     callers that search the same ``where=`` repeatedly (the calibration
     fit loop, block iteration) share one; the caller owns its lifecycle.
-    ``calibration_stats``: with ``target_recall``, pass a dict to
-    receive the cost split {gt_sec, gt_cached, fit_sec, fit_evals,
-    fitted_budget, fit_recall}; the sample groundtruth is cached on
-    ``index.cal_cache`` so re-calibration skips the exact scan.
-    ``calibration_margin``: sampling-aware fit target ("ci", the
-    default = one-sided 95% upper confidence bound of the sample
-    recall, float = fixed margin, None = exact fit; see
-    calibrate.margined_target — an exact sample fit is measured to
-    under-deliver on the population).
-    ``calibration_validation_queries``: > 0 holds out that many
-    additional disjoint qids and grades the fitted budget on them
-    before serving (calibrate.validate_budget widens until the
-    held-out recall clears the target).
-    ``calibration_queries="auto"`` sizes the fit/validation split from
-    the CI half-width at (target, k) (calibrate.calibration_sample_size)
-    instead of hand-picked constants.
-    ``calibration_budget_hint``: warm-start for the budget grid search
-    (e.g. a smaller tier's fitted budget scaled by sqrt(N ratio)) — a
-    good hint replaces the opening full-fan-out calibration probe with
-    evals near the true operating point; a bad one costs only the
-    gallop steps (calibrate_probe_budget(hint=)).
     ``fallback_below``: with ``where``, count the matching pool once
     (a pushed-down parquet count) and, when it holds at most this many
     rows, serve the EXACT filtered flat k-NN over the pool instead of
@@ -701,16 +680,17 @@ def vamana_search(
     mean probe cost, adaptive cutoff recalls strictly better than a
     fixed per-query n_probes because boundary queries take the extra
     probes that center queries release.
-    ``target_recall``: recall-TARGETED probing — fits ``probe_budget``
-    internally with calibrate_probe_budget (calibrate.h:249's
-    binary-search-to-target applied to probe cost) against exact
-    groundtruth on the ``calibration_queries`` smallest qids (pass
-    ``calibration_groundtruth`` to skip the internal flat scan), then
-    runs the full search at the fitted budget; the user asks for
-    recall, the probe cost adapts to the data geometry. Requires a
-    kmeans-sharded index; mutually exclusive with
-    ``n_probes``/``epsilon_bp``/``probe_budget``. Same contract as
-    ivf_search(target_recall=).
+    ``target_recall``: recall-TARGETED probing — the probe budget is
+    fitted against exact groundtruth on a deterministic calibration
+    sample (groundtruth excludes tombstoned ids and honors ``where``;
+    the fit and validation evals share one persisted filtered scan,
+    released even when an eval raises), then the full search runs at
+    it: the user asks for recall, the probe cost adapts to the data
+    geometry. Requires a kmeans-sharded index; mutually exclusive with
+    ``n_probes``/``epsilon_bp``/``probe_budget``. The ``calibration_*``
+    arguments are documented once, on
+    :func:`operators.calibrate.fit_probe_budget` (the loop ivf_search's
+    ``target_recall=`` shares).
     ``router``: optional CentroidRouter (operators.router) over this
     index's shard centroids — replaces the exact O(S·d)-per-query
     centroid argmin with a sublinear graph traversal for very large
@@ -763,31 +743,75 @@ def vamana_search(
                 decode=index.vec_decode,
             )
     if target_recall is not None:
-        # recall-targeted probing (same contract as ivf_search's
-        # target_recall=, see operators/calibrate.calibrate_probe_budget):
-        # fit the probe budget against exact groundtruth on the
-        # calibration_queries smallest qids, then run at the fitted
-        # budget. Requires a kmeans-sharded index (budget probing needs
-        # shard centroids). Sample-fitted: full-population recall can
-        # sit slightly below the target.
+        # recall-targeted probing: calibrate.fit_probe_budget fits the
+        # budget, then the full search runs at it (see docstring)
         if n_probes is not None or epsilon_bp is not None or probe_budget is not None:
             raise ValueError(
                 "target_recall is mutually exclusive with "
                 "n_probes/epsilon_bp/probe_budget"
             )
-        if not 0.0 < target_recall <= 1.0:
-            raise ValueError("target_recall must be in (0, 1]")
         if index.shard_model is None:
             raise ValueError("target_recall requires a kmeans-sharded index")
-        budget = _fit_vamana_budget(
-            index, queries, k, sws, target_recall, qid_col, qvec_col,
-            calibration_queries, calibration_groundtruth, router,
-            max_probes=max_probes, buffer_capacity=buffer_capacity,
-            exclude_ids=exclude_ids, exclude_df=exclude_df, where=where,
-            stats=calibration_stats, calibration_margin=calibration_margin,
-            calibration_validation_queries=calibration_validation_queries,
-            budget_hint=calibration_budget_hint,
-        )
+        from pyspark.storagelevel import StorageLevel
+
+        from scalablevectorsearch_spark.operators.calibrate import fit_probe_budget
+        from scalablevectorsearch_spark.operators.flat import flat_knn
+
+        # one persisted filtered scan shared by every fit and validation
+        # eval — without it each step re-stamps the full base, the same
+        # sharing the block loop below does
+        scan = None
+        if where is not None:
+            scan = _filtered_scan(index, where).persist(StorageLevel.MEMORY_AND_DISK)
+
+        def search_at(b, q, _qids):
+            return vamana_search(
+                index, q, k, search_window_size=sws, qid_col=qid_col,
+                qvec_col=qvec_col, round_to=4, probe_budget=b, router=router,
+                max_probes=max_probes, buffer_capacity=buffer_capacity,
+                exclude_ids=exclude_ids, exclude_df=exclude_df, where=where,
+                scan_override=scan,
+            )
+
+        def gt_scan(q, _qids):
+            # excluded (tombstoned) ids can never be returned: grading
+            # against them would misstate the achievable recall
+            base = index.base
+            if where is not None:
+                base = base.filter(where)
+            if exclude_ids:
+                gone = [int(x) for x in exclude_ids]
+                base = base.filter(~F.col(index.id_col).cast("long").isin(gone))
+            if exclude_df is not None:
+                gone = exclude_df.select(
+                    F.col(exclude_df.columns[0]).cast("long").alias(index.id_col)
+                )
+                base = base.join(gone, on=index.id_col, how="anti")
+            return flat_knn(
+                base, q, k=k, distance=index.distance,
+                id_col=index.id_col, vec_col=index.vec_col, qid_col=qid_col,
+                qvec_col=qvec_col, round_to=4, decode=index.vec_decode,
+            )
+
+        try:
+            budget = fit_probe_budget(
+                queries, k, target_recall, search_at, gt_scan,
+                cache=index.cal_cache,
+                cache_key=None if exclude_df is not None else (
+                    index.distance, str(where),
+                    tuple(sorted(int(x) for x in exclude_ids or ())),
+                ),
+                max_budget=index.n_shards, qid_col=qid_col,
+                calibration_queries=calibration_queries,
+                calibration_groundtruth=calibration_groundtruth,
+                calibration_margin=calibration_margin,
+                calibration_validation_queries=calibration_validation_queries,
+                calibration_budget_hint=calibration_budget_hint,
+                calibration_stats=calibration_stats,
+            )
+        finally:
+            if scan is not None:
+                scan.unpersist()
         return vamana_search(
             index, queries, k, search_window_size=sws, qid_col=qid_col,
             qvec_col=qvec_col, round_to=round_to, exclude_ids=exclude_ids,
@@ -874,204 +898,6 @@ def vamana_search(
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.select("qid", "rank", "neighbor_id", "distance")
-
-
-def _fit_vamana_budget(
-    index: VamanaIndex,
-    queries: DataFrame,
-    k: int,
-    sws: int,
-    target_recall: float,
-    qid_col: str,
-    qvec_col: str,
-    calibration_queries: int,
-    groundtruth: DataFrame | None,
-    router,
-    max_probes: int | None = None,
-    buffer_capacity: int | None = None,
-    exclude_ids: list[int] | None = None,
-    exclude_df: DataFrame | None = None,
-    where=None,
-    stats: dict | None = None,
-    calibration_margin: float | str | None = "ci",
-    calibration_validation_queries: int = 0,
-    budget_hint: float | None = None,
-) -> float:
-    """Fit a shard probe budget hitting ``target_recall`` on a
-    deterministic query sample (vamana_search's target_recall= path;
-    the ivf_search._fit_budget_for_target analog). Groundtruth defaults
-    to one exact flat scan of the index's base (decoded when the index
-    stores packed vectors), with excluded (tombstoned) ids removed —
-    they can never be returned, so grading against them would misstate
-    the achievable recall and over-widen the fitted budget.
-
-    The calibration searches run with the caller's ``max_probes`` /
-    ``buffer_capacity`` / exclusions so the fitted budget reflects the
-    operating point the final search actually runs at — a user
-    ``max_probes`` below the budget clamp's cap lowers calibration
-    recall too, and the fit widens the budget (or honestly reports
-    best-effort at max fan-out) instead of silently missing the
-    target.
-
-    The CI margin is sized from the ACTUAL effective sample (fitted
-    qid count, bounded by a supplied groundtruth's distinct qids).
-    ``calibration_validation_queries`` > 0 holds out that many
-    additional disjoint qids and grades the fitted budget on them
-    before serving (calibrate.validate_budget), widening until the
-    held-out recall clears the target — see
-    ivf._fit_budget_for_target for the rationale."""
-    import time as _time
-
-    from scalablevectorsearch_spark.operators.calibrate import (
-        calibrate_probe_budget,
-        calibration_sample_size,
-        margined_target,
-        validate_budget,
-    )
-    from scalablevectorsearch_spark.operators.flat import flat_knn
-
-    if stats is None:
-        stats = {}
-    if calibration_queries == "auto":
-        auto_fit, auto_val = calibration_sample_size(target_recall, k)
-        calibration_queries = auto_fit
-        if int(calibration_validation_queries) == 0:
-            calibration_validation_queries = auto_val
-        stats["auto_sized"] = (auto_fit, auto_val)
-    calibration_queries = int(calibration_queries)
-    qlong = F.col(qid_col).cast("long")
-    n_val = max(0, int(calibration_validation_queries))
-    all_qids = [
-        int(r[0])
-        for r in queries.select(qlong.alias("q"))
-        .orderBy("q")
-        .limit(int(calibration_queries) + n_val)
-        .collect()
-    ]
-    fit_qids = all_qids[:calibration_queries]
-    val_qids = all_qids[calibration_queries:]
-    sample_q = queries.filter(qlong.isin(fit_qids))
-
-    def exact_gt(sq, qids_key):
-        """Exact groundtruth for one qid sample, cached on the index
-        (gt-beside-the-manifest analog: the one-time exact scan is
-        keyed by everything it depends on, so re-calibration skips it)
-        — except under exclude_df, whose identity cannot be keyed.
-        Returns (gt, was_cached)."""
-        gt_key = None
-        if exclude_df is None:
-            gt_key = (
-                "gt", k, index.distance, tuple(qids_key), str(where),
-                tuple(sorted(int(x) for x in exclude_ids)) if exclude_ids else (),
-            )
-            cached = index.cal_cache.get(gt_key)
-            if cached is not None:
-                return index.base.sparkSession.createDataFrame(cached), True
-        base = index.base
-        if where is not None:
-            base = base.filter(where)
-        if exclude_ids:
-            base = base.filter(
-                ~F.col(index.id_col).cast("long").isin(
-                    [int(x) for x in exclude_ids]
-                )
-            )
-        if exclude_df is not None:
-            base = base.join(
-                exclude_df.select(
-                    F.col(exclude_df.columns[0]).cast("long").alias(index.id_col)
-                ),
-                on=index.id_col,
-                how="anti",
-            )
-        gt = flat_knn(
-            base, sq, k=k, distance=index.distance,
-            id_col=index.id_col, vec_col=index.vec_col, qid_col=qid_col,
-            qvec_col=qvec_col, round_to=4, decode=index.vec_decode,
-        )
-        if gt_key is not None:
-            pdf = gt.toPandas()
-            index.cal_cache[gt_key] = pdf
-            return index.base.sparkSession.createDataFrame(pdf), False
-        return gt, False
-
-    t_gt = _time.perf_counter()
-    n_fit = max(1, len(fit_qids))
-    supplied_gt = groundtruth
-    if groundtruth is not None:
-        n_fit = min(
-            n_fit, max(1, groundtruth.select(qid_col).distinct().count())
-        )
-        stats["gt_cached"] = False
-    else:
-        groundtruth, stats["gt_cached"] = exact_gt(sample_q, fit_qids)
-    stats["gt_sec"] = _time.perf_counter() - t_gt
-
-    def gt_for_validation(vq, vqids):
-        # reuse a supplied groundtruth that already covers the held-out
-        # qids; pay the internal exact scan only when it must be
-        if supplied_gt is not None:
-            vgt = supplied_gt.filter(
-                F.col(qid_col).cast("long").isin(vqids)
-            )
-            if vgt.select(qid_col).distinct().count() == len(vqids):
-                return vgt
-        return exact_gt(vq, vqids)[0]
-    stats["n_fit_qids"] = n_fit
-    fit_target = margined_target(target_recall, calibration_margin, k, n_fit)
-    stats["fit_target"] = fit_target
-    # one persisted filtered scan shared across EVERY probe-budget
-    # evaluation of the fit loop AND the validation evals — without it
-    # each calibration step re-stamps the full base (O(log n_shards)
-    # extra full-base passes), the same sharing vamana_search's block
-    # loop does
-    scan_override = None
-    if where is not None:
-        from pyspark.storagelevel import StorageLevel
-
-        scan_override = _filtered_scan(index, where).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    def search_at(b, q):
-        return vamana_search(
-            index, q, k, search_window_size=sws, qid_col=qid_col,
-            qvec_col=qvec_col, round_to=4, probe_budget=b, router=router,
-            max_probes=max_probes, buffer_capacity=buffer_capacity,
-            exclude_ids=exclude_ids, exclude_df=exclude_df, where=where,
-            scan_override=scan_override,
-        )
-
-    t_fit = _time.perf_counter()
-    if budget_hint is not None:
-        stats["budget_hint"] = float(budget_hint)
-    try:
-        cal = calibrate_probe_budget(
-            lambda b: search_at(b, sample_q),
-            groundtruth, k, target_recall=fit_target,
-            max_budget=float(index.n_shards), hint=budget_hint,
-        )
-        stats["fit_sec"] = _time.perf_counter() - t_fit
-        stats["fit_evals"] = len(cal.probes)
-        stats["fitted_budget"] = cal.probe_budget
-        stats["fit_recall"] = cal.recall
-        budget = cal.probe_budget
-        if val_qids:
-            t_val = _time.perf_counter()
-            val_q = queries.filter(qlong.isin(val_qids))
-            val_gt = gt_for_validation(val_q, val_qids)
-            stats["n_val_qids"] = len(val_qids)
-            budget = validate_budget(
-                lambda b: search_at(b, val_q),
-                val_gt, k, target_recall, budget,
-                max_budget=float(index.n_shards), stats=stats,
-            )
-            stats["val_sec"] = _time.perf_counter() - t_val
-            stats["validated_budget"] = budget
-    finally:
-        if scan_override is not None:
-            scan_override.unpersist()
-    return budget
 
 
 def _filtered_scan(index: VamanaIndex, where) -> DataFrame:

@@ -187,9 +187,8 @@ def dataset_split(
     # exactly as the Column version reused the subtree
     from .text import _qident, _qlit
 
-    salt_sql = salt.replace("'", "''")
     h = (
-        f"substring(md5(cast(concat('{salt_sql}', ':', "
+        f"substring(md5(cast(concat({_qlit(salt)}, ':', "
         f"cast({_qident(id_col)} as string)) as binary)), 1, {digits})"
     )
     expr = _qlit(names[-1])

@@ -1,14 +1,7 @@
 """Regression tests for the round-7 ADVICE findings.
 
-1 (medium, operators/ivf.py + operators/vamana.py): target_recall
-   calibration fitted the probe budget WITHOUT the caller's
-   max_probes (and without k_reorder/rerank for ivf), but the final
-   search applied them — a user max_probes below the fitted budget's
-   clamp silently yielded recall under the requested target. The
-   calibration search_fn lambdas now run at the caller's exact
-   operating point (max_probes, k_reorder, rerank args, exclusions),
-   and the internal groundtruth respects exclusions / grades re-ranked
-   searches against the full-precision vectors.
+1 (medium, target_recall= fit at the caller's operating point): moved
+   to test_calibrate_budget.py.
 2 (low, operators/calibrate.py calibrate_probe_budget): the grid's
    lowest step used int(round(min_budget/resolution)), which can land
    BELOW min_budget (min_budget=1.0, resolution=0.3 -> 0.9) and the
@@ -28,17 +21,7 @@ import numpy as np
 import pytest
 
 from scalablevectorsearch_spark.operators.calibrate import calibrate_probe_budget
-from scalablevectorsearch_spark.operators.ivf import (
-    budget_probe_clamp,
-    ivf_build,
-    ivf_search,
-    _fit_budget_for_target,
-)
-from scalablevectorsearch_spark.operators.vamana import (
-    VamanaParams,
-    vamana_build,
-    vamana_search,
-)
+from scalablevectorsearch_spark.operators.ivf import budget_probe_clamp
 
 
 class TestClampFloorsKeepR6Values:
@@ -103,67 +86,3 @@ class TestGridNeverBelowMinBudget:
             cal._recall_of = orig
         # 1.0/0.25 == 4 exactly: the lowest step must be 4 (1.0), not 5
         assert abs(out.probe_budget - 1.0) < 1e-9
-
-
-@pytest.fixture(scope="module")
-def small_base(spark, embeddings):
-    base = embeddings.selectExpr("vec_id as id", "embedding as vector").limit(600)
-    base = base.cache()
-    base.count()
-    yield base
-    base.unpersist()
-
-
-@pytest.fixture(scope="module")
-def small_queries(embeddings):
-    return embeddings.selectExpr("vec_id as qid", "embedding as vector").limit(8)
-
-
-class TestCalibrationRunsAtCallersOperatingPoint:
-    def test_tight_max_probes_widens_or_maxes_fit(self, spark, small_base,
-                                                  small_queries):
-        """With a max_probes cap of 1 the calibration search is capped
-        too; the fit must NOT return the uncapped budget. Either it
-        widens past it (useless here — the cap still bites) and lands
-        at max_budget best-effort, or at least >= the uncapped fit."""
-        idx = ivf_build(small_base, n_clusters=8, n_iters=4)
-        free = _fit_budget_for_target(
-            idx, small_queries, 5, 0.95, "l2", "qid", "vector", 8,
-            None, None, None, None,
-        )
-        capped = _fit_budget_for_target(
-            idx, small_queries, 5, 0.95, "l2", "qid", "vector", 8,
-            None, None, None, None, max_probes=1,
-        )
-        assert capped >= free
-        # under a cap of 1 probe on 8 clusters, 0.95 recall is out of
-        # reach on this data: best-effort = max_budget (all clusters)
-        assert capped == pytest.approx(8.0)
-
-    def test_target_recall_composes_with_max_probes_end_to_end(
-        self, spark, small_base, small_queries
-    ):
-        idx = ivf_build(small_base, n_clusters=8, n_iters=4)
-        res = ivf_search(
-            idx, small_queries, 5, target_recall=0.9, max_probes=2,
-            calibration_queries=8,
-        )
-        assert res.count() == 8 * 5
-
-    def test_vamana_exclusions_forwarded_to_fit_and_gt(
-        self, spark, small_base, small_queries
-    ):
-        """target_recall + exclude_ids: excluded ids must not appear in
-        the result, and the internal calibration must not crash nor
-        grade against unreachable (excluded) groundtruth rows."""
-        params = VamanaParams(graph_max_degree=16, window_size=16)
-        index = vamana_build(small_base, params, n_shards=4, shard_by="kmeans")
-        excluded = [0, 1, 2, 3]
-        res = vamana_search(
-            index, small_queries, 5, target_recall=0.9,
-            calibration_queries=8, exclude_ids=excluded,
-        )
-        rows = res.collect()
-        assert len(rows) == 8 * 5
-        got_ids = {r["neighbor_id"] for r in rows}
-        assert got_ids.isdisjoint(set(excluded))

@@ -238,3 +238,33 @@ def test_vamana_margin_widens_fit_target(cbase, cqueries):
     assert s_ci["fit_target"] > 0.75
     assert s_ci["fitted_budget"] >= s_plain["fitted_budget"]
     index.layout.unpersist()
+
+
+def test_vamana_where_scan_released_when_fit_eval_raises(
+    spark, cbase, cqueries, monkeypatch
+):
+    """The fit's shared persisted where= scan is released even when a
+    calibration eval raises mid-fit."""
+    from scalablevectorsearch_spark.operators import calibrate as cal_mod
+
+    index = vamana_build(cbase, PARAMS, n_shards=4, shard_by="kmeans")
+    vamana_search(index, cqueries, k=5, search_window_size=64).collect()
+
+    def n_pinned():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    before = n_pinned()
+    real = cal_mod._recall_of
+
+    def failing(gt, res, k):
+        real(gt, res, k)  # runs the search: the shared scan is materialized
+        raise RuntimeError("injected calibration eval failure")
+
+    monkeypatch.setattr(cal_mod, "_recall_of", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        vamana_search(
+            index, cqueries, k=5, search_window_size=64, target_recall=0.9,
+            calibration_queries=8, where="label = 1", fallback_below=None,
+        )
+    assert n_pinned() == before
+    index.layout.unpersist()

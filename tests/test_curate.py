@@ -94,6 +94,23 @@ def test_dataset_split_salt_changes_assignment(spark):
     assert sum(a[k] != b[k] for k in a) > 0
 
 
+def test_dataset_split_salt_quoting(spark):
+    """The salt is hashed verbatim, quotes and backslashes included:
+    "it's" and "its" give different splits, and every salt — plain or
+    not — keeps the documented md5 protocol."""
+    df = spark.range(2000).withColumnRenamed("id", "doc_id")
+    got = {
+        salt: dict(dataset_split(df, salt=salt).select("doc_id", "split").collect())
+        for salt in ("it's", "its", "a\\tb", "end\\")
+    }
+    assert sum(got["it's"][k] != got["its"][k] for k in got["its"]) > 0
+    for salt, split in got.items():
+        for doc_id in (0, 1, 345, 1999):
+            h = hashlib.md5(f"{salt}:{doc_id}".encode()).hexdigest()[:4]
+            want = "train" if h < "e666" else ("val" if h < "f333" else "test")
+            assert split[doc_id] == want, (salt, doc_id)
+
+
 def test_pii_redact_handcrafted(spark):
     rows = [
         (0, "mail me at bob.smith+x@corp.example.org today"),

@@ -64,6 +64,48 @@ def test_add_duplicate_id_raises(dyn, base):
         add_points(dyn, dup)
 
 
+def test_failed_duplicate_count_releases_new_pins(spark, base, monkeypatch):
+    """add_points overlaps its collision count with the new
+    generation's pin jobs; when the count itself fails, the new graph/
+    layout pins and the lineage cut they made are released."""
+    import dataclasses
+
+    from scalablevectorsearch_spark.operators import dynamic as dyn_mod
+
+    idx = vamana_build(base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2)
+
+    def batch(offset):
+        return base.filter(F.col("id") < 3).select(
+            (F.col("id") + offset).alias("id"), "vector"
+        )
+
+    d1 = add_points(dynamic_vamana(idx), batch(70000))
+    # the next mutation cuts a checkpoint too
+    d1 = dataclasses.replace(d1, gens_since_ckpt=dyn_mod._CKPT_EVERY - 1)
+
+    def n_pinned():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    before = n_pinned()
+
+    class _FailingCount:
+        def count(self):
+            raise RuntimeError("injected duplicate-count failure")
+
+    real = dyn_mod._without_ids
+    monkeypatch.setattr(
+        dyn_mod, "_without_ids",
+        lambda df, col, ids, keep=False: (
+            _FailingCount() if keep else real(df, col, ids, keep)
+        ),
+    )
+    with pytest.raises(RuntimeError, match="injected"):
+        add_points(d1, batch(80000))
+    monkeypatch.undo()
+    assert n_pinned() == before
+    d1.close()
+
+
 def test_dynamic_cycle_recall(base, queries, dyn):
     """B6: add 1% + delete 1% + consolidate; recall vs exact flat over
     the mutated base stays high."""
