@@ -230,6 +230,18 @@ class LVQLoader:
         self.primary = primary
         self.residual = residual
 
+    def encode(self, base: DataFrame, distance: str):
+        """(codec, lvq_* storage table, compressed=True): the build reads
+        the storage table, which is also the two-level re-rank source."""
+        from scalablevectorsearch_spark.operators.lvq import (
+            LVQCodec,
+            lvq_compress,
+            lvq_train,
+        )
+
+        p = lvq_train(base, primary_bits=self.primary, residual_bits=self.residual)
+        return LVQCodec(p, distance=distance), lvq_compress(base, p), True
+
 
 class LeanVecLoader:
     """svs.LeanVecLoader — wraps an uncompressed loader with LeanVec
@@ -257,6 +269,29 @@ class LeanVecLoader:
         self.leanvec_dims = leanvec_dims
         self.primary_kind = primary_kind
         self.matrices = matrices
+
+    def encode(self, base: DataFrame, distance: str):
+        """(codec, base, compressed=False): the build projects ``base``,
+        which is also the full-dimension re-rank source."""
+        from scalablevectorsearch_spark.operators.leanvec import (
+            LeanVecCodec,
+            LeanVecModel,
+            dataset_mean,
+            leanvec_train,
+        )
+        from scalablevectorsearch_spark.operators.lvq import LVQCodec, lvq_train
+
+        if self.matrices is None:
+            model = leanvec_train(base, self.leanvec_dims)
+        else:
+            A, B = map(np.asarray, self.matrices)
+            model = LeanVecModel(A, B, dataset_mean(base, "vector"))
+        primary = None
+        if self.primary_kind != "float32":
+            # the LVQ primary trains on the (l2-codec) data projection
+            pb = LeanVecCodec(model).store(base, "id", "vector", False)
+            primary = LVQCodec(lvq_train(pb, primary_bits=4 if self.primary_kind == "lvq4" else 8))
+        return LeanVecCodec(model, primary, distance), base, False
 
 
 def _to_df(data, spark: SparkSession, id_offset: int = 0) -> DataFrame:
@@ -350,6 +385,7 @@ class Vamana:
             if g.count() != self.index.graph.count():
                 raise ValueError("graph_loader node count != saved index graph")
         self.search_window_size = max(10, self.index.params.window_size // 2)
+        self._rerank_source = None
 
     @classmethod
     def build(cls, parameters: VamanaBuildParameters, data,
@@ -359,68 +395,22 @@ class Vamana:
         VectorDataLoader) or a compressed-loader wrapper — LVQLoader /
         LeanVecLoader — exactly like the reference's
         ``svs.Vamana.build(parameters, svs.LVQLoader(...), ...)``."""
-        from scalablevectorsearch_spark.operators.vamana import vamana_build
+        from scalablevectorsearch_spark.operators.codec import Codec, codec_vamana_build
 
         self = cls.__new__(cls)
         self.spark = _spark()
-        if isinstance(data, LVQLoader):
-            from scalablevectorsearch_spark.operators.lvq import (
-                lvq_compress,
-                lvq_train,
-                lvq_vamana_build,
-            )
-
+        if isinstance(data, (LVQLoader, LeanVecLoader)):
             base = _to_df(data.loader, self.spark).select("id", "vector")
-            p = lvq_train(base, primary_bits=data.primary, residual_bits=data.residual)
-            storage = lvq_compress(base, p)
-            self.index = lvq_vamana_build(
-                storage, p, parameters, n_shards=n_shards,
-                distance=_dist(distance), shard_by=shard_by,
-                base_compressed=True, **kw,
-            )
-            self._lvq_storage = storage
-        elif isinstance(data, LeanVecLoader):
-            from scalablevectorsearch_spark.operators.leanvec import (
-                LeanVecModel,
-                dataset_mean,
-                leanvec_train,
-                leanvec_vamana_build,
-            )
-
-            base = _to_df(data.loader, self.spark).select("id", "vector")
-            if data.matrices is not None:
-                A, B = data.matrices
-                model = LeanVecModel(
-                    data_matrix=np.asarray(A), query_matrix=np.asarray(B),
-                    mean=dataset_mean(base, "vector"),
-                )
-            else:
-                model = leanvec_train(base, data.leanvec_dims)
-            primary_lvq = None
-            if data.primary_kind in ("lvq4", "lvq8"):
-                from scalablevectorsearch_spark.operators.leanvec import (
-                    leanvec_project,
-                )
-                from scalablevectorsearch_spark.operators.lvq import lvq_train
-
-                pb = leanvec_project(base, model, "data", out_col="__pv").select(
-                    "id", F.col("__pv").alias("vector")
-                )
-                primary_lvq = lvq_train(
-                    pb, primary_bits=4 if data.primary_kind == "lvq4" else 8
-                )
-            self.index = leanvec_vamana_build(
-                base, model, parameters, n_shards=n_shards,
-                distance=_dist(distance), shard_by=shard_by,
-                primary_lvq=primary_lvq, **kw,
-            )
-            self._secondary = base
+            codec, table, compressed = data.encode(base, _dist(distance))
         else:
-            base = _to_df(data, self.spark).select("id", "vector")
-            self.index = vamana_build(
-                base, parameters, n_shards=n_shards, distance=_dist(distance),
-                shard_by=shard_by, **kw,
-            )
+            codec = Codec(_dist(distance))
+            table, compressed = _to_df(data, self.spark).select("id", "vector"), False
+        self.index = codec_vamana_build(
+            codec, table, parameters, n_shards=n_shards, shard_by=shard_by,
+            base_compressed=compressed, **kw,
+        )
+        # the table the codec re-ranks on (LVQ storage, LeanVec secondary)
+        self._rerank_source = table
         self.index.graph.cache().count()
         self.search_window_size = max(10, parameters.window_size // 2)
         return self
@@ -451,65 +441,35 @@ class Vamana:
         self._buffer_capacity = cap if cap > self.search_window_size else None
 
     def search(self, queries, k: int, rerank_base=None, **kw):
-        """Routes by storage kind: plain/SQ indexes search directly;
-        LVQ indexes with a residual level re-rank on the two-level
-        reconstruction; LeanVec indexes project the query and re-rank
-        at full dimension (``rerank_base`` overrides the secondary
-        table — required when the index came from ``Vamana(path)``
-        rather than ``build``, since the manifest stores matrices, not
-        the full-precision data)."""
-        from scalablevectorsearch_spark.operators.vamana import vamana_search
+        """Runs the index's codec through ``codec_vamana_search``:
+        plain/SQ/LVQ indexes search directly, a residual-LVQ index
+        re-ranks on its two-level reconstruction and a LeanVec index
+        projects the query and re-ranks at full dimension, each with
+        ``k_reorder`` = the search window. ``rerank_base`` overrides the
+        re-rank table (the lvq_* storage table, or the full-dimension
+        data for LeanVec) — required when the index came from
+        ``Vamana(path)`` rather than ``build``, since the manifest does
+        not hold it."""
+        from scalablevectorsearch_spark.operators.codec import codec_vamana_search
 
         qdf, nq = _queries_df(queries, self.spark)
         window = max(self.search_window_size, k)
         cap = getattr(self, "_buffer_capacity", None)
         if cap is not None:
             kw.setdefault("buffer_capacity", max(cap, window))
-        if getattr(self.index, "leanvec_model", None) is not None:
-            from scalablevectorsearch_spark.operators.leanvec import (
-                leanvec_vamana_search,
+        source = self._rerank_source
+        if rerank_base is not None:
+            source = _to_df(rerank_base, self.spark)
+        if source is None and self.index.codec is not None and self.index.codec.reranks:
+            raise ValueError(
+                "index loaded from disk re-ranks on a table its manifest does "
+                "not hold: pass rerank_base= (the lvq_* compressed storage "
+                "table for residual LVQ, the full-dimension data for LeanVec)"
             )
-
-            secondary = rerank_base if rerank_base is not None else getattr(
-                self, "_secondary", None
-            )
-            if secondary is not None and not isinstance(secondary, DataFrame):
-                secondary = _to_df(secondary, self.spark)
-            if secondary is None:
-                raise ValueError(
-                    "LeanVec index loaded from disk: pass rerank_base= (the "
-                    "full-dimension data) to search"
-                )
-            res = leanvec_vamana_search(
-                self.index, qdf, secondary, k=k, k_reorder=window,
-                search_window_size=window, **kw,
-            )
-        elif (
-            getattr(self.index, "lvq_params", None) is not None
-            and self.index.lvq_params.residual_bits
-        ):
-            from scalablevectorsearch_spark.operators.lvq import lvq_vamana_search
-
-            storage = getattr(self, "_lvq_storage", None)
-            if storage is None and rerank_base is not None:
-                # loaded-from-disk residual index: the manifest holds the
-                # primary layout only, so the caller supplies the lvq_*
-                # compressed storage table for the two-level re-rank
-                storage = rerank_base
-                if not isinstance(storage, DataFrame):
-                    storage = _to_df(storage, self.spark)
-            if storage is None:
-                raise ValueError(
-                    "residual-LVQ index loaded from disk: pass rerank_base= "
-                    "(the lvq_* compressed storage table) to search so the "
-                    "two-level re-rank the docstring promises can run"
-                )
-            res = lvq_vamana_search(
-                self.index, qdf, k=k, k_reorder=window,
-                compressed=storage, search_window_size=window, **kw,
-            )
-        else:
-            res = vamana_search(self.index, qdf, k=k, search_window_size=window, **kw)
+        res = codec_vamana_search(
+            self.index, qdf, k=k, k_reorder=window, rerank_source=source,
+            search_window_size=window, **kw,
+        )
         return _to_numpy(res, nq, k) if nq is not None else res
 
     def batch_iterator(self, queries, batch_size: int = 10):

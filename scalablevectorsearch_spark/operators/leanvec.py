@@ -31,8 +31,8 @@ Spark shape (scale-first):
    the data side; queries center for l2 but NOT for ip (q . mu is a
    per-query constant for ip, so leaving the query uncentered
    preserves ranking while keeping the projection a pure linear map).
- - SEARCH: primary k-NN in the m-dim space over the gated
-   flat/Vamana engines (distances over m dims — the bandwidth and
+ - SEARCH (:class:`LeanVecCodec` run by the operators.codec drivers):
+   primary k-NN in the m-dim space over the gated flat/Vamana engines (distances over m dims — the bandwidth and
    compute win), then the top ``k_reorder`` candidates re-rank with
    exact full-dimension distances (the k_reorder pattern of
    operators/ivf.py). The primary side COMPOSES with operators/lvq
@@ -49,7 +49,15 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from scalablevectorsearch_spark.functions.distances import is_similarity
+from scalablevectorsearch_spark.functions.arrowio import batch_matrix, list_rows
+from scalablevectorsearch_spark.operators.codec import (
+    Codec,
+    codec_knn,
+    codec_vamana_build,
+    codec_vamana_search,
+    dataset_mean,
+)
+from scalablevectorsearch_spark.operators.lvq import LVQCodec
 
 
 def _normalized(df: DataFrame, vec_col: str) -> DataFrame:
@@ -75,6 +83,15 @@ def _normalized(df: DataFrame, vec_col: str) -> DataFrame:
     return df.withColumn(
         vec_col, F.transform(F.col(vec_col), lambda x: x.cast("double") / nrm)
     )
+
+
+def _matrix(col, d: int) -> np.ndarray:
+    """Zero-copy (n, d) decode of an Arrow vector column (raises on
+    null, ragged or wrong-width rows)."""
+    X = batch_matrix(col)
+    if X.shape[1] != d:
+        raise ValueError(f"vector column must be non-null uniform dim {d}; got {X.shape[1]}")
+    return X
 
 
 @dataclass
@@ -115,24 +132,6 @@ class LeanVecModel:
         return cls(data_matrix=P, query_matrix=P, mean=mu)
 
 
-def dataset_mean(df: DataFrame, vec_col: str, round_decimals: int = 6) -> tuple:
-    import math
-
-    rows = (
-        df.select(F.posexplode(vec_col).alias("pos", "x"))
-        .groupBy("pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("m"))
-        .collect()
-    )
-    if not rows:
-        raise ValueError("empty dataset")
-    s = float(10**round_decimals)
-    mean = [0.0] * len(rows)
-    for r in rows:
-        mean[r["pos"]] = math.floor(r["m"] * s + 0.5) / s
-    return tuple(mean)
-
-
 def leanvec_train(
     df: DataFrame,
     leanvec_dims: int,
@@ -154,21 +153,11 @@ def leanvec_train(
         acc = np.zeros((d, d), dtype=np.float64)
         n = 0
         for b in batches:
-            col = b.column(0)
-            nb = len(col)
-            if nb == 0:
+            if b.num_rows == 0:
                 continue
-            # zero-copy Arrow decode (the flat.py:154 pattern): the
-            # list array's flattened values buffer IS the (n, d) matrix
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            if col.null_count or len(flat) != nb * d:
-                raise ValueError(
-                    f"vector column must be non-null uniform dim {d}; "
-                    f"got {len(flat)} values for {nb} rows"
-                )
-            X = flat.reshape(nb, d).astype(np.float64, copy=False) - mu
+            X = _matrix(b.column(0), d) - mu
             acc += X.T @ X
-            n += nb
+            n += b.num_rows
         yield pa.RecordBatch.from_arrays(
             [pa.array([acc.reshape(-1).tolist()]), pa.array([n])],
             names=["mm", "n"],
@@ -200,18 +189,9 @@ def leanvec_train(
             for b in batches:
                 if b.num_rows == 0:
                     continue
-                # zero-copy batch decode (the flat.py:154 pattern —
-                # never per-row as_py in a scale path): the list
-                # array's values buffer IS a (rows, d, d) stack
-                mm = b.column(1)
-                flat = mm.flatten().to_numpy(zero_copy_only=False)
-                if mm.null_count or len(flat) != b.num_rows * d * d:
-                    raise ValueError("ragged moment partial")
-                acc += (
-                    flat.reshape(b.num_rows, d, d)
-                    .astype(np.float64, copy=False)
-                    .sum(axis=0)
-                )
+                # zero-copy batch decode (never per-row as_py in a
+                # scale path): the values buffer IS a (rows, d, d) stack
+                acc += _matrix(b.column(1), d * d).reshape(b.num_rows, d, d).sum(axis=0)
                 cnt += int(b.column(2).to_numpy(zero_copy_only=False).sum())
                 if grp is None:
                     # rows arrive pid-ascending, so this is the
@@ -281,26 +261,13 @@ def leanvec_project(
             n = b.num_rows
             if n == 0:
                 continue
-            vi = b.schema.names.index(vec_col)
-            col = b.column(vi)
-            # zero-copy decode + zero-copy encode: values buffer in,
-            # BLAS matmul, values buffer out (flat.py:154 pattern) — no
+            # values buffer in, BLAS matmul, values buffer out — no
             # per-row Python objects in the projection hot path
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            if col.null_count or len(flat) != n * d_in:
-                raise ValueError(
-                    f"vector column must be non-null uniform dim {d_in}; "
-                    f"got {len(flat)} values for {n} rows"
-                )
-            X = flat.reshape(n, d_in).astype(np.float64, copy=False)
+            X = _matrix(b.column(b.schema.names.index(vec_col)), d_in)
             if mu is not None:
                 X = X - mu
             Y = np.ascontiguousarray(X @ P)
-            m = Y.shape[1]
-            new = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * m, m, dtype=np.int32)),
-                pa.array(Y.reshape(-1), type=pa.float64()),
-            )
+            new = list_rows(Y, n, Y.shape[1])
             yield pa.RecordBatch.from_arrays(
                 [b.column(i) for i in range(b.num_columns)] + [new],
                 names=list(b.schema.names) + [out_col],
@@ -309,206 +276,136 @@ def leanvec_project(
     return df.mapInArrow(project, schema)
 
 
+class LeanVecCodec(Codec):
+    """LeanVec as a codec: storage is the data projection (of the
+    unit-normalized data for cosine — cosine.h's normalize-then-IP
+    reduction, so the scan runs in IP geometry), queries are projected
+    with the query matrix (centered for l2 only: q . mu is a per-query
+    constant for ip), and ``finish`` re-ranks the ``k_reorder``
+    candidates exactly on the full-dimension secondary (float32).
+    ``primary``: an LVQCodec over the PROJECTED data (params trained on
+    the projection) — the LeanVec4x* / 8x* primary kinds, compression
+    on top of the dimensionality reduction. ``compressed=True`` storage
+    input is the persisted projection (of the normalized base for
+    cosine): the reference stores the LeanVec dataset projected once at
+    construction."""
+
+    kind = "leanvec"
+    reranks = True
+
+    def __init__(self, model: LeanVecModel, primary=None, distance: str = "l2"):
+        if distance not in ("l2", "ip", "cosine"):
+            raise ValueError(f"leanvec primary supports l2/ip/cosine, got {distance!r}")
+        super().__init__(distance)
+        self.model, self.primary = model, primary
+
+    @property
+    def scan_distance(self) -> str:
+        return "ip" if self.distance == "cosine" else self.distance
+
+    @property
+    def decode(self):
+        return None if self.primary is None else self.primary.decode
+
+    def unpacked(self) -> "LeanVecCodec":
+        return LeanVecCodec(self.model, None, self.distance)
+
+    def store(self, df, id_col, vec_col, compressed):
+        if compressed:
+            pb = df.select(F.col(id_col), F.col(vec_col))
+        else:
+            side = _normalized(df, vec_col) if self.distance == "cosine" else df
+            pb = leanvec_project(side, self.model, "data", vec_col, "__pv").select(
+                F.col(id_col), F.col("__pv").alias(vec_col)
+            )
+        return pb if self.primary is None else self.primary.store(pb, id_col, vec_col, False)
+
+    def query(self, q):
+        return leanvec_project(
+            q, self.model, "query", "vector", "__pv", center=self.distance == "l2"
+        ).select(F.col("qid").cast("long").alias("qid"), F.col("__pv").alias("vector"))
+
+    def manifest_params(self):
+        # the projection pair of training.h: queries cannot be projected
+        # without the matrices, so they ARE the index
+        m = self.model
+        out = {
+            "leanvec_mean": [float(x) for x in m.mean],
+            "leanvec_data_matrix": m.data_matrix.tolist(),
+            "leanvec_query_matrix": m.query_matrix.tolist(),
+            "leanvec_distance": self.distance,
+        }
+        return out if self.primary is None else {**self.primary.manifest_params(), **out}
+
+    @classmethod
+    def from_manifest(cls, p):
+        if p.get("leanvec_data_matrix") is None:
+            return None
+        model = LeanVecModel(
+            data_matrix=np.asarray(p["leanvec_data_matrix"], dtype=np.float64),
+            query_matrix=np.asarray(p["leanvec_query_matrix"], dtype=np.float64),
+            mean=tuple(p["leanvec_mean"]),
+        )
+        return cls(model, LVQCodec.from_manifest(p), p.get("leanvec_distance", p["distance"]))
+
+
+# The public LeanVec entry points: LeanVecCodec run by the
+# operators.codec drivers, whose docstrings carry the k_reorder /
+# base_compressed prose. ``primary_lvq`` is LVQParams TRAINED ON THE
+# PROJECTED data.
+
+
+def _codec(model, primary_lvq, distance) -> LeanVecCodec:
+    return LeanVecCodec(model, None if primary_lvq is None else LVQCodec(primary_lvq), distance)
+
+
 def leanvec_knn(
-    base: DataFrame,
-    queries: DataFrame,
-    model: LeanVecModel,
-    k: int,
-    k_reorder: int,
-    distance: str = "l2",
-    id_col: str = "id",
-    vec_col: str = "vector",
-    qid_col: str = "qid",
-    qvec_col: str | None = None,
-    round_to: int | None = 4,
-    primary_lvq=None,
+    base: DataFrame, queries: DataFrame, model: LeanVecModel, k: int,
+    k_reorder: int, distance: str = "l2", id_col: str = "id",
+    vec_col: str = "vector", qid_col: str = "qid", qvec_col: str | None = None,
+    round_to: int | None = 4, primary_lvq=None,
     base_projected: DataFrame | None = None,
 ) -> DataFrame:
-    """Two-stage LeanVec k-NN: primary candidate generation in the
-    projected space (top ``k_reorder``), exact full-dimension re-rank
-    (the paper's pipeline; emitted distances are the exact stage's).
-    ``primary_lvq``: optional LVQParams TRAINED ON THE PROJECTED
-    data — the primary then runs over LVQ codes (LeanVec4x* storage
-    kinds).
+    """Two-stage LeanVec k-NN: top ``k_reorder`` in the projected space,
+    exact full-dimension re-rank on ``base`` (the paper's pipeline).
     ``base_projected``: the PERSISTED (id, vector[m]) projection of
-    ``base`` (from :func:`leanvec_project`) — the reference stores the
-    LeanVec dataset projected once at construction; without it every
-    search re-projects the full base (fine for one-shots, wasteful for
-    serving)."""
-    from scalablevectorsearch_spark.operators.flat import flat_knn
-    from scalablevectorsearch_spark.operators.lvq import lvq_knn
-
-    if distance not in ("l2", "ip", "cosine"):
-        raise ValueError(f"leanvec primary supports l2/ip/cosine, got {distance!r}")
-    if k_reorder < k:
-        raise ValueError(f"k_reorder={k_reorder} must be >= k={k}")
-    qvec_col = qvec_col or vec_col
-    # cosine reduces to IP over the unit-normalized data side (query
-    # scale is rank-invariant); the exact stage restores true cosine
-    primary_distance = "ip" if distance == "cosine" else distance
-    center_q = distance == "l2"
-    if base_projected is not None:
-        # for cosine, the persisted projection must be of the
-        # NORMALIZED base (leanvec_project(_normalized(base), ...))
-        pb = base_projected.select(
-            F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vector")
-        )
-    else:
-        data_side = _normalized(base, vec_col) if distance == "cosine" else base
-        pb = leanvec_project(data_side, model, "data", vec_col, "__pv").select(
-            F.col(id_col).cast("long").alias("id"), F.col("__pv").alias("vector")
-        )
-    pq = leanvec_project(
-        queries, model, "query", qvec_col, "__pv", center=center_q
-    ).select(F.col(qid_col).cast("long").alias("qid"), F.col("__pv").alias("vector"))
-    if primary_lvq is not None:
-        cands = lvq_knn(
-            pb, pq, primary_lvq, k=k_reorder, distance=primary_distance,
-            round_to=round_to,
-        )
-    else:
-        cands = flat_knn(
-            pb, pq, k=k_reorder, distance=primary_distance, round_to=round_to
-        )
-    return _full_dim_rerank(
-        cands, base, queries, k, distance, round_to, id_col, vec_col, qid_col, qvec_col
+    ``base`` (:func:`leanvec_project`; of the normalized base for
+    cosine) — without it every search re-projects the full base. See
+    :func:`~scalablevectorsearch_spark.operators.codec.codec_knn`."""
+    return codec_knn(
+        _codec(model, primary_lvq, distance),
+        base if base_projected is None else base_projected, queries, k, id_col,
+        vec_col, qid_col, qvec_col, round_to, k_reorder, base_projected is not None,
+        rerank_source=base,
     )
-
-
-def _full_dim_rerank(
-    cands: DataFrame,
-    base: DataFrame,
-    queries: DataFrame,
-    k: int,
-    distance: str,
-    round_to: int | None,
-    id_col: str,
-    vec_col: str,
-    qid_col: str,
-    qvec_col: str,
-) -> DataFrame:
-    """Exact secondary stage: re-rank (qid, neighbor_id) candidates on
-    the ORIGINAL full-dimension vectors (secondary_kind=float32; swap
-    the base for an LVQ8 reconstruction for LeanVec*x8 storage)."""
-    from scalablevectorsearch_spark.operators.lvq import _rerank_reconstruction
-
-    recon = base.select(
-        F.col(id_col).cast("long").alias("neighbor_id"), F.col(vec_col).alias("__bv")
-    )
-    q = queries.select(
-        F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("vector")
-    )
-    return _rerank_reconstruction(cands, recon, q, k, distance, round_to)
 
 
 def leanvec_vamana_build(
-    base: DataFrame,
-    model: LeanVecModel,
-    vamana_params=None,
-    n_shards: int = 8,
-    distance: str = "l2",
-    id_col: str = "id",
-    vec_col: str = "vector",
-    primary_lvq=None,
-    **build_kw,
+    base: DataFrame, model: LeanVecModel, vamana_params=None, n_shards: int = 8,
+    distance: str = "l2", id_col: str = "id", vec_col: str = "vector",
+    primary_lvq=None, **build_kw,
 ):
-    """Build a Vamana graph IN the projected space (the reference's
-    LeanVec-Vamana: traversal distances are m-dimensional — the
-    compute win; re-rank restores full-dimension accuracy at search).
-    ``primary_lvq``: LVQParams trained on the PROJECTED data — the
-    graph is then built over the LVQ reconstruction of the projection
-    (LeanVec4x* / LeanVec8x* primary kinds). Composes with
-    shard_by/closure_bp/... like every storage kind."""
-    from scalablevectorsearch_spark.operators.vamana import vamana_build
-
-    if distance not in ("l2", "ip", "cosine"):
-        raise ValueError(f"leanvec primary supports l2/ip/cosine, got {distance!r}")
-    # cosine: graph lives in IP geometry over the normalized projection
-    # (cosine.h's normalize-then-IP reduction); the search's exact stage
-    # re-ranks with true cosine on the full-dimension secondary
-    rerank_distance = distance
-    data_side = base
-    if distance == "cosine":
-        data_side = _normalized(base, vec_col)
-        distance = "ip"
-    pb = leanvec_project(data_side, model, "data", vec_col, "__pv").select(
-        F.col(id_col).alias(id_col), F.col("__pv").alias(vec_col)
+    """Vamana IN the projected space (the reference's LeanVec-Vamana:
+    traversal distances are m-dimensional; cosine traverses in IP
+    geometry). See
+    :func:`~scalablevectorsearch_spark.operators.codec.codec_vamana_build`."""
+    return codec_vamana_build(
+        _codec(model, primary_lvq, distance), base, vamana_params, n_shards, id_col,
+        vec_col, **build_kw,
     )
-    decode = None
-    if primary_lvq is not None:
-        # LeanVec4x*/8x* primary: the projected rows are LVQ-packed in
-        # the layout (m/2-1m bytes per vector) and kernels decode at
-        # entry — compression ON TOP of the dimensionality reduction
-        from scalablevectorsearch_spark.operators.lvq import (
-            lvq_compress,
-            lvq_decoder,
-            lvq_packed_col,
-        )
-
-        if build_kw.get("shard_by") == "kmeans" and build_kw.get("shard_model") is None:
-            # centroids live in the projected (decoded) geometry —
-            # train before packing, like lvq_vamana_build
-            from scalablevectorsearch_spark.operators.kmeans import train_kmeans
-
-            build_kw["shard_model"] = train_kmeans(
-                pb, n_shards, build_kw.pop("kmeans_iters", 2), id_col, vec_col
-            )
-        pb = lvq_compress(pb, primary_lvq, vec_col).select(
-            F.col(id_col), lvq_packed_col(primary_lvq).alias(vec_col)
-        )
-        decode = lvq_decoder(primary_lvq)
-    idx = vamana_build(
-        pb, vamana_params, n_shards=n_shards, distance=distance,
-        id_col=id_col, vec_col=vec_col, vec_decode=decode, **build_kw,
-    )
-    idx.leanvec_model = model
-    # the re-rank metric (persisted): differs from index.distance only
-    # for cosine, whose primary runs in IP geometry
-    idx.leanvec_distance = rerank_distance
-    if primary_lvq is not None:
-        # the primary-LVQ params (projected-space mean + bit widths)
-        # are part of the index identity: save_vamana persists them and
-        # load_vamana rebuilds vec_decode from them — without this the
-        # loaded packed index cannot decode its own layout
-        idx.lvq_params = primary_lvq
-    return idx
 
 
 def leanvec_vamana_search(
-    index,
-    queries: DataFrame,
-    base: DataFrame,
-    k: int,
-    k_reorder: int,
-    qid_col: str = "qid",
-    qvec_col: str = "vector",
-    vec_col: str = "vector",
-    round_to: int | None = 4,
-    **search_kw,
+    index, queries: DataFrame, base: DataFrame, k: int, k_reorder: int,
+    qid_col: str = "qid", qvec_col: str = "vector", vec_col: str = "vector",
+    round_to: int | None = 4, **search_kw,
 ) -> DataFrame:
     """Graph search in the projected space + exact full-dimension
-    re-rank against ``base`` (the secondary representation). With an
-    exhaustive window the candidate stage equals the flat projected
-    scan, so the result EQUALS leanvec_knn's — the metamorphic gate."""
-    from scalablevectorsearch_spark.operators.vamana import vamana_search
-
-    model = getattr(index, "leanvec_model", None)
-    if model is None:
+    re-rank against ``base`` (the secondary). See
+    :func:`~scalablevectorsearch_spark.operators.codec.codec_vamana_search`."""
+    if not isinstance(index.codec, LeanVecCodec):
         raise ValueError("index was not built with leanvec_vamana_build")
-    if k_reorder < k:
-        raise ValueError(f"k_reorder={k_reorder} must be >= k={k}")
-    # cosine indexes traverse in IP geometry (index.distance == "ip")
-    # but re-rank with true cosine (leanvec_distance)
-    rerank_distance = getattr(index, "leanvec_distance", None) or index.distance
-    center_q = index.distance == "l2"
-    pq = leanvec_project(
-        queries, model, "query", qvec_col, "__pv", center=center_q
-    ).select(F.col(qid_col).cast("long").alias("qid"), F.col("__pv").alias(index.vec_col))
-    cands = vamana_search(
-        index, pq, k_reorder, qid_col="qid", qvec_col=index.vec_col,
-        round_to=round_to, **search_kw,
-    )
-    return _full_dim_rerank(
-        cands, base, queries, k, rerank_distance, round_to,
-        index.id_col, vec_col, qid_col, qvec_col,
+    return codec_vamana_search(
+        index, queries, k, qid_col, qvec_col, round_to, k_reorder, base, vec_col,
+        **search_kw,
     )

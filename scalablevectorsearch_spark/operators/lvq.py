@@ -42,10 +42,10 @@ Spark shape (scale-first):
    component at B=8, HALF a byte at B=4 (two codes nibble-packed per
    byte) — plus two per-row doubles (lo, step). That is the 4-8x scan
    bandwidth reduction that motivates LVQ at 100 TB.
- - SEARCH decompresses IN-PLAN (Catalyst transform over the code
-   arrays — whole-stage codegen) and reuses the gated flat/Vamana
-   engines; the query stays full precision (the reference's
-   asymmetric LVQ distances). Two-level search is
+ - SEARCH is :class:`LVQCodec` run by the operators.codec drivers:
+   the packed codes decode inside the gated flat/Vamana kernels
+   (bit-identical to the Catalyst decompress chain); the query stays
+   full precision (the reference's asymmetric LVQ distances). Two-level search is
    candidate-generation on the primary + exact re-rank on the
    two-level reconstruction (the k_reorder pattern of
    operators/ivf.py; the reference reranks LVQ results the same way —
@@ -62,6 +62,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from scalablevectorsearch_spark.functions.distances import is_similarity
+from scalablevectorsearch_spark.operators.codec import (
+    Codec,
+    _collect,
+    codec_knn,
+    codec_vamana_build,
+    codec_vamana_search,
+    dataset_mean,
+)
 
 
 @dataclass(frozen=True)
@@ -98,27 +106,12 @@ def lvq_train(
     residual_bits: int = 0,
     round_decimals: int = 6,
 ) -> LVQParams:
-    """Dataset mean -> LVQParams. One scan, built-in aggregates; the
-    mean is rounded half-up at 1e-6 so Spark and the DuckDB oracle
-    share one canonical value (the kmeans.py determinism protocol —
-    per-vector lo/step/codes then derive exactly on both engines)."""
-    rows = (
-        df.select(F.posexplode(vec_col).alias("pos", "x"))
-        .groupBy("pos")
-        .agg(F.avg(F.col("x").cast("double")).alias("m"))
-        .collect()
-    )
-    if not rows:
-        raise ValueError("empty dataset")
-    s = float(10**round_decimals)
-    import math
-
-    mean = [0.0] * len(rows)
-    for r in rows:
-        mean[r["pos"]] = math.floor(r["m"] * s + 0.5) / s
+    """Dataset mean -> LVQParams (codec.dataset_mean: one scan, the
+    canonical 1e-6-rounded mean, so per-vector lo/step/codes derive
+    exactly on Spark and the DuckDB oracle)."""
+    mean = dataset_mean(df, vec_col, round_decimals)
     return LVQParams(
-        mean=tuple(mean), dims=len(mean),
-        primary_bits=primary_bits, residual_bits=residual_bits,
+        mean=mean, dims=len(mean), primary_bits=primary_bits, residual_bits=residual_bits,
     )
 
 
@@ -138,10 +131,6 @@ def _dlit(v: float) -> str:
 
 def _mu_sql(params: LVQParams) -> str:
     return "array(" + ", ".join(_dlit(m) for m in params.mean) + ")"
-
-
-def _mu_col(params: LVQParams) -> Column:
-    return F.array(*[F.lit(float(m)) for m in params.mean])
 
 
 # r12 (guide §4, the driver's py4j boundary): the Catalyst builders
@@ -281,29 +270,12 @@ def lvq_decoder(params: LVQParams):
     extension point, extensions/flat/*.h). Elementwise-identical to
     :func:`lvq_decompress` level 1: x = (mu + lo) + step * c."""
     mu = np.asarray(params.mean, dtype=np.float64)
-    bits, dims = params.primary_bits, params.dims
 
     def decode(M: np.ndarray) -> np.ndarray:
-        lo, step = M[:, 0], M[:, 1]
-        body = M[:, 2:]
-        if bits == 8:
-            C = body + 128.0
-        else:
-            ub = body + 128.0
-            hi = np.floor(ub / 16.0)
-            lo_nib = ub - 16.0 * hi
-            C = np.empty((M.shape[0], body.shape[1] * 2), dtype=np.float64)
-            C[:, 0::2] = hi
-            C[:, 1::2] = lo_nib
-            C = C[:, :dims]
-        return (mu + lo[:, None]) + step[:, None] * C
+        C = _unpack_np(M[:, 2:], params.primary_bits, params.dims)
+        return (mu + M[:, 0][:, None]) + M[:, 1][:, None] * C
 
     return decode
-
-
-def _packed_width(params: LVQParams, bits: int) -> int:
-    """Stored bytes per vector at ``bits`` (4-bit packs two per byte)."""
-    return params.dims if bits == 8 else -(-params.dims // 2)
 
 
 def lvq_packed2_col(params: LVQParams, prefix: str = "lvq_") -> Column:
@@ -343,90 +315,17 @@ def lvq_decoder2(params: LVQParams):
     with step2 = step/levels2, every op in the same order."""
     if not params.residual_bits:
         raise ValueError("lvq_decoder2 requires residual_bits > 0")
-    mu = np.asarray(params.mean, dtype=np.float64)
-    w1 = _packed_width(params, params.primary_bits)
+    primary = lvq_decoder(params)
+    # stored primary bytes per vector (4-bit packs two per byte)
+    w1 = params.dims if params.primary_bits == 8 else -(-params.dims // 2)
     levels2 = float(params.levels2)
 
     def decode(M: np.ndarray) -> np.ndarray:
-        lo, step = M[:, 0], M[:, 1]
-        c1 = _unpack_np(M[:, 2 : 2 + w1], params.primary_bits, params.dims)
+        step = M[:, 1]
         c2 = _unpack_np(M[:, 2 + w1 :], params.residual_bits, params.dims)
-        recon = (mu + lo[:, None]) + step[:, None] * c1
-        step2 = step / levels2
-        return recon + (step2[:, None] * c2 - step[:, None] / 2.0)
+        return primary(M[:, : 2 + w1]) + ((step / levels2)[:, None] * c2 - step[:, None] / 2.0)
 
     return decode
-
-
-def lvq_knn(
-    base: DataFrame,
-    queries: DataFrame,
-    params: LVQParams,
-    k: int,
-    distance: str = "l2",
-    id_col: str = "id",
-    vec_col: str = "vector",
-    qid_col: str = "qid",
-    qvec_col: str | None = None,
-    round_to: int | None = 4,
-    k_reorder: int | None = None,
-    base_compressed: bool = False,
-) -> DataFrame:
-    """k-NN over LVQ storage (asymmetric: full-precision query vs the
-    reconstruction — the reference's LVQ distance semantics).
-
-    One-level (residual_bits=0 or k_reorder=None): rank on primary
-    reconstruction distances. Two-level with ``k_reorder``: the top
-    k_reorder primary candidates re-rank on the two-level
-    reconstruction (data_traits.h primary/residual; the k_reorder
-    pattern of common.h:156) and the emitted distance is the refined
-    value.
-
-    ``base_compressed=True``: ``base`` already carries the
-    ``lvq_*`` storage columns (the persisted compressed table — the
-    scan reads codes at 1 or 0.5 bytes/component instead of float32,
-    which is the point at 100 TB).
-    """
-    from scalablevectorsearch_spark.operators.flat import flat_knn
-
-    qvec_col = qvec_col or vec_col
-    comp = base if base_compressed else lvq_compress(base, params, vec_col)
-    # primary scan reads the PACKED codes (1 or 0.5 bytes/component on
-    # disk) and decompresses inside the Arrow kernel — bandwidth of the
-    # compressed table, decode at BLAS speed, values bit-identical to
-    # the Catalyst lvq_decompress chain
-    packed = comp.select(
-        F.col(id_col).cast("long").alias("id"),
-        lvq_packed_col(params).alias("vector"),
-    )
-    dec = lvq_decoder(params)
-    q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("vector"))
-    if k_reorder is None or not params.residual_bits:
-        return flat_knn(packed, q, k=k, distance=distance, round_to=round_to, decode=dec)
-    if k_reorder < k:
-        raise ValueError(f"k_reorder={k_reorder} must be >= k={k}")
-    # collect the query batch ONCE and share it between the primary
-    # scan and the re-rank (r13, VERDICT item 3: both phases broadcast
-    # the same batch — previously each ran its own collect job)
-    qp = q.select(
-        F.col("qid").cast("long").alias("qid"), F.col("vector").alias("qv")
-    ).toPandas()
-    if len(qp) == 0:
-        raise ValueError("empty query batch")
-    qids = qp["qid"].to_numpy(dtype=np.int64)
-    Q = np.stack(qp["qv"].to_numpy()).astype(np.float64)
-    cands = flat_knn(
-        packed, q, k=k_reorder, distance=distance, round_to=round_to, decode=dec,
-        query_batch=(qids, Q),
-    )
-    recon2 = comp.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        lvq_packed2_col(params).alias("__bv"),
-    )
-    return _rerank_reconstruction(
-        cands, recon2, q, k, distance, round_to, decode=lvq_decoder2(params),
-        query_batch=(qids, Q),
-    )
 
 
 def _fold_distances(
@@ -514,33 +413,21 @@ def _rerank_reconstruction(
     per joined row."""
     import pyarrow as pa
 
-    from scalablevectorsearch_spark.operators.topk import topk_per_group
+    from scalablevectorsearch_spark.functions.arrowio import batch_matrix
+    from scalablevectorsearch_spark.operators.topk import merge_partitions, topk_per_group
 
     pairs = cands.select("qid", "neighbor_id")
     joined = recon.join(F.broadcast(pairs), "neighbor_id").select(
         "qid", "neighbor_id", "__bv"
     )
-    if query_batch is not None:
-        # caller-collected batch (shared with the primary scan — one
-        # collect job for the whole two-phase search, r13)
-        qids = np.asarray(query_batch[0], dtype=np.int64)
-        Q = np.asarray(query_batch[1], dtype=np.float64)
-    else:
-        qp = q.select(
-            F.col("qid").cast("long").alias("qid"), F.col("vector").alias("qv")
-        ).toPandas()
-        if len(qp) == 0:
-            # np.stack raises on an empty sequence; the old Catalyst
-            # join path returned an empty frame here — preserve that
-            spark = recon.sparkSession
-            return spark.createDataFrame(
-                [], "qid long, neighbor_id long, distance double, rank long"
-            )
-        qids = qp["qid"].to_numpy(dtype=np.int64)
-        Q = np.stack(qp["qv"].to_numpy()).astype(np.float64)
+    # a caller-collected batch is shared with the primary scan (one
+    # collect job for the whole two-phase search, r13)
+    qids, Q = _collect(q) if query_batch is None else query_batch
+    qids, Q = np.asarray(qids, dtype=np.int64), np.asarray(Q, dtype=np.float64)
     if len(qids) == 0:
-        spark = recon.sparkSession
-        return spark.createDataFrame(
+        # an empty batch returns an empty frame, as the old Catalyst
+        # join path did
+        return recon.sparkSession.createDataFrame(
             [], "qid long, neighbor_id long, distance double, rank long"
         )
     sc = recon.sparkSession.sparkContext
@@ -553,28 +440,16 @@ def _rerank_reconstruction(
         pos = {int(x): i for i, x in enumerate(bqids)}
         d_dim = bQ.shape[1]
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0:
                 continue
             names = rb.schema.names
             rqid = rb.column(names.index("qid")).to_numpy(zero_copy_only=False)
             rnid = rb.column(names.index("neighbor_id")).to_numpy(
                 zero_copy_only=False
             )
-            vec = rb.column(names.index("__bv"))
-            import pyarrow.compute as pc
-
-            lens = pc.list_value_length(vec).to_numpy(zero_copy_only=False)
-            if vec.null_count or not len(lens) or (lens != lens[0]).any():
-                # a ragged or NULL reconstruction row would either crash
-                # the reshape or, if the total happens to divide evenly,
-                # silently misalign every following row
-                raise ValueError(
-                    "reconstruction column must be non-null with a "
-                    "uniform storage width (ragged rows cannot be reshaped)"
-                )
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            B = flat.reshape(n, int(lens[0])).astype(np.float64, copy=False)
+            # a ragged or NULL reconstruction row raises rather than
+            # silently misaligning every following row
+            B = batch_matrix(rb.column(names.index("__bv")))
             if decode is not None:
                 B = decode(B)
             if B.shape[1] != d_dim:
@@ -589,15 +464,12 @@ def _rerank_reconstruction(
                 [
                     pa.array(rqid.astype(np.int64), type=pa.int64()),
                     pa.array(rnid.astype(np.int64), type=pa.int64()),
-                    pa.array(dist, type=pa.float64(),
-                             mask=nulls if nulls is not None else None),
+                    pa.array(dist, type=pa.float64(), mask=nulls),
                 ],
                 names=["qid", "neighbor_id", "distance"],
             )
 
     exact = joined.mapInArrow(fn, "qid long, neighbor_id long, distance double")
-    from scalablevectorsearch_spark.operators.topk import merge_partitions
-
     return topk_per_group(
         exact,
         group_col="qid",
@@ -609,118 +481,122 @@ def _rerank_reconstruction(
     )
 
 
-# ----------------------------------------------- LVQ inside Vamana
-# The reference builds Vamana directly over an LVQ dataset
-# (svs.Vamana.build(parameters, LVQLoader(...), ...) in
-# vamana_with_compression_lvq.py:80-87). Spark shape: compress once,
-# build the SAME sharded Vamana operator over the primary
-# reconstruction (per-vector scales make code-domain ranking differ
-# from corrected ranking, so — like the SQ cosine path — the graph
-# sees exactly the lossy values the search will see). The durable
-# compressed table (ARRAY<TINYINT> codes) is the storage artifact;
-# the index layout caches the reconstruction like index.h's
-# materialized data_ copy.
+class LVQCodec(Codec):
+    """LVQ as a codec: asymmetric distances (full-precision query vs the
+    reconstruction — the reference's LVQ semantics). ``packed=True``
+    stores [lo, step, code bytes] rows decoded inside every kernel
+    (bit-identical to the Catalyst :func:`lvq_decompress` chain);
+    ``packed=False`` stores the primary reconstruction. With a residual
+    level, ``finish`` re-ranks the ``k_reorder`` candidates on the
+    two-level reconstruction of the ``lvq_*`` storage table
+    (data_traits.h primary/residual; the k_reorder pattern of
+    common.h:156)."""
+
+    kind = "lvq"
+
+    def __init__(self, params: LVQParams, packed: bool = True, distance: str = "l2"):
+        super().__init__(distance)
+        self.params, self.packed = params, packed
+
+    @property
+    def reranks(self) -> bool:
+        return self.params.residual_bits > 0
+
+    @property
+    def decode(self):
+        return lvq_decoder(self.params) if self.packed else None
+
+    def unpacked(self) -> "LVQCodec":
+        return LVQCodec(self.params, False, self.distance)
+
+    def store(self, df, id_col, vec_col, compressed):
+        comp = df if compressed else lvq_compress(df, self.params, vec_col)
+        if self.packed:
+            return comp.select(F.col(id_col), lvq_packed_col(self.params).alias(vec_col))
+        return lvq_decompress(comp, self.params, out_col="__rv", level=1).select(
+            F.col(id_col), F.col("__rv").alias(vec_col)
+        )
+
+    def rerank_storage(self, vec_col):
+        return lvq_packed2_col(self.params), lvq_decoder2(self.params)
+
+    def manifest_params(self):
+        # data_traits.h primary_bits/residual_bits + the centering mean
+        p = self.params
+        return {
+            "lvq_primary_bits": p.primary_bits,
+            "lvq_residual_bits": p.residual_bits,
+            "lvq_mean": [float(x) for x in p.mean],
+            "lvq_packed": self.packed,
+        }
+
+    @classmethod
+    def from_manifest(cls, p):
+        if p.get("lvq_primary_bits") is None:
+            return None
+        params = LVQParams(
+            mean=tuple(p["lvq_mean"]), dims=len(p["lvq_mean"]),
+            primary_bits=p["lvq_primary_bits"],
+            residual_bits=p.get("lvq_residual_bits", 0),
+        )
+        return cls(params, bool(p.get("lvq_packed")), p["distance"])
+
+
+# The public LVQ entry points: LVQCodec run by the operators.codec
+# drivers, whose docstrings carry the k_reorder / base_compressed /
+# packed prose. The reference builds Vamana directly over an LVQ
+# dataset (svs.Vamana.build(parameters, LVQLoader(...), ...) in
+# vamana_with_compression_lvq.py:80-87); per-vector scales make
+# code-domain ranking differ from corrected ranking, so the graph sees
+# exactly the reconstruction the search will see.
+
+
+def lvq_knn(
+    base: DataFrame, queries: DataFrame, params: LVQParams, k: int,
+    distance: str = "l2", id_col: str = "id", vec_col: str = "vector",
+    qid_col: str = "qid", qvec_col: str | None = None,
+    round_to: int | None = 4, k_reorder: int | None = None,
+    base_compressed: bool = False,
+) -> DataFrame:
+    """k-NN over LVQ storage; with a residual level and ``k_reorder``,
+    the primary candidates re-rank on the two-level reconstruction. See
+    :func:`~scalablevectorsearch_spark.operators.codec.codec_knn`."""
+    comp = base if base_compressed else lvq_compress(base, params, vec_col)
+    return codec_knn(
+        LVQCodec(params, distance=distance), comp, queries, k, id_col, vec_col,
+        qid_col, qvec_col, round_to, k_reorder, True, rerank_source=comp,
+    )
 
 
 def lvq_vamana_build(
-    base: DataFrame,
-    params: LVQParams,
-    vamana_params=None,
-    n_shards: int = 8,
-    distance: str = "l2",
-    id_col: str = "id",
-    vec_col: str = "vector",
-    base_compressed: bool = False,
-    packed: bool = True,
-    **build_kw,
+    base: DataFrame, params: LVQParams, vamana_params=None, n_shards: int = 8,
+    distance: str = "l2", id_col: str = "id", vec_col: str = "vector",
+    base_compressed: bool = False, packed: bool = True, **build_kw,
 ):
-    """Build a Vamana graph over LVQ storage.
-
-    ``packed=True`` (default): the index's persisted layout holds the
-    PACKED rows ([lo, step, code bytes] — 0.5-1 byte/component of
-    payload) and every kernel decodes at entry via ``vec_decode`` —
-    the reference's compressed dataset inside the graph index
-    (vamana_with_compression_lvq.py), and the storage shape that
-    matters at 100 TB. ``packed=False`` materializes the primary
-    reconstruction instead (required for dynamic mutation workloads).
-    Distances are identical either way (the decode is bit-exact).
-    Extra kwargs (shard_by/closure_bp/...) pass through to
-    ``vamana_build``; kmeans sharding with ``packed=True`` trains the
-    shard model on the reconstruction automatically."""
-    from scalablevectorsearch_spark.operators.vamana import vamana_build
-
-    comp = base if base_compressed else lvq_compress(base, params, vec_col)
-    if not packed:
-        recon1 = lvq_decompress(comp, params, out_col="__rv", level=1).select(
-            F.col(id_col).alias(id_col), F.col("__rv").alias(vec_col)
-        )
-        idx = vamana_build(
-            recon1, vamana_params, n_shards=n_shards, distance=distance,
-            id_col=id_col, vec_col=vec_col, **build_kw,
-        )
-        idx.lvq_params = params
-        return idx
-    if build_kw.get("shard_by") == "kmeans" and build_kw.get("shard_model") is None:
-        # centroids live in the decoded geometry — train on the
-        # reconstruction, then stamp the packed rows via the decoder
-        from scalablevectorsearch_spark.operators.kmeans import train_kmeans
-
-        recon1 = lvq_decompress(comp, params, out_col="__rv", level=1).select(
-            F.col(id_col).alias(id_col), F.col("__rv").alias(vec_col)
-        )
-        build_kw["shard_model"] = train_kmeans(
-            recon1, n_shards, build_kw.pop("kmeans_iters", 2), id_col, vec_col
-        )
-    packed_df = comp.select(
-        F.col(id_col).alias(id_col), lvq_packed_col(params).alias(vec_col)
+    """Vamana over LVQ storage. See
+    :func:`~scalablevectorsearch_spark.operators.codec.codec_vamana_build`."""
+    return codec_vamana_build(
+        LVQCodec(params, packed, distance), base, vamana_params, n_shards, id_col,
+        vec_col, base_compressed, **build_kw,
     )
-    idx = vamana_build(
-        packed_df, vamana_params, n_shards=n_shards, distance=distance,
-        id_col=id_col, vec_col=vec_col, vec_decode=lvq_decoder(params), **build_kw,
-    )
-    idx.lvq_params = params
-    return idx
 
 
 def lvq_vamana_search(
-    index,
-    queries: DataFrame,
-    k: int,
-    qid_col: str = "qid",
-    qvec_col: str = "vector",
-    round_to: int | None = 4,
-    k_reorder: int | None = None,
-    compressed: DataFrame | None = None,
+    index, queries: DataFrame, k: int, qid_col: str = "qid",
+    qvec_col: str = "vector", round_to: int | None = 4,
+    k_reorder: int | None = None, compressed: DataFrame | None = None,
     **search_kw,
 ) -> DataFrame:
-    """Graph search over an LVQ Vamana index (query full precision —
-    the layout already holds the primary reconstruction). With
-    ``k_reorder`` + ``compressed`` (the lvq_* storage table), the top
-    k_reorder graph candidates re-rank on the two-level
-    reconstruction. With an exhaustive window the one-level result
-    EQUALS lvq_knn's, which is the metamorphic gate."""
-    from scalablevectorsearch_spark.operators.vamana import vamana_search
-
-    params = getattr(index, "lvq_params", None)
-    if params is None:
+    """Graph search over an LVQ Vamana index; with ``k_reorder`` +
+    ``compressed`` (the lvq_* storage table) the top
+    max(k, k_reorder) candidates re-rank on the two-level
+    reconstruction. See
+    :func:`~scalablevectorsearch_spark.operators.codec.codec_vamana_search`."""
+    if not isinstance(index.codec, LVQCodec):
         raise ValueError("index was not built with lvq_vamana_build")
-    q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias(index.vec_col))
-    k_cand = k if k_reorder is None else max(k, k_reorder)
-    res = vamana_search(
-        index, q, k_cand, qid_col="qid", qvec_col=index.vec_col,
-        round_to=round_to, **search_kw,
-    )
-    if k_reorder is None:
-        return res
-    if not params.residual_bits:
+    if k_reorder is not None and not index.codec.reranks:
         raise ValueError("k_reorder requires residual_bits > 0")
-    if compressed is None:
-        raise ValueError("k_reorder requires the compressed storage table")
-    recon2 = compressed.select(
-        F.col(index.id_col).cast("long").alias("neighbor_id"),
-        lvq_packed2_col(params).alias("__bv"),
-    )
-    qv = q.select("qid", F.col(index.vec_col).alias("vector"))
-    return _rerank_reconstruction(
-        res, recon2, qv, k, index.distance, round_to, decode=lvq_decoder2(params)
+    return codec_vamana_search(
+        index, queries, k, qid_col, qvec_col, round_to,
+        None if k_reorder is None else max(k, k_reorder), compressed, **search_kw,
     )

@@ -18,15 +18,19 @@ from scalablevectorsearch_spark.functions.distances import distance_expr
 
 
 def compute_medioid(df: DataFrame, vec_col: str = "vector") -> list[float]:
-    """Component-wise mean vector (driver-side list of d floats)."""
-    means = (
+    """Component-wise mean vector (driver-side list of d floats, empty
+    for an empty table) — the one dataset-mean scan of the package
+    (LVQ and LeanVec center on its rounded form, codec.dataset_mean)."""
+    rows = (
         df.select(F.posexplode(vec_col).alias("pos", "x"))
         .groupBy("pos")
-        .agg(F.avg("x").alias("mean"))
-        .orderBy("pos")
+        .agg(F.avg(F.col("x").cast("double")).alias("m"))
         .collect()
     )
-    return [r["mean"] for r in means]
+    mean = [0.0] * len(rows)
+    for r in rows:
+        mean[r["pos"]] = r["m"]
+    return mean
 
 
 def find_medioid(df: DataFrame, id_col: str = "id", vec_col: str = "vector") -> int:

@@ -37,6 +37,13 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from scalablevectorsearch_spark.operators.codec import (
+    Codec,
+    codec_knn,
+    codec_vamana_build,
+    codec_vamana_search,
+)
+
 INT8_MIN, INT8_MAX = -128.0, 127.0
 
 
@@ -101,213 +108,102 @@ def sq_decompress(
     )
 
 
+class SQCodec(Codec):
+    """SQ as a codec (extensions/{flat,vamana}/scalar.h): storage is
+    compressed-domain doubles — decompressed for cosine
+    (CosineCompressed, scalar.h:155-195) — and ``finish`` applies the
+    distance correction after ranking, which it never changes (l2's is a
+    positive constant factor scale^2, ip's a per-query constant offset
+    bias*sum(q))."""
+
+    kind = "sq"
+
+    def __init__(self, params: SQParams, distance: str = "l2"):
+        if distance not in ("l2", "ip", "cosine"):
+            raise ValueError(f"unknown distance {distance!r}")
+        super().__init__(distance)
+        self.params = params
+
+    def store(self, df, id_col, vec_col, compressed):
+        if compressed:
+            df = df.withColumn("__sqv", F.transform(F.col(vec_col), lambda x: x.cast("double")))
+        else:
+            df = sq_compress(df, self.params, vec_col, "__sqv")
+        if self.distance == "cosine":
+            df = sq_decompress(df, self.params, "__sqv", "__sqv")
+        return df.select(F.col(id_col), F.col("__sqv").alias(vec_col))
+
+    def query(self, q):
+        # l2 compresses the query too (EuclideanCompressed.fix_argument);
+        # ip and cosine keep it full precision
+        return sq_compress(q, self.params, "vector", "vector") if self.distance == "l2" else q
+
+    def finish(self, cands, queries, k, round_to, *_):
+        # SQ never re-ranks, so the re-rank arguments are unused
+        s = self.params.scale
+        if self.distance == "l2":
+            # integer-domain distance -> corrected; same left-assoc order
+            # as the oracle: (d * scale) * scale
+            return cands.withColumn("distance", F.col("distance") * F.lit(s) * F.lit(s))
+        if self.distance == "ip":
+            qsum = F.aggregate("vector", F.lit(0.0), lambda acc, x: acc + x.cast("double"))
+            qsum = F.broadcast(queries.select("qid", qsum.alias("__qsum")))
+            corrected = F.lit(s) * F.col("distance") + F.lit(self.params.bias) * F.col("__qsum")
+            return cands.join(qsum, "qid").withColumn("distance", corrected).drop("__qsum")
+        return cands
+
+    def manifest_params(self):
+        return {"sq_gmin": self.params.gmin, "sq_gmax": self.params.gmax}
+
+    @classmethod
+    def from_manifest(cls, p):
+        if p.get("sq_gmin") is None:
+            return None
+        return cls(SQParams(gmin=p["sq_gmin"], gmax=p["sq_gmax"]), p["distance"])
+
+
+# The public SQ entry points: SQCodec run by the operators.codec drivers,
+# whose docstrings carry the base_compressed / routing prose.
+
+
 def sq_knn(
-    base: DataFrame,
-    queries: DataFrame,
-    params: SQParams,
-    k: int,
-    distance: str = "l2",
-    id_col: str = "id",
-    vec_col: str = "vector",
-    qid_col: str = "qid",
-    qvec_col: str | None = None,
-    round_to: int | None = 4,
-    base_compressed: bool = False,
+    base: DataFrame, queries: DataFrame, params: SQParams, k: int,
+    distance: str = "l2", id_col: str = "id", vec_col: str = "vector",
+    qid_col: str = "qid", qvec_col: str | None = None,
+    round_to: int | None = 4, base_compressed: bool = False,
 ) -> DataFrame:
-    """k-NN over scalar-quantized storage with corrected distances.
-
-    Returns (qid, rank, neighbor_id, distance) where distance is the
-    CORRECTED value (scalar.h compute()): scale^2 * L2int for l2;
-    scale*ip + bias*sum(q) for ip; full-precision cosine on decompressed
-    data for cosine. Rankings equal the corrected-ranking in all cases.
-
-    ``base_compressed=True``: ``base[vec_col]`` already holds
-    compressed-domain values (e.g. the TINYINT table persisted by
-    ``index_store.save_sq``) — the scan reads the 4x-smaller table
-    directly instead of compressing floats in-plan, which is the point
-    of SQ storage at 100 TB (scan bandwidth, not CPU).
-    """
-    from scalablevectorsearch_spark.operators.flat import flat_knn
-
-    qvec_col = qvec_col or vec_col
-    if base_compressed:
-        cbase = base.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vector"),
-        )
-    else:
-        cbase = sq_compress(base, params, vec_col, "__qv").select(
-            F.col(id_col).alias("id"), F.col("__qv").alias("vector")
-        )
-
-    if distance == "l2":
-        # compress the query too (EuclideanCompressed.fix_argument)
-        cq = sq_compress(queries, params, qvec_col, "__qv").select(
-            F.col(qid_col).alias("qid"), F.col("__qv").alias("vector")
-        )
-        res = flat_knn(cbase, cq, k=k, distance="l2", round_to=round_to)
-        s = params.scale
-        # integer-domain distance -> corrected; same left-assoc order as
-        # the oracle: (d * scale) * scale
-        return res.withColumn(
-            "distance", F.col("distance") * F.lit(s) * F.lit(s)
-        )
-    if distance == "ip":
-        # query stays full precision (InnerProductCompressed)
-        q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("vector"))
-        res = flat_knn(cbase, q, k=k, distance="ip", round_to=round_to)
-        qsum = q.select(
-            "qid",
-            F.aggregate(
-                "vector", F.lit(0.0), lambda acc, x: acc + x.cast("double")
-            ).alias("__qsum"),
-        )
-        return (
-            res.join(F.broadcast(qsum), "qid")
-            .withColumn(
-                "distance",
-                F.lit(params.scale) * F.col("distance") + F.lit(params.bias) * F.col("__qsum"),
-            )
-            .drop("__qsum")
-        )
-    if distance == "cosine":
-        # decompress the datum, full-precision cosine (CosineCompressed)
-        dbase = sq_decompress(cbase, params, "vector", "vector").select("id", "vector")
-        q = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col).alias("vector"))
-        return flat_knn(dbase, q, k=k, distance="cosine", round_to=round_to)
-    raise ValueError(f"unknown distance {distance!r}")
-
-
-# ------------------------------------------------- SQ inside Vamana
-# The reference plugs the SQDataset into each index family via
-# extension CPOs (include/svs/extensions/vamana/scalar.h — graph build
-# and greedy search run the compressed distance kernels over SQ
-# storage; include/svs/extensions/flat/scalar.h is our sq_knn,
-# include/svs/extensions/ivf/scalar.h our SQ-domain ivf k_reorder
-# path). Spark shape: compress once, build/search the SAME sharded
-# Vamana operator over the compressed table — the index's persisted
-# layout holds int8-domain vectors (4x scan bandwidth saved at 100 TB,
-# the reference's stated SQ motivation), and the distance correction is
-# a pure post-ranking column expression because ranking is invariant:
-# l2's correction is a positive constant factor (scale^2), ip's a
-# per-query constant offset (bias * sum(q)), cosine decompresses.
+    """k-NN over scalar-quantized storage with CORRECTED distances
+    (scalar.h compute()): scale^2 * L2int for l2, scale*ip + bias*sum(q)
+    for ip, full-precision cosine on decompressed data for cosine. See
+    :func:`~scalablevectorsearch_spark.operators.codec.codec_knn`."""
+    return codec_knn(
+        SQCodec(params, distance), base, queries, k, id_col, vec_col, qid_col,
+        qvec_col, round_to, base_compressed=base_compressed,
+    )
 
 
 def sq_vamana_build(
-    base: DataFrame,
-    params: SQParams,
-    vamana_params=None,
-    n_shards: int = 8,
-    distance: str = "l2",
-    id_col: str = "id",
-    vec_col: str = "vector",
-    base_compressed: bool = False,
-    **build_kw,
+    base: DataFrame, params: SQParams, vamana_params=None, n_shards: int = 8,
+    distance: str = "l2", id_col: str = "id", vec_col: str = "vector",
+    base_compressed: bool = False, **build_kw,
 ):
-    """Build a Vamana graph over scalar-quantized storage.
-
-    For ``l2``/``ip`` the graph is constructed IN the compressed domain
-    (EuclideanCompressed / InnerProductCompressed semantics — the
-    int-domain ranking equals the corrected ranking); for ``cosine``
-    the datum is decompressed on the fly (CosineCompressed,
-    scalar.h:155-195), so the graph sees the lossy reconstruction the
-    search will see. Extra kwargs (shard_by/closure_bp/...) pass through
-    to :func:`~scalablevectorsearch_spark.operators.vamana.vamana_build`
-    — SQ composes with cluster sharding and closure replication.
-
-    ``base_compressed=True``: ``base[vec_col]`` already holds
-    compressed-domain values (the TINYINT table persisted by
-    ``index_store.save_sq``) — build reads the 4x-smaller table
-    directly, as :func:`sq_knn` does.
-    """
-    from scalablevectorsearch_spark.operators.vamana import vamana_build
-
-    if distance not in ("l2", "ip", "cosine"):
-        raise ValueError(f"unknown distance {distance!r}")
-    if base_compressed:
-        cbase = base.withColumn(
-            "__sqv", F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        )
-        if distance == "cosine":
-            cbase = sq_decompress(cbase, params, "__sqv", "__sqv")
-    elif distance in ("l2", "ip"):
-        cbase = sq_compress(base, params, vec_col, "__sqv")
-    elif distance == "cosine":
-        cbase = sq_decompress(
-            sq_compress(base, params, vec_col, "__cq"), params, "__cq", "__sqv"
-        )
-    else:
-        raise ValueError(f"unknown distance {distance!r}")
-    cbase = cbase.select(F.col(id_col), F.col("__sqv").alias(vec_col))
-    idx = vamana_build(
-        cbase, vamana_params, n_shards=n_shards, distance=distance,
-        id_col=id_col, vec_col=vec_col, **build_kw,
+    """Vamana over SQ storage: l2/ip graphs are built IN the compressed
+    domain (its ranking equals the corrected one), cosine over the
+    decompressed datum. See
+    :func:`~scalablevectorsearch_spark.operators.codec.codec_vamana_build`."""
+    return codec_vamana_build(
+        SQCodec(params, distance), base, vamana_params, n_shards, id_col, vec_col,
+        base_compressed, **build_kw,
     )
-    idx.sq_params = params
-    return idx
 
 
 def sq_vamana_search(
-    index,
-    queries: DataFrame,
-    k: int,
-    qid_col: str = "qid",
-    qvec_col: str = "vector",
-    round_to: int | None = 4,
-    **search_kw,
+    index, queries: DataFrame, k: int, qid_col: str = "qid",
+    qvec_col: str = "vector", round_to: int | None = 4, **search_kw,
 ) -> DataFrame:
-    """Graph search over an SQ-compressed Vamana index with corrected
-    distance emission (identical to :func:`sq_knn`'s contract: with an
-    exhaustive window the result EQUALS sq_knn's, which is the
-    metamorphic gate). Routing kwargs (n_probes/epsilon_bp/router/...)
-    pass through to ``vamana_search``."""
-    from scalablevectorsearch_spark.operators.vamana import vamana_search
-
-    params = index.sq_params
-    if params is None:
+    """Graph search over an SQ Vamana index with corrected distances
+    (:func:`sq_knn`'s contract). See
+    :func:`~scalablevectorsearch_spark.operators.codec.codec_vamana_search`."""
+    if not isinstance(index.codec, SQCodec):
         raise ValueError("index was not built with sq_vamana_build")
-    distance = index.distance
-    if distance == "l2":
-        cq = sq_compress(queries, params, qvec_col, "__sqv").select(
-            F.col(qid_col).alias("qid"), F.col("__sqv").alias(index.vec_col)
-        )
-        res = vamana_search(
-            index, cq, k, qid_col="qid", qvec_col=index.vec_col,
-            round_to=round_to, **search_kw,
-        )
-        s = params.scale
-        # same left-assoc order as sq_knn and the oracle: (d*scale)*scale
-        return res.withColumn("distance", F.col("distance") * F.lit(s) * F.lit(s))
-    if distance == "ip":
-        q = queries.select(
-            F.col(qid_col).alias("qid"), F.col(qvec_col).alias(index.vec_col)
-        )
-        res = vamana_search(
-            index, q, k, qid_col="qid", qvec_col=index.vec_col,
-            round_to=round_to, **search_kw,
-        )
-        qsum = q.select(
-            "qid",
-            F.aggregate(
-                index.vec_col, F.lit(0.0), lambda acc, x: acc + x.cast("double")
-            ).alias("__qsum"),
-        )
-        return (
-            res.join(F.broadcast(qsum), "qid")
-            .withColumn(
-                "distance",
-                F.lit(params.scale) * F.col("distance")
-                + F.lit(params.bias) * F.col("__qsum"),
-            )
-            .drop("__qsum")
-        )
-    if distance == "cosine":
-        # layout already holds the decompressed (lossy) vectors
-        q = queries.select(
-            F.col(qid_col).alias("qid"), F.col(qvec_col).alias(index.vec_col)
-        )
-        return vamana_search(
-            index, q, k, qid_col="qid", qvec_col=index.vec_col,
-            round_to=round_to, **search_kw,
-        )
-    raise ValueError(f"unknown distance {distance!r}")
+    return codec_vamana_search(index, queries, k, qid_col, qvec_col, round_to, **search_kw)

@@ -214,17 +214,17 @@ class VamanaIndex:
     #: it every search batch would re-shuffle the full base to co-locate
     #: shards, a per-query-batch full-base shuffle at 100 TB.
     layout: DataFrame | None = None
-    #: set when the index stores scalar-quantized vectors (the SQDataset
-    #: plugged into Vamana, extensions/vamana/scalar.h): the SQParams
-    #: whose scale/bias correct the compressed-domain distances. Build
-    #: and search with operators.sq.sq_vamana_build / sq_vamana_search.
-    sq_params: object | None = None
+    #: the storage codec (operators.codec: SQ / LVQ / LeanVec) when the
+    #: index holds compressed vectors — the reference's compressed
+    #: dataset plugged into Vamana (extensions/vamana/*.h). Set by the
+    #: codec_vamana_build driver, persisted by save_vamana.
+    codec: object | None = None
     #: optional vectorized storage decoder: the layout's ``__vec`` rows
     #: are PACKED storage (e.g. LVQ codes at 0.5-1 byte/component) and
     #: every kernel decodes (n, w) -> (n, d) at entry — the reference's
     #: compressed dataset plugged into the graph index
-    #: (extensions/vamana/*.h). Ships in task closures; persisted
-    #: indexes rebuild it from their compression params at load.
+    #: (extensions/vamana/*.h). Ships in task closures; set from
+    #: ``codec.decode`` at build and at load.
     vec_decode: object | None = None
     #: True when the build stamped shards via the grouped
     #: (triangle-pruned) nearest-centroid pass — recorded so every later
@@ -234,6 +234,19 @@ class VamanaIndex:
     #: calibration-sample groundtruth cache (see IVFIndex.cal_cache):
     #: re-calibration on the same index skips the exact flat scan
     cal_cache: dict = field(default_factory=dict)
+
+    # read-only views over ``codec`` under the names saved indexes,
+    # tests and tools use
+    sq_params = property(lambda self: _view(self.codec, "sq", "params"))
+    lvq_params = property(lambda self: _view(self.codec, "lvq", "params"))
+    leanvec_model = property(lambda self: _view(self.codec, "leanvec", "model"))
+    leanvec_distance = property(lambda self: _view(self.codec, "leanvec", "distance"))
+
+
+def _view(codec, kind: str, attr: str):
+    if kind == "lvq" and getattr(codec, "kind", None) == "leanvec":
+        codec = codec.primary  # a LeanVec index's LVQ primary
+    return getattr(codec, attr) if getattr(codec, "kind", None) == kind else None
 
 
 def _sharded(

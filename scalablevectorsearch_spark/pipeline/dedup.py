@@ -219,6 +219,24 @@ def jaccard_verify(
     )
 
 
+def _check_signatures(signed: DataFrame, sig_len: int, arg: str) -> None:
+    """Boundary check of a caller-supplied signature table: the
+    (doc_id, shingles, sig ARRAY) schema, and the first row's signature
+    width from one single-row read (not a full scan) — a wrong width
+    would otherwise silently band the wrong hashes."""
+    from pyspark.sql.types import ArrayType
+
+    types = {f.name: f.dataType for f in signed.schema.fields}
+    missing = [c for c in ("doc_id", "shingles", "sig") if c not in types]
+    if missing:
+        raise ValueError(f"{arg} lacks column(s) {missing}; expected (doc_id, shingles, sig)")
+    if not isinstance(types["sig"], ArrayType):
+        raise ValueError(f"{arg}.sig must be an array, got {types['sig'].simpleString()}")
+    first = signed.select(F.size("sig").alias("n")).head()
+    if first is not None and first["n"] != sig_len:
+        raise ValueError(f"{arg} rows hold {first['n']} hashes, expected {sig_len}")
+
+
 def dedup_minhash(
     df: DataFrame,
     n_shingle: int = 3,
@@ -243,7 +261,9 @@ def dedup_minhash(
     same surviving corpus) derive them ONE time instead of re-embedding
     the shingle+minhash expression block per operator (r13, plan-size
     and construction cost only — results are identical by construction
-    since the signature of a document is deterministic).
+    since the signature of a document is deterministic). A table
+    without (doc_id, shingles, sig ARRAY) columns, or whose first row's
+    sig is not ``n_passes * n_perm`` long, raises ``ValueError``.
 
     ``n_passes``: chain-integrity knob. Banding misses a true pair at
     shingle-Jaccard s with probability (1 - s^r)^(n_passes*n_bands),
@@ -279,6 +299,7 @@ def dedup_minhash(
         raise ValueError("n_passes must be >= 1")
     total_perm = n_passes * n_perm
     if signatures is not None:
+        _check_signatures(signatures, total_perm, "signatures")
         signed = signatures
     else:
         shingled = shingle_hashes(df, n_shingle, text_col, id_col)
@@ -404,7 +425,8 @@ def decontaminate(
     (or a superset of it whose extra rows are harmless downstream, as
     in the bench composite) passes the table instead of paying the
     shingle+minhash expression block — and at corpus scale a second
-    full corpus pass — again.
+    full corpus pass — again. Checked like ``signatures`` (sig
+    ``n_perm`` long).
 
     Same banded-MinHash machinery as :func:`dedup_minhash`, but the
     candidate join runs BETWEEN the two corpora on (band_id, band_key)
@@ -418,6 +440,7 @@ def decontaminate(
 
     r = n_perm // n_bands
     if corpus_signatures is not None:
+        _check_signatures(corpus_signatures, n_perm, "corpus_signatures")
         signed_c = corpus_signatures
     else:
         signed_c = minhash_signature(

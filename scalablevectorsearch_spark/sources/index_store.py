@@ -237,8 +237,6 @@ def _dims_of(df: DataFrame, vec_col: str) -> int:
 def save_vamana(
     index, path: str, precomputed: set[str] | None = None
 ) -> dict[str, Any]:
-    from scalablevectorsearch_spark.operators.vamana import VamanaIndex  # noqa: F401
-
     data = index.base.select(
         F.col(index.id_col).cast("long").alias("id"), F.col(index.vec_col).alias("vector")
     )
@@ -257,41 +255,11 @@ def save_vamana(
         "use_full_search_history": p.use_full_search_history,
         "build_dtype": p.build_dtype,
     }
-    if index.sq_params is not None:
-        # SQ-compressed index (extensions/vamana/scalar.h): the data
-        # table already holds compressed-domain vectors; the scale/bias
-        # that correct its distances are part of the index identity
-        params["sq_gmin"] = index.sq_params.gmin
-        params["sq_gmax"] = index.sq_params.gmax
-    lvq = getattr(index, "lvq_params", None)
-    if lvq is not None:
-        # LVQ index (data_traits.h primary_bits/residual_bits): the
-        # data table holds the primary reconstruction; the centering
-        # mean + bit widths are the index identity
-        params["lvq_primary_bits"] = lvq.primary_bits
-        params["lvq_residual_bits"] = lvq.residual_bits
-        params["lvq_mean"] = [float(x) for x in lvq.mean]
-        # packed layout: the data table holds [lo, step, code bytes]
-        # rows and kernels decode at entry — the decoder is rebuilt
-        # from these params at load
-        params["lvq_packed"] = getattr(index, "vec_decode", None) is not None
-    lv = getattr(index, "leanvec_model", None)
-    if lv is not None:
-        # LeanVec index (data_traits.h leanvec_dims + the projection
-        # pair of training.h): queries cannot be projected without the
-        # matrices, so they ARE the index
-        params["leanvec_mean"] = [float(x) for x in lv.mean]
-        params["leanvec_data_matrix"] = [
-            [float(x) for x in row] for row in lv.data_matrix
-        ]
-        params["leanvec_query_matrix"] = [
-            [float(x) for x in row] for row in lv.query_matrix
-        ]
-        # re-rank metric (== distance except cosine, whose primary
-        # graph runs in IP geometry over the normalized projection)
-        params["leanvec_distance"] = getattr(
-            index, "leanvec_distance", None
-        ) or index.distance
+    if index.codec is not None:
+        # compressed index: the codec (SQ scale/bias, LVQ mean + bit
+        # widths + packed layout, LeanVec matrices) is the index
+        # identity — load_vamana rebuilds it and its decoder from these
+        params.update(index.codec.manifest_params())
     if index.shard_model is not None:
         # cluster-sharded (SPANN-style) layout: the centroids ARE part
         # of the index — without them a loaded index would re-stamp
@@ -370,6 +338,9 @@ def load_vamana(spark: SparkSession, path: str, validate: bool = False):
             n_iters=p.get("shard_n_iters", 0),
             round_decimals=p.get("shard_round_decimals", 6),
         )
+    from scalablevectorsearch_spark.operators.codec import load_codec
+
+    codec = load_codec(p)
     idx = VamanaIndex(
         graph=tables["graph"],
         base=data,
@@ -380,30 +351,9 @@ def load_vamana(spark: SparkSession, path: str, validate: bool = False):
         vec_col="vector",
         shard_model=shard_model,
         closure_bp=p.get("closure_bp"),
+        codec=codec,
+        vec_decode=None if codec is None else codec.decode,
     )
-    if p.get("sq_gmin") is not None:
-        from scalablevectorsearch_spark.operators.sq import SQParams
-
-        idx.sq_params = SQParams(gmin=p["sq_gmin"], gmax=p["sq_gmax"])
-    if p.get("lvq_primary_bits") is not None:
-        from scalablevectorsearch_spark.operators.lvq import LVQParams, lvq_decoder
-
-        idx.lvq_params = LVQParams(
-            mean=tuple(p["lvq_mean"]), dims=len(p["lvq_mean"]),
-            primary_bits=p["lvq_primary_bits"],
-            residual_bits=p.get("lvq_residual_bits", 0),
-        )
-        if p.get("lvq_packed"):
-            idx.vec_decode = lvq_decoder(idx.lvq_params)
-    if p.get("leanvec_data_matrix") is not None:
-        from scalablevectorsearch_spark.operators.leanvec import LeanVecModel
-
-        idx.leanvec_model = LeanVecModel(
-            data_matrix=np.asarray(p["leanvec_data_matrix"], dtype=np.float64),
-            query_matrix=np.asarray(p["leanvec_query_matrix"], dtype=np.float64),
-            mean=tuple(p["leanvec_mean"]),
-        )
-        idx.leanvec_distance = p.get("leanvec_distance", p["distance"])
     # rebuild the persisted layout with the SAME sharding the graphs
     # were built under. Kmeans-sharded saves carry the exact
     # (shard_id, id) assignment table (see save_vamana) — join it back
@@ -433,7 +383,7 @@ def load_vamana(spark: SparkSession, path: str, validate: bool = False):
         # O(N*S*d); the grouped stamp is assignment-identical (gated)
         assigned = _sharded(
             data, p["n_shards"], "id", shard_model, "vector", p.get("closure_bp"),
-            vec_decode=getattr(idx, "vec_decode", None),
+            vec_decode=idx.vec_decode,
             stamp_hierarchical=idx.stamp_hierarchical,
         ).select(
             "shard_id",

@@ -99,6 +99,43 @@ def test_decontaminate_finds_planted_and_skips_clean(docs, spark):
     assert all(p in (9001, 9002) for p, _ in rows)  # never corpus-internal
 
 
+def _bad_signature_call(fn, docs, table):
+    from scalablevectorsearch_spark.pipeline.dedup import decontaminate
+
+    base = docs.filter(F.col("doc_id") < 20)
+    if fn == "dedup_minhash":
+        return dedup_minhash(base, signatures=table)
+    return decontaminate(base, base.limit(2), corpus_signatures=table)
+
+
+def _signatures(docs, n_perm=16):
+    return minhash_signature(shingle_hashes(docs.filter(F.col("doc_id") < 20)), n_perm)
+
+
+@pytest.mark.parametrize("fn", ["dedup_minhash", "decontaminate"])
+def test_signature_table_missing_column_rejected(docs, fn):
+    """A caller-supplied signature table is checked at the boundary: a
+    missing column raises ValueError, not an analysis error deep inside
+    the LSH plan."""
+    with pytest.raises(ValueError, match="shingles"):
+        _bad_signature_call(fn, docs, _signatures(docs).drop("shingles"))
+
+
+@pytest.mark.parametrize("fn", ["dedup_minhash", "decontaminate"])
+def test_signature_table_non_array_sig_rejected(docs, fn):
+    table = _signatures(docs).withColumn("sig", F.concat_ws(":", "sig"))
+    with pytest.raises(ValueError, match="must be an array"):
+        _bad_signature_call(fn, docs, table)
+
+
+@pytest.mark.parametrize("fn", ["dedup_minhash", "decontaminate"])
+def test_signature_table_wrong_width_rejected(docs, fn):
+    """A signature narrower than n_passes * n_perm would silently band
+    the wrong hashes; the first row's width is checked."""
+    with pytest.raises(ValueError, match="hold 12 hashes, expected 16"):
+        _bad_signature_call(fn, docs, _signatures(docs, 12))
+
+
 def test_simhash_neardup_banded_join(docs):
     """A one-token-appended copy lands within the hamming budget and the
     banded join finds it; output respects the bound and doc_a < doc_b."""

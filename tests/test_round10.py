@@ -15,7 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from scalablevectorsearch_spark.operators.calibrate import validate_budget
 from scalablevectorsearch_spark.operators.dynamic import (
     _CKPT_EVERY,
     add_points,
@@ -41,60 +40,6 @@ from scalablevectorsearch_spark.operators.vamana import (
 )
 
 PARAMS = VamanaParams(graph_max_degree=24, window_size=24)
-
-
-# --------------------------------------------------- validate_budget
-
-
-class _FakeRecall:
-    """Deterministic recall model: recall(b) = min(1, b / need)."""
-
-    def __init__(self, spark, gt, k, need):
-        self.spark, self.gt, self.k, self.need = spark, gt, k, need
-        self.evals = []
-
-    def __call__(self, b):
-        self.evals.append(b)
-        frac = min(1.0, b / self.need)
-        n_keep = max(1, int(round(frac * self.k)))
-        return self.gt.filter(F.col("rank") <= n_keep)
-
-
-@pytest.fixture(scope="module")
-def vgt(spark):
-    rows = [(q, r, q * 100 + r) for q in range(4) for r in range(1, 6)]
-    return spark.createDataFrame(rows, "qid long, rank int, neighbor_id long")
-
-
-def test_validate_budget_passes_through_when_target_met(spark, vgt):
-    fake = _FakeRecall(spark, vgt, 5, need=2.0)
-    stats = {}
-    b = validate_budget(fake, vgt, k=5, target_recall=0.9, budget=2.0,
-                        max_budget=8.0, stats=stats)
-    assert b == 2.0
-    assert len(stats["validation"]) == 1
-    assert stats["validated_recall"] == 1.0
-
-
-def test_validate_budget_widens_until_target(spark, vgt):
-    fake = _FakeRecall(spark, vgt, 5, need=4.0)
-    stats = {}
-    b = validate_budget(fake, vgt, k=5, target_recall=0.99, budget=2.0,
-                        max_budget=8.0, widen=1.5, stats=stats)
-    # 2.0 -> 3.0 -> 4.5: first budget clearing need=4.0
-    assert b == pytest.approx(4.5)
-    assert [round(x, 2) for x in fake.evals] == [2.0, 3.0, 4.5]
-    assert stats["validated_recall"] == 1.0
-    assert stats["validation"][0][1] < 0.99
-
-
-def test_validate_budget_caps_at_max(spark, vgt):
-    fake = _FakeRecall(spark, vgt, 5, need=100.0)
-    stats = {}
-    b = validate_budget(fake, vgt, k=5, target_recall=0.99, budget=2.0,
-                        max_budget=4.0, widen=2.0, max_rounds=5, stats=stats)
-    assert b == 4.0  # best effort at the cap, like the fit itself
-    assert stats["validated_recall"] < 0.99
 
 
 # ------------------------------- held-out validation split (ivf/vamana)

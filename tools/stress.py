@@ -67,7 +67,8 @@ IVF_PROBES = max(4, IVF_CLUSTERS // 8)
 ROUTED_PROBES = max(4, N_SHARDS // 4)
 # budgets for the composed path (uniform 64-dim data is the WORST case
 # for cluster routing: no structure, concentrated centroid distances) —
-# operating point from tools/closure_tune2.py at 500k
+# operating point tuned at 500k; the routed recalls it gives are the
+# "stress": 500000 rows of BENCH_HISTORY.jsonl
 CLOSURE_AMP = 2.0       # storage budget: layout <= 2x rows
 PROBE_FRACTION = 0.40   # probe budget: mean probed shards / n_shards
 CLOSURE_SWS = 50        # per-shard window for the composed search

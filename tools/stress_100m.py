@@ -396,8 +396,8 @@ if STAGE == "vamana_lvq_build":
     #     the hint-warmed, CI-margined, held-out-validated calibrated
     #     search against the generator groundtruth.
     from scalablevectorsearch_spark.operators.lvq import (
+        LVQCodec,
         lvq_compress,
-        lvq_decoder,
         lvq_packed_col,
         lvq_train,
     )
@@ -454,13 +454,17 @@ if STAGE == "vamana_lvq_build":
         lambda: _shutil.rmtree(comp_path, ignore_errors=True),
     )
 
+    # the data table already holds the codec's packed rows, so the build
+    # takes them as stored and the codec supplies the decoder and the
+    # manifest identity
+    codec = LVQCodec(lvqp)
     packed_df = spark.read.parquet(f"{index_path}/data")
     vr = vamana_build(
         packed_df, P, n_shards=N_SHARDS, shard_by="kmeans",
-        shard_model=shard_model, vec_decode=lvq_decoder(lvqp),
+        shard_model=shard_model, vec_decode=codec.decode,
         layout_storage=StorageLevel.DISK_ONLY,
     )
-    vr.lvq_params = lvqp
+    vr.codec = codec
     meta["stamp_hierarchical"] = vr.stamp_hierarchical
     # the layout's ONLY consumer this session is the graph job — skip
     # the DISK_ONLY copy; the graph computation runs the stamp exchange
