@@ -87,27 +87,17 @@ def _calibration_op() -> float:
     return round(time.perf_counter() - t0, 3)
 
 
-def run_suite(spark, base, docs, queries, n, query_hook=None) -> dict[str, float]:
-    """One full pass over the headline queries; returns {name: sec}.
-
-    ``query_hook(name)``: measurement-infrastructure hook (used by
-    tools/profile_bench.py to snapshot job/stage/task counts around each
-    query) — called before the query runs, and the callable it returns
-    (if any) after it finishes. The bench itself never sets it; timing
-    semantics unchanged.
-    """
+def run_suite(spark, base, docs, queries, n) -> dict[str, float]:
+    """One full pass over the headline queries; returns {name: sec}."""
     timings: dict[str, float] = {}
     state: dict[str, object] = {}
 
     def timed(name, fn):
-        after = query_hook(name) if query_hook is not None else None
         spark.sparkContext.setJobDescription(f"bench:{name}")
         t0 = time.perf_counter()
         fn()
         timings[name] = round(time.perf_counter() - t0, 3)
         spark.sparkContext.setJobDescription(None)
-        if after is not None:
-            after()
 
     # B1 — exact flat scans
     for dist in ("l2", "ip", "cosine"):

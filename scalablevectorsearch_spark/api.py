@@ -595,13 +595,17 @@ class DynamicVamana(Vamana):
         from scalablevectorsearch_spark.operators.dynamic import (
             compact_index,
             consolidate,
-            dynamic_vamana,
         )
 
-        self.dyn = consolidate(self.dyn)
-        new_index, _mapping = compact_index(self.dyn.index)
+        dyn = consolidate(self.dyn)
+        new_index, _mapping = compact_index(dyn.index)
         self.index = new_index
-        self.dyn = dynamic_vamana(new_index)
+        # the compacted index reads the consolidated generation: its
+        # owners move to the new handle, which also owns the layout
+        # compact_index persisted; the next mutation releases them all
+        self.dyn = dyn._moved(index=new_index, gens_since_ckpt=0)
+        if new_index.layout is not None:
+            self.dyn.pins.persist(new_index.layout)
         return self
 
     def all_ids(self) -> np.ndarray:

@@ -32,7 +32,6 @@ Spark shape (bulk-synchronous, scale-first):
 
 from __future__ import annotations
 
-import threading
 from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame
@@ -43,6 +42,7 @@ from scalablevectorsearch_spark.operators.vamana import (
     VamanaIndex,
     vamana_search,
 )
+from scalablevectorsearch_spark.pins import Pins
 
 
 # ------------------------------------------------------------ dynamic flat
@@ -223,31 +223,6 @@ _TOMB_DRIVER_MAX = 100_000
 
 
 @dataclass
-class _CkptCell:
-    """Shared mutable ownership cell for ONE lineage cut's checkpoint
-    RDDs (r12, ADVICE r11): handles created between cuts (non-checkpoint
-    mutations, delete waves) all recompute through the same checkpoint,
-    so they SHARE this cell; ``gen`` counts ownership transfers and only
-    the handle holding the LATEST generation may destroy the data. A
-    stale handle's close() — e.g. ``d2 = delete_entries(d); d.close()``
-    — becomes a checkpoint no-op instead of unpersisting the RDDs the
-    live generation's lineage still recomputes through (previously a
-    latent job failure on any later cache eviction)."""
-
-    rdd_ids: tuple = ()
-    gen: int = 0
-
-    def transfer(self) -> int:
-        """Pass ownership to a newer handle; returns its generation."""
-        self.gen += 1
-        return self.gen
-
-    def release(self, spark) -> None:
-        _release_ckpt_rdds(spark, self.rdd_ids)
-        self.rdd_ids = ()
-
-
-@dataclass
 class DynamicVamana:
     """A Vamana index + a tombstone set (lazy deletes).
 
@@ -259,69 +234,49 @@ class DynamicVamana:
     than the driver threshold flips the representation to ``tomb_df``,
     an id DataFrame that is anti-joined / flag-stamped executor-side —
     the wave is never collect()ed. Exactly one representation is active
-    (``tomb_df is not None`` wins)."""
+    (``tomb_df is not None`` wins).
+
+    Ownership. The reference mutates one in-memory graph in place; here
+    every generation is a persisted frame whose lineage is cut now and
+    then, and a handle owns that state through three :class:`Pins`
+    scopes (the CacheManager keeps a persisted plan until it is
+    unpersisted, so nothing is freed by garbage collection):
+
+    - ``pins``: this generation's persisted graph and layout. The next
+      ``add_points``/``consolidate`` releases them once its own
+      generation is materialized.
+    - ``cut``: the last lineage cut's checkpoint RDDs. Every generation
+      up to the next cut recomputes through them, so the next cut
+      releases them; handles older than that cut become invalid.
+    - ``tombs``: the large-wave tombstone checkpoints. A consolidate's
+      base anti-joins them for good, so they live until ``close()``.
+
+    Every mutation MOVES all three into the handle it returns. A
+    consumed handle owns nothing and its ``close()`` is a no-op: after
+    ``live = delete_entries(stale, ids); stale.close()`` the live handle
+    still searches its persisted graph. ``close()`` on the live handle
+    releases everything, when a maintenance loop retires the index."""
 
     index: VamanaIndex
     tomb_ids: tuple = ()  # sorted tombstoned ids (small path)
     tomb_df: DataFrame | None = None  # authoritative when not None
-    #: persisted frames THIS generation's mutation created and owns
-    #: (graph/layout). The CacheManager holds strong references to
-    #: persisted plans until explicit unpersist — the ContextCleaner
-    #: does NOT reclaim them on Python GC — so each mutation releases
-    #: its predecessor's pins once the new generation is materialized
-    #: (see add_points/consolidate), and ``close()`` releases the last
-    #: generation when a maintenance loop retires the index.
-    pins: tuple = ()
-    #: the LAST lineage cut's checkpoint RDD ids (r11): a
-    #: localCheckpoint registers its own RDD-level persist, which
-    #: DataFrame.unpersist does NOT release (CacheManager no-op on a
-    #: LogicalRDD frame), so an untracked chain grows by one
-    #: fully-materialized graph+layout copy per _CKPT_EVERY mutations.
-    #: A checkpoint must outlive its dependents (every generation up
-    #: to the NEXT cut recomputes through it), so it is released
-    #: exactly when a newer cut supersedes it — and by close() when
-    #: the index retires. Releasing DESTROYS the checkpoint data, so
-    #: handles older than the previous cut become invalid (not merely
-    #: recompute-slow) once a newer cut lands. Ownership is refcounted
-    #: through a shared :class:`_CkptCell` (r12): only the handle whose
-    #: ``ckpt_gen`` matches the cell's current generation may destroy.
-    ckpt_cell: _CkptCell = field(default_factory=_CkptCell)
-    ckpt_gen: int = 0
-    #: mutations since the last lineage cut: every mutation embeds the
-    #: previous graph's plan at least twice, so the logical plan doubles
-    #: per generation; a localCheckpoint every _CKPT_EVERY mutations
-    #: bounds growth to 2^_CKPT_EVERY leaf-plan copies (measured
-    #: blowup point without any cut: ~15 generations) while paying the
-    #: checkpoint write only every K-th mutation (per-mutation eager
-    #: checkpoints cost +27-36% on the mutation cycle).
+    pins: Pins = field(default_factory=Pins)
+    cut: Pins = field(default_factory=Pins)
+    tombs: Pins = field(default_factory=Pins)
+    #: mutations since the last lineage cut (see _CKPT_EVERY)
     gens_since_ckpt: int = 0
 
     def close(self) -> None:
-        """Release this generation's persisted graph/layout blocks.
-        Call when retiring the index (e.g. at the end of a streaming
-        maintenance loop); searches on this handle afterwards recompute
-        from the last checkpoint instead of the cache.
+        """Release everything this handle owns; idempotent."""
+        for owner in (self.pins, self.cut, self.tombs):
+            owner.release()
 
-        OWNERSHIP (r12): checkpoint destruction is generation-guarded.
-        Handles between lineage cuts share one :class:`_CkptCell`; each
-        mutation/delete transfers ownership to the handle it returns, so
-        a close() on a SUPERSEDED handle releases only that handle's
-        cached graph/layout blocks (searches on it — and on any handle
-        sharing its pins, e.g. the post-delete handle — degrade to
-        recompute through the live checkpoint) and leaves the checkpoint
-        itself intact for the live generation. Only the latest handle's
-        close() destroys the checkpoint data. close() is idempotent."""
-        self._release_pins()
-        if self.ckpt_gen == self.ckpt_cell.gen:
-            self.ckpt_cell.release(self.spark)
-
-    def _release_pins(self) -> None:
-        """Release only the persisted graph/layout (NOT the lineage
-        checkpoint): what a superseding mutation drops — its new
-        generation still recomputes through the last checkpoint until
-        it cuts a new one."""
-        for df in self.pins:
-            df.unpersist(blocking=False)
+    def _moved(self, **changes) -> "DynamicVamana":
+        """The handle that takes over this one's owners."""
+        return replace(
+            self, pins=self.pins.move(), cut=self.cut.move(),
+            tombs=self.tombs.move(), **changes,
+        )
 
     @property
     def spark(self):
@@ -367,151 +322,66 @@ def dynamic_vamana(index: VamanaIndex) -> DynamicVamana:
 _CKPT_EVERY = 4
 
 
-def _pin_by_shard(
-    df: DataFrame, checkpoint: bool = True, n_keys: int | None = None
-) -> tuple[DataFrame, DataFrame | None]:
-    """Materialize a mutated graph/layout hash-partitioned on shard_id
-    — the Spark analog of the reference's in-place
-    ``graph_.replace_node``: without it every downstream search re-runs
-    the shard rebuild, and partitioning by shard keeps the materialized
-    layout aligned with the search cogroup (no partition-count creep
-    across mutation cycles).
+def _next_generation(
+    dyn: DynamicVamana, graph_df: DataFrame, layout_df: DataFrame,
+    base: DataFrame, validate=None, **tombstones,
+) -> DynamicVamana:
+    """Materialize the generation that supersedes ``dyn`` (add_points
+    and consolidate) and hand it ``dyn``'s owners.
 
-    With ``checkpoint``, an eager localCheckpoint first cuts the
-    lineage to a leaf: every mutation embeds the PREVIOUS graph's plan
-    at least twice (untouched-shards filter + the cogroup side), so an
-    uncut chain doubles the logical plan per mutation — measured
-    blowing past Catalyst's 2^31-char plan-string cap (and minutes of
-    analysis) ~15 batches into a streaming maintenance loop. The cut
-    runs every ``_CKPT_EVERY``-th mutation, not every mutation — the
-    checkpoint write is the dominant per-mutation constant, and plan
-    growth between cuts is bounded at 2^_CKPT_EVERY leaf copies.
-
-    A checkpoint leaf alone is NOT enough: Spark's LogicalRDD
-    (measured on 4.1.2) reports unknown partitioning to Catalyst, so
-    every post-mutation search would re-shuffle the checkpointed frame
-    under the cogroup — a full graph+layout exchange per SEARCH, the
-    hot path (explain_audit's "post-mutation search still reads a
-    persisted layout" check caught exactly this). So: checkpoint
-    (lineage cut) THEN _by_shard + persist (one shuffle per MUTATION;
-    the InMemoryRelation carries hashpartitioning(shard_id) and
-    searches cogroup exchange-free off it). The previous generation's
-    persisted blocks are released by the mutation that supersedes them
-    (see DynamicVamana.pins). On a real cluster, executor loss
-    invalidates local checkpoints — a maintenance service there should
-    periodically persist the graph to storage (index save/load)
-    instead of chaining forever."""
-    from scalablevectorsearch_spark.operators.vamana import _by_shard
-
-    ckpt_ids: tuple = ()
-    if checkpoint:
-        df, ckpt_ids = _local_ckpt(df)
-    pinned = _by_shard(df, n_keys=n_keys).persist()
-    try:
-        pinned.count()
-    except BaseException:
-        _drop_pins(df.sparkSession, [(pinned, ckpt_ids)])
-        raise
-    # the localCheckpoint registers its OWN persisted RDD, which
-    # unpersisting `pinned` does not release — the caller tracks the
-    # RDD ids (DynamicVamana.ckpt_cell) and frees them when a newer
-    # cut supersedes them
-    return pinned, ckpt_ids
-
-
-def _pin_pair(
-    graph_df: DataFrame, layout_df: DataFrame, checkpoint: bool,
-    n_keys: int | None = None,
-) -> tuple[tuple, tuple]:
-    """Materialize a mutation's graph AND layout pins CONCURRENTLY —
-    the two persist+count jobs are independent, and Spark's scheduler
-    happily back-fills one job's straggler tail with the other's tasks
-    (r12 optimization round, guide §2.6 "overlap independent jobs");
-    sequential pins paid two full job latencies per mutation. The
-    lineage-cut path stays correct under concurrency: _local_ckpt is
-    lock-guarded, so the two eager checkpoint cuts serialize while the
-    (dominant) shuffle+persist+count work overlaps."""
+    The graph and layout are pinned hash-partitioned on shard_id — the
+    Spark analog of the reference's in-place ``graph_.replace_node``:
+    without it every downstream search re-runs the shard rebuild, and
+    the InMemoryRelation carries hashpartitioning(shard_id), so searches
+    cogroup off it exchange-free. Every ``_CKPT_EVERY``-th generation an
+    eager localCheckpoint first cuts the lineage: each mutation embeds
+    the previous graph's plan at least twice, so an uncut chain doubles
+    the logical plan per mutation (measured blowing past Catalyst's
+    plan-string cap ~15 batches into a maintenance loop). The cut alone
+    is not enough — a LogicalRDD reports unknown partitioning, so every
+    post-mutation search would re-shuffle it — hence checkpoint THEN
+    re-partition and persist. The two pin jobs are independent and run
+    concurrently (the scheduler back-fills one job's straggler tail
+    with the other's tasks). ``validate`` runs once both are pinned; if
+    it or a pin job raises, the new pins are released and ``dyn`` keeps
+    its owners. On a real cluster executor loss invalidates local
+    checkpoints, so a maintenance service should save the index to
+    storage periodically instead of chaining forever."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(_pin_by_shard, df, checkpoint, n_keys)
-            for df in (graph_df, layout_df)
-        ]
-    # both jobs have finished: if one failed, release the other's pin
-    errs = [f.exception() for f in futs]
-    if any(errs):
-        _drop_pins(
-            graph_df.sparkSession,
-            [f.result() for f, e in zip(futs, errs) if e is None],
+    from scalablevectorsearch_spark.operators.vamana import _by_shard
+
+    idx = dyn.index
+    ckpt = dyn.gens_since_ckpt + 1 >= _CKPT_EVERY
+    with Pins() as pins, Pins() as cut:
+
+        def pin(df):
+            if ckpt:
+                df = cut.checkpoint(df)
+            pinned = pins.persist(_by_shard(df, n_keys=idx.n_shards))
+            pinned.count()
+            return pinned
+
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [pool.submit(pin, df) for df in (graph_df, layout_df)]
+        graph, layout = [f.result() for f in futs]
+        if validate is not None:
+            validate()
+        # fresh cal_cache: the cached groundtruth / pool / base counts
+        # were computed against the PRE-mutation base
+        nxt = dyn._moved(
+            index=replace(idx, base=base, graph=graph, layout=layout, cal_cache={}),
+            gens_since_ckpt=0 if ckpt else dyn.gens_since_ckpt + 1,
+            **tombstones,
         )
-        raise next(e for e in errs if e)
-    return futs[0].result(), futs[1].result()
-
-
-def _drop_pins(spark, pins) -> None:
-    """Release (pinned frame, checkpoint RDD ids) pairs that a failed
-    mutation built — it never returns a handle that could own them."""
-    for pinned, ckpt_ids in pins:
-        pinned.unpersist(blocking=False)
-        _release_ckpt_rdds(spark, tuple(ckpt_ids))
-
-
-def _persistent_rdd_ids(spark) -> set:
-    jsc = spark.sparkContext._jsc.sc()
-    out, it = set(), jsc.getPersistentRDDs().iterator()
-    while it.hasNext():
-        out.add(int(it.next()._1()))
-    return out
-
-
-#: guards the before/after FALLBACK diff in _local_ckpt — without it a
-#: concurrent persist from another driver thread (parallel tests on one
-#: session, streaming jobs) would land in the diff and later be
-#: force-unpersisted, silently destroying an unrelated cache
-_ckpt_lock = threading.Lock()
-
-
-def _local_ckpt(df: DataFrame):
-    """localCheckpoint(eager) + the ids of the RDD blocks it pinned.
-
-    A checkpoint's persist happens at the RDD level — invisible to
-    DataFrame.unpersist (which goes through the CacheManager and is a
-    no-op on a LogicalRDD-backed frame) — so without tracking, every
-    lineage cut leaks one fully-materialized block set (measured:
-    +2 persistent RDDs per cut, each a whole graph/layout copy).
-
-    r12 (ADVICE r11): the ids are derived from the checkpointed frame
-    ITSELF — ``Dataset.localCheckpoint`` persists exactly the internal
-    RDD its returned LogicalRDD plan wraps, so reading that plan's
-    ``rdd.id`` attributes the pin precisely even when another driver
-    thread persists concurrently. The pre-r12 global before/after diff
-    of getPersistentRDDs remains as a lock-guarded fallback for plan
-    shapes where the accessor is unavailable."""
-    spark = df.sparkSession
-    with _ckpt_lock:
-        before = _persistent_rdd_ids(spark)
-        ck = df.localCheckpoint(eager=True)
-        try:
-            rid = int(ck._jdf.queryExecution().analyzed().rdd().id())
-            if rid in _persistent_rdd_ids(spark):
-                return ck, (rid,)
-        except Exception:
-            pass
-        return ck, tuple(sorted(_persistent_rdd_ids(spark) - before))
-
-
-def _release_ckpt_rdds(spark, rdd_ids: tuple) -> None:
-    """Unpersist checkpoint RDDs by id. Destroys the checkpoint's data
-    — only called when a NEWER lineage cut exists (nothing live
-    recomputes through the old one) or when the index retires."""
-    if not rdd_ids:
-        return
-    m = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    for rid in rdd_ids:
-        opt = m.get(int(rid))
-        if opt.isDefined():
-            opt.get().unpersist(False)
+        # retire the superseded generation's pins, and the previous cut
+        # when this generation cut a newer one
+        nxt.pins.release()
+        nxt.pins = pins.move()
+        if ckpt:
+            nxt.cut.release()
+            nxt.cut = cut.move()
+        return nxt
 
 
 def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
@@ -554,10 +424,9 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
         # _sharded assignment the build used, so routed searches keep
         # pruning unprobed shards correctly after the mutation. The
         # stamp re-runs per downstream job (3 jobs x a broadcast-sized
-        # batch — negligible) rather than localCheckpoint-ing: a
-        # checkpoint pins an RDD outside the CacheManager that nothing
-        # would ever release (the ckpt_pins lesson), and the stamp is
-        # deterministic, so every job sees the same assignment.
+        # batch — negligible) rather than being checkpointed: the stamp
+        # is deterministic, so every job sees the same assignment, and
+        # no pin outlives the mutation.
         from scalablevectorsearch_spark.operators.vamana import _sharded
 
         new_layout = _sharded(
@@ -711,58 +580,26 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
         .cogroup(_by_shard(gside, n_keys=idx.n_shards).groupBy("shard_id"))
         .applyInPandas(link_fn, GRAPH_SCHEMA)
     )
-    # plan-growth guard: cut lineage only every _CKPT_EVERY-th mutation
-    ckpt = dyn.gens_since_ckpt + 1 >= _CKPT_EVERY
-    # overlap the collision-count read with the pin jobs (§2.6); when
-    # either fails (a collision included) the new pins are released
+    # overlap the collision-count read with the pin jobs (§2.6); a
+    # collision raises after them, and the new pins are released
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=1) as vpool:
         f_dup = None if dup_check_df is None else vpool.submit(dup_check_df.count)
-        pins = _pin_pair(
+
+        def no_collision():
+            n_dup = 0 if f_dup is None else f_dup.result()
+            if n_dup:
+                raise ValueError(f"{n_dup} ids already exist in the index")
+
+        return _next_generation(
+            dyn,
             idx.graph.filter(~F.col("shard_id").isin(touched)).unionByName(linked),
             _without_ids(idx.layout, "__id", revived).unionByName(
                 new_layout.select("shard_id", "__id", "__vec")
             ),
-            checkpoint=ckpt, n_keys=idx.n_shards,
+            base, no_collision, tomb_ids=tomb, tomb_df=tomb_df_after,
         )
-        try:
-            n_dup = 0 if f_dup is None else f_dup.result()
-            if n_dup:
-                raise ValueError(f"{n_dup} ids already exist in the index")
-        except BaseException:
-            _drop_pins(new_rows.sparkSession, pins)
-            raise
-    (graph, g_ckpt), (layout, l_ckpt) = pins
-    # the new generation is materialized — release the superseded
-    # generation's persisted blocks (the CacheManager never reclaims
-    # them on its own; recompute of this generation, if ever evicted,
-    # goes back through lineage to the last checkpoint). When this
-    # mutation cut a NEW checkpoint, the previous cut is no longer on
-    # any live lineage — release it too; otherwise inherit it (this
-    # generation still recomputes through it).
-    dyn._release_pins()
-    if ckpt:
-        dyn.ckpt_cell.release(dyn.spark)
-        cell, gen = _CkptCell(rdd_ids=tuple(g_ckpt) + tuple(l_ckpt)), 0
-    else:
-        # same cut, new owner: a close() on the superseded handle must
-        # not destroy the checkpoint this generation recomputes through
-        cell = dyn.ckpt_cell
-        gen = cell.transfer()
-    # fresh cal_cache: the cached groundtruth / pool / base counts were
-    # computed against the PRE-mutation base — sharing the dict across
-    # replace() would hand the auto-fallback and calibration stale
-    # counts after the base changes
-    return DynamicVamana(
-        index=replace(idx, base=base, graph=graph, layout=layout, cal_cache={}),
-        tomb_ids=tomb,
-        tomb_df=tomb_df_after,
-        pins=(graph, layout),
-        ckpt_cell=cell,
-        ckpt_gen=gen,
-        gens_since_ckpt=0 if ckpt else dyn.gens_since_ckpt + 1,
-    )
 
 
 def delete_entries(
@@ -827,12 +664,7 @@ def delete_entries(
                 raise ValueError(
                     f"{len(id_list) - present} ids are unknown or already deleted"
                 )
-            return DynamicVamana(
-                index=idx, tomb_ids=tuple(sorted(set(dyn.tomb_ids) | set(id_list))),
-                pins=dyn.pins, ckpt_cell=dyn.ckpt_cell,
-                ckpt_gen=dyn.ckpt_cell.transfer(),
-                gens_since_ckpt=dyn.gens_since_ckpt,
-            )
+            return dyn._moved(tomb_ids=tuple(sorted(set(dyn.tomb_ids) | set(id_list))))
         # large-wave path: all joins, zero driver materialization. The
         # existence check shuffles only the id column of the (pruned)
         # base scan — unavoidable when the wave exceeds broadcast size.
@@ -847,18 +679,11 @@ def delete_entries(
     finally:
         if pool is not None:
             pool.shutdown(wait=True)
-    # localCheckpoint, not cache: tombstone waves chain (each wave
-    # unions the previous set), so a cache-only chain both grows the
-    # plan per wave and leaks every prior wave's cached union; the
-    # eager cut materializes a leaf and lets prior waves' blocks be
-    # reclaimed when their Python refs drop
-    new_tomb = tomb.unionByName(ids).localCheckpoint(eager=True)
-    return DynamicVamana(
-        index=idx, tomb_ids=(), tomb_df=new_tomb,
-        pins=dyn.pins, ckpt_cell=dyn.ckpt_cell,
-        ckpt_gen=dyn.ckpt_cell.transfer(),
-        gens_since_ckpt=dyn.gens_since_ckpt,
-    )
+    # a checkpoint, not a cache: tombstone waves chain (each wave unions
+    # the previous set), so an uncut chain grows the plan per wave; the
+    # eager cut materializes a leaf, owned by ``tombs`` until close()
+    new_tomb = dyn.tombs.checkpoint(tomb.unionByName(ids))
+    return dyn._moved(tomb_ids=(), tomb_df=new_tomb)
 
 
 def dynamic_search(
@@ -991,35 +816,16 @@ def consolidate(dyn: DynamicVamana) -> DynamicVamana:
         .cogroup(_by_shard(gside, n_keys=idx.n_shards).groupBy("shard_id"))
         .applyInPandas(repair_fn, GRAPH_SCHEMA)
     )
-    ckpt = dyn.gens_since_ckpt + 1 >= _CKPT_EVERY
     if large:
         new_layout = idx.layout.join(
             dyn.tomb_df.withColumnRenamed("id", "__id"), "__id", "left_anti"
         )
     else:
         new_layout = _without_ids(idx.layout, "__id", dyn.tomb_ids)
-    (graph, g_ckpt), (layout, l_ckpt) = _pin_pair(
+    return _next_generation(
+        dyn,
         idx.graph.filter(~F.col("shard_id").isin(touched)).unionByName(repaired),
-        new_layout,
-        checkpoint=ckpt,
-        n_keys=idx.n_shards,
-    )
-    # release the superseded generation's pins; a new lineage cut also
-    # retires the previous cut (see add_points)
-    dyn._release_pins()
-    if ckpt:
-        dyn.ckpt_cell.release(dyn.spark)
-        cell, gen = _CkptCell(rdd_ids=tuple(g_ckpt) + tuple(l_ckpt)), 0
-    else:
-        cell = dyn.ckpt_cell
-        gen = cell.transfer()
-    # fresh cal_cache (see add_points): cached counts/groundtruth
-    # belong to the pre-consolidate base
-    return DynamicVamana(
-        index=replace(idx, base=base, graph=graph, layout=layout, cal_cache={}),
-        tomb_ids=(),
-        pins=(graph, layout), ckpt_cell=cell, ckpt_gen=gen,
-        gens_since_ckpt=0 if ckpt else dyn.gens_since_ckpt + 1,
+        new_layout, base, tomb_ids=(), tomb_df=None,
     )
 
 

@@ -50,6 +50,7 @@ from scalablevectorsearch_spark.operators.vamana_local import (
     build_graph,
     search_graph,
 )
+from scalablevectorsearch_spark.pins import Pins
 
 GRAPH_SCHEMA = "shard_id int, src long, neighbors array<long>, is_entry boolean"
 
@@ -773,9 +774,12 @@ def vamana_search(
         # one persisted filtered scan shared by every fit and validation
         # eval — without it each step re-stamps the full base, the same
         # sharing the block loop below does
+        pins = Pins()
         scan = None
         if where is not None:
-            scan = _filtered_scan(index, where).persist(StorageLevel.MEMORY_AND_DISK)
+            scan = pins.persist(
+                _filtered_scan(index, where), StorageLevel.MEMORY_AND_DISK
+            )
 
         def search_at(b, q, _qids):
             return vamana_search(
@@ -806,7 +810,7 @@ def vamana_search(
                 qvec_col=qvec_col, round_to=4, decode=index.vec_decode,
             )
 
-        try:
+        with pins:
             budget = fit_probe_budget(
                 queries, k, target_recall, search_at, gt_scan,
                 cache=index.cal_cache,
@@ -822,9 +826,6 @@ def vamana_search(
                 calibration_budget_hint=calibration_budget_hint,
                 calibration_stats=calibration_stats,
             )
-        finally:
-            if scan is not None:
-                scan.unpersist()
         return vamana_search(
             index, queries, k, search_window_size=sws, qid_col=qid_col,
             qvec_col=qvec_col, round_to=round_to, exclude_ids=exclude_ids,
@@ -869,21 +870,22 @@ def vamana_search(
         blocks = query_blocks(queries, qid_col, qvec_col, max_query_block)
 
     filtered_scan = scan_override
-    own_scan = False
-    if filtered_scan is None and where is not None and max_query_block is not None:
-        # the filtered scan re-stamps the base (the metadata-free
-        # persisted layout is bypassed, see _vamana_search_block);
-        # under query-block iteration each block's job would otherwise
-        # re-run that full stamp pass — build it ONCE, persist for the
-        # duration of the block loop, release at the end
-        from pyspark.storagelevel import StorageLevel
-
-        filtered_scan = _filtered_scan(index, where).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        own_scan = True
     parts: list[DataFrame] = []
-    try:
+    # a caller's override is the caller's to release; blocks are
+    # materialized eagerly under max_query_block, so nothing downstream
+    # re-reads an own scan released at the end of the loop
+    with Pins() as pins:
+        if filtered_scan is None and where is not None and max_query_block is not None:
+            # the filtered scan re-stamps the base (the metadata-free
+            # persisted layout is bypassed, see _vamana_search_block);
+            # under query-block iteration each block's job would otherwise
+            # re-run that full stamp pass — build it ONCE, persist for the
+            # duration of the block loop
+            from pyspark.storagelevel import StorageLevel
+
+            filtered_scan = pins.persist(
+                _filtered_scan(index, where), StorageLevel.MEMORY_AND_DISK
+            )
         for qp in blocks:
             if len(qp) == 0:
                 continue
@@ -901,12 +903,6 @@ def vamana_search(
             parts.append(part)
         if not parts:
             raise ValueError("empty query batch")
-    finally:
-        # release even when the loop raises (a caller-owned override is
-        # the caller's to release); blocks are materialized eagerly
-        # under max_query_block, so nothing downstream re-reads it
-        if own_scan:
-            filtered_scan.unpersist()
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

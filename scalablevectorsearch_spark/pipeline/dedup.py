@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scalablevectorsearch_spark.pins import Pins
+
 MERSENNE = 2147483647  # 2^31 - 1, modulus for the permutation family
 
 #: md5-derived 60-bit hash of a string expression (dialect: Spark SQL)
@@ -825,65 +827,69 @@ def dedup_components(
     e = pairs.select(
         F.col(id_a).cast("long").alias("s"), F.col(id_b).cast("long").alias("d")
     )
-    edges = (
-        e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-        .distinct()
-        .cache()
-    )
-    labels = (
-        edges.select(F.col("s").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .cache()
-    )
-    labels.count()
-    converged = False
-    for _ in range(max_iter):
-        prop = edges.join(
-            labels.withColumnRenamed("node", "d"), "d"
-        ).select(F.col("s").alias("node"), "label")
-        # localCheckpoint TRUNCATES lineage: the self-join below reads
-        # mins twice, so without the cut each round's logical plan
-        # would embed two copies of the previous round's plan —
-        # exponential plan growth that stalls Catalyst analysis long
-        # before any data is touched
-        mins = (
-            labels.unionByName(prop)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
+    # ``pins`` owns the edge table; ``cur`` the current round's labels
+    with Pins() as pins, Pins() as cur:
+        edges = pins.persist(
+            e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
+            .distinct()
         )
-        # pointer jump: follow one hop of the label chain (labels are
-        # node ids, so label(label) exists whenever the label node
-        # carries a smaller name already) — halves chain depth/round
-        new = (
-            mins.alias("a")
-            .join(
-                mins.select(
-                    F.col("node").alias("label"), F.col("label").alias("label2")
-                ).alias("b"),
-                "label",
-                "left",
+        labels = cur.persist(
+            edges.select(F.col("s").alias("node")).distinct()
+            .withColumn("label", F.col("node"))
+        )
+        labels.count()
+        for _ in range(max_iter):
+            # the previous round's labels and this round's mins are
+            # released when the round ends
+            with cur.move() as prev:
+                prop = edges.join(
+                    labels.withColumnRenamed("node", "d"), "d"
+                ).select(F.col("s").alias("node"), "label")
+                # the checkpoint TRUNCATES lineage: the self-join below
+                # reads mins twice, so without the cut each round's
+                # logical plan would embed two copies of the previous
+                # round's plan — exponential plan growth that stalls
+                # Catalyst analysis long before any data is touched
+                mins = prev.checkpoint(
+                    labels.unionByName(prop)
+                    .groupBy("node")
+                    .agg(F.min("label").alias("label"))
+                )
+                # pointer jump: follow one hop of the label chain (labels
+                # are node ids, so label(label) exists whenever the label
+                # node carries a smaller name already) — halves chain
+                # depth/round
+                new = cur.checkpoint(
+                    mins.alias("a")
+                    .join(
+                        mins.select(
+                            F.col("node").alias("label"), F.col("label").alias("label2")
+                        ).alias("b"),
+                        "label",
+                        "left",
+                    )
+                    .select(
+                        "node",
+                        F.least("label", F.coalesce("label2", "label")).alias("label"),
+                    )
+                )
+                changed = (
+                    new.alias("n")
+                    .join(labels.alias("o"), "node")
+                    .filter(F.col("n.label") < F.col("o.label"))
+                    .limit(1)
+                    .count()
+                )
+            labels = new
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"dedup_components did not converge in {max_iter} rounds — "
+                "raise max_iter (component diameter exceeds 2^rounds)"
             )
-            .select("node", F.least("label", F.coalesce("label2", "label")).alias("label"))
-            .localCheckpoint()
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") < F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"dedup_components did not converge in {max_iter} rounds — "
-            "raise max_iter (component diameter exceeds 2^rounds)"
-        )
+        # the result reads the last round's checkpoint: the caller's now
+        cur.move()
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("canonical_id")
     )

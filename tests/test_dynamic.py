@@ -106,6 +106,217 @@ def test_failed_duplicate_count_releases_new_pins(spark, base, monkeypatch):
     d1.close()
 
 
+# ---------------------------------------------- ownership of persisted state
+
+
+def test_mutation_loop_pin_count_stays_flat(spark, embeddings):
+    """VERDICT r10 task 7: each mutation must release its predecessor's
+    persisted graph/layout blocks — the CacheManager's registered-plan
+    count may not grow with the mutation chain (the r9 storage leak,
+    fixed in r10 by add_points/consolidate calling close() on their
+    input; this test pins the invariant so a refactor can't silently
+    reintroduce it). Loop length >= 2 * _CKPT_EVERY so both the
+    checkpointed and non-checkpointed mutation variants are covered."""
+    from scalablevectorsearch_spark.operators.dynamic import (
+        _CKPT_EVERY,
+        add_points,
+        consolidate,
+        delete_entries,
+        dynamic_vamana,
+    )
+    from scalablevectorsearch_spark.operators.vamana import (
+        VamanaParams,
+        vamana_build,
+    )
+
+    base = embeddings.selectExpr("vec_id as id", "embedding as vector")
+    idx = vamana_build(
+        base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2
+    )
+    dyn = dynamic_vamana(idx)
+
+    def n_pinned() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    baseline = None
+    peak = 0
+    for i in range(2 * _CKPT_EVERY + 1):
+        lo = 90000 + i * 10
+        added = base.filter(F.col("id") < 10).select(
+            (F.col("id") + lo).alias("id"), "vector"
+        )
+        dyn = add_points(dyn, added)
+        dyn = delete_entries(
+            dyn, spark.range(lo, lo + 10).select(F.col("id").cast("long"))
+        )
+        if i % 3 == 2:
+            dyn = consolidate(dyn)
+        if baseline is None:
+            # warm-up: the first mutation materializes the STATIC
+            # index's lazily-persisted layout (owned by the wrapped
+            # index, not the mutation chain) — baseline after it
+            baseline = n_pinned()
+        peak = max(peak, n_pinned() - baseline)
+    # steady state above the warm-up baseline: the current generation's
+    # graph+layout pins plus the last lineage cut's checkpoint pair —
+    # the count must NOT grow with chain length (the r9 leak grew +2
+    # per mutation; the untracked-checkpoint leak grew +2 per cut)
+    assert peak <= 2, f"pin count grew with the mutation chain: peak +{peak}"
+    n_before_close = n_pinned()
+    dyn.close()
+    # close() releases the final generation's pins AND its checkpoint
+    assert n_pinned() <= n_before_close - 2
+
+
+def _persisted_ids(spark):
+    jsc = spark.sparkContext._jsc.sc()
+    out, it = set(), jsc.getPersistentRDDs().iterator()
+    while it.hasNext():
+        out.add(int(it.next()._1()))
+    return out
+
+
+def test_stale_handle_close_keeps_live_checkpoint(spark, embeddings):
+    """ADVICE r11 (medium): `d2 = delete_entries(d); d.close()` must NOT
+    destroy the localCheckpoint the live generation's lineage recomputes
+    through — each mutation moves the checkpoint's owner (``cut``) into
+    the handle it returns, so only the latest owner's close() releases
+    the RDDs."""
+    from pyspark.sql import functions as F
+
+    from scalablevectorsearch_spark.operators.dynamic import (
+        _CKPT_EVERY,
+        add_points,
+        delete_entries,
+        dynamic_vamana,
+    )
+    from scalablevectorsearch_spark.operators.vamana import (
+        VamanaParams,
+        vamana_build,
+    )
+
+    base = embeddings.selectExpr("vec_id as id", "embedding as vector")
+    idx = vamana_build(
+        base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2
+    )
+    dyn = dynamic_vamana(idx)
+    # enough mutations to land one lineage cut
+    for i in range(_CKPT_EVERY):
+        added = base.filter(F.col("id") < 5).select(
+            (F.col("id") + 90000 + i * 10).alias("id"), "vector"
+        )
+        dyn = add_points(dyn, added)
+    assert dyn.cut.rdd_ids, "expected a lineage cut after _CKPT_EVERY"
+    ck_ids = set(dyn.cut.rdd_ids)
+    assert ck_ids <= _persisted_ids(spark)
+
+    stale = dyn
+    live = delete_entries(
+        stale, spark.range(90000, 90005).select(F.col("id").cast("long"))
+    )
+    stale.close()  # must be a checkpoint no-op: ownership moved to `live`
+    assert ck_ids <= _persisted_ids(spark), (
+        "stale close() destroyed the live generation's checkpoint"
+    )
+    live.close()  # the owner destroys
+    assert not (ck_ids & _persisted_ids(spark))
+
+
+def test_local_ckpt_attributes_only_its_own_rdd(spark, embeddings):
+    """ADVICE r11 (low): the pinned ids come from the checkpointed frame
+    itself (single precise id), not a global persistent-RDD set diff
+    that could swallow a concurrently persisted unrelated frame."""
+    from scalablevectorsearch_spark.pins import Pins
+
+    unrelated = embeddings.limit(10).persist()
+    unrelated.count()
+    unrelated_ids = _persisted_ids(spark)
+
+    pins = Pins()
+    pins.checkpoint(embeddings.limit(5))
+    ids = tuple(pins.rdd_ids)
+    assert len(ids) == 1, f"expected precise single-RDD attribution, got {ids}"
+    assert set(ids) <= _persisted_ids(spark)
+    assert not (set(ids) & unrelated_ids)
+    pins.release()
+    # the unrelated persist must survive the release
+    assert unrelated.count() == 10
+    unrelated.unpersist()
+
+
+def test_pins_concurrent_persist_loses_no_frame():
+    """A mutation's two pin jobs record into the same scope from two
+    threads; no recorded frame may be lost."""
+    import sys
+    import threading
+
+    from scalablevectorsearch_spark.pins import Pins
+
+    class _Frame:
+        is_cached = False
+
+        def persist(self, level):
+            return self
+
+    pins, n_threads, per_thread = Pins(), 16, 500
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        workers = [
+            threading.Thread(
+                target=lambda: [pins.persist(_Frame()) for _ in range(per_thread)]
+            )
+            for _ in range(n_threads)
+        ]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=60)
+        assert not any(w.is_alive() for w in workers)
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(pins.move().frames) == n_threads * per_thread
+
+def test_stale_close_after_delete_keeps_live_pins(spark, base):
+    """A delete moves the handle's owners into the handle it returns:
+    closing the consumed handle must not unpersist the graph and layout
+    the live handle still searches."""
+    from pyspark.storagelevel import StorageLevel
+
+    idx = vamana_build(base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2)
+    stale = add_points(
+        dynamic_vamana(idx),
+        base.filter(F.col("id") < 3).select((F.col("id") + 60000).alias("id"), "vector"),
+    )
+    live = delete_entries(stale, spark.range(60000, 60002))
+    stale.close()
+    assert live.index.graph.storageLevel != StorageLevel.NONE
+    assert live.index.layout.storageLevel != StorageLevel.NONE
+    live.close()
+
+
+def test_large_wave_tombstones_released_on_close(spark, base):
+    """The large-wave tombstone checkpoint is owned by the handle chain:
+    delete wave, consolidate, close() returns the persisted-RDD count
+    to its pre-delete baseline."""
+    sub = base.filter(F.col("id") < 300)
+    idx = vamana_build(sub, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2)
+    # the static index's own pins, outside the mutation chain
+    idx.graph.count()
+    idx.layout.count()
+
+    def n_pinned():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    baseline = n_pinned()
+    wave = sub.filter((F.col("id") % 7 == 0) & (F.col("id") >= 50)).select("id")
+    d = delete_entries(dynamic_vamana(idx), wave, max_driver_ids=10)
+    assert d.tomb_df is not None
+    d = consolidate(d)
+    d.close()
+    assert n_pinned() == baseline
+
+
 def test_dynamic_cycle_recall(base, queries, dyn):
     """B6: add 1% + delete 1% + consolidate; recall vs exact flat over
     the mutated base stays high."""

@@ -371,6 +371,27 @@ def test_dedup_components_raises_on_nonconvergence(spark):
         dedup_components(pairs, max_iter=1)
 
 
+def test_dedup_components_releases_round_state(spark):
+    """dedup_components owns its edge cache and per-round checkpoints:
+    once the result is collected only the result's own checkpoint is
+    still persisted, and a failed call releases everything."""
+    from scalablevectorsearch_spark.pipeline.dedup import dedup_components
+
+    def n_pinned():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
+    )
+    before = n_pinned()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup_components(pairs, max_iter=1)
+    assert n_pinned() == before
+    got = dedup_components(pairs).collect()
+    assert {r["canonical_id"] for r in got} == {0}
+    assert n_pinned() == before + 1
+
+
 def test_normalize_text_strips_boilerplate(spark):
     from scalablevectorsearch_spark.pipeline.dedup import dedup_exact  # noqa: F401
     from scalablevectorsearch_spark.pipeline.text import normalize_text

@@ -30,12 +30,18 @@ recomputed; the published-curve parity evidence therefore remains the
 bit-reproducible example_vamana fixture (tests/test_golden_curve.py).
 """
 
+import os
+
 import numpy as np
 import pytest
 
 from scalablevectorsearch_spark.sources.vecs import SVS_MAGIC, read_svs, read_vecs
 
 REF = "/root/reference/data/test_dataset"
+
+pytestmark = pytest.mark.skipif(
+    not os.path.isdir(REF), reason=f"reference fixture directory {REF} is absent"
+)
 
 #: tests/utils/test_dataset.cpp:46-55 (reference_file_contents) verbatim
 KNOWN = np.array(

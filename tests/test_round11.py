@@ -283,68 +283,6 @@ def test_dynamic_ivf_mutations_get_fresh_cal_cache(spark, embeddings):
     assert d2.index.cal_cache is not dyn.index.cal_cache
 
 
-# ------------------------------------------------------ pin-count bound
-
-
-def test_mutation_loop_pin_count_stays_flat(spark, embeddings):
-    """VERDICT r10 task 7: each mutation must release its predecessor's
-    persisted graph/layout blocks — the CacheManager's registered-plan
-    count may not grow with the mutation chain (the r9 storage leak,
-    fixed in r10 by add_points/consolidate calling close() on their
-    input; this test pins the invariant so a refactor can't silently
-    reintroduce it). Loop length >= 2 * _CKPT_EVERY so both the
-    checkpointed and non-checkpointed mutation variants are covered."""
-    from scalablevectorsearch_spark.operators.dynamic import (
-        _CKPT_EVERY,
-        add_points,
-        consolidate,
-        delete_entries,
-        dynamic_vamana,
-    )
-    from scalablevectorsearch_spark.operators.vamana import (
-        VamanaParams,
-        vamana_build,
-    )
-
-    base = embeddings.selectExpr("vec_id as id", "embedding as vector")
-    idx = vamana_build(
-        base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2
-    )
-    dyn = dynamic_vamana(idx)
-
-    def n_pinned() -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-    baseline = None
-    peak = 0
-    for i in range(2 * _CKPT_EVERY + 1):
-        lo = 90000 + i * 10
-        added = base.filter(F.col("id") < 10).select(
-            (F.col("id") + lo).alias("id"), "vector"
-        )
-        dyn = add_points(dyn, added)
-        dyn = delete_entries(
-            dyn, spark.range(lo, lo + 10).select(F.col("id").cast("long"))
-        )
-        if i % 3 == 2:
-            dyn = consolidate(dyn)
-        if baseline is None:
-            # warm-up: the first mutation materializes the STATIC
-            # index's lazily-persisted layout (owned by the wrapped
-            # index, not the mutation chain) — baseline after it
-            baseline = n_pinned()
-        peak = max(peak, n_pinned() - baseline)
-    # steady state above the warm-up baseline: the current generation's
-    # graph+layout pins plus the last lineage cut's checkpoint pair —
-    # the count must NOT grow with chain length (the r9 leak grew +2
-    # per mutation; the untracked-checkpoint leak grew +2 per cut)
-    assert peak <= 2, f"pin count grew with the mutation chain: peak +{peak}"
-    n_before_close = n_pinned()
-    dyn.close()
-    # close() releases the final generation's pins AND its checkpoint
-    assert n_pinned() <= n_before_close - 2
-
-
 # ------------------------------------------------------ precomputed save
 
 

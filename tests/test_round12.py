@@ -141,85 +141,6 @@ def test_fractional_pass2_matches_full_two_pass():
     assert r_frac >= r_full - 0.03, (r_frac, r_full)
 
 
-# --------------------------------------------- ADVICE r11: ckpt ownership
-
-
-def _persisted_ids(spark):
-    jsc = spark.sparkContext._jsc.sc()
-    out, it = set(), jsc.getPersistentRDDs().iterator()
-    while it.hasNext():
-        out.add(int(it.next()._1()))
-    return out
-
-
-def test_stale_handle_close_keeps_live_checkpoint(spark, embeddings):
-    """ADVICE r11 (medium): `d2 = delete_entries(d); d.close()` must NOT
-    destroy the localCheckpoint the live generation's lineage recomputes
-    through — checkpoint destruction is generation-guarded, so only the
-    latest owner's close() releases the RDDs."""
-    from pyspark.sql import functions as F
-
-    from scalablevectorsearch_spark.operators.dynamic import (
-        _CKPT_EVERY,
-        add_points,
-        delete_entries,
-        dynamic_vamana,
-    )
-    from scalablevectorsearch_spark.operators.vamana import (
-        VamanaParams,
-        vamana_build,
-    )
-
-    base = embeddings.selectExpr("vec_id as id", "embedding as vector")
-    idx = vamana_build(
-        base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2
-    )
-    dyn = dynamic_vamana(idx)
-    # enough mutations to land one lineage cut
-    for i in range(_CKPT_EVERY):
-        added = base.filter(F.col("id") < 5).select(
-            (F.col("id") + 90000 + i * 10).alias("id"), "vector"
-        )
-        dyn = add_points(dyn, added)
-    assert dyn.ckpt_cell.rdd_ids, "expected a lineage cut after _CKPT_EVERY"
-    ck_ids = set(dyn.ckpt_cell.rdd_ids)
-    assert ck_ids <= _persisted_ids(spark)
-
-    stale = dyn
-    live = delete_entries(
-        stale, spark.range(90000, 90005).select(F.col("id").cast("long"))
-    )
-    stale.close()  # must be a checkpoint no-op: ownership moved to `live`
-    assert ck_ids <= _persisted_ids(spark), (
-        "stale close() destroyed the live generation's checkpoint"
-    )
-    live.close()  # the owner destroys
-    assert not (ck_ids & _persisted_ids(spark))
-
-
-def test_local_ckpt_attributes_only_its_own_rdd(spark, embeddings):
-    """ADVICE r11 (low): the pinned ids come from the checkpointed frame
-    itself (single precise id), not a global persistent-RDD set diff
-    that could swallow a concurrently persisted unrelated frame."""
-    from scalablevectorsearch_spark.operators.dynamic import (
-        _local_ckpt,
-        _release_ckpt_rdds,
-    )
-
-    unrelated = embeddings.limit(10).persist()
-    unrelated.count()
-    unrelated_ids = _persisted_ids(spark)
-
-    ck, ids = _local_ckpt(embeddings.limit(5))
-    assert len(ids) == 1, f"expected precise single-RDD attribution, got {ids}"
-    assert set(ids) <= _persisted_ids(spark)
-    assert not (set(ids) & unrelated_ids)
-    _release_ckpt_rdds(spark, ids)
-    # the unrelated persist must survive the release
-    assert unrelated.count() == 10
-    unrelated.unpersist()
-
-
 # ------------------------------------- ADVICE r11: precomputed schema check
 
 
