@@ -163,9 +163,12 @@ class VamanaSearchParameters:
 
 
 def _spark() -> SparkSession:
+    """The caller's live session, as is: re-running ``get_spark()`` on
+    it would re-apply the engine defaults (shuffle partitions
+    included) over the caller's settings."""
     from scalablevectorsearch_spark.session import get_spark
 
-    return get_spark()
+    return SparkSession.getActiveSession() or get_spark()
 
 
 class VectorDataLoader:

@@ -144,9 +144,10 @@ def _spark_hash(x: int, is_long: bool, seed: int = 42) -> int:
 
 
 def _collision_free_partitions(n_keys: int, sp: int, is_long: bool) -> int:
-    """Smallest N in [sp, 4*sp] for which hashpartitioning maps the
-    dense shard-id range 0..n_keys-1 injectively (pmod(murmur3(id), N)
-    all distinct); falls back to sp when none exists or n_keys > sp.
+    """Smallest N in [lo, 4*lo], lo = max(sp, n_keys), for which
+    hashpartitioning maps the dense shard-id range 0..n_keys-1
+    injectively (pmod(murmur3(id), N) all distinct); falls back to sp
+    when none exists or n_keys > 4*sp.
 
     Why (r12 optimization round, guide §2.5 skew): with K shard groups
     hashed into sp partitions, two groups share a reduce partition with
@@ -154,20 +155,22 @@ def _collision_free_partitions(n_keys: int, sp: int, is_long: bool) -> int:
     per-shard kernels then run SEQUENTIALLY in one task, doubling the
     stage wall. The shard ids are dense ints, so a driver-side scan of
     the exact hash function finds a nearby N with zero collisions (e.g.
-    33 for K=8). Identical results either way — only task placement
-    changes."""
-    if n_keys > sp:
+    33 for K=8). With more shards than sp (K=8 at sp=4 gave 4/3/1/0
+    shards per partition) the scan starts at K: one shard per task, the
+    tasks queue for cores instead of one task running four builds in
+    sequence (N=22 for K=8). Identical results either way — only task
+    placement changes."""
+    if n_keys > 4 * sp:
         return sp
-    for n in range(sp, 4 * sp + 1):
+    hashes = [_spark_hash(i, is_long) for i in range(n_keys)]
+    lo = max(sp, n_keys)
+    for n in range(lo, 4 * lo + 1):
         bins: set[int] = set()
-        ok = True
-        for i in range(n_keys):
-            b = _spark_hash(i, is_long) % n
-            if b in bins:
-                ok = False
+        for h in hashes:
+            if h % n in bins:
                 break
-            bins.add(b)
-        if ok:
+            bins.add(h % n)
+        else:
             return n
     return sp
 

@@ -5,7 +5,12 @@ Defaults chosen for correctness-vs-oracle and scale-readiness:
  - Arrow on (all heavy kernels are pandas/numpy batched),
  - UTC session timezone (oracle comparisons against DuckDB),
  - shuffle partitions sized to the local core count (the driver's
-   production deployment would size this to cluster cores instead).
+   production deployment would size this to cluster cores instead),
+ - Python workers forked from the engine's worker daemon
+   (``worker_daemon``): on Python < 3.12 each task's
+   ``importlib.invalidate_caches()`` otherwise re-reads every cached
+   zip archive (pyspark.zip, py4j, the spark-core jar), a fixed
+   160-480 ms per Python task that outweighed the 5-15 ms kernels.
 """
 
 from __future__ import annotations
@@ -68,6 +73,21 @@ def get_spark(
         # the input stream's tail segments, which UDS has no analog of.
         # Transport only: bytes, results and plans are unchanged.
         .config("spark.python.unix.domain.socket.enabled", "true")
+        # Per-task Python fixed cost: before every task a worker calls
+        # importlib.invalidate_caches() so addPyFile'd modules import.
+        # On Python < 3.12 that re-reads the whole directory of every
+        # cached zipimporter: 16 importers over pyspark.zip, the py4j
+        # zip and spark-core_2.13-4.1.2.jar, 26,672 entries, 160-480 ms
+        # of a warm trivial mapInPandas task on 4 cores, against 5-15 ms
+        # of kernel time (CPython gh-103200 made it lazy in 3.12). The
+        # engine's daemon re-reads an archive only when its mtime/size
+        # changed, so addPyFile and replaced zips behave as before.
+        # Measured on the traced ann_index perfbench (4 cores, Python
+        # 3.11): search executor_cpu_s 1.33-1.55 -> 0.32-0.52 s per op,
+        # flat.knn wall 0.86 -> 0.59 s; jobs, stages and results
+        # unchanged. The workers import the daemon from the engine
+        # package, which its UDF closures need anyway.
+        .config("spark.python.daemon.module", "scalablevectorsearch_spark.worker_daemon")
         .config("spark.ui.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():

@@ -311,3 +311,16 @@ def test_upgrader_alias(tmp_path, spark, dataset):
     loaded.search_window_size = 40
     I, _ = loaded.search(Q, 10)
     assert svs.k_recall_at(gt, I, 10, 10) >= 0.9
+
+
+def test_facade_keeps_live_session_conf(spark):
+    """The facade reuses the caller's session as is: re-applying the
+    engine defaults reset shuffle.partitions to the core count and
+    broke later tests' layouts."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        assert svs._spark().conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, old)

@@ -57,7 +57,12 @@ def test_collision_free_partitions_injective():
             else:
                 assert n == sp, (k, sp, n)
     assert found_injective >= 12  # the scan succeeds for most shapes
-    # above the partition count the plain cluster-sized count is kept
+    # more shards than partitions: still one shard per partition
+    # (sp=4 hashed 8 shards 4/3/1/0 into its partitions)
+    n = _collision_free_partitions(8, 4, is_long=False)
+    assert n >= 8
+    assert len({_spark_hash(i, is_long=False) % n for i in range(8)}) == 8
+    # no injective count nearby: the plain cluster-sized count is kept
     assert _collision_free_partitions(100, 32, is_long=False) == 32
 
 

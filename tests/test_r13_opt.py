@@ -11,13 +11,6 @@ from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
-def spark():
-    from scalablevectorsearch_spark.session import get_spark
-
-    return get_spark("test-r13-opt")
-
-
-@pytest.fixture(scope="module")
 def docs(spark):
     rows = [
         (0, "the cat sat on the mat and the dog sat too"),
