@@ -42,7 +42,7 @@ def batch_matrix(vec, dtype=np.float64) -> np.ndarray:
     w = len(flat) // n
     lens = pc.list_value_length(vec).to_numpy(zero_copy_only=False)
     if (lens != w).any():
-        raise ValueError("ragged vector column cannot be reshaped")
+        raise ValueError("ragged vector column cannot be reshaped: rows need a uniform width")
     return flat.reshape(n, w).astype(dtype, copy=False)
 
 

@@ -18,7 +18,9 @@ for all of them:
    and the metric the scan or graph runs in.
  - ``finish(cands, queries, k, round_to, rerank_source, ...)``: turns
    scan candidates into results (a distance correction, or one exact
-   re-rank of the ``k_reorder`` candidates).
+   re-rank of the ``k_reorder`` candidates). That re-rank,
+   :func:`_rerank_reconstruction`, is the engine's only one: IVF's
+   ``k_reorder`` runs it too.
  - ``manifest_params()`` / ``from_manifest(p)``: the codec's identity in
    a saved index's manifest.
 
@@ -32,6 +34,10 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from scalablevectorsearch_spark.functions.distances import is_similarity
+from scalablevectorsearch_spark.operators.flat import _kernel_matrix, collect_queries
+from scalablevectorsearch_spark.operators.topk import rank_candidates
 
 
 def dataset_mean(df: DataFrame, vec_col: str, round_decimals: int = 6) -> tuple:
@@ -85,8 +91,6 @@ class Codec:
         batch; ``query_batch`` the same batch already collected."""
         if rerank_source is None:
             return cands
-        from scalablevectorsearch_spark.operators.lvq import _rerank_reconstruction
-
         col, decode = self.rerank_storage(vec_col)
         rows = rerank_source.select(
             F.col(id_col).cast("long").alias("neighbor_id"), col.alias("__bv")
@@ -128,14 +132,141 @@ def _rerank_plan(codec: Codec, k: int, k_reorder: int | None, rerank_source):
     return k_reorder, rerank_source
 
 
-def _collect(q: DataFrame) -> tuple:
-    """Collect a (qid, vector) query frame as (qids int64, Q float64)."""
-    qp = q.select(
-        F.col("qid").cast("long").alias("qid"), F.col("vector").alias("qv")
-    ).toPandas()
-    if len(qp) == 0:
-        return np.empty(0, dtype=np.int64), np.empty((0, 0))
-    return qp["qid"].to_numpy(dtype=np.int64), np.stack(qp["qv"].to_numpy()).astype(np.float64)
+def _fold_distances(
+    Q: np.ndarray, B: np.ndarray, distance: str
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """Row-wise distance of ``Q[i]`` to ``B[i]`` with the EXACT
+    accumulation order of the Catalyst/DuckDB sequential fold
+    (distances.distance_expr: acc = 0.0; acc = acc + f(x_i, y_i) over
+    dims in order): vectorized across ROWS, sequential across DIMS, so
+    every emitted double is bit-identical to the expression fold the
+    oracles replay — the rerank could not be moved off Catalyst
+    otherwise (a GEMM-shaped kernel differs in last-ulp accumulation).
+
+    Returns ``(values, null_mask)``: null_mask is currently always None
+    (kept in the signature so a distance whose SQL semantics demand SQL
+    NULLs can flag rows); cosine maps zero-norm rows to similarity 0.0,
+    the engine-wide pairwise_distances convention — the pre-r13 kernel
+    divided through to inf/nan there, silently changing degenerate
+    top-k order (ADVICE r12)."""
+    n, d = Q.shape
+    if distance == "l2":
+        acc = np.zeros(n, dtype=np.float64)
+        for i in range(d):
+            diff = Q[:, i] - B[:, i]
+            acc = acc + diff * diff
+        return acc, None
+    if distance == "ip":
+        acc = np.zeros(n, dtype=np.float64)
+        for i in range(d):
+            acc = acc + Q[:, i] * B[:, i]
+        return acc, None
+    if distance == "cosine":
+        num = np.zeros(n, dtype=np.float64)
+        qq = np.zeros(n, dtype=np.float64)
+        bb = np.zeros(n, dtype=np.float64)
+        for i in range(d):
+            x, y = Q[:, i], B[:, i]
+            num = num + x * y
+            qq = qq + x * x
+            bb = bb + y * y
+        denom = np.sqrt(qq) * np.sqrt(bb)
+        # zero-norm vectors: similarity 0 — the engine-wide convention
+        # (functions.distances.pairwise_distances; the reference rejects
+        # zero norms upstream). The pre-r13 kernel divided through and
+        # produced inf/nan here, silently perturbing degenerate top-k
+        # order; the Catalyst ANSI fold it replaced would error instead.
+        zero = denom == 0.0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            out = np.where(zero, 0.0, num / denom)
+        return out, None
+    raise ValueError(f"unknown distance {distance!r}")
+
+
+def _rerank_reconstruction(
+    cands: DataFrame,
+    recon: DataFrame,
+    q: DataFrame | None,
+    k: int,
+    distance: str,
+    round_to: int | None,
+    decode=None,
+    query_batch: tuple | None = None,
+) -> DataFrame:
+    """The one exact re-rank (every codec's ``finish`` and IVF's
+    ``k_reorder``, common.h:156): broadcast the (qid, neighbor_id)
+    pairs of ``cands`` against ``recon``'s ``(neighbor_id, __bv)`` rows
+    (the base is scanned once, filtered by the broadcast side — the
+    100 TB shape), recompute each pair's distance in a vectorized Arrow
+    kernel whose fold order is bit-identical to the Catalyst/DuckDB
+    expression fold (:func:`_fold_distances`), and rank the k best per
+    query (``topk.rank_candidates``). The queries are ``query_batch``
+    when the caller already collected them, else the (qid, vector)
+    frame ``q``. Only the built-in distances re-rank: the fold has no
+    custom kernel, and the executors do not share the driver's
+    registry.
+
+    The query batch ships via sc.broadcast like every scan kernel's:
+    a Catalyst zip_with+aggregate fold after a second broadcast join
+    measured 0.88s in ONE task for 50k pairs x 64 dims (r12).
+
+    ``decode``: optional vectorized storage decoder applied to the
+    recon rows ((n, w) storage -> (n, d) vectors, elementwise-identical
+    to the Catalyst reconstruction it replaces) — lets the scan read
+    PACKED codes instead of evaluating the decompress expression chain
+    per joined row."""
+    import pyarrow as pa
+
+    if distance not in ("l2", "ip", "cosine"):
+        raise ValueError(
+            f"k_reorder re-ranks with a built-in distance (l2, ip, cosine), not {distance!r}"
+        )
+    pairs = cands.select("qid", "neighbor_id")
+    joined = recon.join(F.broadcast(pairs), "neighbor_id").select(
+        "qid", "neighbor_id", "__bv"
+    )
+    qids, Q = collect_queries(q) if query_batch is None else query_batch
+    qids, Q = np.asarray(qids, dtype=np.int64), np.asarray(Q, dtype=np.float64)
+    if len(qids) == 0:
+        # an empty batch returns an empty frame, as the old Catalyst
+        # join path did
+        return recon.sparkSession.createDataFrame(
+            [], "qid long, neighbor_id long, distance double, rank long"
+        )
+    sc = recon.sparkSession.sparkContext
+    bc = sc.broadcast((qids, Q))
+    scale = None if round_to is None else float(10**round_to)
+
+    def fn(batches):
+        bqids, bQ = bc.value
+        pos = {int(x): i for i, x in enumerate(bqids)}
+        d_dim = bQ.shape[1]
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            names = rb.schema.names
+            rqid = rb.column(names.index("qid")).to_numpy(zero_copy_only=False)
+            rnid = rb.column(names.index("neighbor_id")).to_numpy(
+                zero_copy_only=False
+            )
+            # a ragged or NULL reconstruction row raises rather than
+            # silently misaligning every following row
+            B = _kernel_matrix(rb.column(names.index("__bv")), rb.num_rows, d_dim, decode)
+            qi = np.asarray([pos[int(x)] for x in rqid], dtype=np.int64)
+            dist, nulls = _fold_distances(bQ[qi], B, distance)
+            if scale is not None:
+                dist = np.floor(dist * scale + 0.5) / scale
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(rqid.astype(np.int64), type=pa.int64()),
+                    pa.array(rnid.astype(np.int64), type=pa.int64()),
+                    pa.array(dist, type=pa.float64(), mask=nulls),
+                ],
+                names=["qid", "neighbor_id", "distance"],
+            )
+
+    exact = joined.mapInArrow(fn, "qid long, neighbor_id long, distance double")
+    return rank_candidates(exact, len(qids), k, is_similarity(distance))
 
 
 def codec_knn(
@@ -164,7 +295,7 @@ def codec_knn(
     full = queries.select(F.col(qid_col).alias("qid"), F.col(qvec_col or vec_col).alias("vector"))
     q = codec.query(full)
     k_cand, source = _rerank_plan(codec, k, k_reorder, rerank_source)
-    batch = _collect(full) if source is not None and q is full else None
+    batch = collect_queries(full) if source is not None and q is full else None
     cands = flat_knn(
         codec.store(base, id_col, vec_col, base_compressed), q, k=k_cand,
         distance=codec.scan_distance, id_col=id_col, vec_col=vec_col, qvec_col="vector",

@@ -21,6 +21,10 @@ Spark plan (scale-first):
    emits only Q x k candidate rows.
  - A final window top-k over Q x k x n_partitions rows merges partials —
    the shuffle moves O(Q·k·P) rows regardless of base size.
+ - IVF and Vamana search take their queries the same way: this module
+   owns the one query intake (:func:`collect_queries`) and the one
+   block loop (:func:`search_blocks`) that feeds each family's block
+   kernel and merges its candidates (``topk.rank_candidates``).
 
 Predicate-filtered search (flat.h:290-295): pass ``where`` — the filter is
 applied to the base scan *before* the kernel, so Catalyst pushes it into
@@ -44,12 +48,13 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from scalablevectorsearch_spark.functions.arrowio import batch_matrix
 from scalablevectorsearch_spark.functions.distances import (
     fix_queries,
     is_similarity,
     resolve_kernel,
 )
-from scalablevectorsearch_spark.operators.topk import merge_partitions, topk_per_group
+from scalablevectorsearch_spark.operators.topk import rank_candidates
 
 RESULT_SCHEMA = "qid long, neighbor_id long, distance double"
 
@@ -103,6 +108,22 @@ def _merge_topk(
     return out_key, out_id
 
 
+def _kernel_matrix(vec, n: int, d: int, decode=None) -> np.ndarray:
+    """The ``(n, d)`` float64 matrix of one Arrow batch's vector column,
+    the decode every scan kernel shares: straight off the flattened
+    values buffer (``arrowio.batch_matrix``, which rejects NULL and
+    ragged rows), then ``decode`` when the column holds a codec's
+    storage rows (e.g. LVQ packed codes, decoded in one vectorized
+    numpy pass: the in-register decompression of the reference's
+    compressed scan kernels), then checked against the query width."""
+    B = batch_matrix(vec)
+    if decode is not None:
+        B = decode(B)
+    if B.shape != (n, d):
+        raise ValueError(f"vector column decodes to {B.shape}, expected {(n, d)}")
+    return B
+
+
 def _scan_kernel(
     bc,
     distance: str,
@@ -148,35 +169,7 @@ def _scan_kernel(
                 continue
             seen = True
             ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            vec = rb.column(1)
-            # Arrow-native decode: the list array's flattened values
-            # buffer IS the (n, d) matrix — no per-row object stacking
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            if decode is None:
-                if vec.null_count or len(flat) != n * d:
-                    raise ValueError(
-                        f"vector column must be non-null uniform dim {d}; "
-                        f"got {len(flat)} values for {n} rows"
-                    )
-                B = flat.reshape(n, d)
-            else:
-                # compressed storage row (e.g. LVQ packed codes):
-                # reshape to the storage width, decode to (n, d) in one
-                # vectorized numpy pass — the in-register decompression
-                # of the reference's compressed scan kernels
-                import pyarrow.compute as pc
-
-                lens = pc.list_value_length(vec).to_numpy(zero_copy_only=False)
-                if vec.null_count or not len(lens) or (lens != lens[0]).any():
-                    raise ValueError(
-                        "packed vector column must be non-null with a uniform "
-                        "storage width (ragged packed rows cannot be reshaped)"
-                    )
-                B = decode(flat.reshape(n, int(lens[0])))
-                if B.shape != (n, d):
-                    raise ValueError(
-                        f"decode returned {B.shape}, expected {(n, d)}"
-                    )
+            B = _kernel_matrix(rb.column(1), n, d, decode)
             for c in range(n_chunks):
                 sl = slice(c * chunk_size, (c + 1) * chunk_size)
                 qf = None if q_fixed is None else q_fixed[sl]
@@ -209,29 +202,81 @@ def _scan_kernel(
     return fn
 
 
-def query_blocks(queries: DataFrame, qid_col: str, qvec_col: str, max_block: int):
-    """Yield driver-side pandas blocks of at most ~``max_block`` queries
-    without ever materializing the full query table: blocks are
-    xxhash64-partitioned on qid (uniform regardless of qid layout) and
-    collected one at a time — the caller runs one distributed pass per
-    block and frees the block before fetching the next, so driver
-    memory is bounded by a single block for arbitrarily large query
-    tables."""
-    sel = queries.select(
+def collect_queries(
+    queries: DataFrame, qid_col: str = "qid", qvec_col: str = "vector"
+) -> tuple[np.ndarray, np.ndarray]:
+    """The engine's one query intake: collect a query table as
+    ``(qids int64, Q float64 (n, d))`` in one job. An empty table gives
+    empty arrays."""
+    qp = queries.select(
         F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qv")
-    )
-    n_q = sel.count()
-    n_blocks = max(1, math.ceil(n_q / max_block))
-    if n_blocks == 1:
-        pdf = sel.toPandas()
-        if len(pdf):
-            yield pdf
-        return
-    h = F.pmod(F.xxhash64(F.col("qid")), F.lit(n_blocks))
-    for b in range(n_blocks):
-        pdf = sel.filter(h == F.lit(b)).toPandas()
-        if len(pdf):
-            yield pdf
+    ).toPandas()
+    if len(qp) == 0:
+        return np.empty(0, dtype=np.int64), np.empty((0, 0))
+    return qp["qid"].to_numpy(dtype=np.int64), np.stack(qp["qv"].to_numpy()).astype(np.float64)
+
+
+def search_blocks(
+    queries: DataFrame,
+    qid_col: str,
+    qvec_col: str,
+    k: int,
+    maximize: bool,
+    block_fn,
+    max_query_block: int | None = None,
+    query_batch: tuple | None = None,
+) -> DataFrame:
+    """The one query path of flat, IVF and Vamana search: take the
+    query batch block by block, call ``block_fn(qids, Q) ->
+    (candidates, broadcast)`` on each, rank each block's
+    ``(qid, neighbor_id, distance)`` candidates to the k best per qid
+    (:func:`topk.rank_candidates`) and union the blocks. Returns
+    (qid, neighbor_id, distance, rank); raises ``"empty query batch"``
+    when no query arrives.
+
+    The blocks come from ``query_batch`` (a caller's pre-collected
+    ``(qids, Q)``), else from one :func:`collect_queries` job, else,
+    under ``max_query_block``, from xxhash64-partitioned blocks of at
+    most ~``max_query_block`` queries (uniform regardless of qid layout)
+    collected one at a time after a ``count()``: each block's result is
+    materialized and its broadcast freed before the next block is
+    fetched, so driver memory is bounded by one block for arbitrarily
+    large query tables."""
+    if query_batch is not None:
+        if max_query_block is not None:
+            raise ValueError("query_batch and max_query_block are exclusive")
+        qids, Q = query_batch
+        blocks = [(np.asarray(qids, dtype=np.int64), np.asarray(Q, dtype=np.float64))]
+    elif max_query_block is None:
+        blocks = [collect_queries(queries, qid_col, qvec_col)]
+    else:
+        sel = queries.select(
+            F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qv")
+        )
+        n_blocks = max(1, math.ceil(sel.count() / max_query_block))
+        h = F.pmod(F.xxhash64(F.col("qid")), F.lit(n_blocks))
+        blocks = (
+            collect_queries(sel if n_blocks == 1 else sel.filter(h == F.lit(b)), "qid", "qv")
+            for b in range(n_blocks)
+        )
+
+    parts: list[DataFrame] = []
+    for qids, Q in blocks:
+        if len(qids) == 0:
+            continue
+        cands, bc = block_fn(qids, Q)
+        part = rank_candidates(cands, len(qids), k, maximize)
+        if max_query_block is not None:
+            part = part.persist()
+            part.count()
+            bc.unpersist()
+        parts.append(part)
+    if not parts:
+        raise ValueError("empty query batch")
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 def flat_knn(
@@ -291,56 +336,13 @@ def flat_knn(
     scan = base.select(F.col(id_col).cast("long").alias("__id"), F.col(vec_col).alias("__vec"))
     sc = base.sparkSession.sparkContext
 
-    if query_batch is not None:
-        if max_query_block is not None:
-            raise ValueError("query_batch and max_query_block are exclusive")
-        blocks = iter([query_batch])
-    elif max_query_block is None:
-        blocks = iter(
-            [
-                queries.select(
-                    F.col(qid_col).cast("long").alias("qid"),
-                    F.col(qvec_col).alias("qv"),
-                ).toPandas()
-            ]
-        )
-    else:
-        blocks = query_blocks(queries, qid_col, qvec_col, max_query_block)
-
-    parts: list[DataFrame] = []
-    for qp in blocks:
-        if isinstance(qp, tuple):
-            qids = np.asarray(qp[0], dtype=np.int64)
-            Q = np.asarray(qp[1], dtype=np.float64)
-        elif len(qp) == 0:
-            continue
-        else:
-            qids = qp["qid"].to_numpy(dtype=np.int64)
-            Q = np.stack(qp["qv"].to_numpy()).astype(np.float64)
-        if len(qids) == 0:
-            continue
+    def block(qids, Q):
         bc = sc.broadcast((qids, Q))
         fn = _scan_kernel(bc, distance, k, query_chunk_size, round_to, deadline, decode)
-        cand = scan.mapInArrow(fn, RESULT_SCHEMA)
-        part = topk_per_group(
-            cand,
-            group_col="qid",
-            order_col="distance",
-            k=k,
-            ascending=not is_similarity(distance),
-            tie_col="neighbor_id",
-            num_partitions=merge_partitions(len(qids), k, base.sparkSession),
-        )
-        if max_query_block is not None:
-            # eager: materialize this block's Q_b×k result, then drop
-            # the block's broadcast before the next block is fetched
-            part = part.persist()
-            part.count()
-            bc.unpersist()
-        parts.append(part)
-    if not parts:
-        raise ValueError("empty query batch")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        return scan.mapInArrow(fn, RESULT_SCHEMA), bc
+
+    out = search_blocks(
+        queries, qid_col, qvec_col, k, is_similarity(distance), block,
+        max_query_block, query_batch,
+    )
     return out.select("qid", "rank", "neighbor_id", "distance")

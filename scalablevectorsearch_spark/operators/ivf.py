@@ -22,7 +22,8 @@ Spark plan (scale-first):
    scanned fraction to ~n_probes/n_clusters of the base.
  - k_reorder (common.h:156): optional second stage re-ranking the top
    k_reorder approximate candidates with exact full-precision distances
-   (meaningful over quantized storage — see operators.sq).
+   (meaningful over quantized storage — see operators.sq), through the
+   codecs' one exact re-rank (operators.codec).
 
 Determinism: clusters from operators.kmeans's oracle protocol; probe
 ranking and result ranking both on the e4 key floor(d*1e4+0.5) with
@@ -33,19 +34,24 @@ oracle (oracles.ivf_knn_sql).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from scalablevectorsearch_spark.functions.distances import is_similarity, pairwise_distances
-from scalablevectorsearch_spark.operators.flat import RESULT_SCHEMA, _ID_SENTINEL, _merge_topk
+from scalablevectorsearch_spark.operators.codec import _rerank_reconstruction
+from scalablevectorsearch_spark.operators.flat import (
+    RESULT_SCHEMA,
+    _ID_SENTINEL,
+    _kernel_matrix,
+    _merge_topk,
+    collect_queries,
+    search_blocks,
+)
 from scalablevectorsearch_spark.operators.kmeans import KMeansModel, train_kmeans
-from scalablevectorsearch_spark.operators.topk import merge_partitions, topk_per_group
 
 
 @dataclass
@@ -459,11 +465,7 @@ def _ivf_kernel(
                 continue
             seen = True
             ids = rb.column(0).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            vec = rb.column(1)
-            flat = vec.flatten().to_numpy(zero_copy_only=False)
-            if vec.null_count or len(flat) != n * d:
-                raise ValueError(f"vector column must be non-null uniform dim {d}")
-            V = flat.reshape(n, d)
+            V = _kernel_matrix(rb.column(1), n, d)
             cl = rb.column(2).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
             for cid in np.unique(cl):
                 qidx = probe_of.get(int(cid))
@@ -606,80 +608,54 @@ def ivf_search(
         if probe_budget < 1:
             raise ValueError("probe_budget must be >= 1")
     qvec_col = qvec_col or index.vec_col
-    if max_query_block is None:
-        qp = queries.select(
-            F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qv")
-        ).toPandas()
-        blocks = iter([qp])
-    else:
-        if k_reorder is not None:
-            raise ValueError("max_query_block does not compose with k_reorder")
-        from scalablevectorsearch_spark.operators.flat import query_blocks
-
-        blocks = query_blocks(queries, qid_col, qvec_col, max_query_block)
-
-    parts: list[DataFrame] = []
-    for qp in blocks:
-        if len(qp) == 0:
-            continue
-        part, bc = _ivf_search_block(
-            index, qp, k, n_probes, distance, round_to, epsilon_bp,
-            max_probes, k_reorder, where, router, deadline,
-            router_candidates=router_candidates, probe_budget=probe_budget,
-        )
+    batch = None
+    if k_reorder is not None:
         if max_query_block is not None:
-            part = part.persist()
-            part.count()
-            bc.unpersist()
-        parts.append(part)
-    if not parts:
-        raise ValueError("empty query batch")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if k_reorder is None:
-        return out.select("qid", "rank", "neighbor_id", "distance")
-    if rerank_base is None:
-        raise ValueError("k_reorder requires rerank_base (full-precision vectors)")
-    sc = queries.sparkSession.sparkContext
-    qids = qp["qid"].to_numpy(dtype=np.int64)
-    Q = np.stack(qp["qv"].to_numpy()).astype(np.float64)
-    if rerank_queries is not None:
-        rq = rerank_queries.select(
-            F.col(qid_col).cast("long").alias("qid"), F.col(qvec_col).alias("qv")
-        ).toPandas()
-        rqids = rq["qid"].to_numpy(dtype=np.int64)
-        rQ = np.stack(rq["qv"].to_numpy()).astype(np.float64)
-    else:
-        rqids, rQ = qids, Q
-    return _rerank_exact(
-        out, rerank_base, sc.broadcast((rqids, rQ)), k, distance, round_to,
-        id_col=index.id_col, vec_col=index.vec_col,
+            raise ValueError("max_query_block does not compose with k_reorder")
+        # one collect serves the search and its re-rank
+        batch = collect_queries(queries, qid_col, qvec_col)
+    inner_k = k if k_reorder is None else max(k_reorder, k)
+    out = search_blocks(
+        queries, qid_col, qvec_col, inner_k, is_similarity(distance),
+        lambda qids, Q: _ivf_search_block(
+            index, qids, Q, inner_k, n_probes, distance, round_to, epsilon_bp,
+            max_probes, where, router, deadline,
+            router_candidates=router_candidates, probe_budget=probe_budget,
+        ),
+        max_query_block, batch,
     )
+    if k_reorder is not None:
+        if rerank_base is None:
+            raise ValueError("k_reorder requires rerank_base (full-precision vectors)")
+        rows = rerank_base.select(
+            F.col(index.id_col).cast("long").alias("neighbor_id"),
+            F.col(index.vec_col).alias("__bv"),
+        )
+        if rerank_queries is not None:
+            batch = collect_queries(rerank_queries, qid_col, qvec_col)
+        out = _rerank_reconstruction(out, rows, None, k, distance, round_to, query_batch=batch)
+    return out.select("qid", "rank", "neighbor_id", "distance")
 
 
 def _ivf_search_block(
     index: IVFIndex,
-    qp,
+    qids: np.ndarray,
+    Q: np.ndarray,
     k: int,
     n_probes: int,
     distance: str,
     round_to: int | None,
     epsilon_bp: int | None,
     max_probes: int | None,
-    k_reorder: int | None,
     where,
     router,
     deadline: float | None = None,
     router_candidates: int | None = None,
     probe_budget: float | None = None,
 ) -> tuple[DataFrame, object]:
-    """One query block's probe + member scan + merge; returns the
-    ranked candidates (inner_k deep when re-ranking) and the block's
-    broadcast."""
-    qids = qp["qid"].to_numpy(dtype=np.int64)
-    Q = np.stack(qp["qv"].to_numpy()).astype(np.float64)
-
+    """One query block's probe + member scan: the block's unranked
+    (qid, neighbor_id, distance) candidates, k per query per partition,
+    and its broadcast."""
     min_probes: int | None = None
     if probe_budget is not None:
         # budget-invariant adaptive probing with the clamped fit (same
@@ -729,8 +705,6 @@ def _ivf_search_block(
         for c in np.unique(probes):
             probe_of[int(c)] = np.nonzero((probes == c).any(axis=1))[0]
 
-    inner_k = k if k_reorder is None else max(k_reorder, k)
-
     probed_union = [int(c) for c in sorted(probe_of)]
     clustered = index.clustered
     if where is not None:
@@ -749,84 +723,8 @@ def _ivf_search_block(
 
     sc = index.clustered.sparkSession.sparkContext
     bc = sc.broadcast((qids, Q, probe_of))
-    cand = scan.mapInArrow(
-        _ivf_kernel(bc, distance, inner_k, round_to, deadline), RESULT_SCHEMA
-    )
-    out = topk_per_group(
-        cand,
-        group_col="qid",
-        order_col="distance",
-        k=inner_k,
-        ascending=not is_similarity(distance),
-        tie_col="neighbor_id",
-        num_partitions=merge_partitions(
-            len(qids), inner_k, index.clustered.sparkSession
-        ),
-    )
-    return out, bc
-
-
-def _rerank_exact(
-    candidates: DataFrame,
-    base: DataFrame,
-    bc_queries,
-    k: int,
-    distance: str,
-    round_to: int | None,
-    id_col: str = "id",
-    vec_col: str = "vector",
-) -> DataFrame:
-    """Exact re-rank stage (k_reorder, common.h:156): the Q x k_reorder
-    candidate set is broadcast against the full-precision base (the base
-    is scanned once, filtered by the broadcast semi side), distances
-    recomputed in float64, then the final per-query top-k."""
-    from collections.abc import Iterator
-
-    scale = None if round_to is None else float(10**round_to)
-    maximize = is_similarity(distance)
-    pairs = candidates.select("qid", "neighbor_id")
-    vecs = base.select(
-        F.col(id_col).cast("long").alias("neighbor_id"), F.col(vec_col).alias("__vec")
-    )
-    joined = vecs.join(F.broadcast(pairs), "neighbor_id").select(
-        "qid", "neighbor_id", "__vec"
-    )
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qids, Q = bc_queries.value
-        pos = {int(q): i for i, q in enumerate(qids)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
-            qi = np.asarray([pos[int(q)] for q in pdf["qid"]], dtype=np.int64)
-            d = np.empty(len(pdf), dtype=np.float64)
-            for u in np.unique(qi):
-                rows = qi == u
-                d[rows] = pairwise_distances(Q[u : u + 1], V[rows], distance)[0]
-            if scale is not None:
-                d = np.floor(d * scale + 0.5) / scale
-            yield pd.DataFrame(
-                {
-                    "qid": pdf["qid"].to_numpy(dtype=np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
-                    "distance": d,
-                }
-            )
-
-    exact = joined.mapInPandas(fn, RESULT_SCHEMA)
-    out = topk_per_group(
-        exact,
-        group_col="qid",
-        order_col="distance",
-        k=k,
-        ascending=not maximize,
-        tie_col="neighbor_id",
-        num_partitions=merge_partitions(
-            len(bc_queries.value[0]), k, base.sparkSession
-        ),
-    )
-    return out.select("qid", "rank", "neighbor_id", "distance")
+    cand = scan.mapInArrow(_ivf_kernel(bc, distance, k, round_to, deadline), RESULT_SCHEMA)
+    return cand, bc
 
 
 def save_clustered(index: IVFIndex, path: str, n_buckets: int = 256) -> None:

@@ -61,10 +61,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from scalablevectorsearch_spark.functions.distances import is_similarity
 from scalablevectorsearch_spark.operators.codec import (
     Codec,
-    _collect,
     codec_knn,
     codec_vamana_build,
     codec_vamana_search,
@@ -326,159 +324,6 @@ def lvq_decoder2(params: LVQParams):
         return primary(M[:, : 2 + w1]) + ((step / levels2)[:, None] * c2 - step[:, None] / 2.0)
 
     return decode
-
-
-def _fold_distances(
-    Q: np.ndarray, B: np.ndarray, distance: str
-) -> tuple[np.ndarray, np.ndarray | None]:
-    """Row-wise distance of ``Q[i]`` to ``B[i]`` with the EXACT
-    accumulation order of the Catalyst/DuckDB sequential fold
-    (distances.distance_expr: acc = 0.0; acc = acc + f(x_i, y_i) over
-    dims in order): vectorized across ROWS, sequential across DIMS, so
-    every emitted double is bit-identical to the expression fold the
-    oracles replay — the rerank could not be moved off Catalyst
-    otherwise (a GEMM-shaped kernel differs in last-ulp accumulation).
-
-    Returns ``(values, null_mask)``: null_mask is currently always None
-    (kept in the signature so a distance whose SQL semantics demand SQL
-    NULLs can flag rows); cosine maps zero-norm rows to similarity 0.0,
-    the engine-wide pairwise_distances convention — the pre-r13 kernel
-    divided through to inf/nan there, silently changing degenerate
-    top-k order (ADVICE r12)."""
-    n, d = Q.shape
-    if distance == "l2":
-        acc = np.zeros(n, dtype=np.float64)
-        for i in range(d):
-            diff = Q[:, i] - B[:, i]
-            acc = acc + diff * diff
-        return acc, None
-    if distance == "ip":
-        acc = np.zeros(n, dtype=np.float64)
-        for i in range(d):
-            acc = acc + Q[:, i] * B[:, i]
-        return acc, None
-    if distance == "cosine":
-        num = np.zeros(n, dtype=np.float64)
-        qq = np.zeros(n, dtype=np.float64)
-        bb = np.zeros(n, dtype=np.float64)
-        for i in range(d):
-            x, y = Q[:, i], B[:, i]
-            num = num + x * y
-            qq = qq + x * x
-            bb = bb + y * y
-        denom = np.sqrt(qq) * np.sqrt(bb)
-        # zero-norm vectors: similarity 0 — the engine-wide convention
-        # (functions.distances.pairwise_distances; the reference rejects
-        # zero norms upstream). The pre-r13 kernel divided through and
-        # produced inf/nan here, silently perturbing degenerate top-k
-        # order; the Catalyst ANSI fold it replaced would error instead.
-        zero = denom == 0.0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = np.where(zero, 0.0, num / denom)
-        return out, None
-    raise ValueError(f"unknown distance {distance!r}")
-
-
-def _rerank_reconstruction(
-    cands: DataFrame,
-    recon: DataFrame,
-    q: DataFrame,
-    k: int,
-    distance: str,
-    round_to: int | None,
-    decode=None,
-    query_batch: tuple | None = None,
-) -> DataFrame:
-    """Re-rank a (qid, neighbor_id) candidate set against a
-    reconstruction table: broadcast the Q x k_reorder pair set against
-    the reconstruction scan (the base is scanned once, filtered by the
-    broadcast side — the 100 TB shape), then recompute distances in a
-    vectorized Arrow kernel whose fold order is bit-identical to the
-    Catalyst/DuckDB expression fold (:func:`_fold_distances`), and take
-    the final per-query top-k.
-
-    r12 optimization round (guide §4.2): the previous implementation
-    evaluated the distance as a Catalyst zip_with+aggregate fold after
-    a SECOND broadcast join shipping the query vectors — measured 0.88s
-    in ONE task for 50k pairs x 64 dims (higher-order-function eval is
-    ~per-element interpreted). The kernel path ships the query batch
-    via sc.broadcast like every scan kernel (flat/ivf), drops the
-    second join, and pays numpy-vector cost instead; emitted doubles
-    are unchanged.
-
-    ``decode``: optional vectorized storage decoder applied to the
-    recon rows ((n, w) storage -> (n, d) vectors, elementwise-identical
-    to the Catalyst reconstruction it replaces) — lets the scan read
-    PACKED codes instead of evaluating the decompress expression chain
-    per joined row."""
-    import pyarrow as pa
-
-    from scalablevectorsearch_spark.functions.arrowio import batch_matrix
-    from scalablevectorsearch_spark.operators.topk import merge_partitions, topk_per_group
-
-    pairs = cands.select("qid", "neighbor_id")
-    joined = recon.join(F.broadcast(pairs), "neighbor_id").select(
-        "qid", "neighbor_id", "__bv"
-    )
-    # a caller-collected batch is shared with the primary scan (one
-    # collect job for the whole two-phase search, r13)
-    qids, Q = _collect(q) if query_batch is None else query_batch
-    qids, Q = np.asarray(qids, dtype=np.int64), np.asarray(Q, dtype=np.float64)
-    if len(qids) == 0:
-        # an empty batch returns an empty frame, as the old Catalyst
-        # join path did
-        return recon.sparkSession.createDataFrame(
-            [], "qid long, neighbor_id long, distance double, rank long"
-        )
-    sc = recon.sparkSession.sparkContext
-    bc = sc.broadcast((qids, Q))
-    scale = None if round_to is None else float(10**round_to)
-    maximize = is_similarity(distance)
-
-    def fn(batches):
-        bqids, bQ = bc.value
-        pos = {int(x): i for i, x in enumerate(bqids)}
-        d_dim = bQ.shape[1]
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            rqid = rb.column(names.index("qid")).to_numpy(zero_copy_only=False)
-            rnid = rb.column(names.index("neighbor_id")).to_numpy(
-                zero_copy_only=False
-            )
-            # a ragged or NULL reconstruction row raises rather than
-            # silently misaligning every following row
-            B = batch_matrix(rb.column(names.index("__bv")))
-            if decode is not None:
-                B = decode(B)
-            if B.shape[1] != d_dim:
-                raise ValueError(
-                    f"reconstruction width {B.shape[1]} != query dim {d_dim}"
-                )
-            qi = np.asarray([pos[int(x)] for x in rqid], dtype=np.int64)
-            dist, nulls = _fold_distances(bQ[qi], B, distance)
-            if scale is not None:
-                dist = np.floor(dist * scale + 0.5) / scale
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(rqid.astype(np.int64), type=pa.int64()),
-                    pa.array(rnid.astype(np.int64), type=pa.int64()),
-                    pa.array(dist, type=pa.float64(), mask=nulls),
-                ],
-                names=["qid", "neighbor_id", "distance"],
-            )
-
-    exact = joined.mapInArrow(fn, "qid long, neighbor_id long, distance double")
-    return topk_per_group(
-        exact,
-        group_col="qid",
-        order_col="distance",
-        k=k,
-        ascending=not maximize,
-        tie_col="neighbor_id",
-        num_partitions=merge_partitions(len(qids), k, recon.sparkSession),
-    )
 
 
 class LVQCodec(Codec):

@@ -68,3 +68,20 @@ def merge_partitions(n_groups: int, k: int, spark=None) -> int:
         except Exception:
             pass
     return n
+
+
+def rank_candidates(cands: DataFrame, n_queries: int, k: int, maximize: bool) -> DataFrame:
+    """The one merge of every search family: the k best
+    ``(qid, neighbor_id, distance)`` candidates per qid, ranked 1..k
+    (best distance first, ties by ascending neighbor id) through an
+    exchange sized by :func:`merge_partitions` from the batch's
+    ``n_queries``. Returns (qid, neighbor_id, distance, rank)."""
+    return topk_per_group(
+        cands,
+        group_col="qid",
+        order_col="distance",
+        k=k,
+        ascending=not maximize,
+        tie_col="neighbor_id",
+        num_partitions=merge_partitions(n_queries, k, cands.sparkSession),
+    )

@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scalablevectorsearch_spark.functions.distances import is_similarity
-from scalablevectorsearch_spark.operators.topk import merge_partitions, topk_per_group
+from scalablevectorsearch_spark.operators.flat import RESULT_SCHEMA, search_blocks
 from scalablevectorsearch_spark.operators.vamana_local import (
     VamanaParams,
     build_graph,
@@ -64,7 +64,6 @@ GRAPH_SCHEMA = "shard_id int, src long, neighbors array<long>, is_entry boolean"
 #: both path costs grow linearly in N at fixed selectivity, so the
 #: crossover does not move with data size.
 AUTO_FALLBACK_SELECTIVITY = 0.02
-RESULT_SCHEMA = "qid long, neighbor_id long, distance double"
 
 
 def _decode_adjacency(
@@ -858,22 +857,7 @@ def vamana_search(
         # keeps the pre-r6 behavior of full fan-out.
         probe_budget = max(1.0, index.n_shards / 2)
 
-    if max_query_block is None:
-        blocks = iter(
-            [
-                queries.select(
-                    F.col(qid_col).cast("long").alias("qid"),
-                    F.col(qvec_col).alias("qv"),
-                ).toPandas()
-            ]
-        )
-    else:
-        from scalablevectorsearch_spark.operators.flat import query_blocks
-
-        blocks = query_blocks(queries, qid_col, qvec_col, max_query_block)
-
     filtered_scan = scan_override
-    parts: list[DataFrame] = []
     # a caller's override is the caller's to release; blocks are
     # materialized eagerly under max_query_block, so nothing downstream
     # re-reads an own scan released at the end of the loop
@@ -889,26 +873,17 @@ def vamana_search(
             filtered_scan = pins.persist(
                 _filtered_scan(index, where), StorageLevel.MEMORY_AND_DISK
             )
-        for qp in blocks:
-            if len(qp) == 0:
-                continue
-            part, bc = _vamana_search_block(
-                index, qp, k, sws, excl, exclude_df, buffer_capacity,
+        out = search_blocks(
+            queries, qid_col, qvec_col, k, maximize,
+            lambda qids, Q: _vamana_search_block(
+                index, qids, Q, k, sws, excl, exclude_df, buffer_capacity,
                 n_probes, router, maximize, scale, sc, deadline,
                 epsilon_bp=epsilon_bp, max_probes=max_probes,
                 probe_budget=probe_budget, where=where,
                 scan_override=filtered_scan,
-            )
-            if max_query_block is not None:
-                part = part.persist()
-                part.count()
-                bc.unpersist()
-            parts.append(part)
-        if not parts:
-            raise ValueError("empty query batch")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+            ),
+            max_query_block,
+        )
     return out.select("qid", "rank", "neighbor_id", "distance")
 
 
@@ -935,7 +910,8 @@ def _filtered_scan(index: VamanaIndex, where) -> DataFrame:
 
 def _vamana_search_block(
     index: VamanaIndex,
-    qp: pd.DataFrame,
+    qids: np.ndarray,
+    Q: np.ndarray,
     k: int,
     sws: int,
     excl,
@@ -953,14 +929,12 @@ def _vamana_search_block(
     where=None,
     scan_override: DataFrame | None = None,
 ) -> tuple[DataFrame, object]:
-    """One query block's shard-cogroup search + merge; returns the
-    ranked result and the block's broadcast (caller frees it when
-    iterating blocks eagerly). ``scan_override``: a pre-built (usually
-    persisted) filtered scan shared across query blocks."""
+    """One query block's shard-cogroup search: the block's unranked
+    (qid, neighbor_id, distance) candidates, closure replicas
+    deduplicated, and its broadcast. ``scan_override``: a pre-built
+    (usually persisted) filtered scan shared across query blocks."""
     params, distance = index.params, index.distance
     vec_decode = index.vec_decode
-    qids = qp["qid"].to_numpy(dtype=np.int64)
-    Q = np.stack(qp["qv"].to_numpy()).astype(np.float64)
     probe_of = None
     min_probes = None
     if probe_budget is not None:
@@ -1149,16 +1123,7 @@ def _vamana_search_block(
         # deterministic regardless of float jitter
         keep = F.max("distance") if maximize else F.min("distance")
         cand = cand.groupBy("qid", "neighbor_id").agg(keep.alias("distance"))
-    out = topk_per_group(
-        cand,
-        group_col="qid",
-        order_col="distance",
-        k=k,
-        ascending=not maximize,
-        tie_col="neighbor_id",
-        num_partitions=merge_partitions(len(Q), k, index.graph.sparkSession),
-    )
-    return out, bc
+    return cand, bc
 
 
 def graph_degree_stats(graph: DataFrame) -> DataFrame:

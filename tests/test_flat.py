@@ -147,3 +147,106 @@ def test_chunked_query_blocks_match_single_batch(embeddings):
     s = ivf_search(idx, queries, k=5, n_probes=8).collect()
     c = ivf_search(idx, queries, k=5, n_probes=8, max_query_block=17).collect()
     assert sorted(map(tuple, c)) == sorted(map(tuple, s))
+
+
+def test_ragged_base_rows_rejected(spark):
+    """Base rows of differing widths raise in the scan kernel instead of
+    being reshaped into misaligned rows (widths 3+2+4+3 = 4x3 values
+    passed a total-length check)."""
+    base = spark.createDataFrame(
+        [(0, [1.0, 1.0, 1.0]), (1, [1.0, 1.0]), (2, [1.0, 1.0, 1.0, 1.0]), (3, [2.0, 2.0, 2.0])],
+        "id long, vector array<double>",
+    ).coalesce(1)
+    q = spark.createDataFrame([(0, [0.0, 0.0, 0.0])], "qid long, vector array<double>")
+    with pytest.raises(Exception, match="ragged"):
+        flat_knn(base, q, k=4).collect()
+
+
+def _blocked_family(family, base):
+    """(search(queries, **kw)) for one index family over ``base``."""
+    if family == "flat":
+        return lambda q, **kw: flat_knn(base, q, k=5, **kw)
+    if family == "ivf":
+        from scalablevectorsearch_spark.operators.ivf import ivf_build, ivf_search
+
+        idx = ivf_build(base, 8, n_iters=2)
+        return lambda q, **kw: ivf_search(idx, q, k=5, n_probes=3, **kw)
+    from scalablevectorsearch_spark.operators.vamana import (
+        VamanaParams,
+        vamana_build,
+        vamana_search,
+    )
+
+    idx = vamana_build(base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2)
+    return lambda q, **kw: vamana_search(idx, q, k=5, search_window_size=30, **kw)
+
+
+@pytest.mark.parametrize("family", ["flat", "ivf", "vamana"])
+def test_blocked_search_matches_single_batch(embeddings, family):
+    """max_query_block runs one search per hashed query block; the
+    union equals the single-batch result for every family."""
+    base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter("id < 1000")
+    queries = base.filter("id < 40").selectExpr("id as qid", "vector")
+    search = _blocked_family(family, base)
+    single = search(queries).collect()
+    blocked = search(queries, max_query_block=13).collect()
+    assert len(single) == 40 * 5
+    assert sorted(map(tuple, blocked)) == sorted(map(tuple, single))
+
+
+def test_search_blocks_collects_block_by_block(spark):
+    """A query table larger than max_query_block is still collected
+    block by block: each block holds only its own queries, and the
+    blocks are disjoint and cover every qid."""
+    from scalablevectorsearch_spark.operators.flat import search_blocks
+
+    queries = spark.createDataFrame(
+        [(i, [float(i), 0.0]) for i in range(30)], "qid long, vector array<double>"
+    )
+    blocks = []
+
+    def block_fn(qids, Q):
+        assert Q.shape == (len(qids), 2) and (Q[:, 0] == qids).all()
+        blocks.append(set(qids.tolist()))
+        cands = spark.createDataFrame(
+            [(int(i), int(i), 0.0) for i in qids], "qid long, neighbor_id long, distance double"
+        )
+        return cands, spark.sparkContext.broadcast(None)
+
+    out = search_blocks(queries, "qid", "vector", 1, False, block_fn, max_query_block=7)
+    assert 2 <= len(blocks) <= 5
+    assert sum(map(len, blocks)) == 30 and set().union(*blocks) == set(range(30))
+    assert sorted(r["qid"] for r in out.collect()) == list(range(30))
+
+
+def test_merge_partitions_sizing(spark):
+    from scalablevectorsearch_spark.operators.topk import merge_partitions
+
+    sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert merge_partitions(1000, 10, spark) == 1
+    assert merge_partitions(0, 10, spark) == 1
+    # huge group counts degrade to the session default, never beyond
+    assert merge_partitions(10**9, 10, spark) == sp
+
+
+def test_topk_num_partitions_identical_results(spark):
+    from scalablevectorsearch_spark.operators.topk import topk_per_group
+
+    rng = np.random.RandomState(7)
+    rows = [
+        (int(i % 17), float(rng.randint(0, 50)), int(i)) for i in range(500)
+    ]
+    df = spark.createDataFrame(rows, "g long, v double, i long")
+    base = sorted(
+        map(tuple, topk_per_group(df, "g", "v", 5, tie_col="i").collect())
+    )
+    for n in (1, 3):
+        got = sorted(
+            map(
+                tuple,
+                topk_per_group(
+                    df, "g", "v", 5, tie_col="i", num_partitions=n
+                ).collect(),
+            )
+        )
+        assert got == base

@@ -158,3 +158,26 @@ def test_ivf_search_ip(base, queries):
         ranked.sort()
         ds = [d for _, d in ranked]
         assert ds == sorted(ds, reverse=True)
+
+
+def test_custom_distance_k_reorder_raises_value_error(base, queries):
+    """A registered custom distance searches IVF, but its exact re-rank
+    has no custom kernel (and the executors no registry): k_reorder
+    raises a ValueError while the re-rank plan is built instead of
+    failing inside its Spark task."""
+    from scalablevectorsearch_spark.functions.distances import (
+        register_distance,
+        unregister_distance,
+    )
+
+    register_distance("l1", lambda Q, B: np.abs(Q[:, None, :] - B[None, :, :]).sum(axis=2))
+    try:
+        index = ivf_build(base, 8, 2)
+        assert ivf_search(index, queries, k=5, n_probes=2, distance="l1").count() == 20 * 5
+        with pytest.raises(ValueError, match="k_reorder"):
+            ivf_search(
+                index, queries, k=5, n_probes=2, distance="l1", k_reorder=10,
+                rerank_base=base.select("id", "vector"),
+            ).collect()
+    finally:
+        unregister_distance("l1")

@@ -1,6 +1,5 @@
 """Round-12 optimization invariants: the batch-ramp build's
-reachability guarantee, the collision-free shard partitioning, and the
-rerank kernel's bit-identity with the Catalyst fold it replaced."""
+reachability guarantee and the collision-free shard partitioning."""
 
 import numpy as np
 import pytest
@@ -115,46 +114,6 @@ def test_build_reachability_invariant(kind, distance):
         assert _reachable_mask(graph, entry).sum() == n
         # repair never exceeds the degree bound
         assert max(len(a) for a in graph) <= p.graph_max_degree
-
-
-def test_fold_distances_matches_catalyst(spark):
-    """The rerank kernel's fold (vectorized across rows, sequential
-    across dims) must be BIT-identical to the Catalyst
-    zip_with+aggregate fold it replaced — the property that lets the
-    gated rerank queries move off Catalyst at all."""
-    from scalablevectorsearch_spark.functions.distances import distance_expr
-    from scalablevectorsearch_spark.operators.lvq import _fold_distances
-
-    rng = np.random.RandomState(5)
-    n, d = 200, 23  # odd dim to exercise non-multiple-of-SIMD tails
-    Q = rng.normal(size=(n, d)) * rng.choice([1e-3, 1.0, 1e3], size=(n, 1))
-    B = rng.normal(size=(n, d)) * rng.choice([1e-3, 1.0, 1e3], size=(n, 1))
-    # zero-norm rows: the ANSI Catalyst fold ERRORS on the cosine
-    # division, so they are checked kernel-side only — the kernel must
-    # map them to similarity 0.0 (the pairwise_distances convention;
-    # r13 ADVICE: inf/nan changed degenerate top-k ordering)
-    Bz = B.copy()
-    Qz = Q.copy()
-    Bz[7] = 0.0
-    Qz[11] = 0.0
-    gotz, _ = _fold_distances(Qz, Bz, "cosine")
-    assert gotz[7] == 0.0 and gotz[11] == 0.0
-    assert np.isfinite(gotz).all()
-    rows = [
-        (int(i), [float(x) for x in Q[i]], [float(x) for x in B[i]])
-        for i in range(n)
-    ]
-    df = spark.createDataFrame(rows, "i long, q array<double>, b array<double>")
-    for dist in ("l2", "ip", "cosine"):
-        got, nulls = _fold_distances(Q, B, dist)
-        assert nulls is None
-        exp_rows = df.select(
-            "i", distance_expr(F.col("q"), F.col("b"), dist).alias("d")
-        ).collect()
-        exp = np.empty(n)
-        for r in exp_rows:
-            exp[r["i"]] = r["d"]
-        assert np.array_equal(got, exp), dist  # exact, not approx
 
 
 def test_lvq_decoder2_matches_decompress(spark, embeddings):

@@ -1,13 +1,10 @@
 """Round-13 optimization regression tests: SQL-identifier quoting in
-the string-built pipeline operators, the nested-transform minhash
-signature, data-derived top-k merge partitioning, and the rerank
-kernel's degenerate-input guards."""
+the string-built pipeline operators and the nested-transform minhash
+signature."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -107,53 +104,3 @@ def test_minhash_signature_matches_unrolled(spark, docs):
     assert sorted((r["doc_id"], tuple(r["sig"])) for r in old) == sorted(
         (r["doc_id"], tuple(r["sig"])) for r in new
     )
-
-
-def test_merge_partitions_sizing(spark):
-    from scalablevectorsearch_spark.operators.topk import merge_partitions
-
-    sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert merge_partitions(1000, 10, spark) == 1
-    assert merge_partitions(0, 10, spark) == 1
-    # huge group counts degrade to the session default, never beyond
-    assert merge_partitions(10**9, 10, spark) == sp
-
-
-def test_topk_num_partitions_identical_results(spark):
-    from scalablevectorsearch_spark.operators.topk import topk_per_group
-
-    rng = np.random.RandomState(7)
-    rows = [
-        (int(i % 17), float(rng.randint(0, 50)), int(i)) for i in range(500)
-    ]
-    df = spark.createDataFrame(rows, "g long, v double, i long")
-    base = sorted(
-        map(tuple, topk_per_group(df, "g", "v", 5, tie_col="i").collect())
-    )
-    for n in (1, 3):
-        got = sorted(
-            map(
-                tuple,
-                topk_per_group(
-                    df, "g", "v", 5, tie_col="i", num_partitions=n
-                ).collect(),
-            )
-        )
-        assert got == base
-
-
-def test_rerank_empty_query_batch(spark):
-    """An empty query set returns an empty frame (r13, ADVICE: np.stack
-    raised ValueError where the old Catalyst join path was empty).
-    Exercised on _rerank_reconstruction directly — inside lvq_knn the
-    upstream flat_knn raises its documented 'empty query batch' first."""
-    from scalablevectorsearch_spark.operators.lvq import _rerank_reconstruction
-
-    cands = spark.createDataFrame([], "qid long, neighbor_id long")
-    recon = spark.createDataFrame(
-        [(0, [1.0, 2.0])], "neighbor_id long, __bv array<double>"
-    )
-    empty_q = spark.createDataFrame([], "qid long, vector array<double>")
-    out = _rerank_reconstruction(cands, recon, empty_q, 3, "l2", 4)
-    assert out.count() == 0
-    assert set(out.columns) >= {"qid", "neighbor_id", "distance", "rank"}
