@@ -389,8 +389,8 @@ def run_suite(spark, base, docs, queries, n) -> dict[str, float]:
         # document and the extra flagged ids are exactly the near-dups
         # the following anti-join has already removed, so the final
         # kept set — and the timed aggregate — is IDENTICAL (asserted
-        # bit-for-bit old-vs-new at sf0.01 and sf0.1,
-        # tools/composite_ab.py). Same stages, same final answer; the
+        # bit-for-bit old-vs-new at sf0.01 and sf0.1, OPTIMIZATION_r13.md
+        # composite section). Same stages, same final answer; the
         # measured win is the collapsed decontaminate subtree (its
         # corpus branch no longer re-embeds the near-dup anti-join
         # chain): composite 2.0s -> 1.2s warm isolated min-of-5.

@@ -5,8 +5,10 @@ Run: python examples/example_pipeline.py [sf_dir]
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 

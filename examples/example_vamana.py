@@ -6,8 +6,10 @@ Run: python examples/example_vamana.py [sf_dir]
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -53,8 +55,8 @@ def main() -> None:
     print(f"calibrated window={cal.search_window_size} recall={cal.recall:.4f}")
 
     # 4. persist + reload
-    save_vamana(index, "/root/repo/_artifacts/example_vamana")
-    loaded = load_vamana(spark, "/root/repo/_artifacts/example_vamana")
+    save_vamana(index, str(ROOT / "_artifacts/example_vamana"))
+    loaded = load_vamana(spark, str(ROOT / "_artifacts/example_vamana"))
     again = vamana_search(loaded, queries, k=10, search_window_size=30).count()
     print(f"reloaded index search rows: {again}")
 

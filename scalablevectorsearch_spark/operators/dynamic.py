@@ -43,6 +43,7 @@ from scalablevectorsearch_spark.operators.vamana import (
     vamana_search,
 )
 from scalablevectorsearch_spark.pins import Pins
+from scalablevectorsearch_spark.placement import by_key
 
 
 # ------------------------------------------------------------ dynamic flat
@@ -329,14 +330,15 @@ def _next_generation(
     """Materialize the generation that supersedes ``dyn`` (add_points
     and consolidate) and hand it ``dyn``'s owners.
 
-    The graph and layout are pinned hash-partitioned on shard_id — the
-    Spark analog of the reference's in-place ``graph_.replace_node``:
-    without it every downstream search re-runs the shard rebuild, and
-    the InMemoryRelation carries hashpartitioning(shard_id), so searches
-    cogroup off it exchange-free. Every ``_CKPT_EVERY``-th generation an
-    eager localCheckpoint first cuts the lineage: each mutation embeds
-    the previous graph's plan at least twice, so an uncut chain doubles
-    the logical plan per mutation (measured blowing past Catalyst's
+    The graph and layout are pinned partitioned by shard_id
+    (``placement.by_key``) — the Spark analog of the reference's in-place
+    ``graph_.replace_node``: without it every downstream search re-runs
+    the shard rebuild, and the InMemoryRelation carries that
+    partitioning, so searches cogroup off it exchange-free. Every
+    ``_CKPT_EVERY``-th generation an eager localCheckpoint first cuts
+    the lineage: each mutation embeds the previous graph's plan at least
+    twice, so an uncut chain doubles the logical plan per mutation
+    (measured blowing past Catalyst's
     plan-string cap ~15 batches into a maintenance loop). The cut alone
     is not enough — a LogicalRDD reports unknown partitioning, so every
     post-mutation search would re-shuffle it — hence checkpoint THEN
@@ -349,8 +351,6 @@ def _next_generation(
     storage periodically instead of chaining forever."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from scalablevectorsearch_spark.operators.vamana import _by_shard
-
     idx = dyn.index
     ckpt = dyn.gens_since_ckpt + 1 >= _CKPT_EVERY
     with Pins() as pins, Pins() as cut:
@@ -358,7 +358,7 @@ def _next_generation(
         def pin(df):
             if ckpt:
                 df = cut.checkpoint(df)
-            pinned = pins.persist(_by_shard(df, n_keys=idx.n_shards))
+            pinned = pins.persist(by_key(df, "shard_id", idx.n_shards))
             pinned.count()
             return pinned
 
@@ -402,7 +402,6 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
 
     from scalablevectorsearch_spark.operators.vamana import (
         GRAPH_SCHEMA,
-        _by_shard,
         _decode_adjacency,
     )
     from scalablevectorsearch_spark.operators.vamana_local import (
@@ -575,9 +574,9 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
         )
 
     linked = (
-        _by_shard(vside, n_keys=idx.n_shards)
+        by_key(vside, "shard_id", idx.n_shards)
         .groupBy("shard_id")
-        .cogroup(_by_shard(gside, n_keys=idx.n_shards).groupBy("shard_id"))
+        .cogroup(by_key(gside, "shard_id", idx.n_shards).groupBy("shard_id"))
         .applyInPandas(link_fn, GRAPH_SCHEMA)
     )
     # overlap the collision-count read with the pin jobs (§2.6); a
@@ -719,7 +718,6 @@ def consolidate(dyn: DynamicVamana) -> DynamicVamana:
 
     from scalablevectorsearch_spark.operators.vamana import (
         GRAPH_SCHEMA,
-        _by_shard,
         _decode_adjacency,
     )
     from scalablevectorsearch_spark.operators.vamana_local import consolidate_graph
@@ -800,7 +798,7 @@ def consolidate(dyn: DynamicVamana) -> DynamicVamana:
     vside = idx.layout.filter(F.col("shard_id").isin(touched))
     if large:
         # the deleted mask reaches the kernel as a joined flag column —
-        # the wave never lands on the driver ( _by_shard repartitions
+        # the wave never lands on the driver (by_key repartitions
         # vside next, so the join shape doesn't disturb the cogroup)
         vside = vside.join(
             dyn.tomb_df.select(
@@ -811,9 +809,9 @@ def consolidate(dyn: DynamicVamana) -> DynamicVamana:
         ).withColumn("__del", F.coalesce(F.col("__del"), F.lit(False)))
     gside = idx.graph.filter(F.col("shard_id").isin(touched))
     repaired = (
-        _by_shard(vside, n_keys=idx.n_shards)
+        by_key(vside, "shard_id", idx.n_shards)
         .groupBy("shard_id")
-        .cogroup(_by_shard(gside, n_keys=idx.n_shards).groupBy("shard_id"))
+        .cogroup(by_key(gside, "shard_id", idx.n_shards).groupBy("shard_id"))
         .applyInPandas(repair_fn, GRAPH_SCHEMA)
     )
     if large:
@@ -921,15 +919,14 @@ def compact_index(index: VamanaIndex) -> tuple[VamanaIndex, DataFrame]:
     (compacted_index, mapping) with mapping = (old_id, new_id)."""
     from pyspark.storagelevel import StorageLevel
 
-    from scalablevectorsearch_spark.operators.vamana import _by_shard
-
     new_base, new_graph, mapping = compact(index.base, index.graph, index.id_col)
     new_layout = None
     if index.layout is not None:
-        new_layout = _by_shard(
+        new_layout = by_key(
             index.layout.join(mapping, index.layout["__id"] == mapping["old_id"])
             .select("shard_id", F.col("new_id").alias("__id"), "__vec"),
-            n_keys=index.n_shards,
+            "shard_id",
+            index.n_shards,
         ).persist(StorageLevel.MEMORY_AND_DISK)
     return (
         replace(

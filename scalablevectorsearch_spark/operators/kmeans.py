@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StructField, StructType
 
+from scalablevectorsearch_spark.placement import by_key
+
 PARTIAL_SCHEMA = StructType(
     [
         StructField("cluster_id", IntegerType()),
@@ -362,12 +364,11 @@ def train_hierarchical_kmeans(
             }
         )
 
-    # explicit REPARTITION_BY_NUM: per-parent Lloyd is compute-heavy but
-    # byte-light, and AQE would otherwise coalesce the exchange to one
-    # task, serializing the child builds (see vamana._by_shard)
-    sp = int(members.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # per-parent Lloyd is compute-heavy but byte-light: by_key gives
+    # each parent its own task instead of AQE coalescing the exchange
+    # to one task that runs the child builds in sequence
     children = (
-        members.repartition(sp, "parent_cid")
+        by_key(members, "parent_cid", n_parents)
         .groupBy("parent_cid")
         .applyInPandas(child_fn, HIER_SCHEMA)
     )

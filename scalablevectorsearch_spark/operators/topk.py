@@ -36,8 +36,8 @@ def topk_per_group(
     ``num_partitions``: optional explicit partition count for the merge
     exchange (r13, guide §2.2/§2.4): callers that KNOW the group count
     (the search operators hold the collected query batch) size the
-    shuffle from the data — ``merge_partitions(n_groups, k)`` — instead
-    of inheriting ``spark.sql.shuffle.partitions``. The window then
+    shuffle from the data — ``merge_partitions(n_groups, k, spark)`` —
+    instead of inheriting ``spark.sql.shuffle.partitions``. The window then
     reuses that exchange (same clustering key), and when the merge fits
     ONE partition a following global aggregate (the bench's ``count()``)
     needs no exchange of its own — one fewer stage/job per search. Rows
@@ -54,7 +54,7 @@ def topk_per_group(
     )
 
 
-def merge_partitions(n_groups: int, k: int, spark=None) -> int:
+def merge_partitions(n_groups: int, k: int, spark) -> int:
     """Data-derived partition count for a top-k merge whose OUTPUT is
     ``n_groups * k`` rows (~tens of bytes each): ~100k output rows per
     partition, never more than the session's shuffle-partition default
@@ -62,12 +62,7 @@ def merge_partitions(n_groups: int, k: int, spark=None) -> int:
     Scale-adaptive by construction — derived from the query batch size,
     not from the local core count."""
     n = max(1, -(-n_groups * max(k, 1) // 100_000))
-    if spark is not None:
-        try:
-            n = min(n, int(spark.conf.get("spark.sql.shuffle.partitions")))
-        except Exception:
-            pass
-    return n
+    return min(n, int(spark.conf.get("spark.sql.shuffle.partitions")))
 
 
 def rank_candidates(cands: DataFrame, n_queries: int, k: int, maximize: bool) -> DataFrame:

@@ -51,6 +51,7 @@ from scalablevectorsearch_spark.operators.vamana_local import (
     search_graph,
 )
 from scalablevectorsearch_spark.pins import Pins
+from scalablevectorsearch_spark.placement import by_key
 
 GRAPH_SCHEMA = "shard_id int, src long, neighbors array<long>, is_entry boolean"
 
@@ -108,92 +109,6 @@ def _decode_adjacency(
     return graph, entry
 
 
-def _murmur3_fmix(h: int, length: int) -> int:
-    h ^= length
-    h ^= h >> 16
-    h = (h * 0x85EBCA6B) & 0xFFFFFFFF
-    h ^= h >> 13
-    h = (h * 0xC2B2AE35) & 0xFFFFFFFF
-    return h ^ (h >> 16)
-
-
-def _murmur3_mixk1(k: int) -> int:
-    k = (k * 0xCC9E2D51) & 0xFFFFFFFF
-    k = ((k << 15) | (k >> 17)) & 0xFFFFFFFF
-    return (k * 0x1B873593) & 0xFFFFFFFF
-
-
-def _murmur3_mixh1(h: int, k: int) -> int:
-    h ^= k
-    h = ((h << 13) | (h >> 19)) & 0xFFFFFFFF
-    return (h * 5 + 0xE6546B64) & 0xFFFFFFFF
-
-
-def _spark_hash(x: int, is_long: bool, seed: int = 42) -> int:
-    """Spark's Murmur3Hash of an INT/BIGINT value (seed 42) — verified
-    equal to ``F.hash`` for both types. Driver-side replica so the
-    shard partition count can be chosen WITHOUT running a job."""
-    if is_long:
-        h = _murmur3_mixh1(seed, _murmur3_mixk1(x & 0xFFFFFFFF))
-        h = _murmur3_mixh1(h, _murmur3_mixk1((x >> 32) & 0xFFFFFFFF))
-        h = _murmur3_fmix(h, 8)
-    else:
-        h = _murmur3_fmix(_murmur3_mixh1(seed, _murmur3_mixk1(x & 0xFFFFFFFF)), 4)
-    return h - (1 << 32) if h >= (1 << 31) else h
-
-
-def _collision_free_partitions(n_keys: int, sp: int, is_long: bool) -> int:
-    """Smallest N in [lo, 4*lo], lo = max(sp, n_keys), for which
-    hashpartitioning maps the dense shard-id range 0..n_keys-1
-    injectively (pmod(murmur3(id), N) all distinct); falls back to sp
-    when none exists or n_keys > 4*sp.
-
-    Why (r12 optimization round, guide §2.5 skew): with K shard groups
-    hashed into sp partitions, two groups share a reduce partition with
-    probability 1 - prod(1 - i/sp) — ~60% at K=8/sp=32 — and the two
-    per-shard kernels then run SEQUENTIALLY in one task, doubling the
-    stage wall. The shard ids are dense ints, so a driver-side scan of
-    the exact hash function finds a nearby N with zero collisions (e.g.
-    33 for K=8). With more shards than sp (K=8 at sp=4 gave 4/3/1/0
-    shards per partition) the scan starts at K: one shard per task, the
-    tasks queue for cores instead of one task running four builds in
-    sequence (N=22 for K=8). Identical results either way — only task
-    placement changes."""
-    if n_keys > 4 * sp:
-        return sp
-    hashes = [_spark_hash(i, is_long) for i in range(n_keys)]
-    lo = max(sp, n_keys)
-    for n in range(lo, 4 * lo + 1):
-        bins: set[int] = set()
-        for h in hashes:
-            if h % n in bins:
-                break
-            bins.add(h % n)
-        else:
-            return n
-    return sp
-
-
-def _by_shard(df: DataFrame, n_keys: int | None = None) -> DataFrame:
-    """Explicit hash repartition on shard_id ahead of a per-shard
-    kernel. AQE coalesces shuffles by BYTES, and a shard's graph
-    build/search is compute-heavy but byte-light — left to AQE, every
-    shard group lands in one reduce partition and the kernels run
-    sequentially. REPARTITION_BY_NUM shuffles are exempt from AQE
-    coalescing, and the downstream groupBy/cogroup reuses the exchange
-    (hashpartitioning(shard_id, N) satisfies its distribution), so the
-    per-shard tasks actually run in parallel. N = shuffle.partitions,
-    the cluster-sized knob — nudged to the nearest collision-free count
-    when the caller passes the (small) shard-id key count
-    (see _collision_free_partitions)."""
-    sp = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    n = sp
-    if n_keys is not None and n_keys > 0:
-        is_long = dict(df.dtypes).get("shard_id") == "bigint"
-        n = _collision_free_partitions(int(n_keys), sp, is_long)
-    return df.repartition(n, "shard_id")
-
-
 @dataclass
 class VamanaIndex:
     graph: DataFrame  # (shard_id, src, neighbors, is_entry), global ids
@@ -211,11 +126,12 @@ class VamanaIndex:
     #: searches dedup by (qid, neighbor_id) before the merge
     closure_bp: int | None = None
     #: the index's OWN data layout: (shard_id, __id, __vec), persisted
-    #: hash-partitioned on shard_id. The reference's index materializes
-    #: a reordered copy of the data (vamana/index.h data_ member); the
-    #: Spark analog is this persisted shard-partitioned table — without
-    #: it every search batch would re-shuffle the full base to co-locate
-    #: shards, a per-query-batch full-base shuffle at 100 TB.
+    #: partitioned by shard_id (placement.by_key). The reference's index
+    #: materializes a reordered copy of the data (vamana/index.h data_
+    #: member); the Spark analog is this persisted shard-partitioned
+    #: table — without it every search batch would re-shuffle the full
+    #: base to co-locate shards, a per-query-batch full-base shuffle at
+    #: 100 TB.
     layout: DataFrame | None = None
     #: the storage codec (operators.codec: SQ / LVQ / LeanVec) when the
     #: index holds compressed vectors — the reference's compressed
@@ -444,7 +360,7 @@ def vamana_build(
     # the index's data layout: stamp + one co-locating shuffle, persisted
     # so build AND every later search read the shard-partitioned copy
     # instead of re-shuffling the base (index.h's materialized data_)
-    layout = _by_shard(
+    layout = by_key(
         _sharded(
             base, n_shards, id_col, shard_model, vec_col, closure_bp,
             vec_decode, stamp_hierarchical=stamp_hier,
@@ -453,7 +369,8 @@ def vamana_build(
             F.col(id_col).cast("long").alias("__id"),
             F.col(vec_col).alias("__vec"),
         ),
-        n_keys=n_shards,
+        "shard_id",
+        n_shards,
     ).persist(layout_storage or StorageLevel.MEMORY_AND_DISK)
     graph = layout.groupBy("shard_id").applyInPandas(build_fn, GRAPH_SCHEMA)
     return VamanaIndex(
@@ -558,7 +475,7 @@ def closure_link_replicas(index: VamanaIndex, closure_bp: int) -> VamanaIndex:
             }
         )
 
-    layout = _by_shard(
+    layout = by_key(
         _sharded(
             index.base, index.n_shards, index.id_col, index.shard_model,
             index.vec_col, closure_bp, vec_decode,
@@ -568,13 +485,12 @@ def closure_link_replicas(index: VamanaIndex, closure_bp: int) -> VamanaIndex:
             F.col(index.id_col).cast("long").alias("__id"),
             F.col(index.vec_col).alias("__vec"),
         ),
-        n_keys=index.n_shards,
+        "shard_id",
+        index.n_shards,
     ).persist(StorageLevel.MEMORY_AND_DISK)
     graph = (
         layout.groupBy("shard_id")
-        .cogroup(
-            _by_shard(index.graph, n_keys=index.n_shards).groupBy("shard_id")
-        )
+        .cogroup(by_key(index.graph, "shard_id", index.n_shards).groupBy("shard_id"))
         .applyInPandas(link_fn, GRAPH_SCHEMA)
     )
     return VamanaIndex(
@@ -893,7 +809,7 @@ def _filtered_scan(index: VamanaIndex, where) -> DataFrame:
     as a __keep flag at the parquet scan — the metadata-free persisted
     layout cannot carry the predicate's columns."""
     w = F.expr(where) if isinstance(where, str) else where
-    return _by_shard(
+    return by_key(
         _sharded(
             index.base, index.n_shards, index.id_col, index.shard_model,
             index.vec_col, index.closure_bp, index.vec_decode,
@@ -904,7 +820,8 @@ def _filtered_scan(index: VamanaIndex, where) -> DataFrame:
             F.col(index.vec_col).alias("__vec"),
             w.cast("boolean").alias("__keep"),
         ),
-        n_keys=index.n_shards,
+        "shard_id",
+        index.n_shards,
     )
 
 
@@ -1079,7 +996,7 @@ def _vamana_search_block(
         # persisted shard-partitioned layout: no base shuffle at search
         scan = index.layout
     else:
-        scan = _by_shard(
+        scan = by_key(
             _sharded(
                 index.base, index.n_shards, index.id_col, index.shard_model,
                 index.vec_col, index.closure_bp, index.vec_decode,
@@ -1089,8 +1006,13 @@ def _vamana_search_block(
                 F.col(index.id_col).cast("long").alias("__id"),
                 F.col(index.vec_col).alias("__vec"),
             ),
-            n_keys=index.n_shards,
+            "shard_id",
+            index.n_shards,
         )
+    # placed before the probe filter below, so by_key's placement check
+    # reads the persisted graph's cached plan (the planner pushes the
+    # filter under the exchange)
+    graph = by_key(index.graph, "shard_id", index.n_shards)
     if exclude_df is not None:
         if excl is not None:
             raise ValueError("pass exclude_ids or exclude_df, not both")
@@ -1103,7 +1025,6 @@ def _vamana_search_block(
         scan = scan.join(F.broadcast(flags), "__id", "left").withColumn(
             "__del", F.coalesce(F.col("__del"), F.lit(False))
         )
-    graph = index.graph
     if probe_of is not None:
         # unprobed shards never reach the kernel (pruning on a persisted
         # shard-partitioned layout)
@@ -1112,7 +1033,7 @@ def _vamana_search_block(
         graph = graph.filter(F.col("shard_id").isin(probed))
     cand = (
         scan.groupBy("shard_id")
-        .cogroup(_by_shard(graph, n_keys=index.n_shards).groupBy("shard_id"))
+        .cogroup(graph.groupBy("shard_id"))
         .applyInPandas(search_fn, RESULT_SCHEMA)
     )
     if index.closure_bp is not None:

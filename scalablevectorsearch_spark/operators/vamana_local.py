@@ -73,7 +73,8 @@ class VamanaParams:
     #: at ``window_size``. None = full window (reference parity — the
     #: DEFAULT, and what tests/test_golden_curve.py gates).
     #: Measured on the example_vamana golden fixture (10k x 128d,
-    #: degree 64, window 128; tools/pass1_window_ab.py): narrowing
+    #: degree 64, window 128; BENCH_HISTORY pass2-fraction-ab row):
+    #: narrowing
     #: pass 1 HOLDS every published curve point inside the example's
     #: +-0.05 (w=64 and even w=32 measure marginally ABOVE the full
     #: schedule at sws>=20) but saves little wall — 1%/7% at w=64/32 —
@@ -92,8 +93,8 @@ class VamanaParams:
     #: searched a near-complete graph in pass 1, so re-linking them
     #: buys almost nothing. 1.0 = the reference's full re-sweep
     #: (index.h:428-429). Measured on the example_vamana golden
-    #: fixture (tools/pass1_window_ab.py, 10k x 128d, degree 64,
-    #: window 128): with the r11 expanded-only tracker fix in place,
+    #: fixture (BENCH_HISTORY pass2-fraction-ab row, 10k x 128d,
+    #: degree 64, window 128): with the r11 expanded-only tracker fix in place,
     #: even build_passes=1 sits inside the example's +-0.05 of the
     #: published curve, and "single-pass schedule + re-link the
     #: earliest 30%" (this default) measures WITHIN 0.003 of the full
@@ -991,7 +992,8 @@ def _link_nodes(
 #: (ceil(n/4096) above 164k rows) — at routed-cell shard sizes
 #: (250-500 rows) that means 7-13-node rounds whose lockstep kernels
 #: are pure numpy-dispatch overhead: measured 0.81s -> 0.44s at n=250
-#: and 1.75s -> 0.97s at n=500 (tools/batch_schedule_ab.py). The ramp
+#: and 1.75s -> 0.97s at n=500 (BENCH_HISTORY build-batch-ramp-ab
+#: row). The ramp
 #: doubles from BUILD_BATCH_MIN (early rounds stay small — CLOSER to
 #: the reference's strictly sequential insert order than fixed-40 was,
 #: since the opening rounds see the emptiest graph) up to a cap that
@@ -1001,8 +1003,8 @@ def _link_nodes(
 #: Quality gate: the example_vamana golden curve measures
 #: 0.5322/0.7169/0.8115/0.8721 under the ramp vs 0.5326/0.7128/
 #: 0.8091/0.8712 under fixed-40 — equal-or-better at every window,
-#: inside the example's ±0.05 (tools/batch_schedule_ab.py evidence
-#: row in BENCH_HISTORY; tests/test_golden_curve.py still gates it).
+#: inside the example's ±0.05 (BENCH_HISTORY build-batch-ramp-ab
+#: row; tests/test_golden_curve.py still gates it).
 BUILD_BATCH_MIN = 8
 BUILD_BATCH_CAP = 256
 
@@ -1163,7 +1165,7 @@ def build_graph(
         # params.alpha), not the reference two-pass's 1.0-alpha
         # scaffolding — measured: 1.0-alpha scaffolding left the
         # un-relinked 70% BELOW the single-pass curve
-        # (tools/pass1_window_ab.py two_pass_frac* vs single_pass)
+        # (BENCH_HISTORY pass2-fraction-ab row: frac* vs single_pass)
         pass_alphas = [params.alpha] * passes
     # non-final passes may run a narrower search window (scaffolding
     # pass — see VamanaParams.build_pass1_window); the LAST pass always

@@ -49,7 +49,7 @@ def word_ngrams_over(toks: F.Column, n: int) -> F.Column:
     captures a non-attribute subexpression RE-EVALUATES it per element
     — per-gram re-tokenization turned the 2-gram build into ~100
     splits/doc, measured 11x slower end-to-end at 1M docs
-    (tools/profile_repetition.py). Grams are built with an unrolled
+    (COVERAGE.md intra-doc repetition row). Grams are built with an unrolled
     ``concat(element_at(i), ' ', ..., element_at(i+n-1))`` — O(1) array
     lookups per gram — instead of ``array_join(slice(...))``, which
     materializes a throwaway sub-array per gram (measured 6x slower)."""

@@ -40,10 +40,10 @@ def gram_expr(n: int) -> str:
     ``concat(element_at(...), chr(32), ...)`` — O(1) array lookups per
     gram — instead of ``array_join(slice(...))``, which materializes a
     throwaway sub-array per gram (measured ~6x slower on the gram
-    build, tools/profile_repetition.py). Documents shorter than ``n``
-    tokens keep the slice path (one truncated gram of the full token
-    run — the established hashing convention), so results are
-    bit-identical to the slice formulation and no oracle changes."""
+    build; COVERAGE.md intra-doc repetition row). Documents shorter
+    than ``n`` tokens keep the slice path (one truncated gram of the
+    full token run — the established hashing convention), so results
+    are bit-identical to the slice formulation and no oracle changes."""
     parts = ["element_at(__toks, i)"]
     for j in range(1, n):
         parts.append("chr(32)")
@@ -281,8 +281,8 @@ def dedup_minhash(
     compute and 2x band-shuffle volume; the exact-Jaccard verify grows
     only by the extra candidates.
 
-    Zero-miss operating point (tools/dedup_ab.py, 2M-doc planted-chain
-    A/B, r8): ``n_perm=32, n_bands=8, n_passes=1`` and the default
+    Zero-miss operating point (BENCH_HISTORY dedup_ab and
+    dedup_ab_confirm rows, 2M-doc planted-chain A/B, r8): ``n_perm=32, n_bands=8, n_passes=1`` and the default
     ``n_perm=16, n_bands=4, n_passes=2`` are COST-EQUIVALENT — same
     32-hash signature, same 8-band shuffle volume, same (1 - s^4)^8
     miss (~3e-8 at 0.97), and they mined the IDENTICAL 59,406 pairs

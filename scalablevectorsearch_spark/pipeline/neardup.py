@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from scalablevectorsearch_spark.functions.distances import ip_expr, norm_expr
 from scalablevectorsearch_spark.operators.kmeans import stamp_clusters, train_kmeans
+from scalablevectorsearch_spark.placement import by_key
 
 
 def _e4(c: F.Column) -> F.Column:
@@ -116,17 +117,16 @@ def embedding_neardup_clustered(
     if max_cluster_rows is not None:
         side = _subsplit_oversized(side, max_cluster_rows, n_iters)
         a_cl = a_cl & (F.col("a.__sub") == F.col("b.__sub"))
-    # explicit hash repartition on the bucket key (r12 optimization
-    # round): the within-cell pair scoring is O(|c|^2) COMPUTE per cell
-    # but only O(|c|) bytes, so AQE's byte-based coalescing collapses
-    # the byte-light shuffle into one partition and the whole pair
-    # stage runs on a single core (the _by_shard lesson — guide §2.5:
-    # partition count must follow compute, not bytes, when the two
-    # diverge). REPARTITION_BY_NUM is exempt from AQE coalescing and
-    # the self-join reuses the exchange; measured 2x on the pair stage,
-    # identical pair set.
-    sp = int(side.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    side = side.repartition(sp, "cluster_id")
+    # explicit placement on the bucket key (r12 optimization round):
+    # the within-cell pair scoring is O(|c|^2) COMPUTE per cell but only
+    # O(|c|) bytes, so AQE's byte-based coalescing collapses the
+    # byte-light shuffle into one partition and the whole pair stage
+    # runs on a single core (guide §2.5: partition count must follow
+    # compute, not bytes, when the two diverge). by_key's exchange is
+    # exempt from AQE coalescing and the self-join reuses it, in both
+    # its cluster_id and (cluster_id, __sub) forms; measured 2x on the
+    # pair stage, identical pair set.
+    side = by_key(side, "cluster_id", n_clusters)
     out = _pairs_with_cosine(side, a_cl)
     return out.filter(_e4(F.col("cosine")) >= t_e4).select("id_a", "id_b", "cosine")
 

@@ -56,18 +56,8 @@ def _toks_sql(text_col: str) -> str:
     return f"split(trim({_qident(text_col)}), '\\\\s+')"
 
 
-def _in_set(tok: F.Column, words: list[str]) -> F.Column:
-    return tok.isin(*words)
-
-
 def _in_set_sql(words: list[str]) -> str:
     return "(" + ", ".join(_qlit(w) for w in words) + ")"
-
-
-def _count_in(toks: F.Column, words: list[str]) -> F.Column:
-    # NB: the lambda must be unary — F.filter treats a 2-arg lambda as
-    # (element, index)
-    return F.size(F.filter(toks, lambda t: _in_set(t, words)))
 
 
 # r12 (guide §4, the JVM↔Python boundary on the DRIVER): the operators

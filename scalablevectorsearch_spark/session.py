@@ -32,7 +32,7 @@ def get_spark(
     # inside a Python worker that already owns exactly one task slot, so
     # a multi-threaded BLAS (numpy's bundled OpenBLAS spawns 2) only
     # oversubscribes the executor cores — measured ~5-10% wall on 32-way
-    # concurrent shard builds (tools/profile_prune.py experiments).
+    # concurrent shard builds.
     # setdefault: an explicit user override wins. Must be set before the
     # JVM forks its python workers (they inherit this environment).
     os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")

@@ -36,6 +36,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scalablevectorsearch_spark.placement import by_key
+
 MANIFEST_NAME = "manifest.json"
 BACKUP_NAME = "manifest.backup.json"
 FORMAT_VERSION = [0, 2, 0]
@@ -359,7 +361,7 @@ def load_vamana(spark: SparkSession, path: str, validate: bool = False):
     # (shard_id, id) assignment table (see save_vamana) — join it back
     # rather than re-deriving the float cutoffs; hash sharding
     # (id mod n_shards) is environment-independent, so re-derive.
-    from scalablevectorsearch_spark.operators.vamana import _by_shard, _sharded
+    from scalablevectorsearch_spark.operators.vamana import _sharded
     from pyspark.storagelevel import StorageLevel
 
     from scalablevectorsearch_spark.operators.kmeans import _resolve_stamp_via
@@ -390,7 +392,7 @@ def load_vamana(spark: SparkSession, path: str, validate: bool = False):
             F.col("id").cast("long").alias("__id"),
             F.col("vector").alias("__vec"),
         )
-    idx.layout = _by_shard(assigned, n_keys=idx.n_shards).persist(
+    idx.layout = by_key(assigned, "shard_id", idx.n_shards).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     return idx

@@ -1,88 +1,15 @@
 """Round-12 optimization invariants: the batch-ramp build's
-reachability guarantee and the collision-free shard partitioning."""
+reachability guarantee."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-import scalablevectorsearch_spark.operators.vamana_local as vl
-from scalablevectorsearch_spark.operators.vamana import (
-    _collision_free_partitions,
-    _spark_hash,
-)
 from scalablevectorsearch_spark.operators.vamana_local import (
     VamanaParams,
     _build_batch_bounds,
     _reachable_mask,
     build_graph,
 )
-
-
-def test_spark_hash_matches_f_hash(spark):
-    """The driver-side Murmur3 replica must equal F.hash for INT and
-    BIGINT inputs (partition selection silently degrades to the plain
-    count if this drifts — catch it loudly instead)."""
-    vals = [0, 1, 7, 11, 31, 12206, -3, 2**31 - 1, -(2**31)]
-    longs = vals + [2**33 + 5, -(2**34) - 1]
-    rows = (
-        spark.createDataFrame([(v,) for v in vals], "v long")
-        .select("v", F.hash(F.col("v").cast("int")).alias("hi"))
-        .collect()
-    )
-    for r in rows:
-        assert _spark_hash(r["v"], is_long=False) == r["hi"], r["v"]
-    rows = (
-        spark.createDataFrame([(v,) for v in longs], "v long")
-        .select("v", F.hash(F.col("v")).alias("hl"))
-        .collect()
-    )
-    for r in rows:
-        assert _spark_hash(r["v"], is_long=True) == r["hl"], r["v"]
-
-
-def test_collision_free_partitions_injective():
-    found_injective = 0
-    for sp in (8, 16, 32, 64):
-        for k in (2, 4, 8, 12, 16):
-            if k > sp:
-                continue
-            n = _collision_free_partitions(k, sp, is_long=False)
-            assert sp <= n <= 4 * sp
-            bins = {_spark_hash(i, is_long=False) % n for i in range(k)}
-            # injective when a count exists in [sp, 4sp]; the graceful
-            # fallback (n == sp) is allowed when the scan found none
-            if len(bins) == k:
-                found_injective += 1
-            else:
-                assert n == sp, (k, sp, n)
-    assert found_injective >= 12  # the scan succeeds for most shapes
-    # more shards than partitions: still one shard per partition
-    # (sp=4 hashed 8 shards 4/3/1/0 into its partitions)
-    n = _collision_free_partitions(8, 4, is_long=False)
-    assert n >= 8
-    assert len({_spark_hash(i, is_long=False) % n for i in range(8)}) == 8
-    # no injective count nearby: the plain cluster-sized count is kept
-    assert _collision_free_partitions(100, 32, is_long=False) == 32
-
-
-def test_layout_one_shard_per_partition(spark, embeddings):
-    """End-to-end: a built index's persisted layout holds at most one
-    shard group per partition (the doubled-up-kernel stage wall is the
-    thing being prevented), and search cogroups stay aligned (exact
-    results — covered by the oracle gates — plus no crash here)."""
-    from scalablevectorsearch_spark.operators.vamana import vamana_build
-
-    base = embeddings.selectExpr("vec_id as id", "embedding as vector")
-    idx = vamana_build(base, VamanaParams(window_size=40), n_shards=8)
-    per_part = (
-        idx.layout.select(F.spark_partition_id().alias("p"), "shard_id")
-        .groupBy("p")
-        .agg(F.countDistinct("shard_id").alias("k"))
-        .agg(F.max("k").alias("m"))
-        .first()["m"]
-    )
-    assert per_part == 1
-    idx.layout.unpersist()
 
 
 def test_build_batch_bounds_shape():

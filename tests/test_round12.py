@@ -115,8 +115,9 @@ def test_fractional_pass2_matches_full_two_pass():
     a re-prune can trade individual edges either way, so strict
     dominance is noise-level, measured ±0.003 across batch schedules)
     and the full reference schedule (golden-fixture evidence:
-    tools/pass1_window_ab within 0.003 at small windows, above at
-    large; the binding gate is the golden curve's ±0.05)."""
+    BENCH_HISTORY pass2-fraction-ab row, within 0.003 at small
+    windows, above at large; the binding gate is the golden curve's
+    ±0.05)."""
     rng = np.random.RandomState(21)
     X = rng.normal(size=(2000, 32))
     Q = rng.normal(size=(200, 32))

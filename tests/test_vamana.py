@@ -341,3 +341,25 @@ def test_closure_survives_save_load(embeddings, tmp_path):
         map(tuple, vamana_search(loaded, queries, k=5, search_window_size=20).collect())
     )
     assert got == want
+
+
+@pytest.mark.parametrize("n_shards", [8, 16])
+def test_layout_one_shard_per_partition(spark, base, n_shards):
+    """A built index's persisted layout holds exactly one shard group
+    per partition, also with more shards than shuffle partitions (two
+    shards in one task would run their graph builds in sequence)."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        idx = vamana_build(base, VamanaParams(window_size=40), n_shards=n_shards)
+        per_part = (
+            idx.layout.select(F.spark_partition_id().alias("p"), "shard_id")
+            .groupBy("p")
+            .agg(F.countDistinct("shard_id").alias("k"))
+            .collect()
+        )
+        assert len(per_part) == n_shards
+        assert all(r["k"] == 1 for r in per_part)
+        idx.layout.unpersist()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -8,11 +8,13 @@ Usage: python tools/check_oracles.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod
 from scalablevectorsearch_spark.session import get_spark

@@ -16,8 +16,10 @@ import io
 import os
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import __spark_entry__ as entrymod
 from scalablevectorsearch_spark.session import get_spark

@@ -20,8 +20,10 @@ import io
 import re
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 

@@ -27,10 +27,12 @@ evidence run recorded in COVERAGE.md.
 import json
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -106,7 +108,7 @@ line = {
     "nq": NQ,
     "d": D,
 }
-with open("/root/repo/BENCH_HISTORY.jsonl", "a") as f:
+with open(ROOT / "BENCH_HISTORY.jsonl", "a") as f:
     import datetime
 
     line["ts"] = datetime.datetime.now(datetime.timezone.utc).isoformat(

@@ -42,8 +42,10 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from scalablevectorsearch_spark.session import get_spark
 from scalablevectorsearch_spark.operators.flat import flat_knn
@@ -75,7 +77,7 @@ CLOSURE_SWS = 50        # per-shard window for the composed search
 DELETE_FRACTION = 0.10
 
 spark = get_spark("stress")
-out = f"/root/repo/_artifacts/stress{N}"
+out = f"{ROOT}/_artifacts/stress{N}"
 timings: dict[str, float] = {}
 recalls: dict[str, float] = {}
 meta: dict[str, object] = {
@@ -458,7 +460,7 @@ line = {
     "recalls": recalls,
     "meta": meta,
 }
-with open("/root/repo/BENCH_HISTORY.jsonl", "a") as f:
+with open(ROOT / "BENCH_HISTORY.jsonl", "a") as f:
     f.write(json.dumps(line) + "\n")
 print(json.dumps(line), flush=True)
 

@@ -60,10 +60,12 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -118,7 +120,7 @@ STAMP_AB_ROWS = 2_000_000
 # the tail at one wave of ~95 shards and cuts per-task memory 4x.
 _SHUF = int(os.environ.get("STRESS_SHUFFLE_PARTS", "128"))
 spark = get_spark("stress-100m", shuffle_partitions=_SHUF)
-out = f"/root/repo/_artifacts/stress100m_{N}"
+out = f"{ROOT}/_artifacts/stress100m_{N}"
 timings: dict[str, float] = {}
 recalls: dict[str, float] = {}
 meta: dict[str, object] = {
@@ -189,7 +191,7 @@ def record(tier):
         "stress": N, "tier": f"100m-{tier}", "timings": timings,
         "recalls": recalls, "meta": meta, "load_avg": loads,
     }
-    with open("/root/repo/BENCH_HISTORY.jsonl", "a") as f:
+    with open(ROOT / "BENCH_HISTORY.jsonl", "a") as f:
         f.write(json.dumps(line) + "\n")
     print(json.dumps(line), flush=True)
 

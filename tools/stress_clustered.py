@@ -27,10 +27,12 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -65,7 +67,7 @@ P = VamanaParams(graph_max_degree=32, window_size=100, build_dtype="float32")
 SWS_LADDER = (50, 100, 150)
 
 spark = get_spark("stress-clustered")
-out = f"/root/repo/_artifacts/stress_clustered_{N}"
+out = f"{ROOT}/_artifacts/stress_clustered_{N}"
 timings: dict[str, float] = {}
 recalls: dict[str, float] = {}
 meta: dict[str, object] = {
@@ -113,7 +115,7 @@ def record(tier):
         "stress": N, "tier": f"clustered-{tier}", "timings": timings,
         "recalls": recalls, "meta": meta, "load_avg": loads,
     }
-    with open("/root/repo/BENCH_HISTORY.jsonl", "a") as f:
+    with open(ROOT / "BENCH_HISTORY.jsonl", "a") as f:
         f.write(json.dumps(line) + "\n")
     print(json.dumps(line), flush=True)
 

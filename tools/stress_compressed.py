@@ -29,8 +29,10 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from scalablevectorsearch_spark.session import get_spark
 from scalablevectorsearch_spark.sources.vecs import generate_test_dataset_distributed
@@ -42,7 +44,7 @@ LV_DIMS = DIM // 2
 LV_RE_K = 10 * K
 
 spark = get_spark("stress-compressed")
-out = f"/root/repo/_artifacts/stress{N}"
+out = f"{ROOT}/_artifacts/stress{N}"
 timings: dict[str, float] = {}
 recalls: dict[str, float] = {}
 meta: dict[str, object] = {
@@ -229,7 +231,7 @@ line = {
     "recalls": recalls,
     "meta": meta,
 }
-with open("/root/repo/BENCH_HISTORY.jsonl", "a") as f:
+with open(ROOT / "BENCH_HISTORY.jsonl", "a") as f:
     f.write(json.dumps(line) + "\n")
 print(json.dumps(line), flush=True)
 

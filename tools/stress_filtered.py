@@ -29,8 +29,10 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 import numpy as np
 
@@ -59,8 +61,8 @@ SWS = 50
 FLOOR_50 = 0.88
 
 spark = get_spark("stress-filtered")
-src = f"/root/repo/_artifacts/stress{N}"
-cache = f"/root/repo/_artifacts/stress_filtered_{N}_idx"
+src = f"{ROOT}/_artifacts/stress{N}"
+cache = f"{ROOT}/_artifacts/stress_filtered_{N}_idx"
 if not os.path.exists(f"{src}/data"):
     raise SystemExit(f"run tools/stress.py {N} first (no {src}/data)")
 
@@ -116,9 +118,11 @@ if os.path.exists(f"{cache}/graph"):
     centroids = np.load(f"{cache}/centroids.npy")
     model = KMeansModel(centroids=centroids, n_iters=2)
     graph = spark.read.parquet(f"{cache}/graph")
-    from scalablevectorsearch_spark.operators.vamana import _by_shard
+    from scalablevectorsearch_spark.placement import by_key
 
-    layout = _by_shard(spark.read.parquet(f"{cache}/layout")).persist()
+    layout = by_key(
+        spark.read.parquet(f"{cache}/layout"), "shard_id", N_SHARDS
+    ).persist()
     index = VamanaIndex(
         graph=graph, base=data, params=P, distance="l2", n_shards=N_SHARDS,
         shard_model=model, layout=layout,
@@ -219,7 +223,7 @@ row = {
     "timings_sec": timings, "recalls": recalls, **meta,
 }
 # record BEFORE asserting — a floor violation must not erase the row
-with open("/root/repo/BENCH_HISTORY.jsonl", "a") as f:
+with open(ROOT / "BENCH_HISTORY.jsonl", "a") as f:
     f.write(json.dumps(row) + "\n")
 print(json.dumps(row), flush=True)
 

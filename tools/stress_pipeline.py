@@ -38,10 +38,12 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -77,7 +79,7 @@ def gen_docs(ids_df):
     )
 
 
-out = f"/root/repo/_artifacts/stress_docs{N}"
+out = f"{ROOT}/_artifacts/stress_docs{N}"
 if not os.path.exists(out):
     timed(
         "generate",
@@ -425,7 +427,7 @@ line = {
     "metrics": metrics,
     "meta": {"vocab": VOCAB, "pack_budget": BUDGET, "simhash_subset": SIMHASH_SUBSET},
 }
-with open("/root/repo/BENCH_HISTORY.jsonl", "a") as f:
+with open(ROOT / "BENCH_HISTORY.jsonl", "a") as f:
     f.write(json.dumps(line) + "\n")
 print(json.dumps(line), flush=True)
 print("STRESS PIPELINE DONE", flush=True)

@@ -24,10 +24,12 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -47,7 +49,7 @@ N_UPSERT, N_DELETE, N_QUERIES, DIM, K = N // 5, N // 20, 2000, 64, 10
 SEED = 23
 
 spark = get_spark("stress-streaming")
-out = f"/root/repo/_artifacts/stress_streaming_{N}"
+out = f"{ROOT}/_artifacts/stress_streaming_{N}"
 shutil.rmtree(out, ignore_errors=True)
 os.makedirs(out)
 timings: dict[str, float] = {}
@@ -436,7 +438,7 @@ line = {
     "drained_hash_equal": (not MAINT_ONLY) or None,  # None = legs 1-2 skipped
     "load_avg": round(os.getloadavg()[0], 1),
 }
-with open("/root/repo/BENCH_HISTORY.jsonl", "a") as f:
+with open(ROOT / "BENCH_HISTORY.jsonl", "a") as f:
     f.write(json.dumps(line) + "\n")
 print(json.dumps(line), flush=True)
 shutil.rmtree(out, ignore_errors=True)

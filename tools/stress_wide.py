@@ -28,10 +28,12 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from scalablevectorsearch_spark.session import get_spark
 
@@ -45,7 +47,7 @@ IVF_CLUSTERS = max(16, N // 4096)
 PROBE_FRACTION = 0.40
 
 spark = get_spark("stress-wide")
-out = f"/root/repo/_artifacts/stress_wide{N}"
+out = f"{ROOT}/_artifacts/stress_wide{N}"
 timings: dict[str, float] = {}
 recalls: dict[str, float] = {}
 meta: dict[str, object] = {
@@ -319,7 +321,7 @@ print("recalls:", json.dumps(recalls), flush=True)
 try:
     import datetime
 
-    with open("/root/repo/BENCH_HISTORY.jsonl", "a") as f:
+    with open(ROOT / "BENCH_HISTORY.jsonl", "a") as f:
         f.write(json.dumps({
             "ts": datetime.datetime.now(datetime.timezone.utc).isoformat(
                 timespec="seconds"
