@@ -15,15 +15,24 @@ Spark shape (bulk-synchronous, scale-first):
    reference keeps deleted slots in an in-memory set,
    dynamic_index.h:617-630 ``status_ == SlotMetadata::Deleted``) —
    between consolidations it is bounded and small by design, so
-   membership checks are pure driver work and search-time exclusion is
-   a broadcast skip-set. The 100 TB base is NEVER shuffled by a
-   mutation: validations are pushed-down ``isin`` filters or broadcast
-   semi-joins, additions are a union, deletes are a filter.
+   tombstone checks are pure driver work and search-time exclusion is
+   a broadcast skip-set.
+ - Membership (does an id exist?) is read from the index's pinned,
+   shard-placed ``layout`` — the analog of the reference's in-memory
+   slot status — never from ``base``, a plan that grows with every
+   mutation. A check is one collect of the layout ids in the batch
+   (a pushed-down ``isin`` or broadcast semi-join), so its cost does
+   not grow with the mutation chain. The base is never read by a
+   mutation: additions are a union, deletes are a filter.
  - ``add_points`` links new points INCREMENTALLY into the touched
    shards' existing graphs (greedy search + alpha-prune + reverse
    edges, dynamic_index.h:631-700) via a cogroup of the persisted
-   layout with the adjacency — per-batch cost O(batch), independent of
-   shard size; untouched shards' adjacency is reused verbatim.
+   layout with the adjacency — the kernel's work is O(batch),
+   independent of shard size; untouched shards' adjacency is reused
+   verbatim. The data movement is not O(batch): pinning a new
+   generation re-partitions EVERY layout and graph row, because a
+   union with a ``repartitionById``-placed frame reports unknown
+   partitioning, so ``by_key`` shuffles the whole union again.
  - ``consolidate`` = filter tombstoned rows + rebuild the shards that
    contained them (graph repair-through-deleted-neighborhoods collapses
    to a shard-local rebuild in the bulk model); ``compact`` = dense id
@@ -202,6 +211,14 @@ def ivf_recluster(dyn: DynamicIVF, n_clusters: int | None = None, n_iters: int =
 _ISIN_MAX = 10_000
 
 
+def _in_layout(layout: DataFrame, ids) -> set:
+    """The ids of ``ids`` present in a pinned ``layout``: one collect of
+    its matching ``__id`` rows, made distinct on the driver (closure
+    replicas put one id in several shards)."""
+    hits = _without_ids(layout.select("__id"), "__id", tuple(sorted(ids)), keep=True)
+    return {r[0] for r in hits.collect()}
+
+
 def _without_ids(df: DataFrame, col: str, ids: tuple, keep: bool = False) -> DataFrame:
     """Filter ``df`` by membership of ``col`` in a driver-side id set,
     without ever shuffling ``df``: small sets become a pushed-down
@@ -229,9 +246,9 @@ class DynamicVamana:
 
     Small delete sets are DRIVER-RESIDENT (``tomb_ids`` — exact parity
     with the reference, which tracks deleted slots in an in-memory
-    status vector, dynamic_index.h:617-630): membership is driver work,
-    search exclusion ships in the query broadcast, and no Spark job
-    ever shuffles the base because of a delete. A delete wave larger
+    status vector, dynamic_index.h:617-630): tombstone checks are
+    driver work, search exclusion ships in the query broadcast, and no
+    Spark job ever reads the base because of a delete. A delete wave larger
     than the driver threshold flips the representation to ``tomb_df``,
     an id DataFrame that is anti-joined / flag-stamped executor-side —
     the wave is never collect()ed. Exactly one representation is active
@@ -325,7 +342,7 @@ _CKPT_EVERY = 4
 
 def _next_generation(
     dyn: DynamicVamana, graph_df: DataFrame, layout_df: DataFrame,
-    base: DataFrame, validate=None, **tombstones,
+    base: DataFrame, **tombstones,
 ) -> DynamicVamana:
     """Materialize the generation that supersedes ``dyn`` (add_points
     and consolidate) and hand it ``dyn``'s owners.
@@ -344,11 +361,11 @@ def _next_generation(
     post-mutation search would re-shuffle it — hence checkpoint THEN
     re-partition and persist. The two pin jobs are independent and run
     concurrently (the scheduler back-fills one job's straggler tail
-    with the other's tasks). ``validate`` runs once both are pinned; if
-    it or a pin job raises, the new pins are released and ``dyn`` keeps
-    its owners. On a real cluster executor loss invalidates local
-    checkpoints, so a maintenance service should save the index to
-    storage periodically instead of chaining forever."""
+    with the other's tasks). If a pin job raises, the new pins are
+    released and ``dyn`` keeps its owners. On a real cluster executor
+    loss invalidates local checkpoints, so a maintenance service should
+    save the index to storage periodically instead of chaining
+    forever."""
     from concurrent.futures import ThreadPoolExecutor
 
     idx = dyn.index
@@ -365,8 +382,6 @@ def _next_generation(
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [pool.submit(pin, df) for df in (graph_df, layout_df)]
         graph, layout = [f.result() for f in futs]
-        if validate is not None:
-            validate()
         # fresh cal_cache: the cached groundtruth / pool / base counts
         # were computed against the PRE-mutation base
         nxt = dyn._moved(
@@ -389,11 +404,13 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
     (dynamic_index.h:640-656 id validation). New points are linked
     INCREMENTALLY into the touched shards' existing graphs — greedy
     search + alpha-prune + reverse edges, the reference's insert path
-    (dynamic_index.h:631-700) — so per-batch cost is O(batch · window ·
-    degree · d), not O(shard size); untouched shards' rows are reused
-    verbatim and the base table is never shuffled (insert batches are
-    broadcast-sized by contract — bulk loads go through
-    ``vamana_build``). Reinserting a tombstoned id revives the slot with
+    (dynamic_index.h:631-700) — so the link kernel's work is O(batch ·
+    window · degree · d), not O(shard size), and untouched shards'
+    adjacency is reused verbatim (insert batches are broadcast-sized by
+    contract — bulk loads go through ``vamana_build``). Ids are checked
+    against the pinned layout, never the base. Pinning the new
+    generation still re-partitions every layout and graph row (see the
+    module docstring). Reinserting a tombstoned id revives the slot with
     the new vector (reuse_empty semantics): its old adjacency row is
     dropped and it re-links as a new point; edges INTO the slot remain
     until consolidate, now pointing at the new vector — the reference's
@@ -436,10 +453,6 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
             F.col(id_col).cast("long").alias("__id"),
             F.col(vec_col).alias("__vec"),
         )
-        stats = new_layout.select(
-            F.collect_set("shard_id").alias("shards"),
-            F.collect_set("__id").alias("ids"),
-        ).first()
     else:
         new_layout = new_rows.select(
             F.pmod(F.col(id_col).cast("long"), F.lit(idx.n_shards))
@@ -448,64 +461,29 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
             F.col(id_col).cast("long").alias("__id"),
             F.col(vec_col).alias("__vec"),
         )
-        # one job over the (small) insert batch: touched shards + new ids
-        stats = new_layout.select(
-            F.collect_set("shard_id").alias("shards"),
-            F.collect_set("__id").alias("ids"),
-        ).first()
-    touched = sorted(stats["shards"])
-    new_ids = set(stats["ids"])
-    tomb_df_after = None
+    # one collect over the (small) insert batch: touched shards + new ids
+    pairs = new_layout.select("shard_id", "__id").collect()
+    touched = sorted({r[0] for r in pairs})
+    new_ids = {r[1] for r in pairs}
     if dyn.tomb_df is not None:
-        # large-wave tombstones: revived = tomb ∩ batch (bounded by the
-        # broadcast-sized batch, so the collect is small even though the
-        # tombstone set is not), collision check is join-only. The two
-        # validation actions are independent reads — run them
-        # concurrently (guide §2.6) instead of paying two sequential
-        # job latencies per mutation.
-        from concurrent.futures import ThreadPoolExecutor
-
-        spark = new_rows.sparkSession
-        batch_ids = spark.createDataFrame(
+        # large-wave tombstones: revived = tomb ∩ batch, bounded by the
+        # broadcast-sized batch even though the tombstone set is not
+        batch_ids = F.broadcast(new_rows.sparkSession.createDataFrame(
             [(int(i),) for i in sorted(new_ids)], "id long"
-        )
-        revived_df = dyn.tomb_df.join(F.broadcast(batch_ids), "id", "left_semi")
-        dup_df = (
-            idx.base.select(F.col(id_col).cast("long").alias("id"))
-            .join(F.broadcast(batch_ids), "id", "left_semi")
-            .join(dyn.tomb_df, "id", "left_anti")
-        )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_rev = pool.submit(revived_df.collect)
-            f_dup = pool.submit(dup_df.count)
-            revived = tuple(sorted(r[0] for r in f_rev.result()))
-            n_dup = f_dup.result()
-        if n_dup:
-            raise ValueError(f"{n_dup} ids already exist in the index")
-        dup_check_df = None  # validated above (the concurrent pair)
+        ))
+        revived = tuple(sorted(
+            r[0] for r in dyn.tomb_df.join(batch_ids, "id", "left_semi").collect()
+        ))
         tomb = ()
-        tomb_df_after = dyn.tomb_df
-        if revived:
-            tomb_df_after = dyn.tomb_df.join(
-                F.broadcast(batch_ids), "id", "left_anti"
-            )
+        tomb_df_after = (
+            dyn.tomb_df.join(batch_ids, "id", "left_anti") if revived else dyn.tomb_df
+        )
     else:
         # reinserting a tombstoned id revives the slot (reuse_empty
         # semantics, dynamic_index.h:631) — pure driver set work
         revived = tuple(sorted(new_ids & set(dyn.tomb_ids)))
         tomb = tuple(i for i in dyn.tomb_ids if i not in new_ids)
-        # collision check: one pushed-down isin count, base stays put.
-        # r13 (guide §2.6): the count is DEFERRED and runs concurrently
-        # with the pin materialization below — it reads only
-        # pre-mutation state, so its result is independent of the pins;
-        # on a detected collision the just-built pins are released
-        # before raising, and the mutation still never returns a handle.
-        dup_check_df = _without_ids(
-            _without_ids(idx.base.select(id_col), id_col, dyn.tomb_ids),
-            id_col,
-            tuple(new_ids),
-            keep=True,
-        )
+        tomb_df_after = None
     if routed and revived:
         # a tombstoned id's OLD replicas sit wherever its old vector
         # routed; the new vector may route elsewhere, so an in-place
@@ -519,6 +497,11 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
             "placement follows the vector, so revive-in-place would "
             "dangle the old replicas' in-edges)"
         )
+    # collision check against the pinned layout (live ids plus
+    # tombstoned ones; a revived id is free), before any pin
+    n_dup = len(_in_layout(idx.layout, new_ids) - set(revived))
+    if n_dup:
+        raise ValueError(f"{n_dup} ids already exist in the index")
     base = _without_ids(
         idx.base.select(id_col, vec_col), id_col, revived
     ).unionByName(new_rows)
@@ -579,26 +562,14 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
         .cogroup(by_key(gside, "shard_id", idx.n_shards).groupBy("shard_id"))
         .applyInPandas(link_fn, GRAPH_SCHEMA)
     )
-    # overlap the collision-count read with the pin jobs (§2.6); a
-    # collision raises after them, and the new pins are released
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as vpool:
-        f_dup = None if dup_check_df is None else vpool.submit(dup_check_df.count)
-
-        def no_collision():
-            n_dup = 0 if f_dup is None else f_dup.result()
-            if n_dup:
-                raise ValueError(f"{n_dup} ids already exist in the index")
-
-        return _next_generation(
-            dyn,
-            idx.graph.filter(~F.col("shard_id").isin(touched)).unionByName(linked),
-            _without_ids(idx.layout, "__id", revived).unionByName(
-                new_layout.select("shard_id", "__id", "__vec")
-            ),
-            base, no_collision, tomb_ids=tomb, tomb_df=tomb_df_after,
-        )
+    return _next_generation(
+        dyn,
+        idx.graph.filter(~F.col("shard_id").isin(touched)).unionByName(linked),
+        _without_ids(idx.layout, "__id", revived).unionByName(
+            new_layout.select("shard_id", "__id", "__vec")
+        ),
+        base, tomb_ids=tomb, tomb_df=tomb_df_after,
+    )
 
 
 def delete_entries(
@@ -611,7 +582,8 @@ def delete_entries(
     Waves that keep the total tombstone count <= ``max_driver_ids``
     stay driver-resident; beyond that the set becomes a DataFrame and
     every membership/validation below is a join — the ids are never
-    materialized on the driver.
+    materialized on the driver. Existence is read from the pinned
+    layout, never the base.
 
     CONTRACT: ``max_driver_ids`` must stay <= _TOMB_DRIVER_MAX (100k
     ids = ~800 KB broadcast) — the driver-resident set ships inside the
@@ -625,59 +597,35 @@ def delete_entries(
         )
     idx = dyn.index
     ids = ids.select(F.col(idx.id_col).cast("long").alias("id")).distinct()
-    # probe-collect instead of count-then-collect (one job, not two):
-    # pull at most one row past the driver budget — enough to decide
-    # the path, and the driver never holds more than budget+1 ids.
-    # r13 (guide §2.6): the existence check is INDEPENDENT of the probe
-    # (it is a semi-join count of the whole wave against the base, the
-    # same expression both paths need), so it runs concurrently with
-    # the probe instead of as a second sequential job latency.
-    present_df = (
-        idx.base.select(F.col(idx.id_col).cast("long").alias("id"))
-        .join(ids, "id", "left_semi")
-    )
-    probe = None
-    present_f = None
-    pool = None
     if dyn.tomb_df is None:
-        from concurrent.futures import ThreadPoolExecutor
-
+        # one job decides the path: pull at most one id past the driver
+        # budget, so the driver never holds more than budget+1 ids
         budget = max(0, max_driver_ids - len(dyn.tomb_ids))
-        pool = ThreadPoolExecutor(max_workers=1)
-        present_f = pool.submit(present_df.count)
-        try:
-            probe = ids.limit(budget + 1).collect()
-        except BaseException:
-            pool.shutdown(wait=True)
-            raise
-    try:
-        if probe is not None and len(dyn.tomb_ids) + len(probe) <= max_driver_ids:
-            id_list = sorted({r[0] for r in probe})
-            already = [i for i in id_list if i in set(dyn.tomb_ids)]
+        probe = ids.limit(budget + 1).collect()
+        if len(dyn.tomb_ids) + len(probe) <= max_driver_ids:
+            wave = {r[0] for r in probe}
+            already = len(wave & set(dyn.tomb_ids))
             if already:
-                raise ValueError(
-                    f"{len(already)} ids are unknown or already deleted"
-                )
-            present = present_f.result()
-            if present < len(id_list):
-                raise ValueError(
-                    f"{len(id_list) - present} ids are unknown or already deleted"
-                )
-            return dyn._moved(tomb_ids=tuple(sorted(set(dyn.tomb_ids) | set(id_list))))
-        # large-wave path: all joins, zero driver materialization. The
-        # existence check shuffles only the id column of the (pruned)
-        # base scan — unavoidable when the wave exceeds broadcast size.
-        n_new = ids.count()
-        tomb = dyn.tombstones
-        already = ids.join(tomb, "id", "left_semi").count()
-        if already:
-            raise ValueError(f"{already} ids are unknown or already deleted")
-        present = present_f.result() if present_f is not None else present_df.count()
-        if present < n_new:
-            raise ValueError(f"{n_new - present} ids are unknown or already deleted")
-    finally:
-        if pool is not None:
-            pool.shutdown(wait=True)
+                raise ValueError(f"{already} ids are unknown or already deleted")
+            missing = len(wave) - len(_in_layout(idx.layout, wave))
+            if missing:
+                raise ValueError(f"{missing} ids are unknown or already deleted")
+            return dyn._moved(tomb_ids=tuple(sorted(set(dyn.tomb_ids) | wave)))
+    # large-wave path: all joins, zero driver materialization. One job
+    # counts the wave's ids that are missing from the layout (dead=0)
+    # or already tombstoned (dead=1); the layout join shuffles only its
+    # id column — unavoidable when the wave exceeds broadcast size.
+    tomb = dyn.tombstones
+    layout_ids = idx.layout.select(F.col("__id").alias("id"))
+    bad = (
+        ids.join(layout_ids, "id", "left_anti").select(F.lit(0).alias("dead"))
+        .unionByName(ids.join(tomb, "id", "left_semi").select(F.lit(1).alias("dead")))
+    )
+    n_bad, already = bad.agg(F.count("*"), F.coalesce(F.sum("dead"), F.lit(0))).first()
+    if already:
+        raise ValueError(f"{already} ids are unknown or already deleted")
+    if n_bad:
+        raise ValueError(f"{n_bad} ids are unknown or already deleted")
     # a checkpoint, not a cache: tombstone waves chain (each wave unions
     # the previous set), so an uncut chain grows the plan per wave; the
     # eager cut materializes a leaf, owned by ``tombs`` until close()

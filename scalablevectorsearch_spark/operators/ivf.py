@@ -136,10 +136,10 @@ def probe_clusters_epsilon(
     selects fewer clusters, the selection is extended to the
     min_probes nearest by (key, cluster_id) — the same deterministic
     lexsort order the ``max_probes`` cap uses. Rationale (measured,
-    tools/probe_alloc_exp.py): a budget-fitted global epsilon yields a
-    long-tailed per-query probe distribution; recall is concave in
-    probes, so the under-probing tail costs more recall than the
-    over-probing tail buys. Clamping to [~3/4 budget, 2x budget]
+    BENCH_HISTORY.jsonl ``probe_alloc_coverage`` row): a budget-fitted
+    global epsilon yields a long-tailed per-query probe distribution;
+    recall is concave in probes, so the under-probing tail costs more
+    recall than the over-probing tail buys. Clamping to [~3/4 budget, 2x budget]
     matches fixed-fan-out coverage on uniform (signal-free) data and
     beats BOTH fixed and unclamped epsilon on mixed-difficulty
     clustered data.

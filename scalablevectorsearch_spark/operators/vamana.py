@@ -598,12 +598,12 @@ def vamana_search(
     (a hand-picked epsilon that is safe on clustered data degrades to
     full fan-out on uniform data and vice versa). The per-query probe
     count is clamped to [~3/4·budget (strictly < budget), 2·budget]
-    (fit accounts for
-    the clamp): recall is concave in probes, so the unclamped fit's
-    under-probing tail loses more recall than its over-probing tail
-    gains — measured in tools/probe_alloc_exp.py, where the clamped
-    fit matches fixed fan-out on uniform data and beats both fixed and
-    unclamped epsilon on mixed-difficulty clustered data. Mutually
+    (fit accounts for the clamp): recall is concave in probes, so the
+    unclamped fit's under-probing tail loses more recall than its
+    over-probing tail gains. The clamped fit matches fixed fan-out on
+    uniform data (BENCH_HISTORY.jsonl ``probe_alloc_coverage`` row) and
+    beats both fixed and unclamped epsilon on mixed-difficulty
+    clustered data. Mutually
     exclusive with ``n_probes`` and ``epsilon_bp``.
     DEFAULT ROUTING: when ``router`` is given with none of n_probes/
     epsilon_bp/probe_budget, the search uses probe_budget = n_shards/2
@@ -866,7 +866,8 @@ def _vamana_search_block(
         # signal-free uniform data it measurably UNDERPERFORMS a fixed
         # fan-out at equal mean probes, while the clamped fit matches
         # fixed there and beats both fixed and unclamped on
-        # mixed-difficulty clustered data (tools/probe_alloc_exp.py).
+        # mixed-difficulty clustered data (BENCH_HISTORY.jsonl
+        # `probe_alloc_coverage` row for the uniform case).
         from scalablevectorsearch_spark.operators.ivf import (
             budget_probe_clamp,
             fit_epsilon_bp,

@@ -15,6 +15,7 @@
 """
 
 import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,7 +30,7 @@ from scalablevectorsearch_spark.operators.leanvec import (
 from scalablevectorsearch_spark.operators.lvq import lvq_train
 from scalablevectorsearch_spark.sources.index_store import load_vamana, save_vamana
 
-ART = "/root/repo/_artifacts/test_advice_r4"
+ART = str(Path(__file__).resolve().parents[1] / "_artifacts" / "test_advice_r4")
 
 
 @pytest.fixture(scope="module", autouse=True)

@@ -2,6 +2,7 @@
 
 import os
 import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -25,7 +26,7 @@ from scalablevectorsearch_spark.streaming.ingest import (
     stream_vectors,
 )
 
-ART = "/root/repo/_artifacts/test_streaming"
+ART = str(Path(__file__).resolve().parents[1] / "_artifacts" / "test_streaming")
 
 
 @pytest.fixture(scope="module", autouse=True)

@@ -65,9 +65,9 @@ def test_add_duplicate_id_raises(dyn, base):
 
 
 def test_failed_duplicate_count_releases_new_pins(spark, base, monkeypatch):
-    """add_points overlaps its collision count with the new
-    generation's pin jobs; when the count itself fails, the new graph/
-    layout pins and the lineage cut they made are released."""
+    """When add_points' membership read (the collision check against
+    the pinned layout) fails, no new graph/layout pin or lineage cut
+    survives the failed mutation."""
     import dataclasses
 
     from scalablevectorsearch_spark.operators import dynamic as dyn_mod
@@ -89,8 +89,8 @@ def test_failed_duplicate_count_releases_new_pins(spark, base, monkeypatch):
     before = n_pinned()
 
     class _FailingCount:
-        def count(self):
-            raise RuntimeError("injected duplicate-count failure")
+        def collect(self):
+            raise RuntimeError("injected membership-read failure")
 
     real = dyn_mod._without_ids
     monkeypatch.setattr(
@@ -104,6 +104,33 @@ def test_failed_duplicate_count_releases_new_pins(spark, base, monkeypatch):
     monkeypatch.undo()
     assert n_pinned() == before
     d1.close()
+
+
+def test_mutations_never_read_the_base(spark, base):
+    """add, delete, consolidate and search check membership against the
+    pinned layout: with a base whose every read raises, the chain runs
+    and returns what it returns on the real base."""
+    import dataclasses
+
+    sub = base.filter(F.col("id") < 200)
+    idx = vamana_build(sub, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2)
+    poisoned = sub.withColumn(
+        "id", F.coalesce(F.raise_error(F.lit("base read")).cast("long"), F.col("id"))
+    )
+    added = base.filter(F.col("id") < 4).select((F.col("id") + 90000).alias("id"), "vector")
+    queries = sub.filter(F.col("id") < 5).selectExpr("id as qid", "vector")
+
+    def chain(index):
+        d = add_points(dynamic_vamana(index), added)
+        d = consolidate(delete_entries(d, spark.range(10, 14)))
+        got = sorted(
+            (r["qid"], r["rank"], r["neighbor_id"])
+            for r in dynamic_search(d, queries, k=5).collect()
+        )
+        d.close()
+        return got
+
+    assert chain(dataclasses.replace(idx, base=poisoned)) == chain(idx)
 
 
 # ---------------------------------------------- ownership of persisted state

@@ -9,10 +9,11 @@ pointed at the smallest tier via argv)."""
 
 import importlib
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo/examples")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "examples"))
 
 SF = "/root/testdata/sf0.001"
 

@@ -3,6 +3,7 @@ version checks, vamana.cpp save/assemble, metamorphic save->load->search
 == direct search)."""
 
 import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,7 +24,7 @@ from scalablevectorsearch_spark.sources.index_store import (
     save_vamana,
 )
 
-ART = "/root/repo/_artifacts/test_index_store"
+ART = str(Path(__file__).resolve().parents[1] / "_artifacts" / "test_index_store")
 
 
 @pytest.fixture(scope="module", autouse=True)

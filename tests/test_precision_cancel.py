@@ -4,6 +4,7 @@ timeout tests."""
 import os
 import shutil
 import time
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -25,7 +26,7 @@ from scalablevectorsearch_spark.sources.vecs import (
     write_binary_matrix,
 )
 
-ART = "/root/repo/_artifacts/test_precision"
+ART = str(Path(__file__).resolve().parents[1] / "_artifacts" / "test_precision")
 
 
 @pytest.fixture(scope="module", autouse=True)

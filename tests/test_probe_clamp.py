@@ -3,9 +3,9 @@
 An unclamped budget-fitted epsilon cutoff yields a long-tailed
 per-query probe distribution; recall is concave in probes, so the
 under-probing tail costs more recall than the over-probing tail buys
-(measured in tools/probe_alloc_exp.py: on uniform data the unclamped
-fit UNDERPERFORMS fixed fan-out at equal mean probes, the clamped fit
-matches it). These tests pin the clamp mechanics:
+(BENCH_HISTORY.jsonl `probe_alloc_coverage` row: on uniform data the
+unclamped fit UNDERPERFORMS fixed fan-out at equal mean probes, the
+clamped fit matches it). These tests pin the clamp mechanics:
 probe_clusters_epsilon / probe_clusters_epsilon_routed min_probes
 floors and fit_epsilon_bp's clamp-aware mean.
 """

@@ -82,13 +82,15 @@ def test_alpha_prune_invariants(seed, alpha, max_result):
 @given(st.integers(0, 2**32), st.integers(1, 50), st.integers(1, 32))
 def test_vecs_roundtrip_property(seed, n, d):
     import os
+    from pathlib import Path
 
     from scalablevectorsearch_spark.sources.vecs import read_vecs, write_vecs
 
     rng = np.random.default_rng(seed)
     X = rng.normal(size=(n, d)).astype(np.float32)
-    path = f"/root/repo/_artifacts/prop_{seed % 97}.fvecs"
-    os.makedirs("/root/repo/_artifacts", exist_ok=True)
+    art = Path(__file__).resolve().parents[1] / "_artifacts"
+    path = str(art / f"prop_{seed % 97}.fvecs")
+    os.makedirs(art, exist_ok=True)
     write_vecs(path, X)
     assert np.array_equal(read_vecs(path), X)
     os.remove(path)

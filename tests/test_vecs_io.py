@@ -3,6 +3,7 @@ generator groundtruth == flat oracle)."""
 
 import os
 import shutil
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -17,7 +18,7 @@ from scalablevectorsearch_spark.sources.vecs import (
     write_vecs,
 )
 
-ART = "/root/repo/_artifacts/test_vecs"
+ART = str(Path(__file__).resolve().parents[1] / "_artifacts" / "test_vecs")
 
 
 @pytest.fixture(scope="module", autouse=True)

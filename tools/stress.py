@@ -481,7 +481,8 @@ FLOORS = {
     # every query "boundary"): the UNCLAMPED fit measured 0.808 at 10M
     # vs 0.838 for fixed probing at the same 25% budget — its
     # long-tailed probe distribution under-probes most queries. Since
-    # the [3/4·budget, 2·budget] clamp (probe_alloc_exp.py) the
+    # the [3/4·budget, 2·budget] clamp (BENCH_HISTORY.jsonl
+    # `probe_alloc_coverage` row) the
     # budget path matches fixed fan-out here and beats it on
     # mixed-difficulty clustered data. The >= 0.90 quality claim at a
     # fixed storage budget belongs to the CLOSURE-composed path below
