@@ -308,6 +308,21 @@ def _to_df(data, spark: SparkSession, id_offset: int = 0) -> DataFrame:
     return spark.createDataFrame(rows, "id long, vector array<float>")
 
 
+def _rows_df(points, ids, spark: SparkSession) -> DataFrame:
+    """(points, ids) of an ``add`` -> (id, vector) rows."""
+    X = np.asarray(points, dtype=np.float32)
+    ids = np.asarray(ids, dtype=np.int64)
+    rows = [(int(ids[i]), [float(v) for v in X[i]]) for i in range(len(X))]
+    return spark.createDataFrame(rows, "id long, vector array<float>")
+
+
+def _ids_df(ids, spark: SparkSession) -> DataFrame:
+    """The ids of a ``delete`` (array-like or DataFrame) -> (id) rows."""
+    if isinstance(ids, DataFrame):
+        return ids
+    return spark.createDataFrame([(int(v),) for v in np.asarray(ids).ravel()], "id long")
+
+
 def _queries_df(queries, spark: SparkSession) -> tuple[DataFrame, int | None]:
     """Returns (df, nq) with nq set when the input was numpy (and the
     caller should hand back numpy results)."""
@@ -558,26 +573,16 @@ class DynamicVamana(Vamana):
         self.dyn = dynamic_vamana(self.index)
         return self
 
-    def _rows(self, points, ids) -> DataFrame:
-        X = np.asarray(points, dtype=np.float32)
-        ids = np.asarray(ids, dtype=np.int64)
-        rows = [(int(ids[i]), [float(v) for v in X[i]]) for i in range(len(X))]
-        return self.spark.createDataFrame(rows, "id long, vector array<float>")
-
     def add(self, points, ids) -> "DynamicVamana":
         from scalablevectorsearch_spark.operators.dynamic import add_points
 
-        self.dyn = add_points(self.dyn, self._rows(points, ids))
+        self.dyn = add_points(self.dyn, _rows_df(points, ids, self.spark))
         return self
 
     def delete(self, ids) -> "DynamicVamana":
         from scalablevectorsearch_spark.operators.dynamic import delete_entries
 
-        if not isinstance(ids, DataFrame):
-            ids = self.spark.createDataFrame(
-                [(int(v),) for v in np.asarray(ids).ravel()], "id long"
-            )
-        self.dyn = delete_entries(self.dyn, ids)
+        self.dyn = delete_entries(self.dyn, _ids_df(ids, self.spark))
         return self
 
     def consolidate(self) -> "DynamicVamana":
@@ -654,22 +659,13 @@ class DynamicFlat:
               num_threads: int | None = None) -> "DynamicFlat":
         return cls(data, distance)
 
-    def _rows(self, points, ids) -> DataFrame:
-        X = np.asarray(points, dtype=np.float32)
-        ids = np.asarray(ids, dtype=np.int64)
-        rows = [(int(ids[i]), [float(v) for v in X[i]]) for i in range(len(X))]
-        return self.spark.createDataFrame(rows, "id long, vector array<float>")
-
     def add(self, points, ids) -> "DynamicFlat":
-        rows = self._rows(points, ids)
+        rows = _rows_df(points, ids, self.spark)
         self._added = rows if self._added is None else self._added.unionByName(rows)
         return self
 
     def delete(self, ids) -> "DynamicFlat":
-        if not isinstance(ids, DataFrame):
-            ids = self.spark.createDataFrame(
-                [(int(v),) for v in np.asarray(ids).ravel()], "id long"
-            )
+        ids = _ids_df(ids, self.spark)
         self._deleted = ids if self._deleted is None else self._deleted.unionByName(ids)
         return self
 
@@ -710,26 +706,16 @@ class DynamicIVF:
         index.clustered.cache().count()
         return cls(dynamic_ivf(index), _dist(distance))
 
-    def _rows(self, points, ids) -> DataFrame:
-        X = np.asarray(points, dtype=np.float32)
-        ids = np.asarray(ids, dtype=np.int64)
-        rows = [(int(ids[i]), [float(v) for v in X[i]]) for i in range(len(X))]
-        return self.spark.createDataFrame(rows, "id long, vector array<float>")
-
     def add(self, points, ids) -> "DynamicIVF":
         from scalablevectorsearch_spark.operators.dynamic import ivf_add_points
 
-        self.dyn = ivf_add_points(self.dyn, self._rows(points, ids))
+        self.dyn = ivf_add_points(self.dyn, _rows_df(points, ids, self.spark))
         return self
 
     def delete(self, ids) -> "DynamicIVF":
         from scalablevectorsearch_spark.operators.dynamic import ivf_delete_entries
 
-        if not isinstance(ids, DataFrame):
-            ids = self.spark.createDataFrame(
-                [(int(v),) for v in np.asarray(ids).ravel()], "id long"
-            )
-        self.dyn = ivf_delete_entries(self.dyn, ids)
+        self.dyn = ivf_delete_entries(self.dyn, _ids_df(ids, self.spark))
         return self
 
     def recluster(self, n_iters: int = 2) -> "DynamicIVF":

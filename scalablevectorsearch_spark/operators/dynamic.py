@@ -48,9 +48,16 @@ from pyspark.sql import functions as F
 
 from scalablevectorsearch_spark.operators.flat import flat_knn
 from scalablevectorsearch_spark.operators.vamana import (
+    EMPTY_GRAPH,
     VamanaIndex,
+    _graph_cogroup,
+    _graph_rows,
+    _layout_rows,
+    _relink_fn,
+    _shard_rows,
     vamana_search,
 )
+from scalablevectorsearch_spark.operators.vamana_local import INSERT_BATCH
 from scalablevectorsearch_spark.pins import Pins
 from scalablevectorsearch_spark.placement import by_key
 
@@ -106,10 +113,6 @@ def ivf_add_points(dyn: DynamicIVF, new_rows: DataFrame) -> DynamicIVF:
     """Stamp new rows with their nearest EXISTING centroid and append —
     the cluster layout absorbs inserts without retraining (the
     reference's dynamic IVF append path). Raises on live-id collision."""
-    from dataclasses import replace as _replace
-
-    from scalablevectorsearch_spark.operators.ivf import IVFIndex  # noqa: F401
-
     idx = dyn.index
     id_col, vec_col = idx.id_col, idx.vec_col
     live = idx.clustered.select(id_col).join(
@@ -150,7 +153,7 @@ def ivf_add_points(dyn: DynamicIVF, new_rows: DataFrame) -> DynamicIVF:
     return DynamicIVF(
         # fresh cal_cache: cached calibration groundtruth belongs to the
         # pre-insert clustered base
-        index=_replace(
+        index=replace(
             idx, clustered=idx.clustered.unionByName(stamped), cal_cache={}
         ),
         tombstones=dyn.tombstones,
@@ -174,8 +177,6 @@ def ivf_delete_entries(dyn: DynamicIVF, ids: DataFrame) -> DynamicIVF:
 
 def ivf_dynamic_search(dyn: DynamicIVF, queries: DataFrame, k: int, **kw) -> DataFrame:
     """Search over (clustered + appended - tombstoned)."""
-    from dataclasses import replace as _replace
-
     from scalablevectorsearch_spark.operators.ivf import ivf_search
 
     idx = dyn.index
@@ -184,7 +185,7 @@ def ivf_dynamic_search(dyn: DynamicIVF, queries: DataFrame, k: int, **kw) -> Dat
     # fresh cal_cache: the ephemeral tombstone-filtered view must not
     # read (or write) calibration groundtruth keyed to the unfiltered
     # clustered base
-    return ivf_search(_replace(idx, clustered=cur, cal_cache={}), queries, k=k, **kw)
+    return ivf_search(replace(idx, clustered=cur, cal_cache={}), queries, k=k, **kw)
 
 
 def ivf_recluster(dyn: DynamicIVF, n_clusters: int | None = None, n_iters: int = 2) -> DynamicIVF:
@@ -415,52 +416,19 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
     dropped and it re-links as a new point; edges INTO the slot remain
     until consolidate, now pointing at the new vector — the reference's
     lazy repair contract."""
-    import numpy as np
-
-    from scalablevectorsearch_spark.operators.vamana import (
-        GRAPH_SCHEMA,
-        _decode_adjacency,
-    )
-    from scalablevectorsearch_spark.operators.vamana_local import (
-        build_graph,
-        insert_points,
-        medioid,
-    )
-
     idx = dyn.index
     id_col, vec_col = idx.id_col, idx.vec_col
-    params, distance = idx.params, idx.distance
     new_rows = new_rows.select(
         F.col(id_col).cast("long").alias(id_col), F.col(vec_col).alias(vec_col)
     )
-    routed = idx.shard_model is not None
-    if routed:
-        # cluster-routed insert (r11): stamp each new row to its nearest
-        # cell — plus closure replicas — through the SAME deterministic
-        # _sharded assignment the build used, so routed searches keep
-        # pruning unprobed shards correctly after the mutation. The
-        # stamp re-runs per downstream job (3 jobs x a broadcast-sized
-        # batch — negligible) rather than being checkpointed: the stamp
-        # is deterministic, so every job sees the same assignment, and
-        # no pin outlives the mutation.
-        from scalablevectorsearch_spark.operators.vamana import _sharded
-
-        new_layout = _sharded(
-            new_rows, idx.n_shards, id_col, idx.shard_model, vec_col,
-            idx.closure_bp, None, stamp_hierarchical=idx.stamp_hierarchical,
-        ).select(
-            "shard_id",
-            F.col(id_col).cast("long").alias("__id"),
-            F.col(vec_col).alias("__vec"),
-        )
-    else:
-        new_layout = new_rows.select(
-            F.pmod(F.col(id_col).cast("long"), F.lit(idx.n_shards))
-            .cast("int")
-            .alias("shard_id"),
-            F.col(id_col).cast("long").alias("__id"),
-            F.col(vec_col).alias("__vec"),
-        )
+    # stamp each new row through the SAME deterministic assignment the
+    # build used — id mod n_shards, or (routed) its nearest cell plus
+    # closure replicas, so routed searches keep pruning unprobed shards
+    # correctly after the mutation. The routed stamp re-runs per
+    # downstream job (3 jobs x a broadcast-sized batch — negligible)
+    # rather than being checkpointed: it is deterministic, so every job
+    # sees the same assignment, and no pin outlives the mutation.
+    new_layout = _layout_rows(new_rows, idx)
     # one collect over the (small) insert batch: touched shards + new ids
     pairs = new_layout.select("shard_id", "__id").collect()
     touched = sorted({r[0] for r in pairs})
@@ -484,7 +452,7 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
         revived = tuple(sorted(new_ids & set(dyn.tomb_ids)))
         tomb = tuple(i for i in dyn.tomb_ids if i not in new_ids)
         tomb_df_after = None
-    if routed and revived:
+    if idx.shard_model is not None and revived:
         # a tombstoned id's OLD replicas sit wherever its old vector
         # routed; the new vector may route elsewhere, so an in-place
         # slot revive would leave in-edges in the old shards dangling
@@ -508,66 +476,24 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
 
     # vector side of the link cogroup: the touched shards' PERSISTED
     # layout rows (minus revived slots, whose vectors are replaced)
-    # plus the new rows, flagged — only touched shards ever reach the
-    # kernel, and the old layout is read from cache, not the base
-    old_touched = _without_ids(
+    # plus the new rows — only touched shards ever reach the kernel,
+    # and the old layout is read from cache, not the base
+    vside = _without_ids(
         idx.layout.filter(F.col("shard_id").isin(touched)), "__id", revived
-    )
-    vside = old_touched.withColumn("__new", F.lit(False)).unionByName(
-        new_layout.withColumn("__new", F.lit(True))
-    )
+    ).unionByName(new_layout)
     # graph side: touched shards' adjacency; revived slots re-link as
     # new points, so their outgoing rows are dropped
     gside = _without_ids(
         idx.graph.filter(F.col("shard_id").isin(touched)), "src", revived
     )
-
-    def link_fn(key, vdf, gdf):
-        import pandas as pd
-
-        if len(vdf) == 0:
-            return pd.DataFrame(
-                {"shard_id": [], "src": [], "neighbors": [], "is_entry": []}
-            )
-        vdf = vdf.sort_values("__id").reset_index(drop=True)
-        gids = vdf["__id"].to_numpy(dtype=np.int64)
-        # construction kernel: honor params.build_dtype (search stays f64)
-        X = np.stack(vdf["__vec"].to_numpy()).astype(params.build_dtype)
-        new_mask = vdf["__new"].to_numpy(dtype=bool)
-        if len(gdf) == 0 or new_mask.all():
-            # shard had no prior graph — fresh build
-            graph, entry = build_graph(X, params, distance)
-        else:
-            graph, entry = _decode_adjacency(gids, gdf)
-            if entry is None or new_mask[entry]:
-                # the old entry point was revived — fall back to the
-                # medioid of the surviving old nodes
-                old_pos = np.nonzero(~new_mask)[0]
-                entry = int(old_pos[medioid(X[old_pos])])
-            insert_points(
-                X, graph, entry, np.nonzero(new_mask)[0], params, distance
-            )
-        return pd.DataFrame(
-            {
-                "shard_id": int(key[0]),
-                "src": gids,
-                "neighbors": [gids[adj].tolist() for adj in graph],
-                "is_entry": [i == entry for i in range(len(gids))],
-            }
-        )
-
-    linked = (
-        by_key(vside, "shard_id", idx.n_shards)
-        .groupBy("shard_id")
-        .cogroup(by_key(gside, "shard_id", idx.n_shards).groupBy("shard_id"))
-        .applyInPandas(link_fn, GRAPH_SCHEMA)
+    linked = _graph_cogroup(
+        by_key(vside, "shard_id", idx.n_shards), gside, idx.n_shards,
+        _relink_fn(idx.params, idx.distance, None, lambda n: INSERT_BATCH),
     )
     return _next_generation(
         dyn,
         idx.graph.filter(~F.col("shard_id").isin(touched)).unionByName(linked),
-        _without_ids(idx.layout, "__id", revived).unionByName(
-            new_layout.select("shard_id", "__id", "__vec")
-        ),
+        _without_ids(idx.layout, "__id", revived).unionByName(new_layout),
         base, tomb_ids=tomb, tomb_df=tomb_df_after,
     )
 
@@ -664,10 +590,7 @@ def consolidate(dyn: DynamicVamana) -> DynamicVamana:
     (see the routed branch below)."""
     import numpy as np
 
-    from scalablevectorsearch_spark.operators.vamana import (
-        GRAPH_SCHEMA,
-        _decode_adjacency,
-    )
+    from scalablevectorsearch_spark.operators.vamana import _decode_adjacency
     from scalablevectorsearch_spark.operators.vamana_local import consolidate_graph
 
     idx = dyn.index
@@ -712,17 +635,9 @@ def consolidate(dyn: DynamicVamana) -> DynamicVamana:
         touched = sorted({int(i) % idx.n_shards for i in dyn.tomb_ids})
 
     def repair_fn(key, vdf, gdf):
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {"shard_id": [], "src": [], "neighbors": [], "is_entry": []}
-        )
         if len(vdf) == 0 or len(gdf) == 0:
-            return empty
-        vdf = vdf.sort_values("__id").reset_index(drop=True)
-        gids = vdf["__id"].to_numpy(dtype=np.int64)
-        # repair kernel: honor params.build_dtype (search stays f64)
-        X = np.stack(vdf["__vec"].to_numpy()).astype(params.build_dtype)
+            return EMPTY_GRAPH
+        vdf, gids, X = _shard_rows(vdf, params.build_dtype)
         graph, entry = _decode_adjacency(gids, gdf)
         if "__del" in vdf.columns:
             deleted = vdf["__del"].to_numpy(dtype=bool)
@@ -731,17 +646,7 @@ def consolidate(dyn: DynamicVamana) -> DynamicVamana:
         entry = consolidate_graph(
             X, graph, deleted, 0 if entry is None else entry, params, distance
         )
-        live = np.nonzero(~deleted)[0]
-        if len(live) == 0:
-            return empty
-        return pd.DataFrame(
-            {
-                "shard_id": int(key[0]),
-                "src": gids[live],
-                "neighbors": [gids[graph[i]].tolist() for i in live],
-                "is_entry": [int(i) == entry for i in live],
-            }
-        )
+        return _graph_rows(key[0], gids, graph, entry, keep=np.nonzero(~deleted)[0])
 
     vside = idx.layout.filter(F.col("shard_id").isin(touched))
     if large:
@@ -755,12 +660,10 @@ def consolidate(dyn: DynamicVamana) -> DynamicVamana:
             "__id",
             "left",
         ).withColumn("__del", F.coalesce(F.col("__del"), F.lit(False)))
-    gside = idx.graph.filter(F.col("shard_id").isin(touched))
-    repaired = (
-        by_key(vside, "shard_id", idx.n_shards)
-        .groupBy("shard_id")
-        .cogroup(by_key(gside, "shard_id", idx.n_shards).groupBy("shard_id"))
-        .applyInPandas(repair_fn, GRAPH_SCHEMA)
+    repaired = _graph_cogroup(
+        by_key(vside, "shard_id", idx.n_shards),
+        idx.graph.filter(F.col("shard_id").isin(touched)),
+        idx.n_shards, repair_fn,
     )
     if large:
         new_layout = idx.layout.join(

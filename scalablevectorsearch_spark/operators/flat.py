@@ -239,9 +239,9 @@ def search_blocks(
     under ``max_query_block``, from xxhash64-partitioned blocks of at
     most ~``max_query_block`` queries (uniform regardless of qid layout)
     collected one at a time after a ``count()``: each block's result is
-    materialized and its broadcast freed before the next block is
-    fetched, so driver memory is bounded by one block for arbitrarily
-    large query tables."""
+    materialized (an eager ``localCheckpoint``) and its broadcast freed
+    before the next block is fetched, so driver memory is bounded by one
+    block for arbitrarily large query tables."""
     if query_batch is not None:
         if max_query_block is not None:
             raise ValueError("query_batch and max_query_block are exclusive")
@@ -267,8 +267,10 @@ def search_blocks(
         cands, bc = block_fn(qids, Q)
         part = rank_candidates(cands, len(qids), k, maximize)
         if max_query_block is not None:
-            part = part.persist()
-            part.count()
+            # an eager lineage cut, not a persist: the CacheManager would
+            # keep a persisted block for good, while Spark's ContextCleaner
+            # frees the cut once the returned frame is unreachable
+            part = part.localCheckpoint(eager=True)
             bc.unpersist()
         parts.append(part)
     if not parts:

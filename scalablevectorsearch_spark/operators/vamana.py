@@ -35,7 +35,6 @@ pointer-chasing port):
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -48,12 +47,16 @@ from scalablevectorsearch_spark.operators.flat import RESULT_SCHEMA, search_bloc
 from scalablevectorsearch_spark.operators.vamana_local import (
     VamanaParams,
     build_graph,
+    insert_points,
+    medioid,
     search_graph,
 )
 from scalablevectorsearch_spark.pins import Pins
 from scalablevectorsearch_spark.placement import by_key
 
 GRAPH_SCHEMA = "shard_id int, src long, neighbors array<long>, is_entry boolean"
+#: the GRAPH_SCHEMA frame of a shard kernel that emits no rows
+EMPTY_GRAPH = pd.DataFrame({"shard_id": [], "src": [], "neighbors": [], "is_entry": []})
 
 #: selectivity at/below which vamana_search(where=..., fallback_below=
 #: "auto") serves the exact filtered flat scan instead of traversing
@@ -109,6 +112,90 @@ def _decode_adjacency(
     return graph, entry
 
 
+def _shard_rows(
+    pdf: pd.DataFrame, dtype, vec_decode=None
+) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
+    """A shard kernel's input: the shard's rows sorted by id (local id
+    i is the i-th smallest global id), their global ids, and the
+    decoded vector matrix at ``dtype`` — float64 for search,
+    ``params.build_dtype`` for build, link and repair."""
+    pdf = pdf.sort_values("__id").reset_index(drop=True)
+    gids = pdf["__id"].to_numpy(dtype=np.int64)
+    X = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
+    if vec_decode is not None:
+        X = vec_decode(X)
+    return pdf, gids, X.astype(dtype, copy=False)
+
+
+def _graph_rows(
+    shard, gids: np.ndarray, graph: list[np.ndarray], entry: int, keep=None
+) -> pd.DataFrame:
+    """A shard's local adjacency as GRAPH_SCHEMA rows in global ids;
+    ``keep`` (local ids) emits only those rows — a consolidate's
+    survivors."""
+    nodes = np.arange(len(gids)) if keep is None else keep
+    if len(nodes) == 0:
+        return EMPTY_GRAPH
+    return pd.DataFrame(
+        {
+            "shard_id": int(shard),
+            "src": gids[nodes],
+            "neighbors": [gids[graph[i]].tolist() for i in nodes],
+            "is_entry": [int(i) == entry for i in nodes],
+        }
+    )
+
+
+def _graph_cogroup(vside: DataFrame, gside: DataFrame, n_shards: int, fn) -> DataFrame:
+    """The graph-producing shard cogroup of the closure link, the
+    insert link and the consolidate repair: ``fn(key, vdf, gdf)`` runs
+    once per shard over its layout rows ``vside`` and its adjacency
+    rows ``gside`` and returns GRAPH_SCHEMA rows. ``vside`` arrives
+    placed by shard_id (``placement.by_key``, or a fresh persisted
+    layout, whose placement the planner only sees once materialized);
+    ``gside`` is placed here."""
+    return (
+        vside.groupBy("shard_id")
+        .cogroup(by_key(gside, "shard_id", n_shards).groupBy("shard_id"))
+        .applyInPandas(fn, GRAPH_SCHEMA)
+    )
+
+
+def _relink_fn(params: VamanaParams, distance: str, vec_decode, batch_size):
+    """The shard kernel that links a shard's new rows into its existing
+    graph — the reference's incremental insert (dynamic_index.h:631-700:
+    greedy search on the frozen graph + alpha-prune + reverse edges),
+    shared by ``closure_link_replicas`` and ``dynamic.add_points``.
+
+    A row is OLD when it has an adjacency row in ``gdf`` (a revived id's
+    row was dropped from ``gdf``, a new id never had one). A shard with
+    no old row is built from scratch; a shard whose entry row did not
+    survive enters at the medioid of its old rows. The new rows are then
+    inserted in ascending id order (deterministic graphs), in rounds of
+    ``batch_size(n_new)`` nodes."""
+
+    def link_fn(key, vdf: pd.DataFrame, gdf: pd.DataFrame) -> pd.DataFrame:
+        if len(vdf) == 0:
+            return EMPTY_GRAPH
+        _, gids, X = _shard_rows(vdf, params.build_dtype, vec_decode)
+        old = np.isin(gids, gdf["src"].to_numpy(dtype=np.int64))
+        if not old.any():
+            graph, entry = build_graph(X, params, distance)
+        else:
+            graph, entry = _decode_adjacency(gids, gdf)
+            if entry is None:
+                entry = int(np.nonzero(old)[0][medioid(X[old])])
+            new = np.nonzero(~old)[0]
+            if len(new):
+                insert_points(
+                    X, graph, entry, new, params, distance,
+                    batch_size=batch_size(len(new)),
+                )
+        return _graph_rows(key[0], gids, graph, entry)
+
+    return link_fn
+
+
 @dataclass
 class VamanaIndex:
     graph: DataFrame  # (shard_id, src, neighbors, is_entry), global ids
@@ -131,7 +218,8 @@ class VamanaIndex:
     #: member); the Spark analog is this persisted shard-partitioned
     #: table — without it every search batch would re-shuffle the full
     #: base to co-locate shards, a per-query-batch full-base shuffle at
-    #: 100 TB.
+    #: 100 TB. Every search reads it; only an index about to be saved
+    #: may drop it.
     layout: DataFrame | None = None
     #: the storage codec (operators.codec: SQ / LVQ / LeanVec) when the
     #: index holds compressed vectors — the reference's compressed
@@ -245,6 +333,26 @@ def _sharded(
     return map_stamp(base, vec_col, "shard_id", stamp, vec_decode=vec_decode)
 
 
+def _layout_rows(df: DataFrame, index: VamanaIndex, extra=()) -> DataFrame:
+    """The one shard layout format: ``df``'s rows stamped under
+    ``index``'s sharding (id mod n_shards, or nearest k-means cell plus
+    closure replicas, in the decoded geometry) as unplaced
+    ``(shard_id, __id, __vec, *extra)`` rows. Build, closure link,
+    filtered scan, insert and load all stamp through here, so a row
+    lands in the same shard(s) on every path; callers that need the
+    rows co-located place them with ``placement.by_key``."""
+    return _sharded(
+        df, index.n_shards, index.id_col, index.shard_model, index.vec_col,
+        index.closure_bp, index.vec_decode,
+        stamp_hierarchical=index.stamp_hierarchical,
+    ).select(
+        "shard_id",
+        F.col(index.id_col).cast("long").alias("__id"),
+        F.col(index.vec_col).alias("__vec"),
+        *extra,
+    )
+
+
 def vamana_build(
     base: DataFrame,
     params: VamanaParams | None = None,
@@ -333,22 +441,9 @@ def vamana_build(
             raise ValueError(f"closure_bp must be positive, got {closure_bp}")
 
     def build_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__id").reset_index(drop=True)
-        gids = pdf["__id"].to_numpy(dtype=np.int64)
-        X = np.stack(pdf["__vec"].to_numpy()).astype(np.float64)
-        if vec_decode is not None:
-            X = vec_decode(X)
-        X = X.astype(params.build_dtype, copy=False)
-        shard = int(pdf["shard_id"].iloc[0])
+        pdf, gids, X = _shard_rows(pdf, params.build_dtype, vec_decode)
         graph, entry = build_graph(X, params, distance)
-        return pd.DataFrame(
-            {
-                "shard_id": shard,
-                "src": gids,
-                "neighbors": [gids[adj].tolist() for adj in graph],
-                "is_entry": [i == entry for i in range(len(gids))],
-            }
-        )
+        return _graph_rows(pdf["shard_id"].iloc[0], gids, graph, entry)
 
     from pyspark.storagelevel import StorageLevel
 
@@ -357,28 +452,19 @@ def vamana_build(
     stamp_hier = shard_model is not None and _resolve_stamp_via(
         stamp_via, shard_model.centroids.shape[0]
     )
+    index = VamanaIndex(
+        graph=None, base=base, params=params, distance=distance,
+        n_shards=n_shards, id_col=id_col, vec_col=vec_col, shard_model=shard_model,
+        closure_bp=closure_bp, vec_decode=vec_decode, stamp_hierarchical=stamp_hier,
+    )
     # the index's data layout: stamp + one co-locating shuffle, persisted
     # so build AND every later search read the shard-partitioned copy
     # instead of re-shuffling the base (index.h's materialized data_)
-    layout = by_key(
-        _sharded(
-            base, n_shards, id_col, shard_model, vec_col, closure_bp,
-            vec_decode, stamp_hierarchical=stamp_hier,
-        ).select(
-            "shard_id",
-            F.col(id_col).cast("long").alias("__id"),
-            F.col(vec_col).alias("__vec"),
-        ),
-        "shard_id",
-        n_shards,
-    ).persist(layout_storage or StorageLevel.MEMORY_AND_DISK)
-    graph = layout.groupBy("shard_id").applyInPandas(build_fn, GRAPH_SCHEMA)
-    return VamanaIndex(
-        graph=graph, base=base, params=params, distance=distance,
-        n_shards=n_shards, id_col=id_col, vec_col=vec_col, shard_model=shard_model,
-        closure_bp=closure_bp, layout=layout, vec_decode=vec_decode,
-        stamp_hierarchical=stamp_hier,
+    index.layout = by_key(_layout_rows(base, index), "shard_id", n_shards).persist(
+        layout_storage or StorageLevel.MEMORY_AND_DISK
     )
+    index.graph = index.layout.groupBy("shard_id").applyInPandas(build_fn, GRAPH_SCHEMA)
+    return index
 
 
 def closure_link_replicas(index: VamanaIndex, closure_bp: int) -> VamanaIndex:
@@ -419,86 +505,26 @@ def closure_link_replicas(index: VamanaIndex, closure_bp: int) -> VamanaIndex:
         raise ValueError(f"closure_bp must be positive, got {closure_bp}")
     from pyspark.storagelevel import StorageLevel
 
-    from scalablevectorsearch_spark.operators.vamana_local import (
-        build_graph,
-        insert_points,
-    )
-
-    params, distance, vec_decode = index.params, index.distance, index.vec_decode
-
-    def link_fn(key, vdf: pd.DataFrame, gdf: pd.DataFrame) -> pd.DataFrame:
-        if len(vdf) == 0:
-            return pd.DataFrame(
-                {"shard_id": [], "src": [], "neighbors": [], "is_entry": []}
-            )
-        vdf = vdf.sort_values("__id").reset_index(drop=True)
-        gids = vdf["__id"].to_numpy(dtype=np.int64)
-        X = np.stack(vdf["__vec"].to_numpy()).astype(np.float64)
-        if vec_decode is not None:
-            X = vec_decode(X)
-        X = X.astype(params.build_dtype, copy=False)
-        shard = int(vdf["shard_id"].iloc[0])
-        if len(gdf) == 0:
-            graph, entry = build_graph(X, params, distance)
-        else:
-            graph, entry = _decode_adjacency(gids, gdf)
-            src = gdf["src"].to_numpy(dtype=np.int64)
-            spos = np.searchsorted(gids, src)
-            sposc = np.minimum(spos, len(gids) - 1)
-            old = np.zeros(len(gids), dtype=bool)
-            old[sposc[gids[sposc] == src]] = True
-            if entry is None:
-                # defensive: a graph frame without a surviving entry row
-                from scalablevectorsearch_spark.operators.vamana_local import (
-                    medioid,
-                )
-
-                entry = int(np.nonzero(old)[0][medioid(X[old])]) if old.any() else 0
-            new_nodes = np.nonzero(~old)[0].astype(np.int64)
-            if len(new_nodes):
-                # ascending-id insertion order: deterministic graphs.
-                # Build-sized rounds (vamana_build.h:241's
-                # max(40, ceil(n/4096)) batching): the lockstep search
-                # cost is superlinear in round size (see insert_points),
-                # and 4096-node rounds measured 2.1x slower
-                nb = max(40, -(-len(new_nodes) // 4096))
-                insert_points(
-                    X, graph, entry, new_nodes, params, distance,
-                    batch_size=-(-len(new_nodes) // nb),
-                )
-        return pd.DataFrame(
-            {
-                "shard_id": shard,
-                "src": gids,
-                "neighbors": [gids[adj].tolist() for adj in graph],
-                "is_entry": [i == entry for i in range(len(gids))],
-            }
-        )
-
-    layout = by_key(
-        _sharded(
-            index.base, index.n_shards, index.id_col, index.shard_model,
-            index.vec_col, closure_bp, vec_decode,
-            stamp_hierarchical=index.stamp_hierarchical,
-        ).select(
-            "shard_id",
-            F.col(index.id_col).cast("long").alias("__id"),
-            F.col(index.vec_col).alias("__vec"),
-        ),
-        "shard_id",
-        index.n_shards,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    graph = (
-        layout.groupBy("shard_id")
-        .cogroup(by_key(index.graph, "shard_id", index.n_shards).groupBy("shard_id"))
-        .applyInPandas(link_fn, GRAPH_SCHEMA)
-    )
-    return VamanaIndex(
-        graph=graph, base=index.base, params=params, distance=distance,
+    out = VamanaIndex(
+        graph=None, base=index.base, params=index.params, distance=index.distance,
         n_shards=index.n_shards, id_col=index.id_col, vec_col=index.vec_col,
-        shard_model=index.shard_model, closure_bp=closure_bp, layout=layout,
-        vec_decode=vec_decode, stamp_hierarchical=index.stamp_hierarchical,
+        shard_model=index.shard_model, closure_bp=closure_bp,
+        vec_decode=index.vec_decode, stamp_hierarchical=index.stamp_hierarchical,
     )
+    out.layout = by_key(_layout_rows(out.base, out), "shard_id", out.n_shards).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    # build-sized insert rounds (vamana_build.h:241's max(40, ceil(n/4096))
+    # batching): the lockstep search cost is superlinear in round size
+    # (see insert_points), and 4096-node rounds measured 2.1x slower
+    out.graph = _graph_cogroup(
+        out.layout, index.graph, out.n_shards,
+        _relink_fn(
+            out.params, out.distance, out.vec_decode,
+            lambda n: -(-n // max(40, -(-n // 4096))),
+        ),
+    )
+    return out
 
 
 def vamana_search(
@@ -810,16 +836,7 @@ def _filtered_scan(index: VamanaIndex, where) -> DataFrame:
     layout cannot carry the predicate's columns."""
     w = F.expr(where) if isinstance(where, str) else where
     return by_key(
-        _sharded(
-            index.base, index.n_shards, index.id_col, index.shard_model,
-            index.vec_col, index.closure_bp, index.vec_decode,
-            stamp_hierarchical=index.stamp_hierarchical,
-        ).select(
-            "shard_id",
-            F.col(index.id_col).cast("long").alias("__id"),
-            F.col(index.vec_col).alias("__vec"),
-            w.cast("boolean").alias("__keep"),
-        ),
+        _layout_rows(index.base, index, extra=(w.cast("boolean").alias("__keep"),)),
         "shard_id",
         index.n_shards,
     )
@@ -935,11 +952,7 @@ def _vamana_search_block(
     def search_fn(key, vdf: pd.DataFrame, gdf: pd.DataFrame) -> pd.DataFrame:
         if len(vdf) == 0 or len(gdf) == 0:
             return pd.DataFrame({"qid": [], "neighbor_id": [], "distance": []})
-        vdf = vdf.sort_values("__id").reset_index(drop=True)
-        gids = vdf["__id"].to_numpy(dtype=np.int64)
-        X = np.stack(vdf["__vec"].to_numpy()).astype(np.float64)
-        if vec_decode is not None:
-            X = vec_decode(X)
+        vdf, gids, X = _shard_rows(vdf, np.float64, vec_decode)
         del_flag = (
             vdf["__del"].to_numpy(dtype=bool) if "__del" in vdf.columns else None
         )
@@ -993,23 +1006,9 @@ def _vamana_search_block(
         # one exchange by shard_id, which the per-shard kernels need
         # anyway)
         scan = _filtered_scan(index, where)
-    elif index.layout is not None:
+    else:
         # persisted shard-partitioned layout: no base shuffle at search
         scan = index.layout
-    else:
-        scan = by_key(
-            _sharded(
-                index.base, index.n_shards, index.id_col, index.shard_model,
-                index.vec_col, index.closure_bp, index.vec_decode,
-                stamp_hierarchical=index.stamp_hierarchical,
-            ).select(
-                "shard_id",
-                F.col(index.id_col).cast("long").alias("__id"),
-                F.col(index.vec_col).alias("__vec"),
-            ),
-            "shard_id",
-            index.n_shards,
-        )
     # placed before the probe filter below, so by_key's placement check
     # reads the persisted graph's cached plan (the planner pushes the
     # filter under the exchange)

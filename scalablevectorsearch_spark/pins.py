@@ -10,6 +10,11 @@ the one RDD the checkpointed plan wraps and unpersists it by id.
 Use it as a context manager: on exit, normal or not, it releases what
 it still holds. To keep state past the scope, ``move()`` it to the
 owner that outlives it (a result handle) before the scope closes.
+
+One cut has no owning scope: ``flat.search_blocks`` materializes each
+``max_query_block`` block's result with an eager ``localCheckpoint``
+that the returned frame reads. It never enters the CacheManager, and
+Spark's ContextCleaner frees it once that frame is unreachable.
 """
 
 from __future__ import annotations

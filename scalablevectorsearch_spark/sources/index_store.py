@@ -361,10 +361,10 @@ def load_vamana(spark: SparkSession, path: str, validate: bool = False):
     # (shard_id, id) assignment table (see save_vamana) — join it back
     # rather than re-deriving the float cutoffs; hash sharding
     # (id mod n_shards) is environment-independent, so re-derive.
-    from scalablevectorsearch_spark.operators.vamana import _sharded
     from pyspark.storagelevel import StorageLevel
 
     from scalablevectorsearch_spark.operators.kmeans import _resolve_stamp_via
+    from scalablevectorsearch_spark.operators.vamana import _layout_rows
 
     stamp_hier = p.get("stamp_hierarchical")
     if stamp_hier is None and shard_model is not None:
@@ -383,15 +383,7 @@ def load_vamana(spark: SparkSession, path: str, validate: bool = False):
         # kernel follows the manifest (falling back to the build's own
         # auto rule) — a flat pass at large shard counts would be
         # O(N*S*d); the grouped stamp is assignment-identical (gated)
-        assigned = _sharded(
-            data, p["n_shards"], "id", shard_model, "vector", p.get("closure_bp"),
-            vec_decode=idx.vec_decode,
-            stamp_hierarchical=idx.stamp_hierarchical,
-        ).select(
-            "shard_id",
-            F.col("id").cast("long").alias("__id"),
-            F.col("vector").alias("__vec"),
-        )
+        assigned = _layout_rows(data, idx)
     idx.layout = by_key(assigned, "shard_id", idx.n_shards).persist(
         StorageLevel.MEMORY_AND_DISK
     )

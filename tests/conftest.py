@@ -45,7 +45,7 @@ SLOW_TESTS = {
     "test_dynamic.py::test_dynamic_cycle_recall",
     "test_advice_fixes.py::test_assign_hierarchical_empty_parent_fallback",
     "test_advice_fixes_r3.py::test_epsilon_probing_recall_at_least_fixed_probe",
-    "test_advice_fixes_r4.py::test_load_fallback_decodes_before_stamping",
+    "test_index_store.py::test_load_fallback_decodes_before_stamping",
     "test_advice_fixes_r4.py::test_leanvec_primary_lvq_saveload_roundtrip",
     "test_advice_fixes_r4.py::test_leanvec_primary_lvq_facade_saveload",
     "test_calibrate_budget.py::TestIvfTargetRecall::test_deterministic",

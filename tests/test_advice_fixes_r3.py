@@ -1,22 +1,9 @@
-"""Regression tests for the round-3 ADVICE findings (ADVICE.md):
-
-1. vamana.py vamana_build — closure_bp was not validated positive: a
-   negative value made the closure cutoff exclude every cell (index
-   silently built nearly empty); closure_bp=0 silently fell back to the
-   non-closure stamp while search still paid the dedup shuffle.
-2. vamana.py search merge — closure-replica dedup used
-   dropDuplicates (arbitrary survivor under float jitter); now a
-   deterministic groupBy min/max of the distance.
-3. index_store.py save_vamana/load_vamana — the kmeans/closure layout
-   is now persisted as a (shard_id, id) assignment table and joined
-   back on load instead of re-derived through exact float cutoffs.
-
-Plus the round-4 feature riding on the same code path: epsilon-cutoff
-(adaptive) shard probing for routed Vamana search.
-"""
+"""Epsilon-cutoff (adaptive) shard probing for routed Vamana search,
+and the closure / probe-budget fits behind it. The round-3 closure
+validation, replica dedup and saved-layout tests live in test_vamana.py
+and test_index_store.py."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from scalablevectorsearch_spark.operators.flat import flat_knn
 from scalablevectorsearch_spark.operators.vamana import (
@@ -26,37 +13,6 @@ from scalablevectorsearch_spark.operators.vamana import (
 )
 
 P8 = VamanaParams(graph_max_degree=8, window_size=20)
-
-
-def test_closure_bp_must_be_positive(embeddings):
-    base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
-        "id < 200"
-    )
-    with pytest.raises(ValueError, match="positive"):
-        vamana_build(base, P8, n_shards=4, shard_by="kmeans", closure_bp=-100)
-    with pytest.raises(ValueError, match="positive"):
-        vamana_build(base, P8, n_shards=4, shard_by="kmeans", closure_bp=0)
-    # hash sharding still rejects closure outright
-    with pytest.raises(ValueError, match="kmeans"):
-        vamana_build(base, P8, n_shards=4, closure_bp=100)
-
-
-def test_closure_dedup_deterministic_best_distance(embeddings):
-    """The replica collapse must keep the BEST distance per
-    (qid, neighbor_id): results must exactly match what an identical
-    search returns (stable across plan re-executions) and contain no
-    duplicates."""
-    base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
-        "id < 500"
-    )
-    queries = base.filter("id < 10").selectExpr("id as qid", "vector")
-    idx = vamana_build(base, P8, n_shards=4, shard_by="kmeans", closure_bp=3000)
-    idx.graph.cache().count()
-    a = sorted(map(tuple, vamana_search(idx, queries, k=5, search_window_size=20).collect()))
-    b = sorted(map(tuple, vamana_search(idx, queries, k=5, search_window_size=20).collect()))
-    assert a == b
-    qn = {(r[0], r[2]) for r in a}
-    assert len(qn) == len(a), "duplicate (qid, neighbor) after dedup"
 
 
 def test_epsilon_probing_requires_kmeans_and_excludes_fixed(embeddings):
@@ -139,30 +95,6 @@ def test_epsilon_max_probes_caps_fanout(embeddings):
     assert capped == fixed
 
 
-def test_saved_layout_assignment_reused_on_load(embeddings, tmp_path):
-    """save_vamana persists the (shard_id, id) assignment for kmeans
-    layouts; load_vamana must reuse it verbatim (same shard_id per id,
-    same replica count) instead of re-deriving the float cutoffs."""
-    from scalablevectorsearch_spark.sources.index_store import (
-        load_vamana,
-        save_vamana,
-    )
-
-    base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
-        "id < 300"
-    )
-    idx = vamana_build(base, P8, n_shards=4, shard_by="kmeans", closure_bp=3000)
-    path = str(tmp_path / "assign_idx")
-    save_vamana(idx, path)
-    import os
-
-    assert os.path.isdir(os.path.join(path, "layout_assign"))
-    loaded = load_vamana(base.sparkSession, path)
-    want = sorted(map(tuple, idx.layout.select("shard_id", "__id").collect()))
-    got = sorted(map(tuple, loaded.layout.select("shard_id", "__id").collect()))
-    assert got == want
-
-
 def test_fit_epsilon_bp_hits_probe_budget():
     """fit_epsilon_bp derives basis points from a probe budget: on a
     geometry with well-separated cells the fitted epsilon probes ~the
@@ -215,26 +147,3 @@ def test_fit_closure_bp_hits_storage_budget():
     assert bp_low <= bp_high
     with pytest.raises(ValueError):
         fit_closure_bp(X, C, 0.5)
-
-
-def test_vamana_build_accepts_pretrained_shard_model(embeddings):
-    """Passing a pre-trained KMeansModel must produce the identical
-    index (deterministic retrain skipped, layout/graph equal)."""
-    from scalablevectorsearch_spark.operators.kmeans import train_kmeans
-
-    base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
-        "id < 400"
-    )
-    model = train_kmeans(base, 4, 2)
-    a = vamana_build(base, P8, n_shards=4, shard_by="kmeans")
-    b = vamana_build(base, P8, n_shards=4, shard_by="kmeans", shard_model=model)
-    la = sorted(map(tuple, a.layout.select("shard_id", "__id").collect()))
-    lb = sorted(map(tuple, b.layout.select("shard_id", "__id").collect()))
-    assert la == lb
-    ga = sorted(map(tuple, a.graph.select("shard_id", "src", "neighbors").collect()))
-    gb = sorted(map(tuple, b.graph.select("shard_id", "src", "neighbors").collect()))
-    assert ga == gb
-    with pytest.raises(ValueError, match="centroids"):
-        vamana_build(base, P8, n_shards=8, shard_by="kmeans", shard_model=model)
-    with pytest.raises(ValueError, match="kmeans"):
-        vamana_build(base, P8, n_shards=4, shard_model=model)

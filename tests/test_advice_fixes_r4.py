@@ -6,7 +6,7 @@
    save_vamana saw no ``lvq_params`` and the loaded index crashed at
    search with a matmul shape mismatch.
 2 (low, index_store.py): the no-layout_assign load fallback must stamp
-   shards in the decoded geometry (vec_decode passed to _sharded).
+   shards in the decoded geometry (tested in test_index_store.py).
 3 (low, flat.py): ragged packed rows whose total length divides the
    row count must be rejected, not silently mis-reshaped.
 4 (low, api.py): a residual-LVQ facade index loaded from disk must use
@@ -100,44 +100,6 @@ def test_leanvec_primary_lvq_facade_saveload(spark, base, queries):
     loaded = svs.Vamana(f"{ART}/lv_lvq_facade")
     loaded.search_window_size = 40
     reloaded = _rows(loaded.search(queries, k=5, rerank_base=base))
-    assert direct == reloaded
-
-
-def test_load_fallback_decodes_before_stamping(spark, base, queries):
-    """ADVICE #2: dropping layout_assign from a kmeans-sharded packed
-    save must still produce a servable index (shards stamped on the
-    DECODED vectors, not raw packed rows)."""
-    import json
-    import os
-
-    model = leanvec_train(base, 32)
-    # kmeans-sharded packed index (the fallback's dangerous case)
-    pb = leanvec_project(base, model, "data", out_col="pv").select(
-        "id", F.col("pv").alias("vector")
-    )
-    primary = lvq_train(pb, primary_bits=4)
-    idx = leanvec_vamana_build(
-        base, model, n_shards=2, primary_lvq=primary, shard_by="kmeans"
-    )
-    direct = _rows(
-        leanvec_vamana_search(idx, queries, base, k=5, k_reorder=30,
-                              search_window_size=40)
-    )
-    save_vamana(idx, f"{ART}/lv_fallback")
-    # simulate an old-format save: no layout_assign table at all
-    shutil.rmtree(f"{ART}/lv_fallback/layout_assign", ignore_errors=True)
-    mpath = f"{ART}/lv_fallback/manifest.json"
-    with open(mpath) as f:
-        manifest = json.load(f)
-    manifest["tables"].pop("layout_assign", None)
-    with open(mpath, "w") as f:
-        json.dump(manifest, f)
-    assert not os.path.exists(f"{ART}/lv_fallback/layout_assign")
-    loaded = load_vamana(spark, f"{ART}/lv_fallback")
-    reloaded = _rows(
-        leanvec_vamana_search(loaded, queries, base, k=5, k_reorder=30,
-                              search_window_size=40)
-    )
     assert direct == reloaded
 
 

@@ -184,12 +184,16 @@ def _blocked_family(family, base):
 @pytest.mark.parametrize("family", ["flat", "ivf", "vamana"])
 def test_blocked_search_matches_single_batch(embeddings, family):
     """max_query_block runs one search per hashed query block; the
-    union equals the single-batch result for every family."""
+    union equals the single-batch result for every family. Each block
+    is materialized as an eager lineage cut, never a persisted plan:
+    the result reads no CacheManager entry, so no block outlives it."""
     base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter("id < 1000")
     queries = base.filter("id < 40").selectExpr("id as qid", "vector")
     search = _blocked_family(family, base)
     single = search(queries).collect()
-    blocked = search(queries, max_query_block=13).collect()
+    out = search(queries, max_query_block=13)
+    assert "InMemoryRelation" not in out._jdf.queryExecution().withCachedData().toString()
+    blocked = out.collect()
     assert len(single) == 40 * 5
     assert sorted(map(tuple, blocked)) == sorted(map(tuple, single))
 

@@ -9,6 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from scalablevectorsearch_spark.operators.ivf import ivf_build, ivf_search
+from scalablevectorsearch_spark.operators.leanvec import (
+    leanvec_project,
+    leanvec_train,
+    leanvec_vamana_build,
+    leanvec_vamana_search,
+)
+from scalablevectorsearch_spark.operators.lvq import lvq_train
 from scalablevectorsearch_spark.operators.vamana import (
     VamanaParams,
     vamana_build,
@@ -250,3 +257,63 @@ def test_kmeans_sharded_vamana_roundtrip(spark, base, queries):
     # routed search on the loaded index
     routed = vamana_search(loaded, queries, k=5, search_window_size=20, n_probes=2)
     assert routed.count() > 0
+
+
+def test_saved_layout_assignment_reused_on_load(embeddings, tmp_path):
+    """save_vamana persists the (shard_id, id) assignment for kmeans
+    layouts; load_vamana must reuse it verbatim (same shard_id per id,
+    same replica count) instead of re-deriving the float cutoffs."""
+    base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
+        "id < 300"
+    )
+    idx = vamana_build(
+        base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=4,
+        shard_by="kmeans", closure_bp=3000,
+    )
+    path = str(tmp_path / "assign_idx")
+    save_vamana(idx, path)
+    import os
+
+    assert os.path.isdir(os.path.join(path, "layout_assign"))
+    loaded = load_vamana(base.sparkSession, path)
+    want = sorted(map(tuple, idx.layout.select("shard_id", "__id").collect()))
+    got = sorted(map(tuple, loaded.layout.select("shard_id", "__id").collect()))
+    assert got == want
+
+
+def test_load_fallback_decodes_before_stamping(spark, base, queries):
+    """ADVICE #2: dropping layout_assign from a kmeans-sharded packed
+    save must still produce a servable index (shards stamped on the
+    DECODED vectors, not raw packed rows)."""
+    import json
+    import os
+
+    model = leanvec_train(base, 32)
+    # kmeans-sharded packed index (the fallback's dangerous case)
+    pb = leanvec_project(base, model, "data", out_col="pv").select(
+        "id", F.col("pv").alias("vector")
+    )
+    primary = lvq_train(pb, primary_bits=4)
+    idx = leanvec_vamana_build(
+        base, model, n_shards=2, primary_lvq=primary, shard_by="kmeans"
+    )
+    direct = _rows(
+        leanvec_vamana_search(idx, queries, base, k=5, k_reorder=30,
+                              search_window_size=40)
+    )
+    save_vamana(idx, f"{ART}/lv_fallback")
+    # simulate an old-format save: no layout_assign table at all
+    shutil.rmtree(f"{ART}/lv_fallback/layout_assign", ignore_errors=True)
+    mpath = f"{ART}/lv_fallback/manifest.json"
+    with open(mpath) as f:
+        manifest = json.load(f)
+    manifest["tables"].pop("layout_assign", None)
+    with open(mpath, "w") as f:
+        json.dump(manifest, f)
+    assert not os.path.exists(f"{ART}/lv_fallback/layout_assign")
+    loaded = load_vamana(spark, f"{ART}/lv_fallback")
+    reloaded = _rows(
+        leanvec_vamana_search(loaded, queries, base, k=5, k_reorder=30,
+                              search_window_size=40)
+    )
+    assert direct == reloaded

@@ -1,28 +1,16 @@
 """Round-10 hardening: held-out calibration validation, scale-safe
-defaults (CI margin, auto exact fallback), bounded dynamic-generation
-storage with amortized lineage cuts, and the grouped-stamp near-tie
-dtype property.
+defaults (CI margin, auto exact fallback) and the grouped-stamp
+near-tie dtype property. The dynamic-generation tests live in
+test_dynamic.py.
 
-Reference parity anchors: calibrate.h:91-249 calibrates to DELIVERED
+Reference parity anchor: calibrate.h:91-249 calibrates to DELIVERED
 recall (the held-out split is how a sample-fitted budget earns that
-claim on the population); dynamic_index.h's in-place mutation keeps
-exactly one live graph (the Spark analog: each mutation releases its
-predecessor's persisted blocks).
+claim on the population).
 """
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
-
-from scalablevectorsearch_spark.operators.dynamic import (
-    _CKPT_EVERY,
-    add_points,
-    consolidate,
-    delete_entries,
-    dynamic_search,
-    dynamic_vamana,
-)
 from scalablevectorsearch_spark.operators import flat as flat_mod
 from scalablevectorsearch_spark.operators.flat import flat_knn
 from scalablevectorsearch_spark.operators.ivf import ivf_build, ivf_search
@@ -197,75 +185,6 @@ class TestAutoFallback:
         ).collect()
         assert calls["n"] == 0
         index.layout.unpersist()
-
-
-# ------------------- dynamic generations: release + amortized lineage cut
-
-
-def _is_persisted(df):
-    return df.storageLevel != StorageLevel.NONE
-
-
-class TestDynamicGenerations:
-    def test_mutation_releases_previous_generation(self, spark, embeddings):
-        base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
-            "vec_id < 300"
-        )
-        idx = vamana_build(base, VamanaParams(graph_max_degree=8, window_size=20),
-                           n_shards=2)
-        dyn = dynamic_vamana(idx)
-        fresh = embeddings.selectExpr(
-            "vec_id + 100000 as id", "embedding as vector"
-        ).filter("id < 100020")
-        d1 = add_points(dyn, fresh)
-        assert _is_persisted(d1.index.graph) and _is_persisted(d1.index.layout)
-        g1, l1 = d1.index.graph, d1.index.layout
-        d2 = delete_entries(d1, fresh.limit(5).select("id"))
-        d3 = consolidate(d2)
-        # the consolidate superseded generation 1 -> its pins released
-        assert not _is_persisted(g1) and not _is_persisted(l1)
-        assert _is_persisted(d3.index.graph) and _is_persisted(d3.index.layout)
-        # close() releases the live generation
-        d3.close()
-        assert not _is_persisted(d3.index.graph)
-
-    def test_checkpoint_cadence_and_correctness(self, spark, embeddings):
-        """_CKPT_EVERY mutations between lineage cuts: after a chain of
-        2*_CKPT_EVERY+1 mutations the search still matches the batch
-        rebuild exactly (exhaustive window) and the plan stayed
-        analyzable (the chain itself would have blown up unguarded)."""
-        base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
-            "vec_id < 250"
-        ).cache()
-        base.count()
-        queries = base.filter("id < 5").selectExpr("id as qid", "vector")
-        idx = vamana_build(base, VamanaParams(graph_max_degree=8, window_size=20),
-                           n_shards=2)
-        dyn = dynamic_vamana(idx)
-        spark_df = embeddings.selectExpr(
-            "vec_id + 200000 as id", "embedding as vector"
-        )
-        live_extra = []
-        ckpt_gens = []
-        for i in range(2 * _CKPT_EVERY + 1):
-            batch = spark_df.filter(
-                (F.col("id") >= 200000 + 10 * i) & (F.col("id") < 200010 + 10 * i)
-            )
-            dyn = add_points(dyn, batch)
-            ckpt_gens.append(dyn.gens_since_ckpt)
-            live_extra.append(batch)
-        # the counter actually cycles (cuts happened, but not every time)
-        assert 0 in ckpt_gens and max(ckpt_gens) == _CKPT_EVERY - 1
-        got = dynamic_search(dyn, queries, k=5, search_window_size=4096)
-        full = base
-        for b in live_extra:
-            full = full.unionByName(b)
-        want = flat_knn(full, queries, k=5, distance="l2", round_to=4)
-        assert sorted(
-            (r["qid"], r["rank"], r["neighbor_id"]) for r in got.collect()
-        ) == sorted((r["qid"], r["rank"], r["neighbor_id"]) for r in want.collect())
-        dyn.close()
-        base.unpersist()
 
 
 # --------------------------- clustered (mixture-of-Gaussians) generator

@@ -230,40 +230,6 @@ def test_flat_stamp_no_duplicates_unchanged():
 # ------------------------------------------------------ fresh cal_cache
 
 
-def test_dynamic_vamana_mutations_get_fresh_cal_cache(spark, embeddings):
-    """add_points/consolidate must not share cal_cache with the
-    pre-mutation index: stale __pool/__n_base counts would mis-route
-    the auto exact-fallback after the base changes (ADVICE r10)."""
-    from scalablevectorsearch_spark.operators.dynamic import (
-        add_points,
-        consolidate,
-        delete_entries,
-        dynamic_vamana,
-    )
-    from scalablevectorsearch_spark.operators.vamana import (
-        VamanaParams,
-        vamana_build,
-    )
-
-    base = embeddings.selectExpr("vec_id as id", "embedding as vector")
-    idx = vamana_build(
-        base, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2
-    )
-    dyn = dynamic_vamana(idx)
-    dyn.index.cal_cache["__n_base"] = 12345  # sentinel
-    added = base.filter(F.col("id") < 3).select(
-        (F.col("id") + 90000).alias("id"), "vector"
-    )
-    d2 = add_points(dyn, added)
-    assert d2.index.cal_cache == {}
-    assert d2.index.cal_cache is not dyn.index.cal_cache
-    d2.index.cal_cache["__n_base"] = 777
-    d3 = delete_entries(d2, base.filter(F.col("id") < 2).select("id"))
-    d4 = consolidate(d3)
-    assert d4.index.cal_cache == {}
-    assert d4.index.cal_cache is not d2.index.cal_cache
-
-
 def test_dynamic_ivf_mutations_get_fresh_cal_cache(spark, embeddings):
     from scalablevectorsearch_spark.operators.dynamic import (
         dynamic_ivf,

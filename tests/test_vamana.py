@@ -19,6 +19,8 @@ from scalablevectorsearch_spark.operators.vamana_local import (
     medioid,
 )
 
+P8 = VamanaParams(graph_max_degree=8, window_size=20)
+
 
 @pytest.fixture(scope="module")
 def base(embeddings):
@@ -363,3 +365,57 @@ def test_layout_one_shard_per_partition(spark, base, n_shards):
         idx.layout.unpersist()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_closure_bp_must_be_positive(embeddings):
+    base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
+        "id < 200"
+    )
+    with pytest.raises(ValueError, match="positive"):
+        vamana_build(base, P8, n_shards=4, shard_by="kmeans", closure_bp=-100)
+    with pytest.raises(ValueError, match="positive"):
+        vamana_build(base, P8, n_shards=4, shard_by="kmeans", closure_bp=0)
+    # hash sharding still rejects closure outright
+    with pytest.raises(ValueError, match="kmeans"):
+        vamana_build(base, P8, n_shards=4, closure_bp=100)
+
+
+def test_closure_dedup_deterministic_best_distance(embeddings):
+    """The replica collapse must keep the BEST distance per
+    (qid, neighbor_id): results must exactly match what an identical
+    search returns (stable across plan re-executions) and contain no
+    duplicates."""
+    base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
+        "id < 500"
+    )
+    queries = base.filter("id < 10").selectExpr("id as qid", "vector")
+    idx = vamana_build(base, P8, n_shards=4, shard_by="kmeans", closure_bp=3000)
+    idx.graph.cache().count()
+    a = sorted(map(tuple, vamana_search(idx, queries, k=5, search_window_size=20).collect()))
+    b = sorted(map(tuple, vamana_search(idx, queries, k=5, search_window_size=20).collect()))
+    assert a == b
+    qn = {(r[0], r[2]) for r in a}
+    assert len(qn) == len(a), "duplicate (qid, neighbor) after dedup"
+
+
+def test_vamana_build_accepts_pretrained_shard_model(embeddings):
+    """Passing a pre-trained KMeansModel must produce the identical
+    index (deterministic retrain skipped, layout/graph equal)."""
+    from scalablevectorsearch_spark.operators.kmeans import train_kmeans
+
+    base = embeddings.selectExpr("vec_id as id", "embedding as vector").filter(
+        "id < 400"
+    )
+    model = train_kmeans(base, 4, 2)
+    a = vamana_build(base, P8, n_shards=4, shard_by="kmeans")
+    b = vamana_build(base, P8, n_shards=4, shard_by="kmeans", shard_model=model)
+    la = sorted(map(tuple, a.layout.select("shard_id", "__id").collect()))
+    lb = sorted(map(tuple, b.layout.select("shard_id", "__id").collect()))
+    assert la == lb
+    ga = sorted(map(tuple, a.graph.select("shard_id", "src", "neighbors").collect()))
+    gb = sorted(map(tuple, b.graph.select("shard_id", "src", "neighbors").collect()))
+    assert ga == gb
+    with pytest.raises(ValueError, match="centroids"):
+        vamana_build(base, P8, n_shards=8, shard_by="kmeans", shard_model=model)
+    with pytest.raises(ValueError, match="kmeans"):
+        vamana_build(base, P8, n_shards=4, shard_model=model)
