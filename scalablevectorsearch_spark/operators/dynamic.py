@@ -46,7 +46,9 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scalablevectorsearch_spark.functions.arrowio import map_stamp
 from scalablevectorsearch_spark.operators.flat import flat_knn
+from scalablevectorsearch_spark.operators.kmeans import make_stamp_fn
 from scalablevectorsearch_spark.operators.vamana import (
     EMPTY_GRAPH,
     VamanaIndex,
@@ -128,27 +130,12 @@ def ivf_add_points(dyn: DynamicIVF, new_rows: DataFrame) -> DynamicIVF:
     if n_dup:
         raise ValueError(f"{n_dup} ids already exist in the index")
 
-    sc = new_rows.sparkSession.sparkContext
-    bc = sc.broadcast(idx.model.centroids)
-    cols = [c for c in idx.clustered.columns if c != "cluster_id"]
-
-    def stamp(batches):
-        import numpy as np
-        import pandas as pd
-
-        from scalablevectorsearch_spark.operators.kmeans import _nearest_centroid
-
-        C = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            pdf = pdf.copy()
-            pdf["cluster_id"] = _nearest_centroid(V, C)
-            yield pdf
-
-    stamped = new_rows.select(*cols).mapInPandas(
-        stamp, idx.clustered.schema
+    # the build's own stamp (grouped at >= HIERARCHICAL_STAMP_THRESHOLD
+    # centroids, same assignments as the flat pass)
+    stamped = map_stamp(
+        new_rows.select(*[c for c in idx.clustered.columns if c != "cluster_id"]),
+        vec_col, "cluster_id",
+        make_stamp_fn(new_rows.sparkSession.sparkContext, idx.model.centroids),
     )
     return DynamicIVF(
         # fresh cal_cache: cached calibration groundtruth belongs to the

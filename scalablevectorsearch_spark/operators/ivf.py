@@ -39,9 +39,9 @@ from dataclasses import dataclass, field
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
-from scalablevectorsearch_spark.functions.distances import is_similarity, pairwise_distances
+from scalablevectorsearch_spark.functions.arrowio import map_stamp
+from scalablevectorsearch_spark.functions.distances import is_similarity
 from scalablevectorsearch_spark.operators.codec import _rerank_reconstruction
 from scalablevectorsearch_spark.operators.flat import (
     RESULT_SCHEMA,
@@ -51,7 +51,13 @@ from scalablevectorsearch_spark.operators.flat import (
     collect_queries,
     search_blocks,
 )
-from scalablevectorsearch_spark.operators.kmeans import KMeansModel, train_kmeans
+from scalablevectorsearch_spark.operators.kmeans import (
+    KMeansModel,
+    _cell_keys,
+    _within_bp,
+    make_stamp_fn,
+    train_kmeans,
+)
 
 
 @dataclass
@@ -95,9 +101,6 @@ def ivf_build(
     kmeans.HIERARCHICAL_STAMP_THRESHOLD centroids. ``model``: skip the
     (deterministic) retrain with a pre-trained KMeansModel — e.g. a
     prefix-sample-trained model at the 1e8 tier."""
-    from scalablevectorsearch_spark.functions.arrowio import map_stamp
-    from scalablevectorsearch_spark.operators.kmeans import make_stamp_fn
-
     if model is None:
         model = train_kmeans(base, n_clusters, n_iters, id_col, vec_col)
     elif model.centroids.shape[0] != n_clusters:
@@ -120,39 +123,17 @@ def probe_clusters_epsilon(
     distance: str = "l2",
     min_probes: int | None = None,
 ) -> list[np.ndarray]:
-    """Two-level Inverted cluster selection (memory_based.h:407-460,
-    :508 refinement_epsilon_): probe every cluster whose e4 centroid
-    key is within (1 + epsilon) of the best, epsilon expressed in basis
-    points so the cutoff is exact integer arithmetic in both engines:
-    probe c iff key_c * 10000 <= key_best * 10000 + |key_best| * epsilon_bp.
-    The additive |key_best| slack equals the reference's multiplicative
-    (1 + epsilon) rule for non-negative keys (the L2 case the oracle
-    gates) and stays sign-correct when the best key is negative (negated
-    similarity keys): a pure multiplicative cutoff would shrink BELOW
-    the best key there and probe nothing. The argmin cluster always
-    satisfies the cutoff (slack >= 0).
-
-    ``min_probes`` is the per-query probe FLOOR: when the cutoff
-    selects fewer clusters, the selection is extended to the
-    min_probes nearest by (key, cluster_id) — the same deterministic
-    lexsort order the ``max_probes`` cap uses. Rationale (measured,
-    BENCH_HISTORY.jsonl ``probe_alloc_coverage`` row): a budget-fitted
-    global epsilon yields a long-tailed per-query probe distribution;
-    recall is concave in probes, so the under-probing tail costs more
-    recall than the over-probing tail buys. Clamping to [~3/4 budget, 2x budget]
-    matches fixed-fan-out coverage on uniform (signal-free) data and
-    beats BOTH fixed and unclamped epsilon on mixed-difficulty
-    clustered data.
-    Returns one variable-length cluster-id array per query."""
-    D = pairwise_distances(Q, centroids, distance)
-    key = np.floor(D * 1e4 + 0.5).astype(np.int64)
-    if is_similarity(distance):
-        key = -key
+    """Epsilon-cutoff cluster selection (memory_based.h:407-460, :508
+    refinement_epsilon_): every cluster whose e4 centroid key passes
+    ``_within_bp`` against the query's best key at ``epsilon_bp``,
+    capped at the ``max_probes`` nearest and extended to the
+    ``min_probes`` nearest, both by (key, cluster_id) — the same
+    deterministic lexsort order (see :func:`probe_plan` for the
+    clamp). Returns one variable-length cluster-id array per query."""
+    key = _cell_keys(Q, centroids, distance)
     out: list[np.ndarray] = []
     for qi in range(key.shape[0]):
-        k_best = int(key[qi].min())
-        cut = k_best * 10000 + abs(k_best) * epsilon_bp
-        sel = np.nonzero(key[qi] * 10000 <= cut)[0]
+        sel = np.nonzero(_within_bp(key[qi], int(key[qi].min()), epsilon_bp))[0]
         if max_probes is not None and len(sel) > max_probes:
             order = np.lexsort((sel, key[qi, sel]))[:max_probes]
             sel = sel[order]
@@ -196,13 +177,8 @@ def probe_clusters_epsilon_routed(
     out: list[np.ndarray] = []
     for qi in range(Q.shape[0]):
         cids = np.asarray(sorted({int(c) for c in cand[qi] if c >= 0}), dtype=np.int64)
-        D = pairwise_distances(Q[qi : qi + 1], centroids[cids], distance)[0]
-        key = np.floor(D * 1e4 + 0.5).astype(np.int64)
-        if is_similarity(distance):
-            key = -key
-        k_best = int(key.min())
-        cut = k_best * 10000 + abs(k_best) * epsilon_bp
-        keep = key * 10000 <= cut
+        key = _cell_keys(Q[qi : qi + 1], centroids[cids], distance)[0]
+        keep = _within_bp(key, int(key.min()), epsilon_bp)
         sel, skey = cids[keep], key[keep]
         if max_probes is not None and len(sel) > max_probes:
             order = np.lexsort((sel, skey))[:max_probes]
@@ -221,9 +197,9 @@ def budget_probe_clamp(
     probe_budget: float, n_cells: int, max_probes: int | None = None
 ) -> tuple[int, int]:
     """Per-query probe clamp ``[floor, cap]`` for budget-invariant
-    adaptive probing (``probe_budget`` on :func:`ivf_search` /
-    ``vamana_search``): floor ~ 3/4 of the budget, cap 2x the budget,
-    both bounded by the cell count and an explicit user ``max_probes``
+    adaptive probing (``probe_budget`` on :func:`probe_plan`): floor
+    ~ 3/4 of the budget, cap 2x the budget, both bounded by the cell
+    count and an explicit user ``max_probes``
     (a user cap below the floor wins — the floor is a quality default,
     the cap is a hard cost bound).
 
@@ -282,18 +258,14 @@ def fit_epsilon_bp(
     ``max_probes`` on :func:`probe_clusters_epsilon`), pass the SAME
     clamps here so the fitted mean accounts for them — otherwise the
     floor inflates the realized mean above the budget."""
-    D = pairwise_distances(Q, centroids, distance)
-    key = np.floor(D * 1e4 + 0.5).astype(np.int64)
-    if is_similarity(distance):
-        key = -key
+    key = _cell_keys(Q, centroids, distance)
     best = key.min(axis=1, keepdims=True)
-    # mean probes for a given bp = mean count of key*1e4 <= best*1e4+|best|*bp
     lo_c = min_probes if min_probes is not None else 0
     hi_c = max_probes if max_probes is not None else key.shape[1]
     lo, hi = 0, 10_000_000
     while lo < hi:
         mid = (lo + hi) // 2
-        raw = (key * 10000 <= best * 10000 + np.abs(best) * mid).sum(axis=1)
+        raw = _within_bp(key, best, mid).sum(axis=1)
         cnt = np.clip(raw, lo_c, hi_c).mean()
         if cnt < target_mean_probes:
             lo = mid + 1
@@ -316,13 +288,12 @@ def fit_closure_bp(
     Driver-side over a row sample; exact integer binary search."""
     if target_amplification < 1.0:
         raise ValueError("target_amplification must be >= 1")
-    D = pairwise_distances(X_sample, centroids, "l2")
-    key = np.floor(D * 1e4 + 0.5).astype(np.int64)
+    key = _cell_keys(X_sample, centroids, "l2")
     best = key.min(axis=1, keepdims=True)
     lo, hi = 1, 10_000_000
     while lo < hi:
         mid = (lo + hi) // 2
-        amp = (key * 10000 <= best * 10000 + np.abs(best) * mid).sum(axis=1).mean()
+        amp = _within_bp(key, best, mid).sum(axis=1).mean()
         if amp <= target_amplification:
             lo = mid + 1
         else:
@@ -340,13 +311,108 @@ def probe_clusters(
     kernel runs distributed (map the queries table with broadcast
     centroids); the gate contract keeps queries driver-resident like the
     reference's numpy query batches."""
-    D = pairwise_distances(Q, centroids, distance)
-    key = np.floor(D * 1e4 + 0.5).astype(np.int64)
-    if is_similarity(distance):
-        key = -key
+    key = _cell_keys(Q, centroids, distance)
     cids = np.broadcast_to(np.arange(centroids.shape[0], dtype=np.int64), key.shape)
     order = np.lexsort((cids, key), axis=1)[:, :n_probes]
     return order.astype(np.int32)
+
+
+def probe_plan(
+    Q: np.ndarray,
+    centroids: np.ndarray | None,
+    distance: str = "l2",
+    n_probes: int | None = None,
+    epsilon_bp: int | None = None,
+    max_probes: int | None = None,
+    probe_budget: float | None = None,
+    router=None,
+    router_candidates: int | None = None,
+) -> dict[int, np.ndarray] | None:
+    """The one probe plan of IVF and kmeans-sharded Vamana search: the
+    cells each query of a block probes, inverted to ``{cell: ascending
+    query positions}`` — the map a block broadcasts beside its queries
+    so the member scan keeps only probed cells and runs each cell
+    against just its probing queries. ``None`` = no selection (full
+    fan-out: a hash-sharded or unrouted Vamana search). Modes, in this
+    order; the callers validate their combinations up front:
+
+    ``probe_budget``: adaptive probing with the BUDGET as the
+    invariant. :func:`fit_epsilon_bp` fits ``epsilon_bp`` on this
+    block's query geometry (integer basis points, deterministic given
+    the block) so the mean probes/query is ~probe_budget — the right
+    default when the data distribution isn't known in advance (a
+    hand-picked epsilon that is safe on clustered data degrades to full
+    fan-out on uniform data and vice versa). The per-query probe count
+    is clamped to [~3/4·budget (strictly < budget), 2·budget]
+    (:func:`budget_probe_clamp`; an explicit ``max_probes`` below the
+    floor wins) and the fit accounts for the clamp: an unclamped
+    budget-fitted epsilon has a long-tailed probe distribution, and
+    recall is concave in probes, so its under-probing tail costs more
+    recall than its over-probing tail buys. On signal-free uniform data
+    the unclamped fit underperforms a fixed fan-out at equal mean
+    probes while the clamped fit matches it (BENCH_HISTORY.jsonl
+    ``probe_alloc_coverage`` row); on mixed-difficulty clustered data
+    the clamped fit beats both.
+
+    ``epsilon_bp``: ADAPTIVE probing (the two-level Inverted index's
+    refinement_epsilon_, memory_based.h:407-460, :508): every cell
+    whose e4 centroid key is within (1 + epsilon_bp/1e4) of the query's
+    best (``kmeans._within_bp``). Queries near a cell center probe few
+    cells and boundary queries many, so recall does not degrade with
+    the cell count the way a fixed fan-out does. Uncapped by default
+    ("every cell within (1+epsilon)"); ``max_probes`` caps it at the
+    nearest cells. Takes precedence over ``n_probes``.
+
+    ``n_probes``: the fixed ``min(n_probes, n_cells)`` nearest cells,
+    ranked by (e4 key, cell id) — IVFSearchParameters::n_probes_
+    (common.h:151-166).
+
+    ``router``: a CentroidRouter (operators.router) over these
+    centroids replaces the exact O(C·d)-per-query key scan with a
+    sublinear graph traversal, the two-level Inverted "primary index"
+    (clustering.h:786-809), for large cell counts. With ``n_probes`` it
+    returns the routed nearest cells; with ``epsilon_bp`` or
+    ``probe_budget`` it proposes ``router_candidates`` cells (default
+    4x ``max_probes``, or 32) and the cutoff refines among them
+    (memory_based.h:577-586 + :508). Router padding (``c < 0``) never
+    reaches the plan."""
+    min_probes = None
+    if probe_budget is not None:
+        min_probes, max_probes = budget_probe_clamp(
+            probe_budget, centroids.shape[0], max_probes
+        )
+        epsilon_bp = fit_epsilon_bp(
+            Q, centroids, float(probe_budget), distance,
+            min_probes=min_probes, max_probes=max_probes,
+        )
+    if epsilon_bp is not None:
+        if router is not None:
+            sel = probe_clusters_epsilon_routed(
+                Q, centroids, router, epsilon_bp, n_candidates=router_candidates,
+                max_probes=max_probes, distance=distance, min_probes=min_probes,
+            )
+        else:
+            sel = probe_clusters_epsilon(
+                Q, centroids, epsilon_bp, max_probes=max_probes,
+                distance=distance, min_probes=min_probes,
+            )
+    elif n_probes is not None:
+        n_probes = min(n_probes, centroids.shape[0])
+        if router is not None:
+            from scalablevectorsearch_spark.operators.router import route
+
+            sel = route(router, Q, n_probes)
+        else:
+            sel = probe_clusters(Q, centroids, n_probes, distance)
+    else:
+        return None
+    # (cell, query) pairs, padding dropped, sorted and deduplicated, then
+    # split by cell
+    qpos = np.repeat(np.arange(len(sel), dtype=np.int64), [len(s) for s in sel])
+    cells = np.concatenate([np.asarray(s, dtype=np.int64) for s in sel] or [qpos])
+    pairs = np.unique(np.stack([cells, qpos], axis=1)[cells >= 0], axis=0)
+    cuts = np.flatnonzero(np.diff(pairs[:, 0])) + 1
+    return {int(p[0, 0]): p[:, 1] for p in np.split(pairs, cuts) if len(p)}
 
 
 def _fit_budget_for_target(
@@ -533,20 +599,12 @@ def ivf_search(
 ) -> DataFrame:
     """Approximate k-NN probing clusters per query.
 
-    Cluster selection: fixed ``n_probes`` nearest centroids (IVF,
-    common.h:151-166) or, when ``epsilon_bp`` is set, every cluster
-    within (1 + epsilon) of the best centroid distance (the two-level
-    Inverted index's cutoff rule, memory_based.h:407-460).
-    ``probe_budget`` fits ``epsilon_bp`` per query block so the mean
-    probes/query is ~budget, with per-query counts clamped to
-    [~3/4·budget (strictly < budget), 2·budget] (same contract as
-    vamana_search(probe_budget=...); see probe_clusters_epsilon for
-    the clamp rationale). Mutually exclusive with explicit
-    ``n_probes``/``epsilon_bp``. Passing a
-    ``router`` (operators.router.CentroidRouter over this index's
-    centroids) replaces the exact O(C·d)-per-query centroid argmin with
-    a sublinear graph traversal — the two-level Inverted "primary
-    index" design (clustering.h:786-809), for large cluster counts.
+    Cluster selection per query block: ``n_probes`` (fixed fan-out,
+    default 8), ``epsilon_bp`` (adaptive cutoff, overrides
+    ``n_probes``; cap with ``max_probes``), ``probe_budget`` (fitted
+    epsilon with the budget as the invariant; mutually exclusive with
+    ``epsilon_bp``) and ``router`` / ``router_candidates`` (sublinear
+    centroid routing) are documented once, on :func:`probe_plan`.
 
     ``k_reorder`` (common.h:156): first retrieve k_reorder candidates
     with the index's stored vectors, then re-rank them EXACTLY against
@@ -618,9 +676,11 @@ def ivf_search(
     out = search_blocks(
         queries, qid_col, qvec_col, inner_k, is_similarity(distance),
         lambda qids, Q: _ivf_search_block(
-            index, qids, Q, inner_k, n_probes, distance, round_to, epsilon_bp,
-            max_probes, where, router, deadline,
-            router_candidates=router_candidates, probe_budget=probe_budget,
+            index, qids, Q, inner_k, distance, round_to, where, deadline,
+            probe_plan(
+                Q, index.model.centroids, distance, n_probes, epsilon_bp,
+                max_probes, probe_budget, router, router_candidates,
+            ),
         ),
         max_query_block, batch,
     )
@@ -642,69 +702,15 @@ def _ivf_search_block(
     qids: np.ndarray,
     Q: np.ndarray,
     k: int,
-    n_probes: int,
     distance: str,
     round_to: int | None,
-    epsilon_bp: int | None,
-    max_probes: int | None,
     where,
-    router,
-    deadline: float | None = None,
-    router_candidates: int | None = None,
-    probe_budget: float | None = None,
+    deadline: float | None,
+    probe_of: dict[int, np.ndarray],
 ) -> tuple[DataFrame, object]:
-    """One query block's probe + member scan: the block's unranked
-    (qid, neighbor_id, distance) candidates, k per query per partition,
-    and its broadcast."""
-    min_probes: int | None = None
-    if probe_budget is not None:
-        # budget-invariant adaptive probing with the clamped fit (same
-        # contract and rationale as vamana_search's probe_budget path);
-        # the floor stays strictly below the budget so small budgets
-        # don't degenerate to fixed probing (budget_probe_clamp)
-        n_cl = index.model.centroids.shape[0]
-        min_probes, max_probes = budget_probe_clamp(probe_budget, n_cl, max_probes)
-        epsilon_bp = fit_epsilon_bp(
-            Q, index.model.centroids, float(probe_budget), distance,
-            min_probes=min_probes, max_probes=max_probes,
-        )
-    probe_of: dict[int, np.ndarray] = {}
-    if epsilon_bp is not None:
-        # epsilon probing is uncapped by default ("every cluster within
-        # (1+epsilon)", memory_based.h:508); the fixed n_probes budget
-        # does NOT apply here — cap only via the explicit max_probes.
-        # With a router, the primary index proposes candidates
-        # sublinearly and epsilon refines them (the full two-level
-        # composition, memory_based.h:577-586 + :508).
-        if router is not None:
-            sel = probe_clusters_epsilon_routed(
-                Q, index.model.centroids, router, epsilon_bp,
-                n_candidates=router_candidates, max_probes=max_probes,
-                distance=distance, min_probes=min_probes,
-            )
-        else:
-            sel = probe_clusters_epsilon(
-                Q, index.model.centroids, epsilon_bp, max_probes=max_probes,
-                min_probes=min_probes,
-                distance=distance,
-            )
-        for qi, cids in enumerate(sel):
-            for c in cids:
-                probe_of.setdefault(int(c), []).append(qi)
-        probe_of = {c: np.asarray(v, dtype=np.int64) for c, v in probe_of.items()}
-    elif router is not None:
-        from scalablevectorsearch_spark.operators.router import route
-
-        probes = route(router, Q, min(n_probes, index.n_clusters))
-        for c in np.unique(probes):
-            if c >= 0:
-                probe_of[int(c)] = np.nonzero((probes == c).any(axis=1))[0]
-    else:
-        n_probes = min(n_probes, index.n_clusters)
-        probes = probe_clusters(Q, index.model.centroids, n_probes, distance)
-        for c in np.unique(probes):
-            probe_of[int(c)] = np.nonzero((probes == c).any(axis=1))[0]
-
+    """One query block's member scan over its probe plan: the block's
+    unranked (qid, neighbor_id, distance) candidates, k per query per
+    partition, and its broadcast."""
     probed_union = [int(c) for c in sorted(probe_of)]
     clustered = index.clustered
     if where is not None:

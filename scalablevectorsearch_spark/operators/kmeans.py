@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType, StructField, StructType
 
+from scalablevectorsearch_spark.functions.arrowio import map_stamp
+from scalablevectorsearch_spark.functions.distances import is_similarity, pairwise_distances
 from scalablevectorsearch_spark.placement import by_key
 
 PARTIAL_SCHEMA = StructType(
@@ -45,10 +47,6 @@ PARTIAL_SCHEMA = StructType(
         StructField("cnt", LongType()),
         StructField("sums", ArrayType(DoubleType())),
     ]
-)
-
-ASSIGN_SCHEMA = StructType(
-    [StructField("id", LongType()), StructField("cluster_id", IntegerType())]
 )
 
 
@@ -111,6 +109,32 @@ def _nearest_centroid(V: np.ndarray, C: np.ndarray) -> np.ndarray:
     return a.astype(np.int32)
 
 
+def _cell_keys(Q: np.ndarray, C: np.ndarray, distance: str = "l2") -> np.ndarray:
+    """The e4 centroid key of every (query, cell) pair, the one ranking
+    that probe selection, the epsilon/closure cutoffs and their fits
+    share with the DuckDB oracle: ``floor(d*1e4 + 0.5)`` as int64,
+    negated for similarities so a smaller key is always nearer. Runs
+    through ``pairwise_distances``, so registered custom distances key
+    the same way."""
+    key = np.floor(pairwise_distances(Q, C, distance) * 1e4 + 0.5).astype(np.int64)
+    return -key if is_similarity(distance) else key
+
+
+def _within_bp(key, best, bp):
+    """The basis-point cutoff of epsilon probing and closure replication
+    (the Inverted index's refinement_epsilon_, memory_based.h:407-460,
+    :508): a cell qualifies iff ``key*10000 <= best*10000 + |best|*bp``,
+    exact integer arithmetic in both engines. The additive ``|best|``
+    slack equals the reference's multiplicative (1 + bp/1e4) rule for
+    non-negative keys (the L2 case the oracle gates) and stays
+    sign-correct when the best key is negative (negated similarity
+    keys), where a pure multiplicative cutoff would shrink BELOW the
+    best key and select nothing. The best cell always qualifies for
+    ``bp >= 0``. A Python-int ``best`` keeps the right-hand side in
+    unbounded integers; array operands are int64."""
+    return key * 10000 <= best * 10000 + abs(best) * bp
+
+
 def _scan(base: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return base.select(
         F.col(id_col).cast("long").alias("__id"), F.col(vec_col).alias("__vec")
@@ -147,29 +171,6 @@ def _partial_sums_fn(stamp_fn, k: int, d: int):
             ],
             names=["cluster_id", "cnt", "sums"],
         )
-
-    return fn
-
-
-def _assign_fn(bc):
-    def fn(batches) -> Iterator:
-        import pyarrow as pa
-
-        from scalablevectorsearch_spark.functions.arrowio import batch_matrix
-
-        C = bc.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            V = batch_matrix(rb.column(1))
-            ids = rb.column(0).to_numpy(zero_copy_only=False)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids.astype(np.int64, copy=False), type=pa.int64()),
-                    pa.array(_nearest_centroid(V, C), type=pa.int32()),
-                ],
-                names=["id", "cluster_id"],
-            )
 
     return fn
 
@@ -246,13 +247,33 @@ def _resolve_stamp_via(stamp_via: str, n_centroids: int) -> bool:
     )
 
 
-def make_stamp_fn(sc, centroids: np.ndarray, stamp_via: str = "auto"):
-    """Broadcast-backed ``V -> cluster_id`` stamp closure, flat or
-    grouped per ``stamp_via`` (see _resolve_stamp_via)."""
+def make_stamp_fn(
+    sc, centroids: np.ndarray, stamp_via: str = "auto", closure_bp: int | None = None
+):
+    """The one broadcast-backed cell stamp of k-means training, cluster
+    assignment, the IVF build and insert, and the Vamana shard layout:
+    ``V -> cluster_id`` (for ``map_stamp``), or with ``closure_bp``
+    (SPANN closure assignment) ``V -> (row, cid)`` pairs for every cell
+    within the basis-point cutoff of the row's nearest (for
+    ``map_stamp_replicate``). ``stamp_via`` picks the flat BLAS pass
+    over all C centroids or the grouped triangle-pruned one (see
+    _resolve_stamp_via): same assignments and replica sets
+    (GroupedCentroids invariant) at ~2*sqrt(C) distance rows per input
+    row instead of C, the measured >=5e7-row build wall of the flat pass
+    (r8: 7105.8s at 5e7 rows / 6103 shards)."""
     if _resolve_stamp_via(stamp_via, centroids.shape[0]):
-        bc = sc.broadcast(group_centroids(centroids))
-        return lambda V: nearest_centroid_grouped(V, bc.value)
+        bcg = sc.broadcast(group_centroids(centroids))
+        if closure_bp is not None:
+            return lambda V: centroids_within_grouped(V, bcg.value, closure_bp)
+        return lambda V: nearest_centroid_grouped(V, bcg.value)
     bc = sc.broadcast(centroids)
+    if closure_bp is not None:
+
+        def expand(V: np.ndarray):
+            key = _cell_keys(V, bc.value, "l2")
+            return np.nonzero(_within_bp(key, key.min(axis=1, keepdims=True), closure_bp))
+
+        return expand
     return lambda V: _nearest_centroid(V, bc.value)
 
 
@@ -264,16 +285,10 @@ def assign_clusters(
     stamp_via: str = "auto",
 ) -> DataFrame:
     """(id, cluster_id) under the model's (final, rounded) centroids."""
-    sc = base.sparkSession.sparkContext
-    if _resolve_stamp_via(stamp_via, model.centroids.shape[0]):
-        from scalablevectorsearch_spark.functions.arrowio import map_stamp
-
-        fn = make_stamp_fn(sc, model.centroids, stamp_via)
-        return map_stamp(
-            _scan(base, id_col, vec_col), "__vec", "cluster_id", fn
-        ).select(F.col("__id").alias("id"), "cluster_id")
-    bc = sc.broadcast(model.centroids)
-    return _scan(base, id_col, vec_col).mapInArrow(_assign_fn(bc), ASSIGN_SCHEMA)
+    fn = make_stamp_fn(base.sparkSession.sparkContext, model.centroids, stamp_via)
+    return map_stamp(_scan(base, id_col, vec_col), "__vec", "cluster_id", fn).select(
+        F.col("__id").alias("id"), "cluster_id"
+    )
 
 
 def stamp_clusters(
@@ -285,8 +300,6 @@ def stamp_clusters(
     """``base`` + a ``cluster_id`` column, stamped map-side against the
     broadcast centroids — no join back on id (the assign-then-join shape
     shuffles the base twice; this is one pass, zero shuffles)."""
-    from scalablevectorsearch_spark.functions.arrowio import map_stamp
-
     sc = base.sparkSession.sparkContext
     return map_stamp(
         base, vec_col, "cluster_id", make_stamp_fn(sc, model.centroids, stamp_via)
@@ -595,9 +608,9 @@ def centroids_within_grouped(
     V: np.ndarray, gc: GroupedCentroids, closure_bp: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """Grouped SPANN closure expansion: all (row, cid) pairs whose e4
-    squared-distance key satisfies ``key*10000 <= key_best*10000 +
-    |key_best|*closure_bp`` — the exact integer cutoff of the flat
-    ``stamp_closure`` (vamana._sharded), reproduced with group pruning:
+    squared-distance key passes ``_within_bp`` against the row's best
+    key at ``closure_bp`` — the exact integer cutoff of the flat
+    expander in ``make_stamp_fn``, reproduced with group pruning:
     a group is visited only if its lower-bound key could pass the cut.
     Keys quantize d2 at 1e-4, far above gemm float noise, so grouped
     and flat emit identical replica sets. Pairs return row-major
@@ -608,7 +621,7 @@ def centroids_within_grouped(
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     D2g, lb2 = _group_bounds(V, gc)
     g0 = np.argmin(D2g, axis=1)
-    # exact best (clamped — stamp_closure keys clamp at 0) via pruning
+    # exact best (clamped — the flat expander's l2 keys clamp at 0) via pruning
     best = np.full(n, np.inf)
     for g in np.unique(g0):
         rows = np.nonzero(g0 == g)[0]
@@ -633,7 +646,7 @@ def centroids_within_grouped(
         rows = np.nonzero(keep[:, g])[0]
         d2 = np.maximum(_sq_dists(V[rows], gc.member_vecs[g]), 0.0)
         key = np.floor(d2 * 1e4 + 0.5).astype(np.int64)
-        ri, mi = np.nonzero(key * 10000 <= cut[rows, None])
+        ri, mi = np.nonzero(_within_bp(key, key_best[rows, None], int(closure_bp)))
         if len(ri):
             rows_out.append(rows[ri])
             cids_out.append(gc.member_cids[g][mi])

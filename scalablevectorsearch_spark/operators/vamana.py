@@ -42,8 +42,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from scalablevectorsearch_spark.functions.arrowio import map_stamp, map_stamp_replicate
 from scalablevectorsearch_spark.functions.distances import is_similarity
 from scalablevectorsearch_spark.operators.flat import RESULT_SCHEMA, search_blocks
+from scalablevectorsearch_spark.operators.ivf import probe_plan
+from scalablevectorsearch_spark.operators.kmeans import (
+    _resolve_stamp_via,
+    make_stamp_fn,
+    train_kmeans,
+)
 from scalablevectorsearch_spark.operators.vamana_local import (
     VamanaParams,
     build_graph,
@@ -256,81 +263,29 @@ def _view(codec, kind: str, attr: str):
     return getattr(codec, attr) if getattr(codec, "kind", None) == kind else None
 
 
-def _sharded(
-    base: DataFrame,
-    n_shards: int,
-    id_col: str,
-    shard_model=None,
-    vec_col: str = "vector",
-    closure_bp: int | None = None,
-    vec_decode=None,
-    stamp_hierarchical: bool = False,
-) -> DataFrame:
-    if shard_model is None:
-        return base.withColumn(
-            "shard_id", F.pmod(F.col(id_col).cast("long"), F.lit(n_shards)).cast("int")
+def _sharded(df: DataFrame, index: VamanaIndex) -> DataFrame:
+    if index.shard_model is None:
+        return df.withColumn(
+            "shard_id",
+            F.pmod(F.col(index.id_col).cast("long"), F.lit(index.n_shards)).cast("int"),
         )
     # cluster sharding: shard = nearest k-means centroid, stamped
     # map-side. With ``closure_bp`` (SPANN closure assignment), a row is
     # ADDITIONALLY replicated into every cell whose e4 centroid key is
     # within (1 + closure_bp/1e4) of its nearest — boundary vectors
     # become reachable from each nearby cell's graph, trading bounded
-    # storage amplification for routed recall at a fixed probe count
-    # (the same sign-aware additive cutoff as probe_clusters_epsilon).
-    from scalablevectorsearch_spark.functions.arrowio import (
-        map_stamp,
-        map_stamp_replicate,
+    # storage amplification for routed recall at a fixed probe count.
+    # The build resolved flat vs grouped once (stamp_hierarchical), so
+    # every re-stamp runs the same code path.
+    fn = make_stamp_fn(
+        df.sparkSession.sparkContext, index.shard_model.centroids,
+        "hierarchical" if index.stamp_hierarchical else "flat", index.closure_bp,
     )
-
-    sc = base.sparkSession.sparkContext
-    if stamp_hierarchical:
-        # grouped triangle-pruned stamp: same assignments / replica sets
-        # as the flat pass (kmeans.GroupedCentroids invariant), at
-        # ~2*sqrt(S) distance rows per input row instead of S — the
-        # O(N*S) flat stamp is the measured ≥5e7 build wall (r8:
-        # 7105.8s at 5e7 rows / 6103 shards, ~1.9 ms/row)
-        from scalablevectorsearch_spark.operators.kmeans import (
-            centroids_within_grouped,
-            group_centroids,
-            nearest_centroid_grouped,
-        )
-
-        bcg = sc.broadcast(group_centroids(shard_model.centroids))
-
-        def stamp(V: np.ndarray) -> np.ndarray:
-            return nearest_centroid_grouped(V, bcg.value)
-
-        def stamp_closure(V: np.ndarray):
-            return centroids_within_grouped(V, bcg.value, closure_bp)
-
-    else:
-        bc = sc.broadcast(shard_model.centroids)
-
-        def stamp(V: np.ndarray) -> np.ndarray:
-            from scalablevectorsearch_spark.operators.kmeans import _nearest_centroid
-
-            return _nearest_centroid(V, bc.value)
-
-        def stamp_closure(V: np.ndarray):
-            from scalablevectorsearch_spark.functions.distances import (
-                pairwise_distances,
-            )
-
-            key = np.floor(
-                pairwise_distances(V, bc.value, "l2") * 1e4 + 0.5
-            ).astype(np.int64)
-            best = key.min(axis=1)
-            cut = best * 10000 + np.abs(best) * closure_bp
-            return np.nonzero(key * 10000 <= cut[:, None])
-
     # dispatch on 'is not None' (the same test the search path uses) so a
     # zero/None mix can never pick different code paths; vamana_build
     # validates closure_bp > 0 before it gets here
-    if closure_bp is not None:
-        return map_stamp_replicate(
-            base, vec_col, "shard_id", stamp_closure, vec_decode=vec_decode
-        )
-    return map_stamp(base, vec_col, "shard_id", stamp, vec_decode=vec_decode)
+    stamp = map_stamp if index.closure_bp is None else map_stamp_replicate
+    return stamp(df, index.vec_col, "shard_id", fn, vec_decode=index.vec_decode)
 
 
 def _layout_rows(df: DataFrame, index: VamanaIndex, extra=()) -> DataFrame:
@@ -341,11 +296,7 @@ def _layout_rows(df: DataFrame, index: VamanaIndex, extra=()) -> DataFrame:
     filtered scan, insert and load all stamp through here, so a row
     lands in the same shard(s) on every path; callers that need the
     rows co-located place them with ``placement.by_key``."""
-    return _sharded(
-        df, index.n_shards, index.id_col, index.shard_model, index.vec_col,
-        index.closure_bp, index.vec_decode,
-        stamp_hierarchical=index.stamp_hierarchical,
-    ).select(
+    return _sharded(df, index).select(
         "shard_id",
         F.col(index.id_col).cast("long").alias("__id"),
         F.col(index.vec_col).alias("__vec"),
@@ -419,8 +370,6 @@ def vamana_build(
                     "vec_decode with shard_by='kmeans' requires a pre-trained "
                     "shard_model over the DECODED vectors"
                 )
-            from scalablevectorsearch_spark.operators.kmeans import train_kmeans
-
             shard_model = train_kmeans(base, n_shards, kmeans_iters, id_col, vec_col)
         if shard_model.centroids.shape[0] != n_shards:
             raise ValueError(
@@ -435,7 +384,7 @@ def vamana_build(
         if shard_model is None:
             raise ValueError("closure_bp requires shard_by='kmeans'")
         if closure_bp <= 0:
-            # closure_bp <= 0 would make the stamp_closure cutoff
+            # closure_bp <= 0 would make the closure cutoff
             # cut < best*10000 for every row — the layout silently builds
             # (nearly) empty. Fail loudly instead.
             raise ValueError(f"closure_bp must be positive, got {closure_bp}")
@@ -446,8 +395,6 @@ def vamana_build(
         return _graph_rows(pdf["shard_id"].iloc[0], gids, graph, entry)
 
     from pyspark.storagelevel import StorageLevel
-
-    from scalablevectorsearch_spark.operators.kmeans import _resolve_stamp_via
 
     stamp_hier = shard_model is not None and _resolve_stamp_via(
         stamp_via, shard_model.centroids.shape[0]
@@ -603,34 +550,16 @@ def vamana_search(
     collected (mutually exclusive with ``exclude_ids``).
     ``buffer_capacity``: split-buffer capacity >= the exploration window
     (search_buffer.h:39-60); defaults to max(window, k).
-    ``n_probes``: for kmeans-sharded indexes, route each query to its
-    n_probes nearest shard centroids only — unprobed shards are filtered
-    out of the scan entirely (partition pruning on a persisted layout),
-    so search compute scales with n_probes/n_shards of the base.
-    ``epsilon_bp``: ADAPTIVE shard probing (the two-level Inverted
-    index's refinement_epsilon, memory_based.h:407-460, :508): probe
-    every shard whose centroid distance is within (1 + epsilon_bp/1e4)
-    of the query's best centroid — queries near a cell center probe few
-    shards, boundary queries probe many, so recall no longer degrades
-    with shard count the way a FIXED n_probes does. Cap the fan-out with
-    ``max_probes``. Mutually exclusive with ``n_probes``; COMPOSES with
-    ``router`` (the full two-level design: the centroid router proposes
-    candidate shards sublinearly, epsilon refines among them —
-    memory_based.h:577-586 + :508).
-    ``probe_budget``: adaptive probing with the BUDGET as the invariant
-    — fits ``epsilon_bp`` per query block on the actual geometry
-    (fit_epsilon_bp) so the mean probes/query is ~probe_budget; the
-    right default when the data distribution isn't known in advance
-    (a hand-picked epsilon that is safe on clustered data degrades to
-    full fan-out on uniform data and vice versa). The per-query probe
-    count is clamped to [~3/4·budget (strictly < budget), 2·budget]
-    (fit accounts for the clamp): recall is concave in probes, so the
-    unclamped fit's under-probing tail loses more recall than its
-    over-probing tail gains. The clamped fit matches fixed fan-out on
-    uniform data (BENCH_HISTORY.jsonl ``probe_alloc_coverage`` row) and
-    beats both fixed and unclamped epsilon on mixed-difficulty
-    clustered data. Mutually
-    exclusive with ``n_probes`` and ``epsilon_bp``.
+    Shard probing (kmeans-sharded indexes only; unprobed shards never
+    reach the kernel — partition pruning on the persisted layout, so
+    search compute scales with the probed fraction of the base):
+    ``n_probes`` (fixed fan-out), ``epsilon_bp`` (adaptive cutoff; cap
+    with ``max_probes``; mutually exclusive with ``n_probes``),
+    ``probe_budget`` (fitted epsilon with the budget as the invariant;
+    mutually exclusive with both) and ``router`` (sublinear centroid
+    routing over the shard centroids) are documented once, on
+    :func:`operators.ivf.probe_plan`. With none of them every shard is
+    searched.
     DEFAULT ROUTING: when ``router`` is given with none of n_probes/
     epsilon_bp/probe_budget, the search uses probe_budget = n_shards/2
     — the epsilon-cutoff default of the reference's two-level Inverted
@@ -649,11 +578,6 @@ def vamana_search(
     arguments are documented once, on
     :func:`operators.calibrate.fit_probe_budget` (the loop ivf_search's
     ``target_recall=`` shares).
-    ``router``: optional CentroidRouter (operators.router) over this
-    index's shard centroids — replaces the exact O(S·d)-per-query
-    centroid argmin with a sublinear graph traversal for very large
-    shard counts (the two-level Inverted primary-index design,
-    clustering.h:786-809).
     ``max_query_block``: for query tables too large for the driver —
     iterate hash-partitioned blocks (one shard pass per block, each
     block's result materialized before the next block is fetched), as
@@ -798,6 +722,14 @@ def vamana_search(
         # centroids; on a hash-sharded index (shard_by="hash") a router
         # keeps the pre-r6 behavior of full fan-out.
         probe_budget = max(1.0, index.n_shards / 2)
+    if epsilon_bp is not None:
+        if index.shard_model is None:
+            raise ValueError("epsilon_bp routing requires a kmeans-sharded index")
+        if n_probes is not None:
+            raise ValueError("epsilon_bp is mutually exclusive with n_probes")
+    elif n_probes is not None and index.shard_model is None:
+        raise ValueError("n_probes routing requires a kmeans-sharded index")
+    centroids = None if index.shard_model is None else index.shard_model.centroids
 
     filtered_scan = scan_override
     # a caller's override is the caller's to release; blocks are
@@ -819,9 +751,11 @@ def vamana_search(
             queries, qid_col, qvec_col, k, maximize,
             lambda qids, Q: _vamana_search_block(
                 index, qids, Q, k, sws, excl, exclude_df, buffer_capacity,
-                n_probes, router, maximize, scale, sc, deadline,
-                epsilon_bp=epsilon_bp, max_probes=max_probes,
-                probe_budget=probe_budget, where=where,
+                probe_plan(
+                    Q, centroids, distance, n_probes, epsilon_bp, max_probes,
+                    probe_budget, router,
+                ),
+                maximize, scale, sc, deadline, where=where,
                 scan_override=filtered_scan,
             ),
             max_query_block,
@@ -851,102 +785,20 @@ def _vamana_search_block(
     excl,
     exclude_df: DataFrame | None,
     buffer_capacity: int | None,
-    n_probes: int | None,
-    router,
+    probe_of: dict[int, np.ndarray] | None,
     maximize: bool,
     scale: float | None,
     sc,
     deadline: float | None = None,
-    epsilon_bp: int | None = None,
-    max_probes: int | None = None,
-    probe_budget: float | None = None,
     where=None,
     scan_override: DataFrame | None = None,
 ) -> tuple[DataFrame, object]:
-    """One query block's shard-cogroup search: the block's unranked
-    (qid, neighbor_id, distance) candidates, closure replicas
-    deduplicated, and its broadcast. ``scan_override``: a pre-built
-    (usually persisted) filtered scan shared across query blocks."""
-    params, distance = index.params, index.distance
-    vec_decode = index.vec_decode
-    probe_of = None
-    min_probes = None
-    if probe_budget is not None:
-        # budget-invariant adaptive probing: fit the epsilon cutoff on
-        # THIS block's query geometry (fit_epsilon_bp binary-searches
-        # integer basis points — deterministic given the block).
-        # The per-query probe count is CLAMPED to [~3/4 budget,
-        # 2x budget] and the fit accounts for the clamp: an unclamped
-        # budget-fitted epsilon has a long-tailed probe distribution
-        # whose under-probing tail costs more recall than the
-        # over-probing tail buys (recall is concave in probes) — on
-        # signal-free uniform data it measurably UNDERPERFORMS a fixed
-        # fan-out at equal mean probes, while the clamped fit matches
-        # fixed there and beats both fixed and unclamped on
-        # mixed-difficulty clustered data (BENCH_HISTORY.jsonl
-        # `probe_alloc_coverage` row for the uniform case).
-        from scalablevectorsearch_spark.operators.ivf import (
-            budget_probe_clamp,
-            fit_epsilon_bp,
-        )
-
-        n_sh = index.shard_model.centroids.shape[0]
-        # floor strictly below the budget so small budgets keep
-        # adaptivity (budget_probe_clamp docstring); user cap wins
-        min_probes, max_probes = budget_probe_clamp(probe_budget, n_sh, max_probes)
-        epsilon_bp = fit_epsilon_bp(
-            Q, index.shard_model.centroids, float(probe_budget), distance,
-            min_probes=min_probes, max_probes=max_probes,
-        )
-    if epsilon_bp is not None:
-        if index.shard_model is None:
-            raise ValueError("epsilon_bp routing requires a kmeans-sharded index")
-        if n_probes is not None:
-            raise ValueError("epsilon_bp is mutually exclusive with n_probes")
-        if router is not None:
-            # two-level composition (memory_based.h:577-586 + :508):
-            # the centroid router proposes candidates sublinearly,
-            # epsilon refines among them
-            from scalablevectorsearch_spark.operators.ivf import (
-                probe_clusters_epsilon_routed,
-            )
-
-            sel = probe_clusters_epsilon_routed(
-                Q, index.shard_model.centroids, router, epsilon_bp,
-                max_probes=max_probes, distance=distance,
-                min_probes=min_probes,
-            )
-        else:
-            from scalablevectorsearch_spark.operators.ivf import probe_clusters_epsilon
-
-            sel = probe_clusters_epsilon(
-                Q, index.shard_model.centroids, epsilon_bp, max_probes=max_probes,
-                distance=distance, min_probes=min_probes,
-            )
-        acc: dict[int, list[int]] = {}
-        for qi, cids in enumerate(sel):
-            for c in cids:
-                acc.setdefault(int(c), []).append(qi)
-        probe_of = {c: np.asarray(v, dtype=np.int64) for c, v in acc.items()}
-    elif n_probes is not None:
-        if index.shard_model is None:
-            raise ValueError("n_probes routing requires a kmeans-sharded index")
-        if router is not None:
-            from scalablevectorsearch_spark.operators.router import route
-
-            probes = route(router, Q, min(n_probes, index.n_shards))
-        else:
-            from scalablevectorsearch_spark.operators.ivf import probe_clusters
-
-            probes = probe_clusters(
-                Q, index.shard_model.centroids, min(n_probes, index.n_shards), distance
-            )
-        probe_of = {
-            int(c): np.nonzero((probes == c).any(axis=1))[0]
-            for c in np.unique(probes)
-            if c >= 0
-        }
-
+    """One query block's shard-cogroup search over its probe plan
+    (``None`` = every shard): the block's unranked (qid, neighbor_id,
+    distance) candidates, closure replicas deduplicated, and its
+    broadcast. ``scan_override``: a pre-built (usually persisted)
+    filtered scan shared across query blocks."""
+    distance, vec_decode = index.distance, index.vec_decode
     bc = sc.broadcast((qids, Q, excl, probe_of))
 
     def search_fn(key, vdf: pd.DataFrame, gdf: pd.DataFrame) -> pd.DataFrame:

@@ -12,7 +12,8 @@
    clip(raw, floor, cap).mean() >= budget already at bp=0 and the fit
    degenerated to fixed floor probing. budget_probe_clamp now keeps
    the floor STRICTLY below the budget (int(0.75*B), capped at
-   ceil(B)-1) so small budgets retain adaptivity.
+   ceil(B)-1) so small budgets retain adaptivity. Its tests moved to
+   test_probe_clamp.py.
 3 (low, pipeline/dedup.py duplicate_spans): the docstring claims
    "with stride == 1 both modes are identical", but merge_gap was
    span_len for sample="content" even at stride=1, merging distinct
@@ -23,15 +24,9 @@
 
 import random
 
-import numpy as np
 import pytest
 from pyspark.sql import Row
 
-from scalablevectorsearch_spark.operators.ivf import (
-    budget_probe_clamp,
-    fit_epsilon_bp,
-    probe_clusters_epsilon,
-)
 from scalablevectorsearch_spark.operators.router import build_centroid_router
 from scalablevectorsearch_spark.operators.vamana import (
     VamanaParams,
@@ -75,47 +70,6 @@ class TestRoutedDefaultHashSharded:
             index, q, k=5, search_window_size=32, router=router, round_to=4
         )
         assert res.count() == 6 * 5  # still a complete result
-
-
-class TestBudgetProbeClamp:
-    def test_floor_strictly_below_budget(self):
-        for budget in (2.0, 3.0, 4.0, 8.0):
-            floor, cap = budget_probe_clamp(budget, n_cells=64)
-            assert floor < budget, (budget, floor)
-            assert cap >= budget
-        assert budget_probe_clamp(2.0, 64) == (1, 4)
-        assert budget_probe_clamp(3.0, 64) == (2, 6)
-
-    def test_budget_one_degenerate_point(self):
-        # probes >= 1 always: [1, 2] is the best available clamp
-        assert budget_probe_clamp(1.0, 64) == (1, 2)
-
-    def test_user_cap_below_floor_wins(self):
-        floor, cap = budget_probe_clamp(8.0, 64, max_probes=3)
-        assert cap == 3 and floor == 3
-
-    def test_cells_bound(self):
-        floor, cap = budget_probe_clamp(8.0, n_cells=4)
-        assert cap == 4 and floor <= 4
-
-    def test_small_budget_fit_is_adaptive(self):
-        """With the strict floor, a budget-3 fit on mixed-difficulty
-        geometry yields VARYING per-query probe counts (the old
-        floor==budget clamp collapsed every query to exactly 3)."""
-        rng = np.random.default_rng(5)
-        C = rng.normal(size=(8, 16)) * 10.0
-        easy = C[:4] + rng.normal(size=(4, 16)) * 0.01  # near a centroid
-        hard = (C[:4] + C[4:]) / 2.0  # between two centroids
-        Q = np.vstack([easy, hard])
-        floor, cap = budget_probe_clamp(3.0, 8)
-        bp = fit_epsilon_bp(Q, C, 3.0, "l2", min_probes=floor, max_probes=cap)
-        sel = probe_clusters_epsilon(
-            Q, C, bp, min_probes=floor, max_probes=cap, distance="l2"
-        )
-        counts = {len(s) for s in sel}
-        assert len(counts) > 1, counts  # adaptivity: not a fixed fan-out
-        mean = float(np.mean([len(s) for s in sel]))
-        assert floor <= mean <= cap
 
 
 class TestDuplicateSpansStrideOne:

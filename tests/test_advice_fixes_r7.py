@@ -11,38 +11,14 @@
    probe floor by 1 for EVERY fractional 0.75*B (budget 5: 3 vs r6's
    4), not only the degenerate budgets 2-3 the r6 fix targeted. Now
    ceil(0.75*B) capped at ceil(B)-1: r6 floors everywhere, the strict
-   cap only where floor would equal the budget.
+   cap only where floor would equal the budget. Its tests moved to
+   test_probe_clamp.py.
 4 (low, bench.py): covered by the bench artifact itself — the headline
    stays min-of-5 but total_median_sec / queries_median are emitted
    alongside, so history comparisons can match stats.
 """
 
-import numpy as np
-import pytest
-
 from scalablevectorsearch_spark.operators.calibrate import calibrate_probe_budget
-from scalablevectorsearch_spark.operators.ivf import budget_probe_clamp
-
-
-class TestClampFloorsKeepR6Values:
-    def test_fractional_budgets_keep_ceil_floor(self):
-        # ADVICE example budgets: 5 -> floor 4 (int() gave 3),
-        # 7 -> floor 6 (int() gave 5)
-        assert budget_probe_clamp(5.0, 64)[0] == 4
-        assert budget_probe_clamp(7.0, 64)[0] == 6
-        assert budget_probe_clamp(9.0, 64)[0] == 7
-
-    def test_degenerate_budgets_keep_strict_cap(self):
-        # the r6 fix's actual targets are untouched
-        assert budget_probe_clamp(2.0, 64) == (1, 4)
-        assert budget_probe_clamp(3.0, 64) == (2, 6)
-        assert budget_probe_clamp(1.0, 64) == (1, 2)
-
-    def test_floor_always_strictly_below_budget(self):
-        for b in np.arange(1.0, 20.1, 0.5):
-            floor, cap = budget_probe_clamp(float(b), 1000)
-            assert floor < b or b == 1.0, (b, floor)
-            assert cap >= b
 
 
 class TestGridNeverBelowMinBudget:

@@ -236,17 +236,29 @@ def test_dynamic_ivf_mutations_get_fresh_cal_cache(spark, embeddings):
         ivf_add_points,
     )
     from scalablevectorsearch_spark.operators.ivf import ivf_build
+    from scalablevectorsearch_spark.operators.kmeans import KMeansModel
 
     base = embeddings.selectExpr("vec_id as id", "embedding as vector")
-    idx = ivf_build(base, n_clusters=4, n_iters=2)
-    dyn = dynamic_ivf(idx)
-    dyn.index.cal_cache["poison"] = 1
     added = base.filter(F.col("id") < 3).select(
         (F.col("id") + 90000).alias("id"), "vector"
     )
-    d2 = ivf_add_points(dyn, added)
-    assert d2.index.cal_cache == {}
-    assert d2.index.cal_cache is not dyn.index.cal_cache
+    # a trained 4-cell model (flat stamp) and a pre-trained 256-cell one
+    # (>= HIERARCHICAL_STAMP_THRESHOLD: the build's grouped stamp)
+    V = np.stack([np.asarray(r["vector"], dtype=np.float64) for r in base.collect()])
+    C256 = np.round(V[np.arange(256) % len(V)] + 0.01 * np.arange(256)[:, None], 6)
+    for idx in (
+        ivf_build(base, n_clusters=4, n_iters=2),
+        ivf_build(base, 256, model=KMeansModel(centroids=C256, n_iters=0)),
+    ):
+        dyn = dynamic_ivf(idx)
+        dyn.index.cal_cache["poison"] = 1
+        d2 = ivf_add_points(dyn, added)
+        assert d2.index.cal_cache == {}
+        assert d2.index.cal_cache is not dyn.index.cal_cache
+        new = d2.index.clustered.filter(F.col("id") >= 90000).orderBy("id").collect()
+        Vn = np.stack([np.asarray(r["vector"], dtype=np.float64) for r in new])
+        want = _nearest_centroid(Vn, idx.model.centroids).tolist()
+        assert [r["cluster_id"] for r in new] == want
 
 
 # ------------------------------------------------------ precomputed save

@@ -134,6 +134,23 @@ def test_routing_requires_kmeans_shards(base, queries, index):
         vamana_search(index, queries, k=5, n_probes=2).collect()
 
 
+def test_probe_arguments_checked_before_any_job(spark, queries, index):
+    """An invalid probe argument fails at vamana_search's front door,
+    before the query batch is collected: no Spark job starts."""
+    sc = spark.sparkContext
+    group = "test-probe-front-door"
+    sc.setJobGroup(group, "invalid probe arguments")
+    try:
+        with pytest.raises(
+            ValueError, match="epsilon_bp routing requires a kmeans-sharded index"
+        ):
+            vamana_search(index, queries, k=5, epsilon_bp=100)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
 def test_routed_default_is_half_budget_epsilon(base, queries):
     """vamana_search(router=...) with no probe argument must resolve to
     budget-fitted epsilon probing at probe_budget = n_shards/2 — the r6
