@@ -6,7 +6,10 @@ search inner loop (flat.h:344-346, greedy_search.h:154-157,
 tests/integration/cancel.cpp). Spark's cancellation unit is the JOB,
 not the loop iteration: we run the action inside a job group on a
 worker thread and cancel the whole group on timeout — coarser-grained
-but the same contract (bounded latency, partial work discarded)."""
+but the same contract (bounded latency, partial work discarded).
+Inside a graph search the ``deadline`` is also checked once per
+lockstep round of ``vamana_local.batch_greedy_search``, the engine's
+one traversal."""
 
 from __future__ import annotations
 

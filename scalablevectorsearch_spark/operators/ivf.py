@@ -317,6 +317,30 @@ def probe_clusters(
     return order.astype(np.int32)
 
 
+def _check_probe_args(
+    n_probes: int | None,
+    epsilon_bp: int | None,
+    max_probes: int | None,
+    probe_budget: float | None,
+    target_recall: float | None,
+) -> None:
+    """Front-door value checks of the probe arguments of
+    :func:`ivf_search` and ``vamana_search`` (None = not given): a
+    negative ``n_probes`` would silently drop the farthest cells, and a
+    zero one or a negative ``epsilon_bp`` would return no rows.
+    ``n_probes`` is checked only where it selects the cells: an
+    ``epsilon_bp``, ``probe_budget`` or ``target_recall`` search
+    ignores it (callers pass ``n_probes=0`` beside ``epsilon_bp``)."""
+    fixed = epsilon_bp is None and probe_budget is None and target_recall is None
+    for name, value, low in (
+        ("n_probes", n_probes if fixed else None, 1),
+        ("epsilon_bp", epsilon_bp, 0),
+        ("max_probes", max_probes, 1),
+    ):
+        if value is not None and value < low:
+            raise ValueError(f"{name} must be >= {low}, got {value}")
+
+
 def probe_plan(
     Q: np.ndarray,
     centroids: np.ndarray | None,
@@ -637,6 +661,7 @@ def ivf_search(
     ``calibration_*`` arguments (sample size, supplied groundtruth,
     margin, held-out validation, warm-start hint, stats dict) are
     documented once, on :func:`operators.calibrate.fit_probe_budget`."""
+    _check_probe_args(n_probes, epsilon_bp, max_probes, probe_budget, target_recall)
     if target_recall is not None:
         if epsilon_bp is not None or probe_budget is not None:
             raise ValueError(

@@ -17,8 +17,12 @@ query instead, and the centroid table (C × d — a few GB at worst) stays
 driver/executor-resident exactly like the reference keeps the primary
 index in memory beside the clustered data.
 
-The traversal computes distances ONLY for visited nodes (no
-``all_d`` dense GEMM) — that on-demand path is what makes it sublinear.
+:func:`route` runs the shard search's kernel,
+:func:`~scalablevectorsearch_spark.operators.vamana_local.search_graph`,
+once per query block. Above ``LAZY_N`` centroids its distances are
+lazy — computed for visited nodes only, which is what makes routing
+sublinear; at or below it one dense (block, C) GEMM per query chunk is
+cheaper than the gathers.
 """
 
 from __future__ import annotations
@@ -30,7 +34,7 @@ import numpy as np
 from scalablevectorsearch_spark.operators.vamana_local import (
     VamanaParams,
     build_graph,
-    greedy_search,
+    search_graph,
 )
 
 
@@ -87,25 +91,22 @@ def route(
         Q = Q[None, :]
     n_probes = min(n_probes, router.n_clusters)
     sws = max(window_size or 0, 2 * n_probes, router.params.window_size)
-    out = np.full((Q.shape[0], n_probes), -1, dtype=np.int32)
-    for qi in range(Q.shape[0]):
-        ids, _ = greedy_search(
-            router.centroids,
-            router.graph,
-            [router.entry],
-            Q[qi],
-            sws,
-            router.distance,
-            capacity=max(sws, n_probes),
-            lazy=True,
-        )
-        m = min(n_probes, len(ids))
-        out[qi, :m] = ids[:m]
-        if m < n_probes:
-            # degenerate tiny-C case: pad with the unvisited clusters so
-            # every row has n_probes valid probes
-            rest = np.setdiff1d(
-                np.arange(router.n_clusters, dtype=np.int32), out[qi, :m]
-            )
-            out[qi, m:n_probes] = rest[: n_probes - m]
+    ids, _ = search_graph(
+        router.centroids, router.graph, router.entry, Q, n_probes, sws,
+        router.distance, capacity=max(sws, n_probes),
+    )
+    out = ids.astype(np.int32)
+    short = np.flatnonzero((out < 0).any(axis=1))
+    if len(short):
+        # degenerate tiny-C case: pad with the unvisited clusters, in
+        # ascending id, so every row has n_probes valid probes
+        sub = out[short]
+        have = np.zeros((len(short), router.n_clusters), dtype=bool)
+        r, c = np.nonzero(sub >= 0)
+        have[r, sub[r, c]] = True
+        rest = np.argsort(have, axis=1, kind="stable").astype(np.int32)
+        m = (sub >= 0).sum(axis=1, keepdims=True)
+        j = np.arange(n_probes)
+        fill = np.take_along_axis(rest, np.maximum(j - m, 0), axis=1)
+        out[short] = np.where(j < m, sub, fill)
     return out

@@ -3,7 +3,9 @@
 Parity: the Vamana index family (/root/reference/include/svs/index/
 vamana/index.h:557 batch search, vamana_build.h:233-312 construct,
 orchestrators/vamana.h) with the per-shard kernel in
-operators/vamana_local.py (greedy_search.h / prune.h semantics).
+operators/vamana_local.py: one batched traversal (greedy_search.h) and
+one batched alpha-prune (prune.h) serve build, insert, consolidate and
+search.
 
 Spark architecture (scale-first — this is deliberately NOT a
 pointer-chasing port):
@@ -45,7 +47,7 @@ from pyspark.sql import functions as F
 from scalablevectorsearch_spark.functions.arrowio import map_stamp, map_stamp_replicate
 from scalablevectorsearch_spark.functions.distances import is_similarity
 from scalablevectorsearch_spark.operators.flat import RESULT_SCHEMA, search_blocks
-from scalablevectorsearch_spark.operators.ivf import probe_plan
+from scalablevectorsearch_spark.operators.ivf import _check_probe_args, probe_plan
 from scalablevectorsearch_spark.operators.kmeans import (
     _resolve_stamp_via,
     make_stamp_fn,
@@ -582,6 +584,7 @@ def vamana_search(
     iterate hash-partitioned blocks (one shard pass per block, each
     block's result materialized before the next block is fetched), as
     in :func:`flat_knn`."""
+    _check_probe_args(n_probes, epsilon_bp, max_probes, probe_budget, target_recall)
     params, distance = index.params, index.distance
     sws = search_window_size or params.window_size
     qvec_col = qvec_col or index.vec_col

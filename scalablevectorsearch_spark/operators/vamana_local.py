@@ -1,16 +1,25 @@
-"""Vamana graph construction + greedy search — the per-shard local
-kernel (pure numpy, no Spark imports; runs inside applyInPandas).
+"""Vamana graph construction + search — the per-shard local kernel
+(pure numpy, no Spark imports; runs inside applyInPandas and, for the
+centroid router, on the driver).
 
-Parity (semantics only — the implementation is numpy, not a translation):
- - greedy best-first search with a bounded search window:
-   /root/reference/include/svs/index/vamana/greedy_search.h:124-203
+One kernel of each kind, batched; every caller runs the same one:
+ - :func:`batch_greedy_search` — best-first traversal with a bounded
+   search window (include/svs/index/vamana/greedy_search.h:124-203),
+   frontier-synchronous across a query block. Build, insert, shard
+   search (:func:`search_graph`) and the centroid router
+   (operators/router.py) run it.
+ - :func:`alpha_prune_batch` — the MRNG alpha-prune (iterative alpha
+   relaxation, Added state kept across rounds; vamana/prune.h:92-172),
+   one lockstep state machine per node. Build, insert and
+   :func:`consolidate_graph` run it; :func:`alpha_prune` is its
+   one-node form.
+ - :func:`_dot_distance` — the one l2/ip/cosine rule from a dot
+   product and two squared norms, shared by every GEMM / gemv distance
+   (:func:`batch_distances`, the lazy traversal, pool and kill rows).
  - batch-synchronous construction (search -> prune -> apply updates ->
-   reverse edges -> re-prune overfull):
-   /root/reference/include/svs/index/vamana/vamana_build.h:233-312
-   (:328 generate_neighbors, :483 add_reverse_edges)
- - alpha-prune (MRNG rule, iterative alpha relaxation, Added-state kept
-   across rounds): /root/reference/include/svs/index/vamana/prune.h:92-172
- - build parameters: include/svs/index/vamana/build_params.h:29-68
+   reverse edges -> re-prune overfull): vamana_build.h:233-312
+   (:328 generate_neighbors, :483 add_reverse_edges); build parameters:
+   build_params.h:29-68.
 
 The distributed engine shards the base table and builds one independent
 graph per shard (operators/vamana.py) — each shard's kernel is this
@@ -65,30 +74,8 @@ class VamanaParams:
     #: curve); 1 halves build cost for bulk tiers that buy recall with
     #: calibrated probe fan-out instead.
     build_passes: int = 2
-    #: r12 (VERDICT r11 task 5): search window for every pass EXCEPT
-    #: the last. The reference uses the full window in both passes
-    #: (index.h:428-429 passes the same parameters), but pass 1's only
-    #: job is a reasonable initial graph for pass 2's re-link — the
-    #: final graph quality is set by the LAST pass, which always runs
-    #: at ``window_size``. None = full window (reference parity — the
-    #: DEFAULT, and what tests/test_golden_curve.py gates).
-    #: Measured on the example_vamana golden fixture (10k x 128d,
-    #: degree 64, window 128; BENCH_HISTORY pass2-fraction-ab row):
-    #: narrowing
-    #: pass 1 HOLDS every published curve point inside the example's
-    #: +-0.05 (w=64 and even w=32 measure marginally ABOVE the full
-    #: schedule at sws>=20) but saves little wall — 1%/7% at w=64/32 —
-    #: because this kernel's per-batch cost is the dense (chunk, n)
-    #: GEMM + lockstep prune, both window-independent; only the
-    #: search's heap work scales with the window. (The golden fixture
-    #: runs the lazy kernel — n=10k > LAZY_N — so the result covers
-    #: both regimes: the lockstep batch machinery, not per-visit
-    #: distance work, is the window-independent cost.) The knob stays
-    #: as documented negative evidence.
-    build_pass1_window: int | None = None
-    #: r12 (VERDICT r11 task 5, the variant that WORKS): fraction of
-    #: nodes the re-link passes (pass 2+) sweep, lowest local ids
-    #: first. Pass 2's value concentrates in the EARLY nodes — they
+    #: fraction of nodes the re-link passes (pass 2+) sweep, lowest
+    #: local ids first. Pass 2's value concentrates in the EARLY nodes — they
     #: were linked against a mostly-empty graph; late nodes already
     #: searched a near-complete graph in pass 1, so re-linking them
     #: buys almost nothing. 1.0 = the reference's full re-sweep
@@ -106,7 +93,10 @@ class VamanaParams:
     #: any frac < 1.0 switches pass 1's backedge prune to params.alpha
     #: (single-pass semantics): with the reference's 1.0-alpha
     #: scaffolding pass, the never-re-linked majority measured BELOW
-    #: the single-pass curve.
+    #: the single-pass curve. (Narrowing pass 1's search window
+    #: instead held the curve but saved only 1-7% of the wall: the
+    #: per-round cost is the window-independent GEMM + lockstep prune;
+    #: same BENCH_HISTORY row.)
     build_pass2_fraction: float = 0.3
 
     @property
@@ -123,16 +113,8 @@ def _dists(X: np.ndarray, q: np.ndarray, idx: np.ndarray, distance: str) -> np.n
     if distance == "l2":
         diff = V - q
         return np.einsum("ij,ij->i", diff, diff)
-    if distance == "ip":
-        return -(V @ q)  # negate: smaller = better, uniform minimize convention
-    if distance == "cosine":
-        qn = np.sqrt(q @ q)
-        vn = np.sqrt(np.einsum("ij,ij->i", V, V))
-        denom = qn * vn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sim = np.where(denom > 0, (V @ q) / denom, 0.0)
-        return -sim
-    raise ValueError(f"unknown distance {distance!r}")
+    v_sq = None if distance == "ip" else np.einsum("ij,ij->i", V, V)
+    return _dot_distance(V @ q, v_sq, q @ q, distance)
 
 
 def medioid(X: np.ndarray) -> int:
@@ -140,6 +122,30 @@ def medioid(X: np.ndarray) -> int:
     m = X.mean(axis=0)
     d = np.einsum("ij,ij->i", X - m, X - m)
     return int(np.argmin(d))  # first minimum = smallest id among ties
+
+
+def _dot_distance(
+    dot: np.ndarray,
+    x_sq: np.ndarray | None,
+    q_sq: np.ndarray | None,
+    distance: str,
+) -> np.ndarray:
+    """The one l2/ip/cosine rule over dot products ``dot`` and the two
+    sides' squared norms (arrays broadcast together; ip reads neither):
+    ``max((x_sq + q_sq) - 2*dot, 0)``, ``-dot`` and ``-dot / (|q|*|x|)``
+    (0 where a norm is 0). Every GEMM / gemv distance of this module
+    goes through it, so the dense, lazy, pool and kill-row forms share
+    one IEEE op order; only :func:`_dists`' l2 (the difference form
+    that defines pool distances) computes its own."""
+    if distance == "l2":
+        return np.maximum(x_sq + q_sq - 2.0 * dot, 0.0)
+    if distance == "ip":
+        return -dot  # negate: smaller = better, uniform minimize convention
+    if distance == "cosine":
+        denom = np.sqrt(q_sq) * np.sqrt(x_sq)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return -np.where(denom > 0, dot / denom, 0.0)
+    raise ValueError(f"unknown distance {distance!r}")
 
 
 def batch_distances(
@@ -150,98 +156,15 @@ def batch_distances(
 ) -> np.ndarray:
     """(nq, n) distance matrix in one GEMM — the batch analog of the
     reference keeping the fixed query in registers across a traversal,
-    amortized across the whole query block. Row ``j`` is ``all_d`` for
-    query ``Q[j]`` with the same IEEE op order as the per-query path
-    ((x_sq + q_sq) - 2*qd, clamped at 0)."""
+    amortized across the whole query block. ``x_sq``: optional
+    precomputed per-row squared norms of ``X``."""
     QD = Q @ X.T
-    if distance == "l2":
+    q_sq = None
+    if distance != "ip":
         if x_sq is None:
             x_sq = np.einsum("ij,ij->i", X, X)
-        q_sq = np.einsum("ij,ij->i", Q, Q)
-        return np.maximum(x_sq[None, :] + q_sq[:, None] - 2.0 * QD, 0.0)
-    if distance == "ip":
-        return -QD
-    if distance == "cosine":
-        if x_sq is None:
-            x_sq = np.einsum("ij,ij->i", X, X)
-        qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-        denom = qn[:, None] * np.sqrt(x_sq)[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return -np.where(denom > 0, QD / denom, 0.0)
-    raise ValueError(f"unknown distance {distance!r}")
-
-
-def greedy_search(
-    X: np.ndarray,
-    graph: list[np.ndarray],
-    entry_points: list[int],
-    q: np.ndarray,
-    window_size: int,
-    distance: str = "l2",
-    capacity: int | None = None,
-    x_sq: np.ndarray | None = None,
-    all_d: np.ndarray | None = None,
-    lazy: bool = False,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Best-first traversal (greedy_search.h:124-203). Returns the final
-    search-buffer contents (ids, dists) sorted best-first. ``x_sq``:
-    optional precomputed per-row squared norms, amortized across queries
-    by batch callers. ``all_d``: optional precomputed (n,) distances of
-    every base row to ``q`` (one row of :func:`batch_distances`) —
-    batch callers amortize the matmul across queries; per-expansion
-    distances are pure index lookups either way.
-
-    ``lazy=True`` skips the upfront dense distance vector and evaluates
-    distances only for VISITED nodes (each node enters the buffer at
-    most once, so nothing is recomputed) — O(window · degree · d) per
-    query instead of O(n · d); the sublinear mode the centroid router
-    depends on. Ignored when ``all_d`` is supplied.
-
-    Split buffer (search_buffer.h:39-60): ``capacity`` >= window_size
-    keeps extra sorted candidates beyond the exploration window —
-    termination only consults the first window_size entries, but up to
-    ``capacity`` results are returned (the SearchBufferConfig
-    invariant). Default: capacity == window_size."""
-    cap = max(capacity or window_size, window_size)
-    n = X.shape[0]
-    if all_d is None and not lazy:
-        all_d = batch_distances(X, q[None, :], distance, x_sq=x_sq)[0]
-
-    def _d_of(ids: np.ndarray) -> np.ndarray:
-        if all_d is not None:
-            return all_d[ids]
-        return _dists(X, q, ids, distance)
-
-    seen = np.zeros(n, dtype=bool)  # VisitedFilter analog (filter.h:31-49)
-    expanded = np.zeros(n, dtype=bool)
-    eps = np.unique(np.asarray(list(entry_points), dtype=np.int64))
-    seen[eps] = True
-    d0 = _d_of(eps)
-    order = np.lexsort((eps, d0))
-    buf_ids = eps[order]
-    buf_d = d0[order]
-
-    while True:
-        # next(): nearest unexpanded inside the window
-        w = min(len(buf_ids), window_size)
-        cand = np.nonzero(~expanded[buf_ids[:w]])[0]
-        if len(cand) == 0:
-            break
-        node = int(buf_ids[cand[0]])
-        expanded[node] = True
-        nb = graph[node]
-        if len(nb):
-            nb = nb[~seen[nb]]
-        if len(nb) == 0:
-            continue
-        seen[nb] = True
-        nd = _d_of(nb)
-        # merge into buffer, keep best ``cap`` by (dist, id)
-        ids = np.concatenate([buf_ids, nb])
-        ds = np.concatenate([buf_d, nd])
-        order = np.lexsort((ids, ds))[:cap]
-        buf_ids, buf_d = ids[order], ds[order]
-    return buf_ids, buf_d
+        x_sq, q_sq = x_sq[None, :], np.einsum("ij,ij->i", Q, Q)[:, None]
+    return _dot_distance(QD, x_sq, q_sq, distance)
 
 
 def _pad_graph(graph: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
@@ -284,24 +207,30 @@ def batch_greedy_search(
     track: bool = False,
     deadline: float | None = None,
 ):
-    """Frontier-synchronous batch traversal: every query expands its
-    best unexpanded in-window node each round, vectorized across the
-    batch. Query-for-query IDENTICAL to looping :func:`greedy_search`
-    (queries are independent; rounds only interleave them) — the batch
-    form exists to amortize the Python-loop overhead, which dominates
-    the per-shard kernels at build time (vamana_build.h's
-    batch-synchronous generate_neighbors searches a frozen graph, so
-    whole batches can traverse in lockstep).
+    """Best-first traversal (greedy_search.h:124-203), frontier-
+    synchronous across the batch: every query expands its best
+    unexpanded in-window node each round, vectorized across the batch.
+    Queries are independent (rounds only interleave them), so each row
+    is the sequential traversal of its query; the batch form amortizes
+    the Python-loop overhead, which dominates the per-shard kernels
+    (vamana_build.h's batch-synchronous generate_neighbors searches a
+    frozen graph, so whole batches can traverse in lockstep).
+
+    Split buffer (search_buffer.h:39-60): ``capacity`` >= window_size
+    keeps extra sorted candidates beyond the exploration window —
+    termination only consults the first window_size entries, but up to
+    ``capacity`` results are returned. Default: capacity == window_size.
 
     ``D``: optional precomputed (nq, n) distances (the chunked-GEMM
     block batch callers already hold). ``NB``: optional pre-padded
     adjacency from :func:`_pad_graph`, amortized across chunks.
-    ``lazy``: evaluate distances on demand per round (gathered rows +
-    one small einsum) instead of a dense (nq, n) block — same formulas
-    and clamps as :func:`batch_distances`, at most 1 ULP apart from the
-    GEMM path (different accumulation blocking); use above
-    :data:`LAZY_N` where the traversal visits a vanishing fraction of
-    the base. Ignored when ``D`` is supplied.
+    ``lazy``: evaluate distances on demand per round, for VISITED nodes
+    only (gathered rows + one batched gemv) instead of a dense (nq, n)
+    block — O(window · degree · d) per query instead of O(n · d), the
+    sublinear mode the centroid router depends on; same
+    :func:`_dot_distance` rule as :func:`batch_distances`, at most 1 ULP
+    apart from the GEMM path (different accumulation blocking); use
+    above :data:`LAZY_N`. Ignored when ``D`` is supplied.
     ``track``: additionally return the EXPANDED-node history (entry
     points + every node popped and expanded — the DiskANN visited set
     V; greedy_search.h:85,165) as (offsets, ids, dists) — per-query
@@ -317,17 +246,14 @@ def batch_greedy_search(
     nq = Q.shape[0]
     n = X.shape[0]
     cap = max(capacity or window_size, window_size)
-    q_inv = None
+    q_sq = None
     if D is None and not lazy:
         D = batch_distances(X, Q, distance)
-    if D is None:
-        # per-query/per-row invariants for the on-demand formulas
-        if distance in ("l2", "cosine") and x_sq is None:
+    if D is None and distance != "ip":
+        # per-query/per-row squared norms for the on-demand distances
+        if x_sq is None:
             x_sq = np.einsum("ij,ij->i", X, X)
-        if distance == "l2":
-            q_inv = np.einsum("ij,ij->i", Q, Q)
-        elif distance == "cosine":
-            q_inv = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+        q_sq = np.einsum("ij,ij->i", Q, Q)
     if NB is None:
         NB, _ = _pad_graph(graph)
     eps = np.unique(np.asarray(list(entry_points), dtype=np.int64))
@@ -339,15 +265,9 @@ def batch_greedy_search(
         V = X[nodes]  # (a, m, d)
         # batched gemv (BLAS) — same dot as einsum, ~3x faster here
         QD = np.matmul(V, Q[qidx][:, :, None])[:, :, 0]
-        if distance == "l2":
-            return np.maximum(
-                x_sq[nodes] + q_inv[qidx][:, None] - 2.0 * QD, 0.0
-            )
-        if distance == "ip":
-            return -QD
-        denom = q_inv[qidx][:, None] * np.sqrt(x_sq[nodes])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return -np.where(denom > 0, QD / denom, 0.0)
+        if q_sq is None:  # ip reads no norms
+            return _dot_distance(QD, None, None, distance)
+        return _dot_distance(QD, x_sq[nodes], q_sq[qidx][:, None], distance)
 
     buf_ids = np.full((nq, cap + NB.shape[1]), -1, dtype=np.int64)
     buf_d = np.full((nq, cap + NB.shape[1]), np.inf, dtype=np.float64)
@@ -467,93 +387,6 @@ def batch_greedy_search(
     return buf_ids[:, :cap], buf_d[:, :cap], (offsets, vids, vds)
 
 
-def alpha_prune(
-    X: np.ndarray,
-    node: int,
-    pool_ids: np.ndarray,
-    pool_d: np.ndarray,
-    alpha: float,
-    max_result: int,
-    distance: str = "l2",
-) -> np.ndarray:
-    """MRNG/alpha prune (prune.h:92-172): keep candidate c only while no
-    kept neighbor r has current_alpha * d(r, c) < d(node, c); relax
-    current_alpha geometrically up to alpha; Added state persists across
-    rounds, Pruned state resets."""
-    n = len(pool_ids)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    # one BLAS batch for all candidate-pair distances (the reference
-    # computes them lazily per kept neighbor; the pool is <= the
-    # candidate cap, so the dense matrix is small and far faster than
-    # per-pair kernel calls)
-    P = X[pool_ids]
-    if distance == "l2":
-        ip = P @ P.T
-        sq = np.einsum("ij,ij->i", P, P)
-        D = np.maximum(sq[:, None] + sq[None, :] - 2.0 * ip, 0.0)
-    elif distance == "ip":
-        D = -(P @ P.T)
-    else:  # cosine
-        nrm = np.sqrt(np.einsum("ij,ij->i", P, P))
-        denom = nrm[:, None] * nrm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            D = -np.where(denom > 0, (P @ P.T) / denom, 0.0)
-    AVAILABLE, ADDED, PRUNED = 0, 1, 2
-    if n < 72:
-        # scalar path: for the small pools that dominate call counts
-        # (reverse-edge re-prunes, pool ~ degree — ~80% of calls) the
-        # per-op dispatch overhead of the vector path exceeds the
-        # arithmetic; measured crossover is ~72-100 candidates, above
-        # which the vector path wins (generate-phase pools ~window).
-        # Identical state machine, plain Python floats
-        Dl = D.tolist()
-        dl = pool_d.tolist()
-        st = [AVAILABLE] * n
-        res: list[int] = []
-        current_alpha = 1.0
-        while len(res) < max_result and current_alpha <= alpha + 1e-12:
-            for start in range(n):
-                if len(res) >= max_result:
-                    break
-                if st[start] != AVAILABLE or pool_ids[start] == node:
-                    continue
-                st[start] = ADDED
-                res.append(int(pool_ids[start]))
-                row = Dl[start]
-                for j in range(start + 1, n):
-                    if st[j] == AVAILABLE and current_alpha * row[j] < dl[j]:
-                        st[j] = PRUNED
-            if alpha == 1.0:
-                break
-            st = [AVAILABLE if s == PRUNED else s for s in st]
-            current_alpha *= alpha
-        return np.asarray(res, dtype=np.int64)
-    state = np.full(n, AVAILABLE, dtype=np.int8)
-    is_self = pool_ids == node
-    result: list[int] = []
-    current_alpha = 1.0
-    while len(result) < max_result and current_alpha <= alpha + 1e-12:
-        for start in range(n):
-            if len(result) >= max_result:
-                break
-            if state[start] != AVAILABLE or is_self[start]:
-                continue
-            state[start] = ADDED
-            result.append(int(pool_ids[start]))
-            # vectorized MRNG kill over still-available later candidates
-            # (boolean masks only — no index materialization)
-            kill = current_alpha * D[start] < pool_d
-            kill &= state == AVAILABLE
-            kill[: start + 1] = False
-            state[kill] = PRUNED
-        if alpha == 1.0:
-            break
-        state[state == PRUNED] = AVAILABLE
-        current_alpha *= alpha
-    return np.asarray(result, dtype=np.int64)
-
-
 #: worker GEMM budget in MB (r12, VERDICT r11 task 2): every transient
 #: per-chunk block in the build kernels — the dense (chunk, n) f64
 #: distance block, the lazy (chunk, n) visit masks, and the (m, P, d)
@@ -581,13 +414,14 @@ def alpha_prune_batch(
     max_result: int,
     distance: str = "l2",
 ) -> list[np.ndarray]:
-    """Lockstep-batched :func:`alpha_prune`: one MRNG state machine per
-    node, all ``m`` nodes advanced together (prunes of different nodes
-    are independent, so the sequential per-candidate dependency is
-    within a row only). Node-for-node the same state machine as
-    :func:`alpha_prune` — candidates visited in pool order, strict
-    ``current_alpha * d(r, c) < d(node, c)`` kill, Added persists
-    across alpha rounds, Pruned resets.
+    """MRNG/alpha prune (prune.h:92-172), lockstep-batched: one state
+    machine per node, all ``m`` nodes advanced together (prunes of
+    different nodes are independent, so the sequential per-candidate
+    dependency is within a row only). Each row is the sequential
+    machine — keep candidate c only while no kept neighbor r has
+    ``current_alpha * d(r, c) < d(node, c)`` (strict), candidates
+    visited in pool order, current_alpha relaxed geometrically up to
+    alpha, Added persists across alpha rounds, Pruned resets.
 
     Each lockstep step jumps every row to ITS next available candidate
     (argmax over the availability mask) instead of sweeping all P pool
@@ -600,11 +434,17 @@ def alpha_prune_batch(
 
     ``pools``: (m, P) int64 padded with -1; ``pool_d``: (m, P) float64
     padded with +inf; both sorted by (distance, id) per row like every
-    alpha_prune caller already sorts. Returns one add-ordered int64
+    caller sorts. Trailing all-pad columns are trimmed (a pad is never
+    addable), so the call — and each chunk of it — runs at its own
+    widest pool; callers with very uneven pools sort rows by width
+    (:func:`consolidate_graph`). Returns one add-ordered int64
     adjacency per node."""
-    m, P = pools.shape
+    valid = pools >= 0
+    cols = np.flatnonzero(valid.any(axis=0))
+    m, P = len(pools), int(cols[-1]) + 1 if len(cols) else 0
     if m == 0 or P == 0 or not (1.0 <= alpha + 1e-12):
         return [np.empty(0, dtype=np.int64) for _ in range(m)]
+    pools, pool_d, valid = pools[:, :P], pool_d[:, :P], valid[:, :P]
     d = X.shape[1]
     chunk = max(1, _PRUNE_BATCH_CELLS // max(P * d, 1))
     if m > chunk:
@@ -617,15 +457,10 @@ def alpha_prune_batch(
                 )
             )
         return out
-    valid = pools >= 0
     # pad slots (-1) wrap to row 0 — garbage distances, but pads are
     # never addable and only ever appear as (harmless) kill victims
     V = X[np.maximum(pools, 0)]  # (m, P, d)
-    sqP = nrmP = None
-    if distance == "l2":
-        sqP = np.einsum("mpd,mpd->mp", V, V)
-    elif distance == "cosine":
-        nrmP = np.sqrt(np.einsum("mpd,mpd->mp", V, V))
+    sqP = None if distance == "ip" else np.einsum("mpd,mpd->mp", V, V)
     # r12: incremental availability. The old int8 state machine
     # recomputed `avail = (state==AVAILABLE) & addable & active &
     # (counts<max)` from scratch every lockstep iteration (~6 (m, P)
@@ -673,8 +508,6 @@ def alpha_prune_batch(
             V = V[keep]
             if sqP is not None:
                 sqP = sqP[keep]
-            if nrmP is not None:
-                nrmP = nrmP[keep]
             pools = pools[keep]
             pool_d = pool_d[keep]
             nodes = nodes[keep]
@@ -727,21 +560,21 @@ def alpha_prune_batch(
         # batched gemv (BLAS) — same per-pair dot as the scalar path's
         # dgemm row, ~3x c_einsum for this contraction
         ip = np.matmul(V, Vr[:, :, None])[:, :, 0]
-        if distance == "l2":
-            sq_r = np.einsum("md,md->m", Vr, Vr)
-            Drow = np.maximum(sqP + sq_r[:, None] - 2.0 * ip, 0.0)
-        elif distance == "ip":
-            Drow = -ip
-        else:  # cosine
-            nr = np.sqrt(np.einsum("md,md->m", Vr, Vr))
-            denom = nr[:, None] * nrmP
-            with np.errstate(divide="ignore", invalid="ignore"):
-                Drow = -np.where(denom > 0, ip / denom, 0.0)
+        sq_r = None if sqP is None else np.einsum("md,md->m", Vr, Vr)[:, None]
+        Drow = _dot_distance(ip, sqP, sq_r, distance)
         kill = (alpha_row[:, None] * Drow < pool_d) & avail
         kill &= pos_idx[None, :] > p_full[:, None]
         avail[kill] = False
     _finalize(np.ones(len(active), dtype=bool))
     return final
+
+
+def alpha_prune(X, node, pool_ids, pool_d, alpha, max_result, distance="l2"):
+    """:func:`alpha_prune_batch` for one node's (distance, id)-sorted pool."""
+    return alpha_prune_batch(
+        X, np.asarray([node], dtype=np.int64), np.asarray(pool_ids, dtype=np.int64)[None],
+        np.asarray(pool_d, dtype=np.float64)[None], alpha, max_result, distance,
+    )[0]
 
 
 def _pool_dists(
@@ -756,19 +589,11 @@ def _pool_dists(
     # contraction and is ~3x slower (same dot, same accumulation shape
     # as _pair_d / alpha_prune_batch's kill row)
     QD = np.matmul(V, Qn[:, :, None])[:, :, 0]
-    if distance == "l2":
+    v_sq = q_sq = None
+    if distance != "ip":
         v_sq = np.einsum("mpd,mpd->mp", V, V)
-        q_sq = np.einsum("md,md->m", Qn, Qn)
-        out = np.maximum(v_sq + q_sq[:, None] - 2.0 * QD, 0.0)
-    elif distance == "ip":
-        out = -QD
-    else:  # cosine
-        qn = np.sqrt(np.einsum("md,md->m", Qn, Qn))
-        vn = np.sqrt(np.einsum("mpd,mpd->mp", V, V))
-        denom = qn[:, None] * vn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = -np.where(denom > 0, QD / denom, 0.0)
-    return np.where(pools >= 0, out, np.inf)
+        q_sq = np.einsum("md,md->m", Qn, Qn)[:, None]
+    return np.where(pools >= 0, _dot_distance(QD, v_sq, q_sq, distance), np.inf)
 
 
 def _node_pool_batch(
@@ -1155,10 +980,10 @@ def build_graph(
     bounds = _build_batch_bounds(n)
     x_sq = np.einsum("ij,ij->i", X, X)  # shared across every node's search
 
-    passes = max(1, int(getattr(params, "build_passes", 2)))
+    passes = max(1, int(params.build_passes))
+    frac = float(params.build_pass2_fraction)
     pass_alphas = [1.0] * (passes - 1) + [params.alpha]
-    frac0 = float(getattr(params, "build_pass2_fraction", 1.0))
-    if frac0 < 1.0:
+    if frac < 1.0:
         # fractional re-link schedule: nodes OUTSIDE the re-linked
         # fraction keep their pass-1 adjacency forever, so pass 1 must
         # leave single-pass-at-alpha quality behind (backedge prune at
@@ -1167,21 +992,11 @@ def build_graph(
         # un-relinked 70% BELOW the single-pass curve
         # (BENCH_HISTORY pass2-fraction-ab row: frac* vs single_pass)
         pass_alphas = [params.alpha] * passes
-    # non-final passes may run a narrower search window (scaffolding
-    # pass — see VamanaParams.build_pass1_window); the LAST pass always
-    # runs the caller's full window, which sets final graph quality
-    p1w = getattr(params, "build_pass1_window", None)
-    # re-link passes may sweep only the earliest-linked fraction of
-    # nodes (build_pass2_fraction) — their reverse edges still reach
-    # every node, and the skipped late nodes keep their pass-1
-    # adjacency (searched against a near-complete graph already)
-    frac = float(getattr(params, "build_pass2_fraction", 1.0))
     for pass_no, pass_alpha in enumerate(pass_alphas):
-        pass_params = params
-        if p1w is not None and pass_no < len(pass_alphas) - 1:
-            from dataclasses import replace as _dc_replace
-
-            pass_params = _dc_replace(params, window_size=int(p1w))
+        # re-link passes may sweep only the earliest-linked fraction of
+        # nodes (build_pass2_fraction) — their reverse edges still reach
+        # every node, and the skipped late nodes keep their pass-1
+        # adjacency (searched against a near-complete graph already)
         limit = n
         if pass_no > 0 and frac < 1.0:
             limit = min(n, max(1, int(np.ceil(n * frac))))
@@ -1193,7 +1008,7 @@ def build_graph(
             # the whole batch (batch-synchronous, vamana_build.h:469-476)
             _link_nodes(
                 X, graph, [entry], np.arange(start, stop, dtype=np.int64),
-                pass_params, distance, x_sq, reverse_alpha=pass_alpha,
+                params, distance, x_sq, reverse_alpha=pass_alpha,
             )
     # every node must stay reachable from the entry point (the
     # exhaustive-window searches are exact-kNN oracles) — enforced, not
@@ -1263,30 +1078,41 @@ def consolidate_graph(
     nodes' adjacency rows are emptied; callers drop them from the
     emitted graph. Mutates ``graph``; returns the (possibly moved) entry
     point — if the entry was deleted, the medioid of the live rows
-    (dynamic_index.h consolidate entry-point repair)."""
+    (dynamic_index.h consolidate entry-point repair).
+
+    All affected nodes are pruned by :func:`alpha_prune_batch`, rows
+    ordered by pool width: the widths are uneven (one deleted
+    neighbor vs several), and the batch pays its widest row on every
+    row of a chunk — padding every chunk to the one widest pool
+    measured slower than pruning node by node."""
     deleted = np.asarray(deleted, dtype=bool)
-    affected = [
-        u
-        for u in range(len(graph))
-        if not deleted[u] and len(graph[u]) and deleted[graph[u]].any()
-    ]
-    for u in affected:
-        adj = graph[u]
-        dead = adj[deleted[adj]]
-        cand = set(int(v) for v in adj[~deleted[adj]])
-        for dnode in dead:
-            nb = graph[int(dnode)]
-            cand.update(int(v) for v in nb[~deleted[nb]])
-        cand.discard(u)
-        if not cand:
-            graph[u] = np.empty(0, dtype=np.int64)
+    nodes: list[int] = []
+    pool_ids: list[np.ndarray] = []
+    pool_d: list[np.ndarray] = []
+    for u, adj in enumerate(graph):
+        if deleted[u] or not len(adj) or not deleted[adj].any():
             continue
-        ca = np.asarray(sorted(cand), dtype=np.int64)
-        cd = _dists(X, X[u], ca, distance)
-        order = np.lexsort((ca, cd))
-        graph[u] = alpha_prune(
-            X, u, ca[order], cd[order], params.alpha, params.graph_max_degree, distance
-        )
+        # live adjacency ∪ live neighbors of the deleted neighbors,
+        # without self, ascending id, then sorted by (distance, id)
+        cand = np.concatenate([adj] + [graph[int(v)] for v in adj[deleted[adj]]])
+        cand = np.unique(cand[~deleted[cand]])
+        cand = cand[cand != u]
+        cd = _dists(X, X[u], cand, distance)
+        order = np.lexsort((cand, cd))
+        nodes.append(u)
+        pool_ids.append(cand[order])
+        pool_d.append(cd[order])
+    by_width = sorted(range(len(nodes)), key=lambda i: len(pool_ids[i]))
+    pools, _ = _pad_graph([pool_ids[i] for i in by_width])
+    pds = np.full(pools.shape, np.inf)
+    if len(by_width):
+        pds[pools >= 0] = np.concatenate([pool_d[i] for i in by_width])
+    order_nodes = np.asarray([nodes[i] for i in by_width], dtype=np.int64)
+    adjs = alpha_prune_batch(
+        X, order_nodes, pools, pds, params.alpha, params.graph_max_degree, distance
+    )
+    for u, adj in zip(order_nodes.tolist(), adjs):
+        graph[u] = adj
     for dnode in np.nonzero(deleted)[0]:
         graph[dnode] = np.empty(0, dtype=np.int64)
     if deleted[entry]:
@@ -1307,11 +1133,13 @@ def search_graph(
     capacity: int | None = None,
     deadline: float | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Batch search (index.h:557-600): per query greedy_search; the
-    buffer CAPACITY is raised to >= k while the exploration window stays
-    window_size (index.h:583-585 split-buffer behavior), then the best k
-    are sliced. Returns (ids, dists) each (nq, <=k); short rows padded
-    with id -1.
+    """Batch search (index.h:557-600): :func:`batch_greedy_search` over
+    query chunks sized under the GEMM budget — dense GEMM distances up
+    to :data:`LAZY_N` rows, lazy above. The buffer CAPACITY is raised
+    to >= k while the exploration window stays window_size
+    (index.h:583-585 split-buffer behavior), then the best k are
+    sliced. Returns (ids, dists) each (nq, <=k); short rows padded with
+    id -1.
 
     ``valid``: optional (n,) bool — tombstoned nodes (False) are
     traversed but excluded from results, matching the dynamic index's

@@ -317,3 +317,31 @@ def test_load_fallback_decodes_before_stamping(spark, base, queries):
                               search_window_size=40)
     )
     assert direct == reloaded
+
+
+def test_precomputed_schema_mismatch_raises(spark, embeddings, tmp_path):
+    """ADVICE r11 (low): save_index(precomputed=...) must compare the
+    on-disk table's schema against the declared DataFrame's — a stale or
+    wrong pre-written table fails at save time, not as an opaque
+    downstream job error."""
+    from scalablevectorsearch_spark.sources.index_store import (
+        ManifestError,
+        save_index,
+    )
+
+    path = str(tmp_path / "idx")
+    declared = embeddings.selectExpr("vec_id as id", "embedding as vector")
+    # pre-write a WRONG table under the declared name (missing column,
+    # different types)
+    embeddings.selectExpr("vec_id as id", "label").limit(5).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/data")
+    with pytest.raises(ManifestError, match="does not match"):
+        save_index(path, {"data": declared}, "flat_data", precomputed={"data"})
+
+    # matching pre-written table passes and is recorded
+    declared.limit(5).write.mode("overwrite").parquet(f"{path}/data")
+    manifest = save_index(
+        path, {"data": declared}, "flat_data", precomputed={"data"}
+    )
+    assert set(manifest["tables"]["data"]) == {"id", "vector"}

@@ -221,3 +221,31 @@ def test_lvq_vamana_packed_dynamic_rejected(base, p48):
     idx = lvq_vamana_build(base, p48, n_shards=2)
     with pytest.raises(ValueError):
         dynamic_vamana(idx)
+
+
+def test_lvq_decoder2_matches_decompress(spark, embeddings):
+    """lvq_packed2_col + lvq_decoder2 must reproduce lvq_decompress
+    level 2 bit-for-bit (same elementwise IEEE ops)."""
+    from scalablevectorsearch_spark.operators.lvq import (
+        lvq_compress,
+        lvq_decoder2,
+        lvq_decompress,
+        lvq_packed2_col,
+        lvq_train,
+    )
+
+    base = embeddings.selectExpr("vec_id as id", "embedding as vector")
+    p = lvq_train(base, primary_bits=4, residual_bits=8)
+    comp = lvq_compress(base, p)
+    ref = (
+        lvq_decompress(comp, p, out_col="__rv", level=2)
+        .select("id", "__rv")
+        .orderBy("id")
+        .collect()
+    )
+    packed = comp.select("id", lvq_packed2_col(p).alias("m")).orderBy("id").collect()
+    dec = lvq_decoder2(p)
+    M = np.stack([np.asarray(r["m"], dtype=np.float64) for r in packed])
+    got = dec(M)
+    exp = np.stack([np.asarray(r["__rv"], dtype=np.float64) for r in ref])
+    assert np.array_equal(got, exp)

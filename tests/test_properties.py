@@ -8,6 +8,8 @@ from hypothesis import strategies as st
 
 from scalablevectorsearch_spark.operators.flat import _ID_SENTINEL, _merge_topk
 from scalablevectorsearch_spark.operators.vamana_local import alpha_prune
+from vamana_reference import alpha_prune as reference_alpha_prune
+from vamana_reference import greedy_search as reference_greedy_search
 
 
 def _brute_topk(key: np.ndarray, ids: np.ndarray, k: int):
@@ -143,7 +145,7 @@ def test_alpha_prune_batch_equals_sequential(seed, alpha, max_result, pool_sz, m
         pool_d[i, : lens[i]] = d[o]
     got = alpha_prune_batch(X, nodes, pools, pool_d, alpha, max_result)
     for i in range(m):
-        exp = alpha_prune(
+        exp = reference_alpha_prune(
             X, int(nodes[i]), pools[i, : lens[i]], pool_d[i, : lens[i]],
             alpha, max_result,
         )
@@ -169,7 +171,7 @@ def test_alpha_prune_batch_duplicate_points():
         pool_d[i] = d[o]
     got = alpha_prune_batch(X, nodes, pools, pool_d, 1.2, 8)
     for i, node in enumerate(nodes):
-        exp = alpha_prune(X, int(node), pools[i], pool_d[i], 1.2, 8)
+        exp = reference_alpha_prune(X, int(node), pools[i], pool_d[i], 1.2, 8)
         assert np.array_equal(got[i], exp)
 
 
@@ -185,10 +187,7 @@ def test_batch_greedy_equals_sequential(seed, window, nq, distance, lazy):
     """batch_greedy_search's docstring claims query-for-query identity
     with the sequential traversal — verify on random graphs, all three
     distances, dense and lazy modes, including the split buffer."""
-    from scalablevectorsearch_spark.operators.vamana_local import (
-        batch_greedy_search,
-        greedy_search,
-    )
+    from scalablevectorsearch_spark.operators.vamana_local import batch_greedy_search
 
     rng = np.random.default_rng(seed)
     n = 40
@@ -204,7 +203,7 @@ def test_batch_greedy_equals_sequential(seed, window, nq, distance, lazy):
         X, graph, eps, Q, window, distance, capacity=cap, lazy=lazy
     )
     for qi in range(nq):
-        sids, sds = greedy_search(
+        sids, sds = reference_greedy_search(
             X, graph, eps, Q[qi], window, distance, capacity=cap
         )
         got = bids[qi][bids[qi] >= 0]

@@ -9,14 +9,17 @@ from pyspark.sql import functions as F
 
 from scalablevectorsearch_spark.operators.ivf import probe_clusters
 from scalablevectorsearch_spark.operators.router import (
+    CentroidRouter,
     build_centroid_router,
     route,
 )
 from scalablevectorsearch_spark.operators.vamana_local import (
+    LAZY_N,
     VamanaParams,
+    batch_greedy_search,
     build_graph,
-    greedy_search,
 )
+from vamana_reference import greedy_search as reference_greedy_search
 
 
 def _fixture_xq(embeddings, n_q=20):
@@ -30,14 +33,41 @@ def test_lazy_greedy_search_matches_dense(embeddings):
     when they are computed, not in value)."""
     X, Q = _fixture_xq(embeddings)
     graph, entry = build_graph(X[:200], VamanaParams(window_size=32), "l2")
-    for q in Q[:5]:
-        ids_d, d_d = greedy_search(X[:200], graph, [entry], q, 16, "l2")
-        ids_l, d_l = greedy_search(X[:200], graph, [entry], q, 16, "l2", lazy=True)
+    dense = batch_greedy_search(X[:200], graph, [entry], Q[:5], 16, "l2")
+    lazy = batch_greedy_search(X[:200], graph, [entry], Q[:5], 16, "l2", lazy=True)
+    for ids_d, d_d, ids_l, d_l in zip(*dense, *lazy):
         np.testing.assert_array_equal(ids_d, ids_l)
-        # atol covers the one representable-jitter case: a query that IS
-        # a base row gets self-distance 0.0 dense vs ~4e-16 lazy (the two
-        # paths fold the subtraction in a different order)
+        # atol covers representable jitter: the dense GEMM and the lazy
+        # gemv accumulate the same dot products in a different order
         np.testing.assert_allclose(d_d, d_l, atol=1e-12)
+
+
+@pytest.mark.parametrize("distance", ["l2", "ip", "cosine"])
+@pytest.mark.parametrize("n_clusters", [512, LAZY_N + 512])
+def test_route_equals_per_query_traversal(distance, n_clusters):
+    """route searches the whole query block in one search_graph call —
+    dense distances up to LAZY_N centroids, lazy above. Each row must be
+    the first n_probes ids of the one-query traversal at the same window
+    and capacity."""
+    rng = np.random.default_rng(5)
+    C = rng.normal(size=(n_clusters, 8))
+    # a ring (every cluster reachable from any entry) plus random edges
+    graph = []
+    for u in range(n_clusters):
+        nb = np.r_[(u + 1) % n_clusters, rng.choice(n_clusters, 7, replace=False)]
+        graph.append(np.unique(nb[nb != u]).astype(np.int64))
+    params = VamanaParams(window_size=24)
+    router = CentroidRouter(C, graph, 0, distance, params)
+    Q = rng.normal(size=(40, 8))
+    n_probes = 6
+    got = route(router, Q, n_probes)
+    sws = max(2 * n_probes, params.window_size)
+    for qi in range(len(Q)):
+        ids, _ = reference_greedy_search(
+            C, graph, [0], Q[qi], sws, distance,
+            capacity=max(sws, n_probes), lazy=True,
+        )
+        np.testing.assert_array_equal(got[qi], ids[:n_probes])
 
 
 def test_router_probe_recall_vs_exact(embeddings):

@@ -14,8 +14,8 @@ from scalablevectorsearch_spark.operators.vamana import (
 )
 from scalablevectorsearch_spark.operators.vamana_local import (
     alpha_prune,
+    batch_greedy_search,
     build_graph,
-    greedy_search,
     medioid,
 )
 
@@ -61,7 +61,8 @@ def test_local_greedy_search_finds_nn():
     graph, entry = build_graph(X, VamanaParams(graph_max_degree=16, window_size=40))
     d = ((X - X[7]) ** 2).sum(axis=1)
     true_nn = np.argsort(d)[:5]
-    ids, _ = greedy_search(X, graph, [entry], X[7], 40)
+    ids, _ = batch_greedy_search(X, graph, [entry], X[7][None, :], 40)
+    ids = ids[0]
     assert len(set(ids[:5]) & set(true_nn)) >= 4
 
 
@@ -145,6 +146,39 @@ def test_probe_arguments_checked_before_any_job(spark, queries, index):
             ValueError, match="epsilon_bp routing requires a kmeans-sharded index"
         ):
             vamana_search(index, queries, k=5, epsilon_bp=100)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
+@pytest.mark.parametrize("entry", ["ivf_search", "vamana_search"])
+@pytest.mark.parametrize(
+    "bad,name",
+    [
+        ({"n_probes": 0}, "n_probes"),
+        ({"n_probes": -1}, "n_probes"),
+        ({"epsilon_bp": -1}, "epsilon_bp"),
+        ({"epsilon_bp": 100, "max_probes": 0}, "max_probes"),
+    ],
+)
+def test_probe_values_checked_before_any_job(spark, base, queries, index, entry, bad, name):
+    """n_probes < 1, epsilon_bp < 0 and max_probes < 1 fail at the front
+    door of ivf_search and vamana_search with a ValueError naming the
+    argument, before any Spark job starts (a negative n_probes used to
+    drop the farthest cells silently, a zero one returned no rows)."""
+    from scalablevectorsearch_spark.operators.ivf import ivf_build, ivf_search
+
+    if entry == "ivf_search":
+        search, target = ivf_search, ivf_build(base, 4, 2)
+    else:
+        search, target = vamana_search, index
+    sc = spark.sparkContext
+    group = "test-probe-values-front-door"
+    sc.setJobGroup(group, "invalid probe values")
+    try:
+        with pytest.raises(ValueError, match=f"^{name} must be >= "):
+            search(target, queries, k=5, **bad)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
