@@ -485,37 +485,26 @@ def add_points(dyn: DynamicVamana, new_rows: DataFrame) -> DynamicVamana:
     )
 
 
-def delete_entries(
-    dyn: DynamicVamana, ids: DataFrame, max_driver_ids: int = _TOMB_DRIVER_MAX
-) -> DynamicVamana:
+def delete_entries(dyn: DynamicVamana, ids: DataFrame) -> DynamicVamana:
     """Lazy tombstone (dynamic_index.h:747): ids vanish from results
     immediately, stay in the graph until consolidate. Raises on unknown
     or already-deleted ids (:617-630).
 
-    Waves that keep the total tombstone count <= ``max_driver_ids``
-    stay driver-resident; beyond that the set becomes a DataFrame and
-    every membership/validation below is a join — the ids are never
+    Waves that keep the total tombstone count <= ``_TOMB_DRIVER_MAX``
+    (100k ids = ~800 KB broadcast, read at call time) stay
+    driver-resident — they ship inside the query broadcast and its isin
+    filters; beyond that the set becomes a DataFrame and every
+    membership/validation below is a join — the ids are never
     materialized on the driver. Existence is read from the pinned
-    layout, never the base.
-
-    CONTRACT: ``max_driver_ids`` must stay <= _TOMB_DRIVER_MAX (100k
-    ids = ~800 KB broadcast) — the driver-resident set ships inside the
-    query broadcast and its isin filters, so letting the threshold grow
-    silently would reintroduce the driver bottleneck the DataFrame path
-    exists to avoid. Enforced here, not just documented."""
-    if max_driver_ids > _TOMB_DRIVER_MAX:
-        raise ValueError(
-            f"max_driver_ids={max_driver_ids} exceeds the broadcast-safe "
-            f"contract _TOMB_DRIVER_MAX={_TOMB_DRIVER_MAX}"
-        )
+    layout, never the base."""
     idx = dyn.index
     ids = ids.select(F.col(idx.id_col).cast("long").alias("id")).distinct()
     if dyn.tomb_df is None:
         # one job decides the path: pull at most one id past the driver
         # budget, so the driver never holds more than budget+1 ids
-        budget = max(0, max_driver_ids - len(dyn.tomb_ids))
+        budget = max(0, _TOMB_DRIVER_MAX - len(dyn.tomb_ids))
         probe = ids.limit(budget + 1).collect()
-        if len(dyn.tomb_ids) + len(probe) <= max_driver_ids:
+        if len(dyn.tomb_ids) + len(probe) <= _TOMB_DRIVER_MAX:
             wave = {r[0] for r in probe}
             already = len(wave & set(dyn.tomb_ids))
             if already:

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .text import _qident, _qlit, _toks_sql, gram_concat
+
 #: Sequential redaction order — FIXED, part of the cross-engine
 #: protocol: each pattern counts and rewrites the text produced by the
 #: previous stage. Patterns restrict themselves to the regex subset
@@ -36,36 +38,6 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
     ("ssn", r"\b\d{3}-\d{2}-\d{4}\b", "<SSN>"),
     ("phone", r"\b\d{3}[-.]\d{3}[-.]\d{4}\b", "<PHONE>"),
 ]
-
-
-def word_ngrams_over(toks: F.Column, n: int) -> F.Column:
-    """Array of space-joined word ``n``-grams over an ALREADY-PROJECTED
-    token array column (empty when the document has fewer than ``n``
-    tokens — guarded, because ``sequence(0, negative)`` would DESCEND,
-    not return empty).
-
-    ``toks`` must be a bound attribute (a real column from a prior
-    select), NOT an inline ``split(...)`` expression: a lambda that
-    captures a non-attribute subexpression RE-EVALUATES it per element
-    — per-gram re-tokenization turned the 2-gram build into ~100
-    splits/doc, measured 11x slower end-to-end at 1M docs
-    (COVERAGE.md intra-doc repetition row). Grams are built with an unrolled
-    ``concat(element_at(i), ' ', ..., element_at(i+n-1))`` — O(1) array
-    lookups per gram — instead of ``array_join(slice(...))``, which
-    materializes a throwaway sub-array per gram (measured 6x slower)."""
-    idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
-
-    def gram(i: F.Column) -> F.Column:
-        parts: list[F.Column] = [F.element_at(toks, i)]
-        for j in range(1, n):
-            parts.append(F.lit(" "))
-            parts.append(F.element_at(toks, i + j))
-        return F.concat(*parts)
-
-    grams = F.transform(idx, gram)
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
 
 
 def repetition_stats(
@@ -111,24 +83,13 @@ def repetition_stats(
         f"'dup', acc.dup + CASE WHEN ({new_run}) = 2 THEN 2 "
         f"WHEN ({new_run}) > 2 THEN 1 ELSE 0 END))"
     )
-    gram_parts = ["element_at(__toks, i)"]
-    for j in range(1, n):
-        gram_parts.append("' '")
-        gram_parts.append(f"element_at(__toks, i + {j})")
-    grams = (
-        f"transform(sequence(1, size(__toks) - {n - 1}), "
-        f"i -> concat({', '.join(gram_parts)}))"
-    )
+    grams = f"transform(sequence(1, size(__toks) - {n - 1}), i -> {gram_concat(n)})"
     # n_ngrams comes from the TOKEN count (size(toks) - n + 1 when the
     # doc has >= n tokens), not size(__ngrams): referencing __ngrams
     # once keeps the gram array a single-use intermediate the optimizer
     # can pipeline, instead of a twice-referenced value
-    from .text import _qident
-
-    id_col, text_col = _qident(id_col), _qident(text_col)
     stage = df.selectExpr(
-        f"{id_col} as doc_id",
-        f"split(trim({text_col}), '\\\\s+') as __toks",
+        f"{_qident(id_col)} as doc_id", f"{_toks_sql(text_col)} as __toks"
     ).selectExpr(
         "doc_id",
         f"CASE WHEN size(__toks) >= {n} THEN cast(size(__toks) - {n - 1} as bigint) "
@@ -185,8 +146,6 @@ def dataset_split(
     # one SQL string (r12, guide §4 driver boundary) — the same nested
     # CaseWhen tree the Column loop built, `h` repeated per level
     # exactly as the Column version reused the subtree
-    from .text import _qident, _qlit
-
     h = (
         f"substring(md5(cast(concat({_qlit(salt)}, ':', "
         f"cast({_qident(id_col)} as string)) as binary)), 1, {digits})"
@@ -310,8 +269,6 @@ def quality_filter(
         )
         .join(lang.select("doc_id", "pred_lang"), "doc_id")
     )
-    from .text import _qlit
-
     lang_list = "(" + ", ".join(_qlit(x) for x in langs) + ")"
     reason = (
         f"CASE WHEN n_tokens < {min_tokens} THEN 'too_short' "

@@ -1,21 +1,24 @@
 """Deduplication operators for training-data pipelines — exact
-(content-hash), MinHash+LSH banded near-dup, n-gram Jaccard verify, and
-SimHash fingerprints.
+(content-hash), MinHash+LSH banded near-dup, winnowing-fingerprint
+n-gram Jaccard, SimHash, substring spans, lines, and eval-set
+decontamination.
 
 Extension surface beyond the reference (BASELINE.json north star). The
 scale contract is the whole point: NOTHING here is an all-pairs join.
  - exact dedup: one hash + one window over the hash — a single shuffle
    on the content hash.
- - MinHash/LSH: shingle -> hash -> per-band bucket keys; the candidate
-   join is an equi-join WITHIN buckets (expected O(pairs-that-collide)),
-   then the Jaccard verify runs only on candidates. At 100 TB the band
-   join is the standard banded-LSH MapReduce shape: shuffle keyed by
-   (band_id, band_key), never doc x doc.
- - SimHash: one 32-bit fingerprint per doc; near-dup lookup = equality
-   on rotated fingerprint bands (not implemented as a join here — the
-   fingerprint is the deliverable).
+ - near-dup families (MinHash/LSH band keys, winnowing fingerprints,
+   SimHash bit bands): per-doc bucket keys, then ONE blocking join,
+   :func:`_bucket_pairs` — an equi-join WITHIN buckets (expected
+   O(pairs-that-collide)) with one hot-bucket cap — and ONE verify,
+   :func:`jaccard_verify` (or the SimHash popcount), on candidates
+   only. At 100 TB this is the standard banded-LSH MapReduce shape:
+   shuffle keyed by the bucket, never doc x doc. Banded MinHash's
+   zero-miss operating point is ``n_perm=32, n_bands=8``
+   (:func:`dedup_minhash`).
 
-Determinism: every hash is md5-derived (identical in Spark and DuckDB);
+Determinism: the default hash is md5-derived (identical in Spark and
+DuckDB; ``text.hash_sql`` is the one md5/xxhash64 dispatch);
 permutation coefficients come from one deterministic generator shared
 with the oracle SQL builders (oracles.dedup_*_sql). All expressions are
 Catalyst/JVM — no Python in the row path.
@@ -28,31 +31,9 @@ from pyspark.sql import functions as F
 
 from scalablevectorsearch_spark.pins import Pins
 
+from .text import _qident, _toks, _toks_sql, doc_fingerprints, gram_expr, hash_sql
+
 MERSENNE = 2147483647  # 2^31 - 1, modulus for the permutation family
-
-#: md5-derived 60-bit hash of a string expression (dialect: Spark SQL)
-MD5I = "cast(conv(substr(md5({s}), 1, 15), 16, 10) as bigint)"
-
-
-def gram_expr(n: int) -> str:
-    """SQL for the space-joined ``n``-gram at 1-based token position
-    ``i`` over the projected ``__toks`` attribute: an unrolled
-    ``concat(element_at(...), chr(32), ...)`` — O(1) array lookups per
-    gram — instead of ``array_join(slice(...))``, which materializes a
-    throwaway sub-array per gram (measured ~6x slower on the gram
-    build; COVERAGE.md intra-doc repetition row). Documents shorter
-    than ``n`` tokens keep the slice path (one truncated gram of the
-    full token run — the established hashing convention), so results
-    are bit-identical to the slice formulation and no oracle changes."""
-    parts = ["element_at(__toks, i)"]
-    for j in range(1, n):
-        parts.append("chr(32)")
-        parts.append(f"element_at(__toks, i + {j})")
-    full = f"concat({', '.join(parts)})"
-    return (
-        f"if(size(__toks) >= {n}, {full}, "
-        f"array_join(slice(__toks, i, {n}), chr(32)))"
-    )
 
 
 def perm_coeffs(n_perm: int) -> list[tuple[int, int]]:
@@ -77,8 +58,6 @@ def dedup_exact(
 ) -> DataFrame:
     """(doc_id, content_hash, canonical_id, is_dup): canonical = smallest
     doc id sharing the exact content hash. One shuffle on the hash."""
-    from .text import _qident
-
     id_col, text_col = _qident(id_col), _qident(text_col)
     return (
         df.selectExpr(f"{id_col} as doc_id", f"md5({text_col}) as content_hash")
@@ -100,23 +79,13 @@ def shingle_hashes(
     shingles. ``hash_fn="md5"`` (default) is the DuckDB-replayable
     contract; ``"xxhash64"`` is the ~2x-cheaper Spark-only fast path
     (set semantics — and therefore Jaccard — unchanged)."""
-    gram = gram_expr(n_shingle)
-    if hash_fn == "xxhash64":
-        h = f"xxhash64({gram})"
-    elif hash_fn == "md5":
-        h = MD5I.format(s=gram)
-    else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64': {hash_fn!r}")
     sh = (
         f"array_distinct(transform("
         f"  sequence(1, greatest(size(__toks) - {n_shingle} + 1, 1)),"
-        f"  i -> {h}))"
+        f"  i -> {hash_sql(gram_expr(n_shingle), hash_fn)}))"
     )
-    from .text import _qident
-
     return df.selectExpr(
-        f"{_qident(id_col)} as doc_id",
-        f"split(trim({_qident(text_col)}), '\\\\s+') as __toks",
+        f"{_qident(id_col)} as doc_id", f"{_toks_sql(text_col)} as __toks"
     ).selectExpr("doc_id", f"{sh} as shingles")
 
 
@@ -157,6 +126,49 @@ def _band_keys(signed: DataFrame, n_bands: int, r: int) -> DataFrame:
     )
 
 
+def _band_width(n_perm: int, n_bands: int) -> int:
+    """Hashes per band, r = n_perm / n_bands. Raises unless ``n_bands``
+    splits the signature into equal bands of at least one hash: with
+    r = 0 every band key is '' and the banded join returns all pairs."""
+    if n_bands < 1 or n_perm < n_bands or n_perm % n_bands:
+        raise ValueError(
+            f"n_bands={n_bands} must be >= 1 and divide the {n_perm}-hash "
+            "signature into bands of at least one hash"
+        )
+    return n_perm // n_bands
+
+
+def _bucket_pairs(
+    keys: DataFrame,
+    on: list[str],
+    max_bucket_size: int | None,
+    carry: str | None = None,
+) -> DataFrame:
+    """The one blocking join of the near-dup families: docs sharing a
+    bucket (equal ``on`` columns) pair up. Returns distinct (doc_a,
+    doc_b), doc_a < doc_b, plus ``{carry}_a``/``{carry}_b`` when a
+    per-doc ``carry`` column rides along. The bucket is the only shuffle
+    key — never doc x doc.
+
+    ``max_bucket_size``: skew guard for 100 TB corpora — a degenerate
+    hot bucket (boilerplate/templated content) would otherwise produce
+    |bucket|^2 pairs; buckets above the cap are excluded (their members
+    are, by construction, near-identical — route them through exact
+    dedup or cluster-representative selection instead)."""
+    if max_bucket_size is not None:
+        from pyspark.sql import Window
+
+        w = Window.partitionBy(*on)
+        keys = keys.withColumn("__bs", F.count("*").over(w)).filter(
+            F.col("__bs") <= max_bucket_size
+        ).drop("__bs")
+    cond = " AND ".join([f"a.{c} = b.{c}" for c in on] + ["a.doc_id < b.doc_id"])
+    cols = ["a.doc_id as doc_a", "b.doc_id as doc_b"]
+    if carry is not None:
+        cols += [f"a.{carry} as {carry}_a", f"b.{carry} as {carry}_b"]
+    return keys.alias("a").join(keys.alias("b"), F.expr(cond)).selectExpr(*cols).distinct()
+
+
 def lsh_candidate_pairs(
     signed: DataFrame,
     n_bands: int = 4,
@@ -165,49 +177,35 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Banded LSH: docs sharing any band's full sub-signature become a
     candidate pair. Returns distinct (doc_a, doc_b), doc_a < doc_b.
-    The join is per-(band, key) — the only shuffle key.
-
-    ``max_bucket_size``: skew guard for 100 TB corpora — a degenerate
-    hot bucket (boilerplate/templated content) would otherwise produce
-    |bucket|^2 pairs; buckets above the cap are excluded here (their
-    members are, by construction, near-identical — route them through
-    exact dedup or cluster-representative selection instead).
+    The join is per-(band, key); ``max_bucket_size`` caps hot buckets
+    (:func:`_bucket_pairs`).
 
     ``sig_len``: signature length when the caller knows it (n_perm) —
-    skips the one-row probe job."""
+    skips the one-row probe job, and the band check then runs before
+    any job."""
     if sig_len is None:
         sig_len = signed.select(F.size("sig").alias("s")).limit(1).collect()[0]["s"]
-    r = sig_len // n_bands
-    bands = _band_keys(signed, n_bands, r)
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band_id", "band_key")
-        bands = bands.withColumn("__bs", F.count("*").over(w)).filter(
-            F.col("__bs") <= max_bucket_size
-        ).drop("__bs")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            F.expr(
-                "a.band_id = b.band_id AND a.band_key = b.band_key"
-                " AND a.doc_id < b.doc_id"
-            ),
-        )
-        .selectExpr("a.doc_id as doc_a", "b.doc_id as doc_b")
-        .distinct()
+    r = _band_width(sig_len, n_bands)
+    return _bucket_pairs(
+        _band_keys(signed, n_bands, r), ["band_id", "band_key"], max_bucket_size
     )
 
 
 def jaccard_verify(
-    pairs: DataFrame, shingled: DataFrame, threshold: float = 0.5
+    pairs: DataFrame,
+    shingled: DataFrame,
+    threshold: float = 0.5,
+    shingled_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs only:
-    (doc_a, doc_b, jaccard) with jaccard >= threshold."""
+    (doc_a, doc_b, jaccard) with jaccard >= threshold.
+
+    ``shingled_b``: doc_b's (doc_id, shingles) table when the pairs
+    cross two corpora (default: ``shingled``, a self-join's pairs)."""
+    if shingled_b is None:
+        shingled_b = shingled
     sa = shingled.selectExpr("doc_id as doc_a", "shingles as __sa")
-    sb = shingled.selectExpr("doc_id as doc_b", "shingles as __sb")
+    sb = shingled_b.selectExpr("doc_id as doc_b", "shingles as __sb")
     return (
         pairs.join(sa, "doc_a")
         .join(sb, "doc_b")
@@ -248,16 +246,16 @@ def dedup_minhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket_size: int | None = None,
-    n_passes: int = 1,
     signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Full banded-MinHash near-dup pipeline: shingle -> minhash -> band
     buckets -> within-bucket candidates -> exact Jaccard verify.
     Returns (doc_a, doc_b, jaccard). Never an all-pairs join.
+    ``n_bands`` must divide ``n_perm`` (checked before any job).
 
     ``signatures``: optional precomputed signature table — exactly
     ``minhash_signature(shingle_hashes(df, n_shingle, text_col,
-    id_col), n_passes * n_perm)`` over the same ``df``, caller-persisted.
+    id_col), n_perm)`` over the same ``df``, caller-persisted.
     Lets a pipeline that needs the signatures more than once (e.g. the
     curated-corpus composite, where :func:`decontaminate` minhashes the
     same surviving corpus) derive them ONE time instead of re-embedding
@@ -265,43 +263,32 @@ def dedup_minhash(
     and construction cost only — results are identical by construction
     since the signature of a document is deterministic). A table
     without (doc_id, shingles, sig ARRAY) columns, or whose first row's
-    sig is not ``n_passes * n_perm`` long, raises ``ValueError``.
+    sig is not ``n_perm`` long, raises ``ValueError``.
 
-    ``n_passes``: chain-integrity knob. Banding misses a true pair at
-    shingle-Jaccard s with probability (1 - s^r)^(n_passes*n_bands),
-    r = n_perm/n_bands; at the defaults (16 perms / 4 bands, r=4) a
-    0.97-Jaccard pair misses with p ~ 1.7e-4 — at 10M docs single-digit
-    misses are EXPECTED, and one missed edge splits a dup chain into
-    two components (:func:`dedup_components` canonicals diverge).
-    ``n_passes=2`` additionally bands over a SECOND, independent
-    permutation set (signature 2*n_perm long, banded into 2*n_bands
-    bands; the first pass's bands are bit-identical to n_passes=1, so
-    the candidate set only ever grows), squaring the per-pair miss to
-    ~3e-8 at 0.97 — effectively zero at corpus scale. Cost: 2x minhash
-    compute and 2x band-shuffle volume; the exact-Jaccard verify grows
-    only by the extra candidates.
-
-    Zero-miss operating point (BENCH_HISTORY dedup_ab and
-    dedup_ab_confirm rows, 2M-doc planted-chain A/B, r8): ``n_perm=32, n_bands=8, n_passes=1`` and the default
-    ``n_perm=16, n_bands=4, n_passes=2`` are COST-EQUIVALENT — same
-    32-hash signature, same 8-band shuffle volume, same (1 - s^4)^8
-    miss (~3e-8 at 0.97), and they mined the IDENTICAL 59,406 pairs
-    with 0 bad canonicals. A first naive A/B showed a 3.9x gap, which
-    an order-reversed re-run flipped: whichever config runs FIRST pays
-    the corpus warm-up (~53-60s vs ~17s second), so single-run config
-    comparisons on a fresh corpus measure the cache, not the config.
-    Pick ``n_passes=2`` when a 16-perm signature base already exists
-    (its pass-1 bands are bit-identical to ``n_passes=1``, candidates
-    only grow against prior runs), ``32/8/1`` otherwise; an r=3
-    ``18/6/1`` config also zero-missed (miss ~4.4e-7) with a ~44%
-    shorter signature if minhash compute ever dominates."""
+    Chain integrity: banding misses a true pair at shingle-Jaccard s
+    with probability (1 - s^r)^n_bands, r = n_perm/n_bands; at the
+    defaults (16 perms / 4 bands, r=4) a 0.97-Jaccard pair misses with
+    p ~ 1.7e-4 — at 10M docs single-digit misses are EXPECTED, and one
+    missed edge splits a dup chain into two components
+    (:func:`dedup_components` canonicals diverge). The zero-miss
+    operating point is ``n_perm=32, n_bands=8``: same r=4, miss
+    (1 - s^4)^8 ~ 3e-8 at 0.97 — effectively zero at corpus scale — for
+    2x minhash compute and 2x band-shuffle volume; the exact-Jaccard
+    verify grows only by the extra candidates. :func:`perm_coeffs` is a
+    prefix sequence, so the first 4 of its 8 bands are bit-identical to
+    16/4's and its candidate set is a superset of 16/4's. On a 2M-doc
+    planted-chain A/B (BENCH_HISTORY dedup_ab and dedup_ab_confirm
+    rows, r8) it mined 59,406 pairs with 0 bad canonicals; whichever
+    config runs FIRST on a fresh corpus pays its warm-up (~53-60s vs
+    ~17s second), so single-run config comparisons measure the cache,
+    not the config. An r=3 ``18/6`` config also zero-missed (miss
+    ~4.4e-7) with a ~44% shorter signature if minhash compute ever
+    dominates."""
     from pyspark.storagelevel import StorageLevel
 
-    if n_passes < 1:
-        raise ValueError("n_passes must be >= 1")
-    total_perm = n_passes * n_perm
+    _band_width(n_perm, n_bands)
     if signatures is not None:
-        _check_signatures(signatures, total_perm, "signatures")
+        _check_signatures(signatures, n_perm, "signatures")
         signed = signatures
     else:
         shingled = shingle_hashes(df, n_shingle, text_col, id_col)
@@ -311,12 +298,10 @@ def dedup_minhash(
         # re-execute per branch. MEMORY_AND_DISK: at corpus scale this
         # is the standard materialized-signatures step of a MapReduce
         # LSH pipeline.
-        signed = minhash_signature(shingled, total_perm).persist(
+        signed = minhash_signature(shingled, n_perm).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-    pairs = lsh_candidate_pairs(
-        signed, n_passes * n_bands, max_bucket_size, sig_len=total_perm
-    )
+    pairs = lsh_candidate_pairs(signed, n_bands, max_bucket_size, sig_len=n_perm)
     return jaccard_verify(pairs, signed.select("doc_id", "shingles"), threshold)
 
 
@@ -327,28 +312,10 @@ def fingerprint_candidate_pairs(
     become a candidate pair (Schleimer et al.'s guarantee — any common
     substring of length >= w+k-1 chars shares a fingerprint, so true
     near-dups can't be blocked apart). Distinct (doc_a, doc_b),
-    doc_a < doc_b; the join is per-fingerprint, never doc x doc.
-
-    ``max_bucket_size``: same 100 TB skew guard as the LSH path — a
-    boilerplate fingerprint shared by a million docs would emit
-    |bucket|^2 pairs; buckets above the cap are dropped (their members
-    are near-identical templated content — route through exact dedup)."""
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("fp")
-        fps = (
-            fps.withColumn("__bs", F.count("*").over(w))
-            .filter(F.col("__bs") <= max_bucket_size)
-            .drop("__bs")
-        )
-    a = fps.alias("a")
-    b = fps.alias("b")
-    return (
-        a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    doc_a < doc_b; the join is per-fingerprint, never doc x doc, and
+    ``max_bucket_size`` drops boilerplate fingerprints shared by more
+    docs (:func:`_bucket_pairs`)."""
+    return _bucket_pairs(fps, ["fp"], max_bucket_size)
 
 
 def ngram_jaccard_neardup(
@@ -385,8 +352,6 @@ def ngram_jaccard_neardup(
     md5 default is the DuckDB-replayable gate contract."""
     from pyspark.storagelevel import StorageLevel
 
-    from .text import doc_fingerprints
-
     # persist the fingerprint table ONCE: the blocking self-join reads
     # it on both sides, and fingerprinting (one hash per char position)
     # is the dominant cost — same materialized-signatures shape as
@@ -410,7 +375,6 @@ def decontaminate(
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_probes: bool = True,
     corpus_signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-corpus contamination mining — the decontamination step of a
@@ -428,19 +392,20 @@ def decontaminate(
     in the bench composite) passes the table instead of paying the
     shingle+minhash expression block — and at corpus scale a second
     full corpus pass — again. Checked like ``signatures`` (sig
-    ``n_perm`` long).
+    ``n_perm`` long), after the band check and before any other job.
 
     Same banded-MinHash machinery as :func:`dedup_minhash`, but the
     candidate join runs BETWEEN the two corpora on (band_id, band_key)
-    — never corpus x probes. Scale shape: the probe set (an eval/test
-    suite) is orders of magnitude smaller than the corpus, so its banded
-    keys broadcast (``broadcast_probes``) and candidate generation is a
-    map-side probe of corpus bands; the corpus shuffles only its
-    colliding rows into the Jaccard verify. Ids may overlap between the
-    two tables — they are distinct id spaces."""
+    — never corpus x probes — and :func:`jaccard_verify` checks the
+    cross-corpus pairs. Scale shape: the probe set (an eval/test suite)
+    is orders of magnitude smaller than the corpus, so its banded keys
+    and its shingles broadcast and candidate generation is a map-side
+    probe of corpus bands; the corpus shuffles only its colliding rows
+    into the Jaccard verify. Ids may overlap between the two tables —
+    they are distinct id spaces."""
     from pyspark.storagelevel import StorageLevel
 
-    r = n_perm // n_bands
+    r = _band_width(n_perm, n_bands)
     if corpus_signatures is not None:
         _check_signatures(corpus_signatures, n_perm, "corpus_signatures")
         signed_c = corpus_signatures
@@ -451,29 +416,19 @@ def decontaminate(
     signed_p = minhash_signature(
         shingle_hashes(probes, n_shingle, text_col, id_col), n_perm
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    bands_c = _band_keys(signed_c, n_bands, r)
     bands_p = _band_keys(signed_p, n_bands, r).withColumnRenamed("doc_id", "probe_id")
-    if broadcast_probes:
-        bands_p = F.broadcast(bands_p)
     pairs = (
-        bands_c.join(bands_p, ["band_id", "band_key"])
-        .select("probe_id", "doc_id")
+        _band_keys(signed_c, n_bands, r)
+        .join(F.broadcast(bands_p), ["band_id", "band_key"])
+        .selectExpr("probe_id as doc_b", "doc_id as doc_a")
         .distinct()
     )
-    sp = signed_p.selectExpr("doc_id as probe_id", "shingles as __sp")
-    if broadcast_probes:
-        sp = F.broadcast(sp)
-    return (
-        pairs.join(signed_c.selectExpr("doc_id", "shingles as __sc"), "doc_id")
-        .join(sp, "probe_id")
-        .selectExpr(
-            "probe_id",
-            "doc_id",
-            "(cast(size(array_intersect(__sc, __sp)) as double)"
-            " / cast(size(array_union(__sc, __sp)) as double)) as jaccard",
-        )
-        .filter(f"jaccard >= {threshold!r}D")
-    )
+    return jaccard_verify(
+        pairs,
+        signed_c.select("doc_id", "shingles"),
+        threshold,
+        shingled_b=F.broadcast(signed_p.select("doc_id", "shingles")),
+    ).selectExpr("doc_b as probe_id", "doc_a as doc_id", "jaccard")
 
 
 def duplicate_spans(
@@ -544,15 +499,8 @@ def duplicate_spans(
 
     if sample not in ("positional", "content"):
         raise ValueError(f"sample must be 'positional' or 'content': {sample!r}")
-    from .text import _qident
-
     text_q = _qident(text_col)
-    if hash_fn == "xxhash64":
-        h = f"xxhash64(substring({text_q}, i, {span_len}))"
-    elif hash_fn == "md5":
-        h = MD5I.format(s=f"substring({text_q}, i, {span_len})")
-    else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64': {hash_fn!r}")
+    h = hash_sql(f"substring({text_q}, i, {span_len})", hash_fn)
     # content sampling enumerates every position and filters on the
     # gram hash; positional sampling strides the position sequence.
     pos_stride = 1 if sample == "content" else stride
@@ -648,8 +596,6 @@ def remove_spans(
             )
         ).alias("__sp")
     )
-    from .text import _qident
-
     text_q = _qident(text_col)
     j = df.join(sp, F.col(id_col) == F.col("__sid"), "left")
     # Fold over sorted spans: emit the gap before each span, track the
@@ -687,7 +633,6 @@ def decontaminate_exact(
     text_col: str = "text",
     id_col: str = "doc_id",
     hash_fn: str = "md5",
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """Exact n-gram eval-set decontamination — the GPT-3 appendix-C
     policy (Brown et al. 2020): flag every training document sharing at
@@ -704,39 +649,19 @@ def decontaminate_exact(
     pair explosion; only colliding (doc, probe, gram) rows survive into
     the final small groupBy. Documents shorter than ``n`` words hash
     their full token run (same convention as :func:`shingle_hashes`)."""
-    gram = gram_expr(n)
-    if hash_fn == "xxhash64":
-        h = f"xxhash64({gram})"
-    elif hash_fn == "md5":
-        h = MD5I.format(s=gram)
-    else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64': {hash_fn!r}")
-    ngrams = (
-        f"array_distinct(transform("
-        f"  sequence(1, greatest(size(__toks) - {n} + 1, 1)),"
-        f"  i -> {h}))"
-    )
 
     def _grams(d: DataFrame, out_id: str) -> DataFrame:
-        return (
-            d.select(
-                F.col(id_col).alias(out_id),
-                F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks"),
-            )
-            .select(out_id, F.explode(F.expr(ngrams)).alias("h"))
+        return shingle_hashes(d, n, text_col, id_col, hash_fn).select(
+            F.col("doc_id").alias(out_id), F.explode("shingles").alias("h")
         )
 
-    pg = _grams(probes, "probe_id")
-    if broadcast_probes:
-        pg = F.broadcast(pg)
-    hits = (
+    return (
         _grams(corpus, "doc_id")
-        .join(pg, "h")
+        .join(F.broadcast(_grams(probes, "probe_id")), "h")
         .groupBy("probe_id", "doc_id")
         .agg(F.count("*").alias("n_shared_grams"))
         .filter(F.col("n_shared_grams") >= min_hits)
     )
-    return hits
 
 
 def dedup_lines(
@@ -822,8 +747,9 @@ def dedup_components(
     at Jaccard s with probability (1 - s^r)^b — ~1.7e-4 per 0.97-pair
     at the 16-perm/4-band defaults, i.e. single-digit split chains per
     10M docs. For chain-critical dedup, mine the pairs with
-    ``dedup_minhash(..., n_passes=2)`` (a second independent banding
-    pass squares the miss to ~3e-8; see its docstring for cost)."""
+    ``dedup_minhash(..., n_perm=32, n_bands=8)`` (twice the bands at
+    the same r squares the miss to ~3e-8; see its docstring for
+    cost)."""
     e = pairs.select(
         F.col(id_a).cast("long").alias("s"), F.col(id_b).cast("long").alias("d")
     )
@@ -935,8 +861,7 @@ def simhash_neardup(
         raise ValueError(f"n_bands {n_bands} must divide n_bits {n_bits}")
     w = n_bits // n_bands
     mask = (1 << w) - 1
-    fp = simhash(df, n_bits, text_col, id_col, hash_fn=hash_fn)
-    bands = fp.select(
+    bands = simhash(df, n_bits, text_col, id_col, hash_fn=hash_fn).select(
         "doc_id",
         "simhash",
         F.explode(
@@ -952,33 +877,10 @@ def simhash_neardup(
         F.col("bk.band_id").alias("band_id"),
         F.col("bk.band_bits").alias("band_bits"),
     )
-    if max_bucket_size is not None:
-        from pyspark.sql import Window
-
-        wnd = Window.partitionBy("band_id", "band_bits")
-        bands = bands.withColumn("__bs", F.count("*").over(wnd)).filter(
-            F.col("__bs") <= max_bucket_size
-        ).drop("__bs")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_bits") == F.col("b.band_bits"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("__ha"),
-            F.col("b.simhash").alias("__hb"),
-        )
-        .distinct()
-    )
+    cand = _bucket_pairs(bands, ["band_id", "band_bits"], max_bucket_size, carry="simhash")
     return (
         cand.withColumn(
-            "hamming", F.expr("bit_count(__ha ^ __hb)").cast("int")
+            "hamming", F.expr("bit_count(simhash_a ^ simhash_b)").cast("int")
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
@@ -1005,23 +907,20 @@ def simhash(
     verified 32-bit pair on planted fixtures). Bit 63 is the sign bit:
     setting it adds -2^63 in two's complement, and the bit test uses
     arithmetic shiftright + mask, correct for negative hashes."""
+    toks_hashes = f"transform(__toks, t -> {hash_sql('t', hash_fn)})"
     if hash_fn == "md5":
         if n_bits > 60:
             raise ValueError(
                 f"n_bits {n_bits} > 60 requires hash_fn='xxhash64' "
                 "(md5 term hashes carry exactly 60 usable bits)"
             )
-        toks_hashes = f"transform(__toks, t -> {MD5I.format(s='t')})"
         bit_test = "(h div {p}) % 2 = 1"
-    elif hash_fn == "xxhash64":
+    else:
         if n_bits > 64:
             raise ValueError(f"n_bits {n_bits} > 64")
-        toks_hashes = "transform(__toks, t -> xxhash64(t))"
         # arithmetic shiftright sign-extends; & 1 isolates the bit —
         # correct for all 64 bits of a signed hash
         bit_test = "(shiftright(h, {b}) & 1) = 1"
-    else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64': {hash_fn!r}")
 
     def weight(b: int) -> str:
         if b == 63:
@@ -1036,10 +935,7 @@ def simhash(
         for b in range(n_bits)
     )
     return (
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks"),
-        )
+        df.select(F.col(id_col).alias("doc_id"), _toks(text_col).alias("__toks"))
         .select("doc_id", F.expr(toks_hashes).alias("__hs"))
         .select("doc_id", F.expr(bit_terms).alias("simhash"))
     )

@@ -56,6 +56,44 @@ def _toks_sql(text_col: str) -> str:
     return f"split(trim({_qident(text_col)}), '\\\\s+')"
 
 
+def hash_sql(s: str, hash_fn: str) -> str:
+    """SQL for the 64-bit hash of string expression ``s``: ``"md5"`` is
+    the md5-derived 60-bit hash the DuckDB oracles replay bit-for-bit;
+    ``"xxhash64"`` is the ~2x-cheaper Spark-only fast path."""
+    if hash_fn == "md5":
+        return f"cast(conv(substr(md5({s}), 1, 15), 16, 10) as bigint)"
+    if hash_fn == "xxhash64":
+        return f"xxhash64({s})"
+    raise ValueError(f"hash_fn must be 'md5' or 'xxhash64': {hash_fn!r}")
+
+
+def gram_concat(n: int) -> str:
+    """SQL for the space-joined word ``n``-gram at 1-based token
+    position ``i`` over the projected ``__toks`` attribute, valid where
+    ``size(__toks) >= n``. ``__toks`` must be a bound attribute from a
+    prior projection: a lambda that captures an inline ``split(...)``
+    re-evaluates it per gram (measured 11x slower at 1M docs). The gram
+    is an unrolled ``concat(element_at(...), chr(32), ...)`` — O(1)
+    array lookups per gram — not ``array_join(slice(...))``, which
+    materializes a throwaway sub-array per gram (measured ~6x slower;
+    COVERAGE.md intra-doc repetition row). ConstantFolding turns
+    ``chr(32)`` into ``' '``."""
+    parts = ["element_at(__toks, i)"]
+    for j in range(1, n):
+        parts += ["chr(32)", f"element_at(__toks, i + {j})"]
+    return f"concat({', '.join(parts)})"
+
+
+def gram_expr(n: int) -> str:
+    """:func:`gram_concat` made total: a document shorter than ``n``
+    tokens keeps the slice path (one truncated gram of its full token
+    run — the established hashing convention the oracles replay)."""
+    return (
+        f"if(size(__toks) >= {n}, {gram_concat(n)}, "
+        f"array_join(slice(__toks, i, {n}), chr(32)))"
+    )
+
+
 def _in_set_sql(words: list[str]) -> str:
     return "(" + ", ".join(_qlit(w) for w in words) + ")"
 
@@ -151,12 +189,7 @@ def doc_fingerprints(
     fingerprinting cost (the gram hash runs ~len(text) times per doc),
     identical blocking semantics, but Spark-only."""
     text_col = _qident(text_col)
-    if hash_fn == "xxhash64":
-        gram = f"xxhash64(substring({text_col}, i, {k}))"
-    elif hash_fn == "md5":
-        gram = f"cast(conv(substr(md5(substring({text_col}, i, {k})), 1, 15), 16, 10) as bigint)"
-    else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64': {hash_fn!r}")
+    gram = hash_sql(f"substring({text_col}, i, {k})", hash_fn)
     hs = (
         f"transform(sequence(1, greatest(length({text_col}) - {k} + 1, 1)), "
         f"i -> {gram})"

@@ -94,3 +94,17 @@ def embeddings(spark, sf_dir):
 @pytest.fixture(scope="session")
 def documents(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+@pytest.fixture(scope="session")
+def mini_docs(spark):
+    """Five short documents: an exact duplicate pair, a German one and a
+    degenerate bigram repetition."""
+    rows = [
+        (0, "the cat sat on the mat and the dog sat too"),
+        (1, "der hund ist nicht mit der katze und der maus"),
+        (2, "completely unique text with no repeats whatsoever here"),
+        (3, "the cat sat on the mat and the dog sat too"),
+        (4, "a b a b a b a b a b a b"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")

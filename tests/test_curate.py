@@ -222,3 +222,58 @@ def test_repetition_stats_random_differential(spark):
             assert got[i]["top_ngram_frac"] == pytest.approx(max(c.values()) / tot)
             dup = sum(v for v in c.values() if v > 1)
             assert got[i]["dup_ngram_frac"] == pytest.approx(dup / tot)
+
+
+def test_sql_builders_accept_quoted_identifiers(mini_docs):
+    """Hyphenated/spaced column names must work through every
+    SQL-string constructor (r13, ADVICE: interpolated identifiers were
+    unquoted, so a name needing backticks broke the parsed SQL)."""
+    from scalablevectorsearch_spark.pipeline.dedup import (
+        dedup_exact,
+        dedup_minhash,
+        shingle_hashes,
+    )
+    from scalablevectorsearch_spark.pipeline.text import (
+        doc_fingerprints,
+        lang_id,
+        text_stats,
+    )
+
+    docs = mini_docs
+    odd = docs.selectExpr("doc_id as `doc-id`", "text as `text body`")
+    kw = dict(text_col="text body", id_col="doc-id")
+    pairs = [
+        (text_stats(docs), text_stats(odd, **kw)),
+        (lang_id(docs), lang_id(odd, **kw)),
+        (dedup_exact(docs), dedup_exact(odd, **kw)),
+        (shingle_hashes(docs, 3), shingle_hashes(odd, 3, "text body", "doc-id")),
+        (doc_fingerprints(docs), doc_fingerprints(odd, **kw)),
+        (repetition_stats(docs, n=2), repetition_stats(odd, n=2, **kw)),
+        (
+            dedup_minhash(docs, 3, 16, 4, 0.5),
+            dedup_minhash(odd, 3, 16, 4, 0.5, "text body", "doc-id"),
+        ),
+    ]
+    for plain, quoted in pairs:
+        a = sorted(map(tuple, plain.collect()))
+        b = sorted(map(tuple, quoted.collect()))
+        assert a == b
+
+    ds = dataset_split(odd, names=["tr'ain", "te st"], weights=[0.5, 0.5],
+                       id_col="doc-id")
+    got = {r["split"] for r in ds.collect()}
+    assert got <= {"tr'ain", "te st"}
+
+
+def test_quality_filter_quoted_lang_literal(mini_docs):
+    """A language code containing a quote must survive _qlit escaping
+    (previously it produced a SQL parse error)."""
+    from scalablevectorsearch_spark.pipeline.curate import quality_filter
+    from scalablevectorsearch_spark.pipeline.text import lang_id, text_stats
+
+    docs = mini_docs
+    out = quality_filter(
+        text_stats(docs), repetition_stats(docs, n=2), lang_id(docs),
+        langs=["en", "it's"],
+    ).collect()
+    assert len(out) == docs.count()

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from scalablevectorsearch_spark.operators import dynamic
 from scalablevectorsearch_spark.operators.dynamic import (
     _CKPT_EVERY,
     add_points,
@@ -324,10 +325,11 @@ def test_stale_close_after_delete_keeps_live_pins(spark, base):
     live.close()
 
 
-def test_large_wave_tombstones_released_on_close(spark, base):
+def test_large_wave_tombstones_released_on_close(spark, base, monkeypatch):
     """The large-wave tombstone checkpoint is owned by the handle chain:
     delete wave, consolidate, close() returns the persisted-RDD count
     to its pre-delete baseline."""
+    monkeypatch.setattr(dynamic, "_TOMB_DRIVER_MAX", 10)
     sub = base.filter(F.col("id") < 300)
     idx = vamana_build(sub, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2)
     # the static index's own pins, outside the mutation chain
@@ -339,7 +341,7 @@ def test_large_wave_tombstones_released_on_close(spark, base):
 
     baseline = n_pinned()
     wave = sub.filter((F.col("id") % 7 == 0) & (F.col("id") >= 50)).select("id")
-    d = delete_entries(dynamic_vamana(idx), wave, max_driver_ids=10)
+    d = delete_entries(dynamic_vamana(idx), wave)
     assert d.tomb_df is not None
     d = consolidate(d)
     d.close()
@@ -405,26 +407,6 @@ def test_dynamic_ivf_cycle(base, queries):
     d2 = ivf_recluster(d)
     assert d2.tombstones.count() == 0
     assert d2.index.clustered.count() == base.count()  # +5 added -5 deleted
-
-
-def test_lsh_bucket_cap_guards_hot_buckets(documents):
-    from scalablevectorsearch_spark.pipeline.dedup import (
-        lsh_candidate_pairs,
-        minhash_signature,
-        shingle_hashes,
-    )
-
-    docs = documents.select("doc_id", "text").limit(30)
-    # 10 identical docs -> one hot bucket in every band
-    clones = docs.limit(1).select(F.lit(999).alias("doc_id"), "text")
-    for i in range(9):
-        clones = clones.unionByName(
-            docs.limit(1).select(F.lit(1000 + i).alias("doc_id"), "text")
-        )
-    sig = minhash_signature(shingle_hashes(docs.unionByName(clones)), 16)
-    uncapped = lsh_candidate_pairs(sig, 4).count()
-    capped = lsh_candidate_pairs(sig, 4, max_bucket_size=5).count()
-    assert capped < uncapped  # the 11-clone bucket's ~55 pairs are excluded
 
 
 def test_compact_remaps_dense(base):
@@ -521,17 +503,19 @@ def test_revive_entry_point(base, queries):
     )
 
 
-def test_large_delete_wave_dataframe_tombstones(base, queries):
+def test_large_delete_wave_dataframe_tombstones(base, queries, monkeypatch):
     """A delete wave above the driver threshold flips to DataFrame
     tombstones: exclusion, consolidate, and the post-consolidate result
     all behave identically to the driver-resident path, with no
-    driver-side id materialization (max_driver_ids forces the flip)."""
+    driver-side id materialization (a lowered _TOMB_DRIVER_MAX forces
+    the flip)."""
+    monkeypatch.setattr(dynamic, "_TOMB_DRIVER_MAX", 10)
     sub = base.filter(F.col("id") < 1000)
     idx = vamana_build(
         sub, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2
     )
     wave = sub.filter((F.col("id") % 7 == 0) & (F.col("id") >= 50)).select("id")
-    d = delete_entries(dynamic_vamana(idx), wave, max_driver_ids=10)
+    d = delete_entries(dynamic_vamana(idx), wave)
     assert d.tomb_df is not None and d.tomb_ids == ()
     live = sub.join(F.broadcast(wave), "id", "left_anti")
     gt = sorted(
@@ -553,9 +537,10 @@ def test_large_delete_wave_dataframe_tombstones(base, queries):
     assert sorted(map(tuple, res2.select("qid", "rank", "neighbor_id").collect())) == gt
 
 
-def test_add_points_with_dataframe_tombstones(base, queries):
+def test_add_points_with_dataframe_tombstones(base, queries, monkeypatch):
     """add_points against an active DataFrame tombstone set: revived ids
     leave the set (join-only), fresh ids collide correctly."""
+    monkeypatch.setattr(dynamic, "_TOMB_DRIVER_MAX", 10)
     import pytest as _pytest
 
     sub = base.filter(F.col("id") < 500)
@@ -563,7 +548,7 @@ def test_add_points_with_dataframe_tombstones(base, queries):
         sub, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2
     )
     wave = sub.filter((F.col("id") >= 100) & (F.col("id") < 200)).select("id")
-    d = delete_entries(dynamic_vamana(idx), wave, max_driver_ids=10)
+    d = delete_entries(dynamic_vamana(idx), wave)
     assert d.tomb_df is not None
     # reviving 5 tombstoned ids shrinks the set to 95
     revive = sub.filter((F.col("id") >= 100) & (F.col("id") < 105)).select(
@@ -609,13 +594,14 @@ def test_compact_dense_ids_distributed(base):
     assert "Window" not in plan.replace("WindowGroupLimit", "")
 
 
-def test_delete_entries_threshold_crossover(base, queries):
+def test_delete_entries_threshold_crossover(base, queries, monkeypatch):
     """The exact driver->DataFrame representation crossover: wave 1
     stays driver-resident (tomb_ids), wave 2 pushes the total past
-    max_driver_ids so the set flips to tomb_df — search exclusion and
+    _TOMB_DRIVER_MAX so the set flips to tomb_df — search exclusion and
     consolidate must behave identically across the flip, and the
     already-deleted validation must keep working against the OTHER
     representation."""
+    monkeypatch.setattr(dynamic, "_TOMB_DRIVER_MAX", 10)
     sub = base.filter(F.col("id") < 1000)
     idx = vamana_build(
         sub, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2
@@ -623,14 +609,14 @@ def test_delete_entries_threshold_crossover(base, queries):
     dyn = dynamic_vamana(idx)
     w1 = sub.filter(F.col("id") < 6).select("id")
     w2 = sub.filter((F.col("id") >= 6) & (F.col("id") < 14)).select("id")
-    dyn = delete_entries(dyn, w1, max_driver_ids=10)
+    dyn = delete_entries(dyn, w1)
     assert dyn.tomb_df is None and len(dyn.tomb_ids) == 6
-    dyn = delete_entries(dyn, w2, max_driver_ids=10)  # 6+8 > 10 -> flips
+    dyn = delete_entries(dyn, w2)  # 6+8 > 10 -> flips
     assert dyn.tomb_df is not None and dyn.tomb_ids == ()
     assert dyn.n_tombstones() == 14
     # re-deleting across the flip must raise (validated via tomb_df now)
     with pytest.raises(ValueError, match="already deleted"):
-        delete_entries(dyn, w1, max_driver_ids=10)
+        delete_entries(dyn, w1)
     got = {r["neighbor_id"] for r in
            dynamic_search(dyn, queries, k=5, search_window_size=4096).collect()}
     assert got.isdisjoint(set(range(14)))
@@ -644,16 +630,6 @@ def test_delete_entries_threshold_crossover(base, queries):
         "qid", "neighbor_id"
     )
     assert post.exceptAll(exact).count() == 0 and exact.exceptAll(post).count() == 0
-
-
-def test_delete_entries_threshold_contract(base):
-    sub = base.filter(F.col("id") < 100)
-    idx = vamana_build(
-        sub, VamanaParams(graph_max_degree=8, window_size=20), n_shards=2
-    )
-    dyn = dynamic_vamana(idx)
-    with pytest.raises(ValueError, match="broadcast-safe"):
-        delete_entries(dyn, sub.select("id"), max_driver_ids=1_000_000)
 
 
 def _is_persisted(df):

@@ -130,7 +130,7 @@ def test_signature_table_non_array_sig_rejected(docs, fn):
 
 @pytest.mark.parametrize("fn", ["dedup_minhash", "decontaminate"])
 def test_signature_table_wrong_width_rejected(docs, fn):
-    """A signature narrower than n_passes * n_perm would silently band
+    """A signature narrower than n_perm would silently band
     the wrong hashes; the first row's width is checked."""
     with pytest.raises(ValueError, match="hold 12 hashes, expected 16"):
         _bad_signature_call(fn, docs, _signatures(docs, 12))
@@ -813,11 +813,12 @@ def test_dedup_lines_min_len_exemption(spark):
     assert got == {0: "ok\nlong enough line", 1: "ok"}
 
 
-def test_dedup_minhash_n_passes_superset_and_identical_jaccard(docs):
-    """n_passes=2 (chain-critical second banding pass): pass 1's bands
-    are bit-identical to n_passes=1 — the candidate set can only GROW,
-    and the exact-Jaccard verify is unchanged, so every single-pass
-    pair survives with the identical jaccard value."""
+def test_dedup_minhash_32_8_superset_and_identical_jaccard(docs):
+    """32 perms in 8 bands (the zero-miss operating point):
+    perm_coeffs is a prefix sequence, so its first 4 bands are
+    bit-identical to 16/4's — the candidate set can only GROW, and the
+    exact-Jaccard verify is unchanged, so every 16/4 pair survives with
+    the identical jaccard value."""
     base = docs.filter(F.col("doc_id") < 80)
     mutated = base.filter(F.col("doc_id") < 3).select(
         (F.col("doc_id") + 900).alias("doc_id"),
@@ -830,7 +831,7 @@ def test_dedup_minhash_n_passes_superset_and_identical_jaccard(docs):
     }
     two = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup_minhash(corpus, threshold=0.3, n_passes=2).collect()
+        for r in dedup_minhash(corpus, n_perm=32, n_bands=8, threshold=0.3).collect()
     }
     assert set(one) <= set(two)
     for pair, j in one.items():
@@ -839,6 +840,107 @@ def test_dedup_minhash_n_passes_superset_and_identical_jaccard(docs):
         assert (d, d + 900) in two
 
 
-def test_dedup_minhash_n_passes_validation(docs):
-    with pytest.raises(ValueError):
-        dedup_minhash(docs.limit(2), n_passes=0)
+def _no_job_raises(spark, group, call, match):
+    """``call`` raises ValueError(match) and starts no Spark job."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "argument checked at the front door")
+    try:
+        with pytest.raises(ValueError, match=match):
+            call()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+
+@pytest.mark.parametrize("fn", ["dedup_minhash", "decontaminate", "lsh_candidate_pairs"])
+@pytest.mark.parametrize("n_perm,n_bands", [(4, 8), (16, 0), (16, -1), (16, 3)])
+def test_band_count_checked_before_any_job(spark, docs, fn, n_perm, n_bands):
+    """n_bands must split the signature into equal bands of >= 1 hash:
+    4 perms in 8 bands gave r = 0, every band key '' and ALL pairs as
+    candidates; 0 bands divided by zero. Checked before any job — also
+    before the one-row read of a caller's signature table."""
+    from scalablevectorsearch_spark.pipeline.dedup import decontaminate
+
+    base = docs.filter(F.col("doc_id") < 20)
+    table = _signatures(docs)
+    call = {
+        "dedup_minhash": lambda: dedup_minhash(
+            base, n_perm=n_perm, n_bands=n_bands, signatures=table),
+        "decontaminate": lambda: decontaminate(
+            base, base, n_perm=n_perm, n_bands=n_bands, corpus_signatures=table),
+        "lsh_candidate_pairs": lambda: lsh_candidate_pairs(
+            table, n_bands, sig_len=n_perm),
+    }[fn]
+    _no_job_raises(spark, "test-band-count", call, f"^n_bands={n_bands} must be >= 1")
+
+
+@pytest.mark.parametrize(
+    "fn",
+    ["shingle_hashes", "duplicate_spans", "decontaminate_exact", "simhash", "doc_fingerprints"],
+)
+def test_bad_hash_fn_rejected_before_any_job(spark, docs, fn):
+    """Every hashing entry point shares one md5/xxhash64 dispatch and
+    its ValueError."""
+    from scalablevectorsearch_spark.pipeline.dedup import decontaminate_exact, duplicate_spans
+
+    call = {
+        "shingle_hashes": lambda: shingle_hashes(docs, 3, hash_fn="sha1"),
+        "duplicate_spans": lambda: duplicate_spans(docs, hash_fn="sha1"),
+        "decontaminate_exact": lambda: decontaminate_exact(docs, docs, hash_fn="sha1"),
+        "simhash": lambda: simhash(docs, hash_fn="sha1"),
+        "doc_fingerprints": lambda: doc_fingerprints(docs, hash_fn="sha1"),
+    }[fn]
+    _no_job_raises(spark, "test-hash-fn", call, "^hash_fn must be 'md5' or 'xxhash64': 'sha1'$")
+
+
+@pytest.mark.parametrize("family", ["lsh", "fingerprint", "simhash"])
+def test_bucket_cap_guards_hot_buckets(documents, family):
+    """max_bucket_size drops a hot bucket in each self-join family:
+    11 identical docs share every band/fingerprint bucket, so cap 5
+    excludes their ~55 pairs."""
+    from scalablevectorsearch_spark.pipeline.dedup import (
+        fingerprint_candidate_pairs,
+        simhash_neardup,
+    )
+
+    docs = documents.select("doc_id", "text").limit(30)
+    # 10 identical docs -> one hot bucket in every band
+    clones = docs.limit(1).select(F.lit(999).alias("doc_id"), "text")
+    for i in range(9):
+        clones = clones.unionByName(
+            docs.limit(1).select(F.lit(1000 + i).alias("doc_id"), "text")
+        )
+    corpus = docs.unionByName(clones)
+    if family == "lsh":
+        sig = minhash_signature(shingle_hashes(corpus), 16)
+        pairs = lambda cap: lsh_candidate_pairs(sig, 4, max_bucket_size=cap)
+    elif family == "fingerprint":
+        fps = doc_fingerprints(corpus)
+        pairs = lambda cap: fingerprint_candidate_pairs(fps, max_bucket_size=cap)
+    else:
+        pairs = lambda cap: simhash_neardup(corpus, max_bucket_size=cap)
+    uncapped = pairs(None).count()
+    capped = pairs(5).count()
+    assert capped < uncapped  # the 11-clone bucket's ~55 pairs are excluded
+    clone_pair = F.col("doc_a").isin(999, 1000) & (F.col("doc_b") == 1000)
+    assert pairs(None).filter(clone_pair).count() == 1
+    assert pairs(5).filter(clone_pair).count() == 0
+
+
+def test_minhash_signature_matches_unrolled(spark, mini_docs):
+    """The r13 nested-transform signature must be bit-identical to the
+    unrolled n_perm-copy formulation it replaced."""
+    from scalablevectorsearch_spark.pipeline.dedup import MERSENNE
+
+    sh = shingle_hashes(mini_docs, 3)
+    coeffs = perm_coeffs(16)
+    mins = ", ".join(
+        f"array_min(transform(shingles, h -> ({a} * (h % {MERSENNE}) + {b}) % {MERSENNE}))"
+        for a, b in coeffs
+    )
+    old = sh.selectExpr("doc_id", f"array({mins}) as sig").collect()
+    new = minhash_signature(sh, 16).select("doc_id", "sig").collect()
+    assert sorted((r["doc_id"], tuple(r["sig"])) for r in old) == sorted(
+        (r["doc_id"], tuple(r["sig"])) for r in new
+    )

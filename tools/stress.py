@@ -359,11 +359,12 @@ vci.layout.unpersist()
 
 # ---- dynamic large-wave cycle on the hash-sharded index ----
 # 10% deletes forced down the DataFrame-tombstone path
-# (max_driver_ids=0), then consolidate (repair), then post-cycle search
+# (_TOMB_DRIVER_MAX=0), then consolidate (repair), then post-cycle search
 # — the machinery a 100 TB deployment would exercise on a GDPR-scale
 # delete wave, where collecting ids on the driver is not an option.
 from pyspark.sql import functions as F
 
+from scalablevectorsearch_spark.operators import dynamic as _dynamic
 from scalablevectorsearch_spark.operators.dynamic import (
     compact,
     consolidate,
@@ -373,12 +374,14 @@ from scalablevectorsearch_spark.operators.dynamic import (
 )
 
 n_del = int(N * DELETE_FRACTION)
+_tomb_max, _dynamic._TOMB_DRIVER_MAX = _dynamic._TOMB_DRIVER_MAX, 0
 del_ids = data.select("id").filter(F.col("id") < n_del)
 dyn = dynamic_vamana(vi)
 dyn = timed(
     "dynamic_delete_wave",
-    lambda: delete_entries(dyn, del_ids, max_driver_ids=0),
+    lambda: delete_entries(dyn, del_ids),
 )
+_dynamic._TOMB_DRIVER_MAX = _tomb_max
 assert dyn.tomb_df is not None, "wave did not take the DataFrame path"
 
 # post-delete groundtruth over the LIVE rows: measuring against the

@@ -173,14 +173,14 @@ chain2 = near_src.select(
 )
 chain_pairs = timed(
     "dedup_minhash_chain",
-    # chain-critical path: n_passes=2 (second independent banding pass)
-    # squares the per-pair banding miss (~1.7e-4 -> ~3e-8 at 0.97
-    # Jaccard), so a 10M-doc chain stress expects ZERO split chains;
-    # the timed cost vs the single-pass dedup_minhash row above IS the
-    # documented price of chain integrity (2x minhash + band volume)
+    # chain-critical path: 32 perms in 8 bands square the per-pair
+    # banding miss of 16/4 (~1.7e-4 -> ~3e-8 at 0.97 Jaccard), so a
+    # 10M-doc chain stress expects ZERO split chains; the timed cost vs
+    # the 16/4 dedup_minhash row above IS the documented price of chain
+    # integrity (2x minhash + band volume)
     lambda: dedup_minhash(
         docs.unionByName(near).unionByName(chain2),
-        n_shingle=3, n_perm=16, n_bands=4, threshold=0.5, n_passes=2,
+        n_shingle=3, n_perm=32, n_bands=8, threshold=0.5,
     ).persist(),
 )
 comp = timed("dedup_components", lambda: dedup_components(chain_pairs).persist())
@@ -199,7 +199,7 @@ print(f"components: {n_members} chain members, {bad} bad canonicals", flush=True
 # a "bad canonical" here is a {near, chain2} cluster whose near->
 # original MinHash edge was a BANDING miss. Single-pass 16/4 banding
 # misses a 0.97-Jaccard pair with p ~ 1.7e-4 (the r6 10M run saw 2 in
-# 198k members); the n_passes=2 pair mining above squares that to
+# 198k members); the 32/8 pair mining above squares that to
 # ~3e-8, so the assert is exact: ZERO bad canonicals at any N.
 # dedup_components itself raises on non-convergence, so component
 # bugs cannot hide here either.
